@@ -19,7 +19,7 @@ Because every duplicate is an exact copy of the profile it repeats, the
 row count of each warehouse table follows from the construction alone;
 ``generate`` returns those counts as ``expected``.
 
-Usage: python3 perfbench/gen_fitness.py OUT_DIR [--seed N] [--profile P]
+Usage: python3 perfbench/gen_fitness.py OUT_DIR [--seed N]
 """
 
 from __future__ import annotations
@@ -32,22 +32,13 @@ import zipfile
 from datetime import date, timedelta
 from xml.sax.saxutils import escape
 
-# Input sizes. "reference" is the size of the source snapshot the
-# pipeline was written for (Fitabase 3.12-4.11 export for the Fitbit
-# files); "small" is a cut-down set for smoke runs.
-PROFILES: dict[str, dict[str, int]] = {
-    "reference": {
-        "mendeley_rows": 14_589, "mendeley_profiles": 4_700,
-        "nutrition_rows": 8_789, "gym_rows": 973,
-        "daily_rows": 457, "hourly_rows": 24_084, "weight_rows": 33,
-        "hr_rows": 1_150_000, "sleep_rows": 199_000, "fitbit_users": 35,
-    },
-    "small": {
-        "mendeley_rows": 600, "mendeley_profiles": 200,
-        "nutrition_rows": 300, "gym_rows": 120,
-        "daily_rows": 120, "hourly_rows": 2_000, "weight_rows": 20,
-        "hr_rows": 40_000, "sleep_rows": 8_000, "fitbit_users": 12,
-    },
+# Input sizes: those of the source snapshot the pipeline was written for
+# (Fitabase 3.12-4.11 export for the Fitbit files).
+SIZES: dict[str, int] = {
+    "mendeley_rows": 14_589, "mendeley_profiles": 4_700,
+    "nutrition_rows": 8_789, "gym_rows": 973,
+    "daily_rows": 457, "hourly_rows": 24_084, "weight_rows": 33,
+    "hr_rows": 1_150_000, "sleep_rows": 199_000, "fitbit_users": 35,
 }
 
 DIM_DATE_FIRST = date(2016, 1, 1)
@@ -229,12 +220,10 @@ def _key(p: tuple[int, str, float, float]) -> tuple[int, str, int, int]:
 
 # -- generator -------------------------------------------------------------
 
-def generate(out: str, seed: int, profile: str = "reference",
-             sizes: dict[str, int] | None = None) -> dict:
+def generate(out: str, seed: int) -> dict:
     """Write every source file; returns {"expected": table → rows,
     "input_bytes": total bytes written, "sizes": the sizes used}."""
-    n = dict(PROFILES[profile])
-    n.update(sizes or {})
+    n = SIZES
     rng = random.Random(seed)
     fitbit_dir = os.path.join(out, "fitbit")
     os.makedirs(fitbit_dir, exist_ok=True)
@@ -537,9 +526,8 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("out_dir")
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--profile", choices=sorted(PROFILES), default="reference")
     a = ap.parse_args()
-    print(json.dumps(generate(a.out_dir, a.seed, a.profile)))
+    print(json.dumps(generate(a.out_dir, a.seed)))
 
 
 if __name__ == "__main__":

@@ -3,11 +3,13 @@
 Writes the ten single-file parquet tables the registered queries scan
 (region nation customer supplier part orders lineitem events documents
 embeddings) with the column names, Arrow types and value domains of the
-TPC-H-like test data the registry is verified against. ``scale`` plays
-the role of a scale factor: 0.01 gives 1,500 customers, 15,000 orders,
-~60,000 line items and 10,000 events.
+TPC-H-like test data the registry is verified against, at the row counts
+of its scale factor 0.01: 1,500 customers, 15,000 orders, ~60,000 line
+items and 10,000 events. ``events.ts`` is Parquet TIMESTAMP(NANOS), the
+unit the registry's loader documents for that column; the date columns
+of orders and lineitem are TIMESTAMP(MICROS).
 
-Usage: python3 perfbench/gen_tables.py OUT_DIR [--seed N] [--scale F]
+Usage: python3 perfbench/gen_tables.py OUT_DIR [--seed N]
 """
 
 from __future__ import annotations
@@ -52,18 +54,12 @@ def _write(out_dir: str, name: str, cols: dict[str, pa.Array]) -> None:
     pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
 
 
-def generate(out_dir: str, seed: int, scale: float = 0.01) -> dict[str, int]:
+def generate(out_dir: str, seed: int) -> dict[str, int]:
     """Write all tables under ``out_dir``; returns table → row count."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
-    n_cust = max(50, int(150_000 * scale))
-    n_supp = max(10, int(10_000 * scale))
-    n_part = max(100, int(200_000 * scale))
-    n_orders = max(500, int(1_500_000 * scale))
-    n_events = max(1_000, int(1_000_000 * scale))
-    n_users = max(15, n_events * 3 // 200)
-    n_docs = max(200, int(50_000 * scale))
-    n_vecs = max(200, int(50_000 * scale))
+    n_cust, n_supp, n_part, n_orders = 1_500, 100, 2_000, 15_000
+    n_events, n_users, n_docs, n_vecs = 10_000, 150, 500, 500
     counts: dict[str, int] = {}
 
     _write(out_dir, "region", {
@@ -126,7 +122,10 @@ def generate(out_dir: str, seed: int, scale: float = 0.01) -> dict[str, int]:
         "l_suppkey": pa.array(rng.integers(0, n_supp, n_lines), pa.int64()),
         "l_linenumber": pa.array(l_num, pa.int32()),
         "l_quantity": pa.array(qty),
-        "l_extendedprice": pa.array(np.round(qty * _money(rng, 900.0, 2100.0, n_lines), 2)),
+        # whole-dollar unit prices: a discounted line price then has at most
+        # two decimals, so no round(sum(...), 2) of the queries lands on a
+        # half-cent tie, which engines summing in another order round apart
+        "l_extendedprice": pa.array(qty * rng.integers(900, 2101, n_lines)),
         "l_discount": pa.array(rng.integers(0, 11, n_lines) / 100.0),
         "l_tax": pa.array(rng.integers(0, 9, n_lines) / 100.0),
         "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n_lines)]),
@@ -140,7 +139,7 @@ def generate(out_dir: str, seed: int, scale: float = 0.01) -> dict[str, int]:
     ts = np.minimum(ts, _EPOCH_2024_US + 30 * _DAY_US - 1)
     _write(out_dir, "events", {
         "event_id": pa.array(np.arange(n_events), pa.int64()),
-        "ts": pa.array(ts, pa.timestamp("us")),
+        "ts": pa.array(ts * 1000, pa.timestamp("ns")),
         "user_id": pa.array(rng.integers(0, n_users, n_events), pa.int64()),
         "event_type": pa.array(np.array(EVENT_TYPES)[rng.integers(0, 5, n_events)]),
         "value": pa.array(np.round(rng.exponential(40.0, n_events), 2) + 0.01),
@@ -183,9 +182,8 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("out_dir")
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--scale", type=float, default=0.01)
     a = ap.parse_args()
-    print(json.dumps({"rows": generate(a.out_dir, a.seed, a.scale), "scale": a.scale}))
+    print(json.dumps({"rows": generate(a.out_dir, a.seed)}))
 
 
 if __name__ == "__main__":

@@ -86,6 +86,13 @@ def _comm(pid: int) -> str:
         return "?"
 
 
+def peak_rss_self() -> int:
+    """High-water mark of this process's resident memory, in bytes."""
+    import resource
+
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss * 1024
+
+
 def process_age_s() -> float:
     """Seconds since this process started (0.01 s resolution)."""
     st = _stat(os.getpid())
@@ -95,11 +102,14 @@ def process_age_s() -> float:
 
 
 class PeakRss:
-    """Background sampler of the tree's resident memory."""
+    """Background sampler of the tree's resident memory: the peak of the
+    whole tree, and the peak of the workers, the processes other than
+    the JVM and this one (Python workers, the xlsx reader's fork pool)."""
 
     def __init__(self, interval_s: float = 0.2):
         self.interval_s = interval_s
         self.peak = 0
+        self.peak_workers = 0
         self.at_peak: dict[str, int] = {}  # process name -> bytes at the peak
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
@@ -107,13 +117,17 @@ class PeakRss:
     def _loop(self) -> None:
         while not self._stop.is_set():
             try:
-                mem = tree_memory()
-                if sum(mem.values()) > self.peak:
-                    self.peak = sum(mem.values())
-                    self.at_peak = {}
-                    for pid, b in mem.items():
-                        name = _comm(pid)
-                        self.at_peak[name] = self.at_peak.get(name, 0) + b
+                by_name: dict[str, int] = {}
+                workers = 0
+                for pid, b in tree_memory().items():
+                    name = _comm(pid)
+                    by_name[name] = by_name.get(name, 0) + b
+                    if name != "java" and pid != os.getpid():
+                        workers += b
+                total = sum(by_name.values())
+                self.peak_workers = max(self.peak_workers, workers)
+                if total > self.peak:
+                    self.peak, self.at_peak = total, by_name
             except Exception:  # noqa: BLE001 — a vanished pid mid-walk
                 pass
             self._stop.wait(self.interval_s)
@@ -122,10 +136,9 @@ class PeakRss:
         self._thread.start()
         return self
 
-    def stop(self) -> int:
+    def stop(self) -> None:
         self._stop.set()
         self._thread.join()
-        return self.peak
 
 
 def host_context() -> dict:
