@@ -754,7 +754,12 @@ def _write_day_partitioned(ev: DataFrame, path: str) -> None:
     (SPARK-38388). A hot day now engages ceil(its_rows / target) writer
     tasks while a small day keeps exactly one file; at sf0.1 every day
     computes groups=1, so the local layout (and bench behavior) is the
-    r17 one-task-per-day shape plus one tiny counting job."""
+    r17 one-task-per-day shape plus one tiny counting job.
+
+    ``ev`` is computed twice: once by the per-day count and once by the
+    write. That is cheap for a scan plus ``to_date`` (every current
+    caller); a caller passing an expensive computed DataFrame should pin
+    it first (e.g. ``localCheckpoint``)."""
     days = ev.groupBy("day").agg(
         F.greatest(
             F.lit(1),

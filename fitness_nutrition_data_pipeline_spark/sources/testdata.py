@@ -3,12 +3,28 @@
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file each under an sf directory.
 
-Scans are plain ``spark.read.parquet`` so Catalyst keeps full predicate
+Scans are ``spark.read.parquet`` so Catalyst keeps full predicate
 pushdown / column pruning; at cluster scale the same call reads a
 partitioned directory tree and prunes partitions for free.
+
+Schema registry: Spark runs one schema-inference job per bare
+``spark.read.parquet`` call, even on a single file. The first
+``load_table`` of a file infers as usual and records the schema; later
+reads pass it back through ``spark.read.schema(...)``, which starts no job
+and yields the same plan, pushdown and rows. The key is the resolved path,
+the file's size and ``st_mtime_ns`` (what Spark's file index records per
+file), the session's application id, and the confs that change what
+parquet inference returns (``_SCHEMA_CONFS``). A rewritten file, a new
+session or a changed conf therefore misses and is re-inferred, never
+trusted stale. Paths that are not a regular file (a directory of parts)
+or cannot be ``stat``-ed are always inferred. Only the current
+application's entries are kept.
 """
 
 from __future__ import annotations
+
+import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +73,43 @@ _PARALLELIZE_KEYS = {
     "embeddings": "vec_id",
 }
 
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# application id -> {(path, size, mtime_ns, *conf values) -> schema}. A
+# module-level registry because every caller reaches it through
+# ``load_table``'s fixed signature; only the current application is kept.
+_schemas: dict[str, dict[tuple, T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the
+    first read of a file in a session (module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    app = spark.sparkContext.applicationId
+    known = _schemas.get(app)
+    if known is None:
+        _schemas.clear()
+        known = _schemas.setdefault(app, {})
+    key = (
+        os.path.realpath(path), st.st_size, st.st_mtime_ns,
+        *(spark.conf.get(c) for c in _SCHEMA_CONFS),
+    )
+    schema = known.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    known[key] = df.schema
+    return df
+
 
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, *, parallelize: bool = True
@@ -75,7 +128,7 @@ def load_table(
     # oracle (which is timezone-naive): pin the session to UTC so results
     # don't depend on the machine timezone of whatever harness calls us.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):

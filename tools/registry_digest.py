@@ -64,9 +64,16 @@ CANONICAL_SF_DIR = os.environ.get(
 
 # Bumped whenever _normalize's rules change: digests computed under
 # different normalizer versions are not comparable, and consumers
-# (rotation_report --digest-evidence) must treat cross-version
-# comparisons as "no evidence" rather than report false drift.
-NORMALIZER_VERSION = 2
+# (rotation_report --digest-evidence, the freeze ledger) must treat
+# cross-version comparisons as "no evidence" rather than report false
+# drift — except across COMPARABLE_VERSIONS.
+NORMALIZER_VERSION = 3
+# v3 only replaced text of v2's output (a Range split count, the warehouse
+# dir) with tokens v2 never printed, so an EQUAL v2/v3 digest pair still
+# means an unchanged plan. An unequal pair may be a false drift (the
+# plan printed one of those values); consumers then promote or re-signal
+# the query, the safe direction.
+COMPARABLE_VERSIONS = (2, 3)
 _META_KEY = "__normalizer_version__"
 
 
@@ -74,9 +81,14 @@ def _normalize(plan_text: str, sf_dir: str) -> str:
     """Canonicalize a formatted plan for DIGESTING (stricter than
     plan_diff's human-readable normalizer, which this builds on):
 
-    - test-host layout out: the sf dir and the per-application managed
-      scratch root (scratch.py) become fixed tokens, so round-trip/
-      write-audit queries digest identically across sessions;
+    - test-host layout out: the sf dir, the per-application managed
+      scratch root (scratch.py) and the session warehouse dir (the
+      checkout's ``spark-warehouse``) become fixed tokens, so round-trip/
+      write-audit queries digest identically across sessions and
+      checkouts;
+    - host parallelism out: ``Range`` prints ``splits=Some(N)`` with N
+      the session's default parallelism (the host's core count), so the
+      count becomes a fixed token;
     - within-line token order out: RewriteDistinctAggregates emits its
       Expand projection groups in nondeterministic order (expression-id-
       dependent set iteration), so each line is reduced to its SORTED
@@ -98,6 +110,8 @@ def _normalize(plan_text: str, sf_dir: str) -> str:
     # (process isolation); not plan structure
     text = re.sub(r"<SCRATCH>/[0-9a-f]{8}(/|\b)", r"<SCRATCH>/<TAG>\1", text)
     text = re.sub(r"_ba_[0-9a-f]{8}\b", "_ba_<TAG>", text)
+    text = re.sub(r"[^\s\[\]]*/spark-warehouse\b", "<WAREHOUSE>", text)
+    text = re.sub(r"splits=Some\(\d+\)", "splits=Some(<N>)", text)
     # localCheckpoint scans print the session-global RDD id and the py4j
     # call site ("MapPartitionsRDD[15] at localCheckpoint at
     # NativeMethodAccessorImpl.java:0" — id counts every prior job in the

@@ -107,8 +107,8 @@ def correctness_history() -> dict[str, list[tuple[int, bool]]]:
 def digest_map_at_round(r: int) -> dict[str, str] | None:
     """The digest map as committed for driver round ``r`` (the commit
     that ADDED CORRECTNESS_r{r}.json), or None when unavailable or
-    written under a different normalizer version."""
-    from tools.registry_digest import _META_KEY, NORMALIZER_VERSION
+    written under a normalizer version not comparable with the current."""
+    from tools.registry_digest import _META_KEY, COMPARABLE_VERSIONS
 
     for fname in (f"CORRECTNESS_r{r:02d}.json", f"CORRECTNESS_r{r}.json"):
         rev = subprocess.run(
@@ -127,7 +127,7 @@ def digest_map_at_round(r: int) -> dict[str, str] | None:
     if shown.returncode != 0 or not shown.stdout:
         return None
     hist = json.loads(shown.stdout)
-    if hist.get(_META_KEY) != NORMALIZER_VERSION:
+    if hist.get(_META_KEY) not in COMPARABLE_VERSIONS:
         return None
     return hist
 

@@ -175,45 +175,12 @@ def _plan_next(registry, last, frozen, next_round, max_age, slots) -> None:
 def _digest_evidence(registry, last, next_round) -> None:
     """Per stale query: does its CURRENT plan digest equal the digest
     committed at the round of its last green driver signal?"""
-    import subprocess
-
     from fitness_nutrition_data_pipeline_spark.session import get_spark
-    from tools.registry_digest import (
-        _META_KEY,
-        NORMALIZER_VERSION,
-        compute_digests,
-    )
-
-    def map_at_round(r: int) -> dict[str, str] | None:
-        # the commit that ADDED CORRECTNESS_r{r}.json carries the digest
-        # map as committed for that round (absent before r12)
-        rev = subprocess.run(
-            ["git", "-C", REPO, "log", "--diff-filter=A", "--format=%H",
-             "--", f"CORRECTNESS_r{r:02d}.json"],
-            capture_output=True, text=True,
-        ).stdout.split()
-        if not rev:
-            rev = subprocess.run(
-                ["git", "-C", REPO, "log", "--diff-filter=A", "--format=%H",
-                 "--", f"CORRECTNESS_r{r}.json"],
-                capture_output=True, text=True,
-            ).stdout.split()
-        if not rev:
-            return None
-        shown = subprocess.run(
-            ["git", "-C", REPO, "show",
-             f"{rev[0]}:tools/registry_digests.json"],
-            capture_output=True, text=True,
-        )
-        if shown.returncode != 0 or not shown.stdout:
-            return None
-        hist = json.loads(shown.stdout)
-        # digests are only comparable under the SAME normalizer rules —
-        # a map written by an older/newer normalizer must read as
-        # no-evidence, not as mass false DIGEST-DRIFT (review r12)
-        if hist.get(_META_KEY) != NORMALIZER_VERSION:
-            return None
-        return hist
+    from tools.registry_digest import compute_digests
+    # the digest map committed at round r, or None when absent or written
+    # under an incomparable normalizer: no evidence, not mass false
+    # DIGEST-DRIFT (review r12)
+    from tools.registry_freeze import digest_map_at_round as map_at_round
 
     stale_qs = [q for q in registry
                 if q in last and next_round - last[q] >= 2]
