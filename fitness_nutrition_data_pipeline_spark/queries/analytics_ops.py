@@ -27,10 +27,6 @@ from fitness_nutrition_data_pipeline_spark.queries.llm_ops import (
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _calibration_oracle() -> str:
     sig_cols = ",\n             ".join(_sig_exprs_sql())
     matches = " + ".join(
@@ -84,7 +80,7 @@ def _calibration_oracle() -> str:
     "join ships one row per doc, never the shingle sets.",
 )
 def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # the signature table feeds both self-join sides — pinned so the
     # minhash lineage runs once (the exact-jaccard pass below is a
     # deliberately different representation: it is what's being
@@ -145,7 +141,7 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "twice at user grain.",
 )
 def retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # user-grain cohort table feeds the activity join AND the size
     # rollup — pinned so its events pass runs once
     firsts = ev.groupBy("user_id").agg(
@@ -210,7 +206,7 @@ def retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is only the oracle's spelling.",
 )
 def column_fill_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cols = ["event_type", "props", "ts", "user_id", "value"]
     # one pass: n_rows + per-column null counts as a single aggregate row
     agg_row = ev.agg(
@@ -264,7 +260,7 @@ _DAY_NAMES = (
     "the weekday pass touches calendar-bounded rows.",
 )
 def weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(F.count(F.lit(1)).alias("n"))
     # pandas/ISO Mon=0: Spark dayofweek is Sun=1 → (dow + 5) % 7.
     # day_name comes from a literal English array, NOT date_format('EEEE'),
@@ -320,7 +316,7 @@ def weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "negated key, so no global window touches customer grain.",
 )
 def user_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("spend")
     )
@@ -394,7 +390,7 @@ def user_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "grain first with map-side partials.",
 )
 def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     anchor = o.agg(F.max(F.to_date("o_orderdate")).alias("d0"))
     per_cust = (
         o.crossJoin(F.broadcast(anchor))
@@ -491,7 +487,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "not rows-only.",
 )
 def rfm_segmentation_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     anchor = o.agg(F.max(F.to_date("o_orderdate")).alias("d0"))
     per_cust = (
         o.crossJoin(F.broadcast(anchor))
@@ -633,7 +629,7 @@ def rfm_segmentation_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .where(F.col("p_partkey") % 17 == 0)
         .select(
             (F.col("p_retailprice").cast("decimal(18,2)") * 100)

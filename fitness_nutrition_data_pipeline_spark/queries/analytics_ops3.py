@@ -22,10 +22,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _DWELL_US = 600_000_000  # 10-minute dwell interval per event
 
 
@@ -69,7 +65,7 @@ _DWELL_US = 600_000_000  # 10-minute dwell interval per event
     "within-partition.",
 )
 def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    iv = _t(spark, sf_dir, "events").select(
+    iv = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("s_us"),
@@ -141,7 +137,7 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(validation.sql:16-46) generalized to row-grain value parity.",
 )
 def two_source_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     a = o.where(F.col("o_orderkey") % 97 != 0).select(
         F.col("o_orderkey").alias("k"), cents.alias("ca")
@@ -211,7 +207,7 @@ def functional_dependency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     outs = []
     for name, tbl, lhs, rhs in _FDS:
         g = (
-            _t(spark, sf_dir, tbl)
+            load_table(spark, sf_dir, tbl)
             .groupBy(lhs)
             .agg(F.countDistinct(rhs).alias("nd"))
         )
@@ -272,7 +268,7 @@ def mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total, the MI fold); unpinned, each re-ran the customer-grain scan
     # + shuffle (audited 4 customer scans — now 1). Answer-sized pin.
     joint = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(
             F.col("c_mktsegment").alias("seg"),
             F.col("c_nationkey").alias("nat"),
@@ -365,7 +361,7 @@ def mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partials.",
 )
 def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = (
         o.groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
@@ -457,7 +453,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sliding_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id", F.to_date("ts").alias("d"))
         .distinct()
     )
@@ -561,7 +557,7 @@ def watermark_tags(arr: DataFrame, delay_us: int = _WM_DELAY_US) -> DataFrame:
     "(SURVEY §2.8), under the exact integer oracle.",
 )
 def watermark_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arr = _t(spark, sf_dir, "events").select(
+    arr = load_table(spark, sf_dir, "events").select(
         F.expr(f"event_id div {_WM_BATCH}").alias("batch"),
         F.unix_micros("ts").alias("t_us"),
     )
@@ -612,8 +608,8 @@ def watermark_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-group iteration, no matrix library.",
 )
 def regression_slope_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     pts = o.join(c, o.o_custkey == c.c_custkey).select(
         F.col("c_mktsegment").alias("seg"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1990-01-01").cast("date"))
@@ -667,7 +663,7 @@ def regression_slope_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def weekday_bitmask_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     masks = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.bit_or(
@@ -727,7 +723,7 @@ def weekday_bitmask_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def weekday_adjusted_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("d"))
         .agg(
             F.sum(
@@ -794,7 +790,7 @@ def weekday_adjusted_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "NULL ordering crosses engines.",
 )
 def grouping_sets_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("d"), "user_id"
     )
     return spark.sql(
@@ -847,7 +843,7 @@ def grouping_sets_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def churn_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tenure = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.datediff(F.max(F.to_date("ts")), F.min(F.to_date("ts")))
@@ -911,7 +907,7 @@ def churn_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.dedup import word_shingles
 
-    sh = _t(spark, sf_dir, "documents").select(
+    sh = load_table(spark, sf_dir, "documents").select(
         "doc_id", word_shingles("text", 2).alias("shingles")
     )
     a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a"))
@@ -994,7 +990,7 @@ def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "= order finalized ('F').",
 )
 def gini_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _t(spark, sf_dir, "orders").select(
+    pts = load_table(spark, sf_dir, "orders").select(
         F.expr("CAST(round(o_totalprice) AS BIGINT) div 10000").alias("b"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
     )
@@ -1076,7 +1072,7 @@ def gini_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bit), z pinned as the literal 1.9599639845400545. Rounded to 6.",
 )
 def wilson_interval_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "orders").groupBy(
+    s = load_table(spark, sf_dir, "orders").groupBy(
         F.col("o_orderpriority").alias("priority")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -31,10 +31,6 @@ from fitness_nutrition_data_pipeline_spark.queries.sampling import (
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 @register(
     "inverted_index_postings",
     rf"""
@@ -72,7 +68,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-partition.",
 )
 def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     pairs = (
         d.select(
             "doc_id",
@@ -172,7 +168,7 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL contract, explicit on BOTH engines: cards describe well-formed
     # docs only (non-null text/lang/source) — without the filter the two
     # sides diverge on how NULLs enter averages and distinct counts
-    d = _docs(spark, sf_dir).where(
+    d = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
         & F.col("lang").isNotNull()
         & F.col("source").isNotNull()
@@ -264,7 +260,7 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "carries 3 short hash/source columns, never text.",
 )
 def prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     p = d.where(F.length("text") >= 64).select(
         "source",
         F.md5(F.substring("text", 1, 64)).alias("h"),
@@ -333,7 +329,7 @@ def prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort=("lang",),
 )
 def token_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     # text IS NOT NULL on both sides (ADVICE r5): a NULL-text doc gets a
     # NULL n_tok, which Spark's CDF window sorts FIRST but DuckDB sorts
     # LAST — shifting every cumulative count. The NULL-contract filter
@@ -420,7 +416,7 @@ def embedding_coverage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sources are excluded explicitly rather than falling into engine-
     # specific NOT IN / full-outer NULL semantics
     d = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", "source")
         .where(F.col("doc_id").isNotNull() & F.col("source").isNotNull())
     )

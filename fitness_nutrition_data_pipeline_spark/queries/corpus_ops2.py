@@ -28,10 +28,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 # whitespace-token count without an explode: split, drop empties, size.
 # Stays a scalar expression per row — the scan's only shuffle is the
 # final source-grain groupBy. A FUNCTION, not a module constant:
@@ -94,7 +90,7 @@ _STRIDE = 48  # tokens advanced per chunk (overlap = CHUNK - STRIDE = 16)
     "posexplode_outer over a sequence(), one shuffle-free map stage.",
 )
 def rag_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     c = d.select(
         "source", _tok_spark().cast("long").alias("toks")
     ).select(
@@ -201,7 +197,7 @@ _RULES_DOC = (
     "attribution CASE is codegen, the rollup is rule-grain.",
 )
 def filter_funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull()).select(
         "n_chars",
         _tok_spark().cast("long").alias("words"),
         F.length(
@@ -322,7 +318,7 @@ def filter_funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tokenizer_fertility_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     w = d.select(
         "source",
         F.explode(
@@ -397,7 +393,7 @@ def tokenizer_fertility_by_source(
     "bit-exact cross-engine.",
 )
 def char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull()).select(
         "source",
         F.length("text").cast("long").alias("total"),
         F.length(F.regexp_replace("text", "[^A-Za-z]", ""))
@@ -482,7 +478,7 @@ def char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "occupancy is a distinct-count over vocab grain.",
 )
 def feature_hashing_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     terms = (
         d.select(
             F.explode(
@@ -570,7 +566,7 @@ def feature_hashing_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rag_chunk_emit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.text import chunk_documents
 
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     chunks = chunk_documents(
         d.select("doc_id", "source", "text"),
         size=_CHUNK,

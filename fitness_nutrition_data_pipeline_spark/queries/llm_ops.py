@@ -47,14 +47,6 @@ N_MINHASH = 8  # permutations
 N_BANDS = 4  # LSH bands (rows_per_band = 2)
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 # ---------------------------------------------------------------------------
 # Oracle SQL builders (shared CTE fragments)
 # ---------------------------------------------------------------------------
@@ -125,7 +117,7 @@ _COS_SQL = (
     "shuffle on the hash; at 100 TB this is the standard first dedup pass.",
 )
 def dedup_exact_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_dedup_summary(_docs(spark, sf_dir), "text")
+    return exact_dedup_summary(load_table(spark, sf_dir, "documents"), "text")
 
 
 # ---------------------------------------------------------------------------
@@ -162,7 +154,7 @@ def dedup_exact_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(minhash_lsh_buckets) so the compare never goes globally quadratic.",
 )
 def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = jaccard_on_adjacent_pairs(_docs(spark, sf_dir), "doc_id", "text")
+    pairs = jaccard_on_adjacent_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     return pairs.select(
         F.col("id_a").alias("doc_id_a"),
         F.col("id_b").alias("doc_id_b"),
@@ -195,7 +187,9 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "canonical 100 TB near-dedup plan.",
 )
 def minhash_lsh_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = minhash_signatures(_docs(spark, sf_dir), "doc_id", "text", n_hashes=N_MINHASH)
+    sigs = minhash_signatures(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
+    )
     return lsh_buckets(lsh_bands(sigs, "doc_id", n_bands=N_BANDS), "doc_id")
 
 
@@ -221,7 +215,9 @@ def minhash_lsh_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never quadratic — the decision stage of the 100 TB near-dedup plan.",
 )
 def minhash_dedup_flags_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = minhash_signatures(_docs(spark, sf_dir), "doc_id", "text", n_hashes=N_MINHASH)
+    sigs = minhash_signatures(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
+    )
     return lsh_dup_flags(lsh_bands(sigs, "doc_id", n_bands=N_BANDS), "doc_id")
 
 
@@ -264,7 +260,7 @@ def _simhash_oracle() -> str:
     "near-dups; production variant uses 64-bit xxhash64 (same plan shape).",
 )
 def simhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash16(_docs(spark, sf_dir), "doc_id", "text")
+    return simhash16(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -297,7 +293,7 @@ def simhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only k rows per query cross the final shuffle.",
 )
 def embedding_knn_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     corpus = e.where(F.col("vec_id") >= 5).withColumnRenamed("label", "neighbor_label")
     queries = e.where(F.col("vec_id") < 5)
     return brute_force_topk(corpus, queries, "vec_id", "embedding", k=3).select(
@@ -333,7 +329,7 @@ def embedding_knn_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "matching centroid's partition instead of the full corpus.",
 )
 def embedding_centroid_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     centroids = e.where(F.col("vec_id") < 10)
     assign = assign_centroids(e, centroids, "vec_id", "embedding")
     return assign.groupBy("centroid_id").agg(
@@ -364,7 +360,7 @@ def embedding_centroid_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cross-block pair space is never materialized.",
 )
 def embedding_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
     )
     a = e.alias("a")
@@ -420,7 +416,7 @@ def embedding_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "baseline, recall traded for the pruned scan.",
 )
 def embedding_ann_ivf_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     centroids = e.where(F.col("vec_id") < 10)
     # pin: assignments feed the probe's q-build AND candidate side —
     # unpinned, each re-ran the corpus scan + broadcast-score + window
@@ -474,7 +470,7 @@ def embedding_ann_ivf_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "adjacent ids, at scale they come from signature-prefix buckets.",
 )
 def simhash_hamming_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = simhash16(_docs(spark, sf_dir), "doc_id", "text")
+    sigs = simhash16(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     a = sigs.alias("a")
     b = sigs.alias("b")
     hamming = F.bit_count(F.col("a.simhash16").bitwiseXOR(F.col("b.simhash16")))
@@ -531,7 +527,7 @@ def simhash_hamming_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_lsh_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = random_hyperplane_lsh(
-        _emb(spark, sf_dir), "vec_id", "embedding", n_planes=8, dim=64
+        load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding", n_planes=8, dim=64
     )
     return (
         buckets.groupBy("bucket_id")
@@ -605,7 +601,9 @@ def _clusters_sql(iterations: int = _CC_ITERS) -> str:
     "clusters → keep-one survivor.",
 )
 def lsh_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = minhash_signatures(_docs(spark, sf_dir), "doc_id", "text", n_hashes=N_MINHASH)
+    sigs = minhash_signatures(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
+    )
     bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
     membership = bands.select(
         "doc_id",
@@ -679,7 +677,7 @@ def lsh_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB: k×d result rows per round, corpus never re-materialized.",
 )
 def kmeans_lloyd_update_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     centroids = e.where(F.col("vec_id") < 10)
     step = kmeans_lloyd_step(e, centroids, "vec_id", "embedding")
     old_dims = centroids.select(
@@ -736,7 +734,7 @@ def kmeans_lloyd_update_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "crosses the shuffle; at 100 TB this is a single cheap pass.",
 )
 def embedding_quantization_params_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dims = _emb(spark, sf_dir).select(
+    dims = load_table(spark, sf_dir, "embeddings").select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias("i", "x")
     )
     dmin, dmax = F.min("x"), F.max("x")
@@ -818,7 +816,7 @@ def _hp_mem_sql(seeds: tuple[str, ...] = _HP_SEEDS, n_planes: int = 8, dim: int 
     "lsh_dedup_clusters, never all-pairs.",
 )
 def embedding_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     tables = [
         random_hyperplane_lsh(e, "vec_id", "embedding", seed=s) for s in _HP_SEEDS
     ]
@@ -871,7 +869,7 @@ def _ann_recall_single_pass(
         cosine,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") >= 495)
     centroids = e.where(F.col("vec_id") < 10)
     assignments = assign_centroids(
@@ -1091,7 +1089,7 @@ def pca_power_iteration_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             - 1
         ).alias("v0"),
     )
-    vecs = _emb(spark, sf_dir).select(
+    vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.posexplode(F.col("embedding").cast("array<double>")).alias("i", "x")
     )
     xv = (
@@ -1180,7 +1178,7 @@ def _mmr_oracle(k: int = 5) -> str:
 def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.similarity import cosine
 
-    e = _emb(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     q_emb = e.where(F.col("vec_id") == 0).select("emb").head()[0]
@@ -1268,7 +1266,9 @@ def _cluster_size_hist_sql(iterations: int = _CC_ITERS) -> str:
     "corpus, so the rollup cost is nil at any scale.",
 )
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = minhash_signatures(_docs(spark, sf_dir), "doc_id", "text", n_hashes=N_MINHASH)
+    sigs = minhash_signatures(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
+    )
     bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
     membership = bands.select(
         "doc_id",
@@ -1326,7 +1326,7 @@ def _cross_source_leakage_sql(iterations: int = _CC_ITERS) -> str:
     "pair materialization.",
 )
 def cross_source_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs, "doc_id", "text", n_hashes=N_MINHASH)
     bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
     membership = bands.select(
@@ -1397,7 +1397,7 @@ def cross_source_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def near_dup_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = near_dup_pipeline(
-        _docs(spark, sf_dir),
+        load_table(spark, sf_dir, "documents"),
         "doc_id",
         "text",
         n_hashes=N_MINHASH,
@@ -1469,7 +1469,7 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sigs = minhash_signatures(
-        _docs(spark, sf_dir), "doc_id", "text", n_hashes=N_MINHASH
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
     )
     # pin before the stats-join diamond: mins and the join's probe side
     # read ONE materialized band table instead of re-running the corpus
@@ -1531,7 +1531,7 @@ def embedding_dot_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     ok = (
-        _emb(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id").isNotNull() & (F.array_size("embedding") == 64))
         .select("vec_id", "embedding")
     )
@@ -1557,9 +1557,8 @@ def embedding_dot_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered at r16 in the window's second slack slot (staged + gate-proven
-# during r15 by tests/test_ann_staged.py, which keeps running the driver-gate
-# compare at two SFs as the always-on regression harness).
+# Registered; tests/test_ann_staged.py also runs its oracle compare at two
+# SFs.
 # ---------------------------------------------------------------------------
 
 _IVF_BEAM_ORACLE = f"""
@@ -1658,12 +1657,9 @@ def ivf_beam_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r17 (the window's one slack slot, per VERDICT r16 ask #2; it
-# was staged through r16 because the rotation contract requires new
-# registrations to sit inside the driver's 50-slot window). The REAL
-# engine's batch-split invariance stays pinned by
+# Registered. The REAL engine's batch-split invariance is pinned by
 # tests/test_lsh_bridge_property.py, and tests/test_lsh_bridge_staged.py
-# keeps the two-SF driver-gate comparison green.
+# runs its oracle compare at two SFs.
 # ---------------------------------------------------------------------------
 
 _LSH_REPLAY_ORACLE = (
@@ -1710,7 +1706,7 @@ def lsh_dedup_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         LshDedupBridge,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     bridge = LshDedupBridge(spark)
     out = None
     for b in range(3):
@@ -1728,9 +1724,8 @@ def lsh_dedup_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r17+ (same rotation-contract reason as lsh_dedup_batch_replay
-# above; registration takes whichever slack slot the r17/r18 window opens).
-# Driver-gate-compared at two SFs by tests/test_graph_ann_staged.py.
+# Staged, not registered: oracle-compared at two SFs by
+# tests/test_graph_ann_staged.py.
 # ---------------------------------------------------------------------------
 
 _GRAPH_K_EDGE = 8  # kNN-graph out-degree
@@ -1840,7 +1835,7 @@ def graph_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_graph_edges,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") >= 495)
     centroids = e.where(F.col("vec_id") < 10)
     exact = brute_force_topk(e, queries, "vec_id", "embedding", k=3).select(
@@ -1875,8 +1870,8 @@ def graph_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED FOR r17+ (same rotation-contract note as
-    lsh_dedup_batch_replay above). Incrementally-maintained duplicate
+    """Staged, not registered (oracle-compared at two SFs by
+    tests/test_lsh_bridge_staged.py). Incrementally-maintained duplicate
     clusters: the LshDedupBridge streams candidate pairs per micro-batch
     (documents in three doc_id % 3 batches) and
     streaming/lsh_bridge.py::IncrementalComponents folds each delta into
@@ -1895,7 +1890,7 @@ def incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         LshDedupBridge,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     bridge = LshDedupBridge(spark)
     cc = IncrementalComponents(spark)
     labels = None
@@ -1910,11 +1905,8 @@ def incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r18 (not yet @register'ed — rotation contract: new entries must
-# sit inside the driver's 50-slot window; r17's one slack slot went to the
-# r16-staged lsh_dedup_batch_replay, and rotation_report --plan-next shows
-# 35 r18 slack slots). Driver-gate-compared at two SFs by
-# tests/test_pq_staged.py / tests/test_graph_bridge_staged.py until then.
+# Staged, not registered: these queries are oracle-compared at two SFs by
+# tests/test_pq_staged.py and tests/test_graph_bridge_staged.py.
 #
 # pq_recall_contract: the ANN ladder's MEMORY-BUDGET rung (VERDICT r16
 # ask #8) — embedding_quantization_params proved the scalar int8 story;
@@ -2038,7 +2030,7 @@ def pq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         sq_dist,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     sub = pq_subvectors(e, "vec_id", "embedding", m=_PQ_M, sub_dim=_PQ_SUB)
     codes = sub.where(F.col("vec_id") < _PQ_NCODES).select(
         F.col("vec_id").alias("code_id"), "j", F.col("sub").alias("cs")
@@ -2143,7 +2135,7 @@ def graph_ingest_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         GraphIngestBridge,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     centroids = e.where(F.col("vec_id") < 10)
     bridge = GraphIngestBridge(
         spark, centroids, id_col="vec_id", vec_col="embedding",
@@ -2160,9 +2152,8 @@ def graph_ingest_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r18 (rotation contract, same as the PQ/graph entries above).
-# Driver-gate-compared at two SFs by tests/test_ivfpq_staged.py and
-# tests/test_graph_bridge_staged.py.
+# Staged, not registered: these queries are oracle-compared at two SFs by
+# tests/test_ivfpq_staged.py and tests/test_graph_bridge_staged.py.
 #
 # ivfpq_recall_contract: the ladder-COMPOSITION rung — IVF's partition
 # pruning multiplied by PQ's compressed scan (the full IVF-PQ serving
@@ -2295,7 +2286,7 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         sq_dist,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     sub = pq_subvectors(e, "vec_id", "embedding", m=_PQ_M, sub_dim=_PQ_SUB)
     codes = sub.where(F.col("vec_id") < _PQ_NCODES).select(
         F.col("vec_id").alias("code_id"), "j", F.col("sub").alias("cs")
@@ -2397,7 +2388,7 @@ def graph_bridge_search_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         GraphIngestBridge,
     )
 
-    e = _emb(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings")
     centroids = e.where(F.col("vec_id") < 10)
     queries = e.where(F.col("vec_id") >= 495)
     bridge = GraphIngestBridge(

@@ -23,10 +23,6 @@ from fitness_nutrition_data_pipeline_spark.scratch import scratch_path
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "column_profile_orders",
     """
@@ -49,7 +45,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "once per column — the difference between 1× and N× of a 100 TB read.",
 )
 def column_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cols = ["o_custkey", "o_orderstatus", "o_orderpriority"]
     aggs = []
     for c in cols:
@@ -81,7 +77,7 @@ def column_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per task regardless of input size).",
 )
 def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(
             F.floor(F.col("l_extendedprice") / 10000).alias("bucket")
@@ -119,7 +115,7 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pattern behind campaign attribution / maintenance-window tagging.",
 )
 def interval_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     windows = [
         ("1997-Q1-promo", "1997-01-01", "1997-01-15"),
         ("1997-Q2-promo", "1997-04-01", "1997-04-15"),
@@ -178,7 +174,7 @@ def interval_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "via TakeOrderedAndProject — no global sort of the key table.",
 )
 def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_rows"))
     stats = per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -227,7 +223,7 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "explodes — estimate first, then pair.",
 )
 def selfjoin_blowup_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     per_key = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
     return per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -306,7 +302,7 @@ def zorder_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         zvalue,
     )
 
-    base = _t(spark, sf_dir, "orders").select(
+    base = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("ck"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01"))
         .cast("long")
@@ -417,7 +413,7 @@ def zorder_write_band_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stable across sf dirs
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = scratch_path(spark, tag, "zorder_orders")
-    base = _t(spark, sf_dir, "orders").select(
+    base = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("ck"),
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01"))
         .cast("long")

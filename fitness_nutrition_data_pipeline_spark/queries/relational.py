@@ -24,10 +24,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Scans / projections / filters  (S1, P2-P6)
 # ---------------------------------------------------------------------------
@@ -48,7 +44,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "Mirrors activity filter+derive (main_etl_pipeline.py:596-616).",
 )
 def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where((F.col("l_shipdate") >= "2001-06-01") & (F.col("l_quantity") > 40))
         .select(
@@ -83,7 +79,7 @@ def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(10,60) exclusive-bounds rule (main_etl_pipeline.py:202-208, 579-585; F10 :688-691).",
 )
 def range_validity_nullout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     valid = F.when((F.col("value") > 5) & (F.col("value") < 90), F.col("value"))
     return ev.where(F.col("event_type") == "purchase").select(
         "event_id",
@@ -113,7 +109,7 @@ def range_validity_nullout(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(main_etl_pipeline.py:543, A1).",
 )
 def daily_rollup_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id", F.col("ts").cast("date").alias("day"))
@@ -139,7 +135,7 @@ def daily_rollup_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(main_etl_pipeline.py:560, A2).",
 )
 def daily_rollup_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.where(F.col("event_type") == "click")
         .groupBy("user_id", F.col("ts").cast("date").alias("day"))
@@ -159,7 +155,7 @@ def daily_rollup_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Exact (not approx_count_distinct): validation must be exact.",
 )
 def pk_uniqueness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.agg(
         F.count(F.lit(1)).alias("total_rows"),
         F.countDistinct("o_orderkey").alias("unique_keys"),
@@ -178,7 +174,7 @@ def pk_uniqueness_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(validation.sql:111-120, A5/F8).",
 )
 def composite_pk_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("total_rows"),
         F.countDistinct(F.concat_ws(":", "l_orderkey", "l_linenumber")).alias("unique_keys"),
@@ -198,7 +194,7 @@ def composite_pk_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(validation.sql:259-291, 227-244; A6).",
 )
 def conditional_range_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.agg(
         F.count(F.lit(1)).alias("total_rows"),
         F.sum(F.when((F.col("value") < 0) | (F.col("value") > 95), 1).otherwise(0)).alias(
@@ -224,7 +220,7 @@ def conditional_range_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="MIN/AVG/MAX/COUNT distribution stats (validation.sql:329-359, A7).",
 )
 def distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("o_totalprice"), 2).alias("min_price"),
@@ -244,7 +240,7 @@ def distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "as concat_ws over sort_array(collect_set()).",
 )
 def domain_inventory_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.agg(
         F.lit("o_orderpriority").alias("column_name"),
         F.concat_ws(",", F.sort_array(F.collect_set("o_orderpriority"))).alias("domain_values"),
@@ -271,7 +267,7 @@ def table_counts_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for name in ("customer", "orders", "lineitem", "part", "supplier", "nation", "region"):
         parts.append(
-            _t(spark, sf_dir, name).agg(
+            load_table(spark, sf_dir, name).agg(
                 F.lit(name).alias("table_name"), F.count(F.lit(1)).alias("row_count")
             )
         )
@@ -306,9 +302,9 @@ def table_counts_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle at 100x (no pinned hint to OOM on).",
 )
 def star_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -339,7 +335,7 @@ def star_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "for determinism instead of CURRENT_DATE.",
 )
 def recent_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     max_d = o.agg(F.max("o_orderdate").alias("max_d"))
     return (
         o.join(F.broadcast(max_d))
@@ -366,8 +362,8 @@ def recent_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "side while small and shuffles when it is not.",
 )
 def orphan_fk_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_retailprice") > 1500).select("p_partkey")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_retailprice") > 1500).select("p_partkey")
     return (
         li.join(p, li.l_partkey == p.p_partkey, "left_anti")
         .agg(F.count(F.lit(1)).alias("orphan_rows"))
@@ -388,8 +384,8 @@ def orphan_fk_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(validation.sql:295-325, J6).",
 )
 def fk_coverage_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_retailprice") > 1500).select("p_partkey")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_retailprice") > 1500).select("p_partkey")
     joined = li.join(p, li.l_partkey == p.p_partkey, "left")
     return joined.agg(
         F.round(
@@ -415,9 +411,9 @@ def fk_coverage_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "snowflake joins; inner semantics = drop-on-miss.",
 )
 def fact_dim_key_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     return (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -450,7 +446,7 @@ def fact_dim_key_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "salting (documented in operators/resolution.py).",
 )
 def surrogate_key_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.select("c_mktsegment")
         .distinct()
@@ -478,7 +474,7 @@ def surrogate_key_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tie-break idiom (main_etl_pipeline.py:189-232; J1 building block).",
 )
 def window_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
         ev.withColumn("rn", F.row_number().over(w))
@@ -503,7 +499,7 @@ def window_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows (main_etl_pipeline.py:572-593) as stack(2, ...).",
 )
 def metric_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.expr(
@@ -532,7 +528,7 @@ def metric_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(main_etl_pipeline.py:418-437, F2). Spark cast-fail→NULL ≡ coerce.",
 )
 def regex_extract_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.where(F.col("event_type") == "signup").select(
         "event_id",
         F.regexp_extract("props", '"k": ([0-9]+)', 1).cast("int").alias("k_value"),
@@ -561,7 +557,7 @@ def regex_extract_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     "when(lower().contains()) preserving dict order, default bucket last.",
 )
 def keyword_categorization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     lowered = F.lower(F.col("p_type"))
     category = (
         F.when(lowered.contains("promo") | lowered.contains("economy"), "discount")
@@ -664,7 +660,7 @@ def date_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entity_resolution_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.keys import assign_sequential_ids
 
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     profiles = c.select(
         "c_custkey",
         F.concat_ws(
@@ -698,7 +694,7 @@ def entity_resolution_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "properties-bag pattern every event pipeline carries.",
 )
 def json_props_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     parsed = ev.withColumn("_p", F.from_json("props", "k INT"))
     return parsed.groupBy("event_type").agg(
         F.sum(F.col("_p.k")).alias("total_k"),

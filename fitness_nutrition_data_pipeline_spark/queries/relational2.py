@@ -15,10 +15,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "pivot_status_counts",
     """
@@ -35,7 +31,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "conditional aggregates (the oracle spells that rewrite out).",
 )
 def pivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     piv = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["O", "F", "P"])
@@ -63,7 +59,7 @@ def pivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle via Expand — no per-level re-scan.",
 )
 def rollup_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -84,7 +80,7 @@ def rollup_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pass instead of a UNION ALL of scans.",
 )
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
@@ -156,7 +152,7 @@ def sessionized(ev: DataFrame) -> DataFrame:
     "pattern; one shuffle on user_id, windows stay within partitions.",
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sess = sessionized(ev)
     return sess.groupBy("user_id", F.col("session_no").cast("long").alias("session_no")).agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -181,7 +177,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Catalyst pushes the rn<=2 filter into the window as a group limit.",
 )
 def topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     w = W.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), "p_partkey")
     return (
         p.withColumn("rn", F.row_number().over(w))
@@ -203,8 +199,8 @@ def topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "returns each left row at most once, no fan-out, dim side streams.",
 )
 def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
         "c_custkey", "c_mktsegment"
     )
@@ -231,8 +227,8 @@ def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semi/anti joins after aggregate, not materialized sets.",
 )
 def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     rich = c.where(F.col("c_acctbal") > 5000).select(F.col("c_custkey").alias("k"))
     ordered = o.select(F.col("o_custkey").alias("k"))
     inter = rich.intersect(ordered).agg(
@@ -261,7 +257,7 @@ def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the same plan shape.",
 )
 def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_quantity", F.lit(0.5)), 4).alias("median_qty"),
         F.round(F.percentile("l_extendedprice", F.lit(0.95)), 4).alias("p95_price"),
@@ -285,7 +281,7 @@ def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows-frame window; partition-local, no global sort.",
 )
 def running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 50)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 50)
     w = (
         W.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -326,7 +322,7 @@ def running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rounded sum — a 2dp sum can never sit on a sub-cent boundary.",
 )
 def monthly_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100).cast("long")
     n = F.count(F.lit(1))
     return (
@@ -369,7 +365,7 @@ def monthly_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "manual form of what AQE skew handling does for joins.",
 )
 def salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     salted = ev.withColumn("_salt", F.pmod(F.hash("event_id"), F.lit(16)))
     partial = salted.groupBy("event_type", "_salt").agg(
         F.count(F.lit(1)).alias("_n"), F.sum("value").alias("_v")
@@ -401,7 +397,7 @@ def salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def asof_join_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.asof import as_of_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -439,7 +435,7 @@ def asof_join_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "event-funnel plan at scale.",
 )
 def funnel_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("first_view"),
         F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("last_purchase"),
@@ -477,7 +473,7 @@ def funnel_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     "without any per-cohort scan.",
 )
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(F.date_trunc("month", F.min("ts")).alias("cohort"))
     activity = ev.select(
         "user_id", F.date_trunc("month", "ts").alias("act_month")
@@ -523,9 +519,9 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one UNION ALL of rule/violation_count rows, ready for a sink write.",
 )
 def violations_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
     neg_price = o.agg(
         F.lit("negative_price").alias("rule"),
         F.sum(F.when(F.col("o_totalprice") < 0, 1).otherwise(0)).alias("violation_count"),
@@ -572,7 +568,7 @@ def violations_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partition-local, no self-join for the sliding window.",
 )
 def range_frame_trailing_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 30)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 30)
     epoch_day = F.datediff(F.col("o_orderdate").cast("date"), F.lit("1990-01-01").cast("date"))
     w = (
         W.partitionBy("o_custkey")
@@ -608,7 +604,7 @@ def range_frame_trailing_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per partition serves all three functions.",
 )
 def order_gap_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 30)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 30)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     day = F.col("o_orderdate").cast("date")
     return o.select(
@@ -641,7 +637,7 @@ def order_gap_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     "'subquery decorrelation') — no per-row subquery execution.",
 )
 def correlated_subquery_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("orders_corr")
     return spark.sql(
         """
@@ -672,7 +668,7 @@ def correlated_subquery_big_spenders(spark: SparkSession, sf_dir: str) -> DataFr
     "scan for the means.",
 )
 def stats_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         (F.round(F.corr("l_quantity", "l_extendedprice"), 6) + 0.0).alias("qty_price_corr"),
         F.round(F.stddev_samp("l_quantity"), 6).alias("qty_stddev"),
@@ -699,7 +695,7 @@ def stats_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "loop.",
 )
 def user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").where(F.col("user_id") < 20)
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 20)
     hours = F.unix_micros("ts") / 3600000000.0
     return ev.groupBy("user_id").agg(
         (F.round(F.regr_slope("value", hours), 6) + 0.0).alias("value_slope_per_hour"),
@@ -733,7 +729,7 @@ def user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact aggregation Structured Streaming runs for streaming sessions.",
 )
 def sessionize_native_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_session = ev.groupBy(
         "user_id", F.session_window("ts", "30 minutes").alias("sw")
     ).agg(
@@ -781,7 +777,7 @@ def sessionize_native_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "grain is the only thing that crosses the wire.",
 )
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     groups = cust.groupBy(
         "c_nationkey",
         "c_mktsegment",
@@ -836,7 +832,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded by the attribute domain, not the data.",
 )
 def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     groups = cust.groupBy(
         "c_nationkey",
         F.floor(F.col("c_acctbal") / 2000).cast("long").alias("bal_band"),
@@ -909,9 +905,9 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ships only keys, and each table is scanned once.",
 )
 def deletion_propagation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     tomb = cust.where(F.col("c_custkey") % 37 == 0).select("c_custkey")
 
     c = cust.agg(

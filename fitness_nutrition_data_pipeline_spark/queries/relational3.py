@@ -20,10 +20,6 @@ from fitness_nutrition_data_pipeline_spark.scratch import scratch_path
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "cube_revenue",
     """
@@ -42,7 +38,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "rollup NULLs.",
 )
 def cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         (
             F.grouping("l_returnflag") + 2 * F.grouping("l_linestatus")
@@ -71,7 +67,7 @@ def cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "operator pass. Deterministic via the c_custkey tie-break.",
 )
 def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.desc("c_acctbal"), F.col("c_custkey")
     )
@@ -103,7 +99,7 @@ def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cross-corpus. JVM-side levenshtein — no Python in the loop.",
 )
 def edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.substring("text", 1, 60).alias("head")
     )
     a = d.select(F.col("doc_id").alias("doc_id_a"), F.col("head").alias("head_a"))
@@ -153,7 +149,7 @@ def edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcasts.",
 )
 def date_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     spine = o.sparkSession.range(1).select(
         F.explode(
             F.sequence(
@@ -214,7 +210,7 @@ def date_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     "because cluster sizes are bounded by true duplicate counts.",
 )
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.select(
         "doc_id",
         "lang",
@@ -265,7 +261,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     "history; here the history side is computed inline.",
 )
 def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.select(
         "doc_id",
         "lang",
@@ -322,7 +318,7 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         # ts NOT NULL is explicit on both sides: a NULL day would fall
         # through both period filters here while the oracle keeps it as
         # its own group
@@ -424,7 +420,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def record_linkage_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy("c_custkey")
     band = F.floor(F.col("c_acctbal") / 1000).cast("long")
     blocked = cust.select(
@@ -510,7 +506,7 @@ def record_linkage_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the M-step is one scalar aggregation with map-side partials.",
 )
 def linkage_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy("c_custkey")
     band = F.floor(F.col("c_acctbal") / 1000).cast("long")
     blocked = cust.select(
@@ -583,7 +579,7 @@ def linkage_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     "edge table while it fits.",
 )
 def hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     parent_of = F.when(F.col("node") < 10, F.col("node")).otherwise(
         F.floor(F.col("node") / 10).cast("long")
     )
@@ -660,8 +656,8 @@ def hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_script_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.sql_script import run_sql_script
 
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
     script = """
     -- validation-corpus-style script with a SET bound and a broken stmt
     SET @max_qty = 60;
@@ -718,7 +714,7 @@ def csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = scratch_path(spark, tag, "csv_customer")
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     cust.write.mode("overwrite").option("header", "true").csv(path)
     back = (
         spark.read.schema(
@@ -771,7 +767,7 @@ def jsonl_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = scratch_path(spark, tag, "jsonl_documents")
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     write_jsonl(docs, path)
     back = read_jsonl(
         spark,
@@ -812,7 +808,7 @@ def orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = scratch_path(spark, tag, "orc_orders")
-    write_orc(_t(spark, sf_dir, "orders"), path)
+    write_orc(load_table(spark, sf_dir, "orders"), path)
     back = read_orc(spark, path)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -856,7 +852,7 @@ def orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "guard (its json_extract is strict).",
 )
 def variant_props_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # try_parse_json, not parse_json (ADVICE r7): strict parse_json
     # throws on a malformed blob and fails the whole scan, while the
     # doc promises try_ semantics end-to-end. The oracle mirrors the
@@ -914,7 +910,7 @@ def avro_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
     ).hexdigest()[:8]
     path = scratch_path(spark, tag, "avro_documents")
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     write_avro(docs, path)
@@ -966,7 +962,7 @@ def avro_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
     ).hexdigest()[:8]
     path = scratch_path(spark, tag, "avro_split_documents")
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     ).coalesce(1)
     write_avro(docs, path, rows_per_block=256)

@@ -34,14 +34,6 @@ _COS_SQL = (
 _BUCKET_SQL = "CAST(('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 6)) AS BIGINT)"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 @register(
     "reciprocal_rank_fusion",
     f"""
@@ -96,7 +88,7 @@ def reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         for term in ("table", "window", "join")
     ).cast("int")
     lex = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", tf.alias("tf"))
         .withColumn(
@@ -104,7 +96,7 @@ def reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(W.orderBy(F.desc("tf"), "doc_id")),
         )
     )
-    e = _emb(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     q = e.where(F.col("vec_id") == 0).select(F.col("emb").alias("q_emb"))
@@ -163,7 +155,7 @@ def reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "anchor survive the final shuffle.",
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _emb(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
     )
     q = e.where(F.col("vec_id") < 5).select(
@@ -221,7 +213,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB the quota keeps the output answer-sized.",
 )
 def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         (hash_bucket(F.col("doc_id"), 1 << 24) % 16).alias("cluster_id"),
@@ -327,7 +319,7 @@ def dp_noised_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is a broadcast 1-row aggregate.",
 )
 def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # answer-sized (one row per source) — pin it so the grand-total
     # aggregate consumes the computed rows instead of re-scanning and
     # re-tokenizing the corpus (scan-audit policy: 2 scans -> 1)

@@ -28,10 +28,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 def hash_bucket(key: Column, n_buckets: int) -> Column:
     """Deterministic uniform bucket in [0, n_buckets) from a key column.
 
@@ -75,7 +71,7 @@ _BUCKET_SQL = "CAST(('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 6)) AS BIGIN
     "training mix. One scan, row-local predicate, tiny aggregate.",
 )
 def hash_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     rate = F.when(F.col("lang") == "en", F.lit(25)).otherwise(F.lit(100))
     keep = hash_bucket(F.col("doc_id"), 100) < rate
     return d.groupBy("lang").agg(
@@ -109,7 +105,7 @@ def hash_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "documents into train. No shuffle beyond the 3-row aggregate.",
 )
 def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     bucket = hash_bucket(F.col("doc_id"), 10)
     split = (
         F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
@@ -146,7 +142,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "grand total is a 1-row broadcast joined back to the per-source agg.",
 )
 def domain_mixing_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     per_src = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.trim("text"), r"\s+"))).alias("ws_tokens"),
@@ -208,7 +204,7 @@ def sequence_packing_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     ctx = 2048
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     toks = F.array_size(
         F.regexp_extract_all(
             F.lower("text"), F.lit(r"[a-z0-9]+|[^a-z0-9\s]"), F.lit(0)
@@ -267,7 +263,7 @@ def sequence_packing_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fixed_size_stratum_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     rn = F.row_number().over(
         W.partitionBy("lang").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
     )
@@ -337,7 +333,7 @@ def fixed_size_stratum_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def split_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.text import word_shingles
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     bucket = hash_bucket(F.col("doc_id"), 10)
     split = (
         F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
@@ -406,7 +402,7 @@ def split_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     u = (hash_bucket(F.col("doc_id"), 16777216) + F.lit(0.5)) / F.lit(16777216.0)
     # ADVICE r6: ln() is <=1-ulp in each engine but not identically
     # rounded, so a near-tie at the rank-50 boundary could order
@@ -464,7 +460,7 @@ def weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stratified_train_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     win = W.partitionBy("lang")
     ranked = d.select(
         "lang",

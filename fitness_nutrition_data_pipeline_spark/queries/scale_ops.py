@@ -37,10 +37,6 @@ from fitness_nutrition_data_pipeline_spark.queries.sampling import (
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 @register(
     "training_shard_assignment",
     f"""
@@ -77,7 +73,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shard-count-sized.",
 )
 def training_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "n_chars",
         F.md5(F.col("doc_id").cast("string")).alias("h"),
@@ -127,7 +123,7 @@ def training_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "after one scan + tiny aggregate; the 1-row total broadcasts.",
 )
 def source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _docs(spark, sf_dir).groupBy("source").agg(
+    c = load_table(spark, sf_dir, "documents").groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     w = c.select(
@@ -182,7 +178,7 @@ def source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "write sized so every output file lands on target.",
 )
 def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _docs(spark, sf_dir).groupBy("source").agg(
+    p = load_table(spark, sf_dir, "documents").groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("part_bytes"),
     )
@@ -239,7 +235,7 @@ def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count is one shuffle with map-side partial aggregation.",
 )
 def oov_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = d.select(
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok")
     ).where(F.col("tok") != "")
@@ -305,7 +301,7 @@ def oov_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "would cost is replaced by one scan + one tiny aggregate.",
 )
 def length_filter_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hist = _docs(spark, sf_dir).groupBy("n_chars").agg(
+    hist = load_table(spark, sf_dir, "documents").groupBy("n_chars").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("chars"),
     )
@@ -612,7 +608,7 @@ def prefix_filter_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.dedup import prefix_filter_join
 
     pairs = prefix_filter_join(
-        _docs(spark, sf_dir), "doc_id", "text", n=3, threshold=0.5
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.5
     )
     return pairs.select(
         "doc_a",
@@ -660,7 +656,7 @@ def prefix_filter_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one hash-partition exchange, manifests are shard-count-sized.",
 )
 def shard_manifest_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull()).select(
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull()).select(
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("order_h"),
         F.md5(F.col("text")).alias("content_h"),

@@ -482,10 +482,8 @@ def ndcg_fused_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r17 (not yet @register'ed — rotation contract: new entries must
-# sit inside the driver's 50-slot window; the r16 slack went to the r15-staged
-# pair and rotation_report --plan-next plans 1+ r17 slack slots). Driver-gate-
-# compared at two SFs by tests/test_rerank_cascade_staged.py until then.
+# Staged, not registered: this query is oracle-compared at two SFs by
+# tests/test_rerank_cascade_staged.py.
 # ---------------------------------------------------------------------------
 
 _L1_K = 50  # lexical candidates fed to the bi-encoder stage
@@ -663,9 +661,8 @@ def rerank_cascade_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r18 (same rotation-contract reason as rerank_cascade_eval
-# above; r17's one slack slot was owed to the r16-staged bridge replay).
-# Driver-gate-compared at two SFs by tests/test_distill_staged.py.
+# Staged, not registered: this query is oracle-compared at two SFs by
+# tests/test_distill_staged.py.
 #
 # The training-data CONSUMER of the cascade (VERDICT r16 ask #8's
 # "cross-encoder distillation-pair miner"): the standard way a cheap

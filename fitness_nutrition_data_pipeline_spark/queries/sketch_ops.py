@@ -23,10 +23,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "approx_distinct_contract",
     """
@@ -47,7 +43,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "contract flag are what hash-match. One pass, mergeable sketch state.",
 )
 def approx_distinct_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     exact = F.count_distinct("user_id")
     approx = F.approx_count_distinct("user_id", 0.02)
     return ev.groupBy("event_type").agg(
@@ -77,7 +73,7 @@ def approx_distinct_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engine-specific by design.",
 )
 def approx_quantile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     exact_med = F.expr("percentile(value, 0.5)")
     spread = F.expr("percentile(value, 0.99)") - F.expr("percentile(value, 0.01)")
     approx_med = F.percentile_approx("value", F.lit(0.5), F.lit(10000))
@@ -118,7 +114,7 @@ def heavy_hitters_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         misra_gries_candidates,
     )
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cand = misra_gries_candidates(ev, "user_id", capacity=256)
     total = ev.agg(F.count(F.lit(1)).alias("total"))
     return (
@@ -188,7 +184,7 @@ def heavy_hitters_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the estimates themselves.",
 )
 def countmin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     d3 = F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("d")
 
     def bucket(d_col, key_col):
@@ -307,8 +303,8 @@ def countmin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "before any shuffle.",
 )
 def bloom_membership_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     d3 = F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("d")
 
     def bit_pos(d_col, key_col):
@@ -441,8 +437,8 @@ def bloom_membership_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmv_distinct_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    ev = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
+    ev = load_table(spark, sf_dir, "events")
+    orders = load_table(spark, sf_dir, "orders")
 
     def hashed(df, col):
         u = (
@@ -531,7 +527,7 @@ def kmv_distinct_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whole point at 100 TB.",
 )
 def ams_f2_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     j9 = F.explode(F.array(*[F.lit(i) for i in range(9)])).alias("j")
     sign = (
         F.conv(
@@ -638,7 +634,7 @@ def ams_f2_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the set algebra runs on 64-row relations.",
 )
 def kmv_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def sketch(etype):
         keys = (
@@ -741,7 +737,7 @@ def kmv_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     partials = o.groupBy(
         F.col("o_orderpriority").alias("src"),
         F.floor(F.col("o_totalprice") / F.lit(1000.0)).alias("bin"),
@@ -771,10 +767,8 @@ def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered at r16 in one of the window's 2 slack slots (staged + gate-proven
-# during r15 by tests/test_sketch_staged.py, which runs the EXACT driver-gate
-# compare — verify_queries' fetch/norm/hash — on the pair at two SFs; that
-# test stays as the always-on regression harness for this entry).
+# Registered; tests/test_sketch_staged.py also runs the verify_queries
+# compare (fetch/norm/hash) on the pair at two SFs.
 # ---------------------------------------------------------------------------
 
 # HLL constants, precomputed once in Python and embedded as literals in BOTH
@@ -871,8 +865,8 @@ def hll_union_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer (sketch + exact verification are intentionally two
     methods — the bloom_membership precedent); register relations are
     bounded at 256 rows regardless of scale."""
-    ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_custkey").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
+    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey").isNotNull())
     tagged = (
         ev.select(F.col("user_id").cast("string").alias("key"),
                   F.lit("events_users").alias("base_set"))

@@ -33,10 +33,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "gini_customer_spend",
     """
@@ -62,7 +58,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "partial), then rank + two scalar sums.",
 )
 def gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("spend")
     )
@@ -103,7 +99,7 @@ def gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "table is scanned once.",
 )
 def chi_square_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cells = o.groupBy(
         F.col("o_orderpriority").alias("pr"), F.col("o_orderstatus").alias("st")
     ).agg(F.count(F.lit(1)).alias("obs"))
@@ -162,7 +158,7 @@ def chi_square_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ks_binned_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "view") & F.col("value").isNotNull())
         .select("event_type", "value")
     )
@@ -221,7 +217,7 @@ def ks_binned_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "One shuffle to 9 digit groups; the denominator is a broadcast scalar.",
 )
 def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") >= 1)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") >= 1)
     digits = o.select(
         F.substring(F.col("o_totalprice").cast("decimal(18,2)").cast("string"), 1, 1)
         .cast("int")
@@ -263,7 +259,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "counts; entropy folds over ≤5 types per bucket.",
 )
 def entropy_event_type_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy(
         (F.col("user_id") % 10).cast("long").alias("bucket"), "event_type"
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -309,7 +305,7 @@ def entropy_event_type_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window runs on 1000 rows.",
 )
 def zipf_slope_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("word"))
         .where(F.col("word") != "")
@@ -351,7 +347,7 @@ def zipf_slope_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "groups with map-side partials — the canonical distributed histogram.",
 )
 def histogram_equi_width_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     ext = li.agg(
         F.min("l_extendedprice").alias("lo"), F.max("l_extendedprice").alias("hi")
     )
@@ -400,7 +396,7 @@ def histogram_equi_width_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sort distributed; no single-task window touches the fact table.",
 )
 def equi_depth_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("p"), "l_orderkey", "l_linenumber"
     )
     ranked = assign_sequential_ids(li, ["p", "l_orderkey", "l_linenumber"], "rk")
@@ -471,7 +467,7 @@ def equi_depth_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mad_outlier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
         .select("event_type", "event_id", "value")
     )
@@ -540,7 +536,7 @@ def mad_outlier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sums then one 3-group shuffle.",
 )
 def decimal_money_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -613,7 +609,7 @@ def decimal_money_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows), never over data.",
 )
 def source_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("source", "n_chars")
+    d = load_table(spark, sf_dir, "documents").select("source", "n_chars")
     ext = d.agg(
         F.min("n_chars").alias("lo"),
         F.greatest(F.max("n_chars") - F.min("n_chars"), F.lit(1)).alias("rng"),
@@ -724,7 +720,7 @@ def drift_monitor_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_value_histogram,
     )
 
-    ev = _t(spark, sf_dir, "events").select("ts", "value")
+    ev = load_table(spark, sf_dir, "events").select("ts", "value")
     hist = windowed_value_histogram(
         ev, "ts", "value", window_len="1 day", bin_width=20.0, late_threshold="1 day"
     )
@@ -796,7 +792,7 @@ def drift_monitor_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
         .select(
             "value",
@@ -919,7 +915,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.queries.sampling import hash_bucket
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     split = F.lit("2024-01-16").cast("timestamp")
     cents = F.round(F.col("value") * 100, 0).cast("long")
     u = ev.groupBy("user_id").agg(
@@ -1033,7 +1029,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window runs on day-grain aggregates, never data rows.",
 )
 def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
     ).agg(
@@ -1103,7 +1099,7 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rollup; windows and the argmax run over calendar-bounded rows.",
 )
 def changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.round(F.sum(F.col("value").cast("decimal(18,6)")) * 1000000)
         .cast("long")
@@ -1200,7 +1196,7 @@ def changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB; the 9-row decile spine is a broadcast cross join.",
 )
 def quantile_normalization_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per = docs.groupBy("source", "n_chars").agg(F.count(F.lit(1)).alias("c"))
     w_cum = W.partitionBy("source").orderBy("n_chars")
     w_tot = W.partitionBy("source")
@@ -1270,7 +1266,7 @@ def quantile_normalization_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     "division is rounded to 6 digits, so the engines hash-match.",
 )
 def burstiness_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -1331,7 +1327,7 @@ def burstiness_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rounded to 6 digits.",
 )
 def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # the (source, lang) contingency feeds FOUR consumers (per-source
     # totals, global lang counts, grand total, and the zero-fill join);
     # unpinned, each consumer re-scans documents — at 100 TB that is 4

@@ -40,12 +40,6 @@ _LANG_MARKERS = {
 _STOPWORDS = ("the", "a", "an", "of", "and", "or", "is", "to", "in")
 
 
-def _docs(
-    spark: SparkSession, sf_dir: str, *, parallelize: bool = True
-) -> DataFrame:
-    return load_table(spark, sf_dir, "documents", parallelize=parallelize)
-
-
 @register(
     "vocab_inventory",
     r"""
@@ -73,7 +67,7 @@ def vocab_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the one structurally-changed r17 headline regression (0.585→0.883 s
     # driver; interleaved A/B r18: raw med 0.905 s vs repartitioned 1.18 s).
     # At cluster scale the gate self-disables anyway (multi-file scans).
-    d = _docs(spark, sf_dir, parallelize=False)
+    d = load_table(spark, sf_dir, "documents", parallelize=False)
     # two-level aggregation instead of count(DISTINCT doc_id): the per-
     # (word, doc) pre-aggregate replaces Spark's Expand-based distinct with
     # two ordinary partial-agg shuffles — cheaper and skew-tolerant at scale
@@ -106,7 +100,7 @@ def vocab_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     "JVM-side via split/regexp_extract_all.",
 )
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return token_counts(_docs(spark, sf_dir), "text").select(
+    return token_counts(load_table(spark, sf_dir, "documents"), "text").select(
         "doc_id", "ws_tokens", "bpe_ish_tokens", "n_chars"
     )
 
@@ -141,7 +135,7 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "as pure Column algebra; north-star text op.",
 )
 def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return quality_features(_docs(spark, sf_dir), "text", _STOPWORDS).select(
+    return quality_features(load_table(spark, sf_dir, "documents"), "text", _STOPWORDS).select(
         "doc_id", "n_tokens", "avg_token_len", "stopword_ratio", "passes_quality"
     )
 
@@ -176,7 +170,7 @@ def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "op; on real corpora the marker lists widen, the plan is identical.",
 )
 def lang_id_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).withColumnRenamed("lang", "labeled_lang")
+    d = load_table(spark, sf_dir, "documents").withColumnRenamed("lang", "labeled_lang")
     return language_scores(d, "text", _LANG_MARKERS).select(
         "doc_id", "labeled_lang", "predicted_lang", "s_en", "s_es", "s_fr", "s_de"
     )
@@ -198,7 +192,7 @@ def lang_id_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(north-star dedup building block; md5 is identical across engines).",
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.regexp_replace(F.lower("text"), "[^a-z0-9]+", " "))
     return d.groupBy(fp.alias("fingerprint")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -239,7 +233,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnowing_fingerprint_summary(
-        _docs(spark, sf_dir), "doc_id", "text", gram=3, window=4
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", gram=3, window=4
     )
 
 
@@ -288,7 +282,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def winnowing_cross_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = winnowing_match_pairs(
-        _docs(spark, sf_dir), "doc_id", "text",
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
         gram=3, window=4, max_postings=10, min_shared=2,
     )
     return pairs.select(
@@ -329,7 +323,7 @@ def winnowing_cross_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     "differences.",
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = tfidf_scores(_docs(spark, sf_dir), "doc_id", "text")
+    scored = tfidf_scores(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     w = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), "term")
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -371,7 +365,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every marker-list change; a 16-cell aggregate, map-side partial.",
 )
 def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).withColumnRenamed("lang", "labeled_lang")
+    d = load_table(spark, sf_dir, "documents").withColumnRenamed("lang", "labeled_lang")
     return (
         language_scores(d, "text", _LANG_MARKERS)
         .groupBy("labeled_lang", "predicted_lang")
@@ -427,7 +421,7 @@ def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_query_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, b = 1.2, 0.75
     terms = ["data", "model", "system"]
-    toks = _docs(spark, sf_dir).select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
     )
     # doc-length table feeds the corpus stats AND the score join; the

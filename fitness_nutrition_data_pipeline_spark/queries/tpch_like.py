@@ -19,10 +19,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "tpch_q1_pricing_summary",
     """
@@ -45,7 +41,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "throughput benchmark.",
 )
 def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_shipdate") <= "2001-09-01")
         .groupBy("l_returnflag", "l_linestatus")
@@ -89,15 +85,12 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100x. Lineitem shuffles only for the final group.",
 )
 def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < "1998-03-15")
-    # r17 added parallelize_scan(li, "l_orderkey") here off a −25%
-    # interleaved A/B; the r17 driver read it as −10% and the r18
-    # re-validation (interleaved, same session, 7 reps) read the plain
-    # scan FASTER (med 0.81 s vs 0.897 s) — below VERDICT r17's 1.1×
-    # keep-threshold, so the exchange is reverted. At cluster scale the
-    # multi-file lineitem scan is parallel without it.
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1998-03-15")
+    c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < "1998-03-15")
+    # No hash repartition on the lineitem side: an interleaved A/B (same
+    # session, 7 reps) read the plain scan faster (med 0.81 s vs 0.897 s).
+    # At cluster scale the multi-file lineitem scan is parallel without it.
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1998-03-15")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -137,14 +130,14 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SF, so their join strategy is AQE's runtime-size call.",
 )
 def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -180,7 +173,7 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the single-row aggregate.",
 )
 def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= "1997-01-01")

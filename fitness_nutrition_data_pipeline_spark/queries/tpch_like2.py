@@ -20,10 +20,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "tpch_q4_priority_exists",
     """
@@ -42,10 +38,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "semi join itself, never widening the orders side.",
 )
 def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
     )
-    returned = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    returned = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
     return (
         o.join(returned, o.o_orderkey == returned.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -74,8 +70,8 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join manufactures); second agg is a tiny histogram.",
 )
 def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = (
         c.join(
             o,
@@ -107,10 +103,10 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is read.",
 )
 def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(p, li.l_partkey == p.p_partkey)
@@ -147,12 +143,12 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hint-broadcast — their runtime size is AQE's call.",
 )
 def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#2")
         & (F.col("p_size").isin(1, 5, 9, 13, 17, 21, 25))
     )
-    bad = _t(spark, sf_dir, "supplier").where(F.col("s_acctbal") < 0).select("s_suppkey")
+    bad = load_table(spark, sf_dir, "supplier").where(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
         li.join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
         .join(p, li.l_partkey == p.p_partkey)
@@ -178,8 +174,8 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-join; the brand filter broadcasts.",
 )
 def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#23")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#23")
     part_avg = li.groupBy("l_partkey").agg(
         (F.avg("l_quantity") * 0.2).alias("qty_threshold")
     )
@@ -214,9 +210,9 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitioning, so AQE reuses the exchange rather than shuffling twice.",
 )
 def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("total_qty"))
@@ -262,8 +258,8 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synthetic customer has at least one order.",
 )
 def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") >= "1999-01-01")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") >= "1999-01-01")
     threshold = c.where(F.col("c_acctbal") > 0).agg(
         F.avg("c_acctbal").alias("avg_bal")
     )

@@ -16,10 +16,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "tpch_q7_volume_shipping",
     """
@@ -50,14 +46,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     nations = ("NATION_1", "NATION_2")
-    n1 = _t(spark, sf_dir, "nation").where(F.col("n_name").isin(*nations))
+    n1 = load_table(spark, sf_dir, "nation").where(F.col("n_name").isin(*nations))
     n2 = n1.select(
         F.col("n_nationkey").alias("n2_nationkey"), F.col("n_name").alias("n2_name")
     )
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").where(
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     return (
@@ -113,18 +109,18 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     "nation joins.",
 )
 def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").where(
+    p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation")
-    n2 = _t(spark, sf_dir, "nation").select(
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation")
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_nationkey"), F.col("n_name").alias("nation")
     )
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(p, li.l_partkey == p.p_partkey)
@@ -172,12 +168,12 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engine portability.",
 )
 def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1996-10-01") & (F.col("o_orderdate") < "1997-01-01")
     )
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -225,7 +221,7 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     "revenue keeps the argmax engine-portable.",
 )
 def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
@@ -234,7 +230,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("total_revenue")
     )
     mx = revenue.agg(F.max("total_revenue").alias("_mx"))
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     # the argmax survivor set (revenue ⋈ 1-row max) is ~1 row — THAT is
     # the broadcast side; supplier scales with SF and joins in place
     top = revenue.join(F.broadcast(mx), F.col("total_revenue") == F.col("_mx"))
@@ -267,8 +263,8 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     "prune its scan.",
 )
 def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     cond = (
         (
             (F.col("p_brand") == "Brand#1")

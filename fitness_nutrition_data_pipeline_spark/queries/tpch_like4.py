@@ -29,10 +29,6 @@ from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "tpch_q2_min_cost_supplier",
     """
@@ -86,7 +82,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "winner.",
 )
 def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cost = (
         li.groupBy("l_partkey", "l_suppkey")
         .agg(
@@ -105,9 +101,9 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("unit_cost"),
         )
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name").isin("EUROPE", "ASIA"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").where(F.col("r_name").isin("EUROPE", "ASIA"))
     sup = (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -115,7 +111,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_suppkey", "s_name", F.round("s_acctbal", 2).alias("s_acctbal"), "n_name"
         )
     )
-    p = _t(spark, sf_dir, "part").where(
+    p = load_table(spark, sf_dir, "part").where(
         (F.col("p_size") <= 5) & (F.col("p_type") == "LARGE")
     )
     w = W.partitionBy("p_partkey").orderBy("unit_cost", "l_suppkey")
@@ -157,11 +153,11 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "into broadcasts.",
 )
 def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("red%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("red%"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
     profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - 0.1 * F.col(
         "p_retailprice"
     ) * F.col("l_quantity")
@@ -209,9 +205,9 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     "nation broadcast, supplier left to AQE (it scales with SF).",
 )
 def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").where(
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").where(
         F.col("n_name").isin("NATION_3", "NATION_7")
     )
     v = (
@@ -259,8 +255,8 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shipmode to lateness.",
 )
 def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     late = (
         F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate")) > 60
     )
@@ -314,10 +310,10 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle on l_partkey.",
 )
 def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("small%"))
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("small%"))
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     per = (
         li.join(p.select("p_partkey"), li.l_partkey == p.p_partkey)
         .groupBy("l_partkey", "l_suppkey")
@@ -379,9 +375,9 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     "formulation that survives 100 TB.",
 )
 def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
+    s = load_table(spark, sf_dir, "supplier")
     is_late = F.max(
         F.when(
             F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate")) > 90, 1

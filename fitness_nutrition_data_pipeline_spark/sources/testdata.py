@@ -159,25 +159,6 @@ def load_table(
     return df
 
 
-def parallelize_scan(df: DataFrame, key: str) -> DataFrame:
-    """Per-query opt-in of the single-file scan fix above, for call
-    sites where the loader-level gate measured as a family regression
-    but a SPECIFIC query's (filtered) probe side still bottlenecks on
-    the one-task scan. Same semantics: hash-repartition on the query's
-    join key to spark.sql.shuffle.partitions, self-disabling when the
-    scan is already at least that parallel (real multi-file tables at
-    scale). r18 note: the one r17 call site (tpch_q3's lineitem side,
-    claimed −25%) failed re-validation (interleaved A/B read the plain
-    scan faster, med 0.81 vs 0.897 s) and was reverted; the helper stays
-    for future filtered-probe sites that DO measure a win."""
-    n_target = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    if df.rdd.getNumPartitions() < n_target:
-        df = df.repartition(n_target, F.col(key))
-    return df
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 

@@ -11,7 +11,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -23,7 +22,7 @@ from fitness_nutrition_data_pipeline_spark.queries.serving_ops import (  # noqa:
     _POS_K,
     distillation_pair_mining,
 )
-from tools.verify_queries import TABLES, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
+from tools.verify_queries import connect_oracle, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
@@ -31,11 +30,7 @@ def test_distillation_pairs_match_oracle(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_DISTILL_ORACLE))
     s_cols, s_rows = fetch_spark(distillation_pair_mining(spark, sf_dir))
     assert len(s_rows) == len(o_rows) > 0

@@ -18,7 +18,6 @@ pytestmark = pytest.mark.slow
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,7 +29,7 @@ from fitness_nutrition_data_pipeline_spark.queries.llm_ops import (  # noqa: E40
     _GRAPH_N_ENTRY,
     graph_ann_recall_contract,
 )
-from tools.verify_queries import TABLES, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
+from tools.verify_queries import connect_oracle, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
@@ -38,11 +37,7 @@ def test_graph_ann_recall_matches_oracle(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_GRAPH_ANN_ORACLE))
     s_cols, s_rows = fetch_spark(graph_ann_recall_contract(spark, sf_dir))
     assert len(s_rows) == len(o_rows) == 5

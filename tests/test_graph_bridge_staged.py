@@ -15,7 +15,6 @@ import sys
 import tempfile
 import time
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,7 +34,7 @@ from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table  #
 from fitness_nutrition_data_pipeline_spark.streaming.graph_bridge import (  # noqa: E402
     GraphIngestBridge,
 )
-from tools.verify_queries import TABLES, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
+from tools.verify_queries import connect_oracle, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
 
 
 def _emb(spark, sf="sf0.001"):
@@ -63,11 +62,7 @@ def test_graph_ingest_replay_matches_oracle(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_GRAPH_INGEST_ORACLE))
     s_cols, s_rows = fetch_spark(graph_ingest_batch_replay(spark, sf_dir))
     assert len(s_rows) == len(o_rows) > 0
@@ -262,11 +257,7 @@ def test_graph_bridge_search_equivalence(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_GRAPH_ANN_ORACLE))
     s_cols, s_rows = fetch_spark(graph_bridge_search_contract(spark, sf_dir))
     assert len(s_rows) == len(o_rows) == 5

@@ -10,7 +10,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -19,7 +18,7 @@ from fitness_nutrition_data_pipeline_spark.queries.llm_ops import (  # noqa: E40
     _IVFPQ_ORACLE,
     ivfpq_recall_contract,
 )
-from tools.verify_queries import TABLES, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
+from tools.verify_queries import connect_oracle, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
@@ -27,11 +26,7 @@ def test_ivfpq_recall_matches_oracle(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_IVFPQ_ORACLE))
     s_cols, s_rows = fetch_spark(ivfpq_recall_contract(spark, sf_dir))
     assert len(s_rows) == len(o_rows) == 5

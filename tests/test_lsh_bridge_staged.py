@@ -19,7 +19,6 @@ pytestmark = pytest.mark.slow
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -28,7 +27,7 @@ from fitness_nutrition_data_pipeline_spark.queries.llm_ops import (  # noqa: E40
     _LSH_REPLAY_ORACLE,
     lsh_dedup_batch_replay,
 )
-from tools.verify_queries import TABLES, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
+from tools.verify_queries import connect_oracle, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
@@ -36,11 +35,7 @@ def test_lsh_dedup_batch_replay_matches_oracle(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_LSH_REPLAY_ORACLE))
     s_cols, s_rows = fetch_spark(lsh_dedup_batch_replay(spark, sf_dir))
     assert len(s_rows) == len(o_rows) > 0
@@ -81,11 +76,7 @@ def test_incremental_dedup_clusters_matches_exact_oracle(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_exact_clusters_oracle()))
     s_cols, s_rows = fetch_spark(incremental_dedup_clusters(spark, sf_dir))
     assert len(s_rows) == len(o_rows) > 0

@@ -1,11 +1,6 @@
-"""Staged-for-r16 sketch entries (see the STAGED note in
-queries/sketch_ops.py): the rotation contract keeps new registrations
-out of the fully-owed r15 window, so until the r16 slack slot opens,
-this test runs the EXACT driver gate — Spark builder vs DuckDB oracle,
-pandas-lane fetch, column-sorted value normalization — on the staged
-pair at two scale factors. Flipping the entry live at r16 is then a
-one-line @register plus a window slot, with the hash contract already
-proven here.
+"""Sketch entries (see the note in queries/sketch_ops.py): the EXACT
+oracle compare — Spark builder vs DuckDB oracle, pandas-lane fetch,
+column-sorted value normalization — on the pair at two scale factors.
 """
 
 from __future__ import annotations
@@ -13,7 +8,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -22,7 +16,7 @@ from fitness_nutrition_data_pipeline_spark.queries.sketch_ops import (  # noqa: 
     _HLL_ORACLE,
     hll_union_contract,
 )
-from tools.verify_queries import TABLES, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
+from tools.verify_queries import connect_oracle, fetch_oracle, fetch_spark, norm_rows  # noqa: E402
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
@@ -30,11 +24,7 @@ def test_hll_union_contract_matches_oracle(spark, sf):
     sf_dir = f"/root/testdata/{sf}"
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_oracle(sf_dir)
     o_cols, o_rows = fetch_oracle(con.sql(_HLL_ORACLE))
     s_cols, s_rows = fetch_spark(hll_union_contract(spark, sf_dir))
     assert len(s_rows) == len(o_rows) == 3  # two base sets + merged

@@ -67,9 +67,9 @@ def main() -> int:
     from fitness_nutrition_data_pipeline_spark.queries.llm_ops import (
         N_BANDS,
         N_MINHASH,
-        _docs,
     )
     from fitness_nutrition_data_pipeline_spark.session import get_spark
+    from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
     spark = get_spark("profile_cc_rounds")
     sc = spark.sparkContext
@@ -78,7 +78,8 @@ def main() -> int:
 
     def edges_df():
         sigs = minhash_signatures(
-            _docs(spark, SF_DIR), "doc_id", "text", n_hashes=N_MINHASH
+            load_table(spark, SF_DIR, "documents"), "doc_id", "text",
+            n_hashes=N_MINHASH,
         )
         bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
         mins = bands.groupBy("band_id", "band_key").agg(

@@ -3,7 +3,9 @@
 Runs every ``queries()`` entry on sf0.01 Spark-side, the matching
 ``oracle_sql()`` via DuckDB over the same parquet, and compares:
 row count, column names, and an order-insensitive value compare
-(columns sorted by name, rows sorted, values normalized).
+(columns sorted by name, rows sorted, values normalized). The slow-tier
+tests/test_oracle_sweep.py runs the same ``check_query`` over every
+registered query at sf0.001 and sf0.01.
 
 Usage: python tools/verify_queries.py [name ...] [--jobs N]
 
@@ -14,7 +16,7 @@ the shared per-application scratch namespace — concurrent builders can
 interleave those writes, and any builder that toggles a session conf
 races the others. A parallel FAIL therefore warrants a jobs=1 re-check
 before acting on it, and the sequential default (jobs=1) is the only
-mode whose verdict blesses a query for registration/freezing. The tool
+mode whose verdict blesses a query for registration. The tool
 prints this notice on every parallel run so a logged sweep is
 self-describing.
 """
@@ -142,6 +144,71 @@ def norm_rows(cols, rows):
     return sorted(c for c in cols), out
 
 
+def check_query(spark, con, spec, sf_dir) -> tuple[str, str]:
+    """(verdict, message) for one spec: its builder on ``sf_dir`` against
+    its oracle SQL over ``con``, whose views must read the same sf dir
+    (``connect_oracle``). verdict is "pass", "fail" or "weak" (no oracle).
+    Thread-safe: Spark jobs are concurrent by design; the DuckDB side gets
+    a per-call cursor (same in-memory catalog, its own connection state)."""
+    name = spec.name
+    t0 = time.time()
+    try:
+        sdf = spec.builder(spark, sf_dir)
+        scols, srows = fetch_spark(sdf)
+    except Exception as e:  # noqa: BLE001
+        return "fail", f"FAIL {name}: spark error: {e}"
+    if spec.oracle is None:
+        return "weak", f"WEAK {name}: rows={len(srows)} (no oracle)"
+    try:
+        cur = con.cursor()
+        try:
+            rel = cur.sql(spec.oracle)
+            # Allowlist lint (mirrors tests/test_oracle_types.py):
+            # any final oracle column outside the Arrow-stable set
+            # diverges under the driver's pandas fetch
+            # (HUGEINT/DECIMAL -> float64, TIMESTAMP -> Timestamp)
+            # even when values match.
+            bad = [
+                (c, str(t))
+                for c, t in zip(rel.columns, rel.types)
+                if str(t).upper() not in ALLOWED_ORACLE_TYPES
+            ]
+            if bad:
+                return "fail", (
+                    f"FAIL {name}: oracle column(s) {bad} outside the "
+                    f"Arrow-stable allowlist — CAST(... AS "
+                    f"DOUBLE/BIGINT/VARCHAR) as the final projection"
+                )
+            ocols, orows = fetch_oracle(rel)
+        finally:
+            cur.close()
+    except Exception as e:  # noqa: BLE001
+        return "fail", f"FAIL {name}: duckdb error: {e}"
+    sc, sr = norm_rows(scols, srows)
+    oc, orw = norm_rows(ocols, orows)
+    dt = time.time() - t0
+    if sc != oc:
+        return "fail", f"FAIL {name}: schema mismatch spark={sc} duck={oc}"
+    if len(sr) != len(orw):
+        return "fail", f"FAIL {name}: rowcount spark={len(sr)} duck={len(orw)}"
+    if sr != orw:
+        diffs = [(a, b) for a, b in zip(sr, orw) if a != b][:3]
+        return "fail", (
+            f"FAIL {name}: value mismatch "
+            f"({len([1 for a, b in zip(sr, orw) if a != b])} rows) "
+            f"e.g. {diffs}"
+        )
+    return "pass", f"PASS {name}: rows={len(sr)} ({dt:.1f}s)"
+
+
+def connect_oracle(sf_dir):
+    """In-memory DuckDB connection with one view per testdata table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main(names=None):
     if os.environ.get("SPARK_GRAFT_VERIFY_BARE"):
         # Driver-harness simulation: a default session with NONE of the
@@ -154,9 +221,7 @@ def main(names=None):
         spark.sparkContext.setLogLevel("ERROR")
     else:
         spark = get_spark("verify_queries")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = connect_oracle(SF_DIR)
 
     specs = all_specs()
     for mod, err in IMPORT_FAILURES.items():
@@ -169,69 +234,13 @@ def main(names=None):
             return 2
         jobs = max(1, int(names[i + 1]))
         names = names[:i] + names[i + 2:] or None
-    if names and names[0] == "--first":
-        # driver-window simulation: exactly the first N registrations in
-        # check-priority order (the driver samples the first 50)
-        n = int(names[1])
-        specs = dict(list(specs.items())[:n])
-    elif names:
+    if names:
         specs = {n: specs[n] for n in names}
 
-    def check_one(item) -> tuple[str, str]:
-        """(verdict, message) for one spec. Thread-safe: Spark jobs are
-        concurrent by design; the DuckDB side gets a per-call cursor
-        (same in-memory catalog, its own connection state)."""
-        name, spec = item
-        t0 = time.time()
-        try:
-            sdf = spec.builder(spark, SF_DIR)
-            scols, srows = fetch_spark(sdf)
-        except Exception as e:  # noqa: BLE001
-            return "fail", f"FAIL {name}: spark error: {e}"
-        if spec.oracle is None:
-            return "weak", f"WEAK {name}: rows={len(srows)} (no oracle)"
-        try:
-            cur = con.cursor()
-            try:
-                rel = cur.sql(spec.oracle)
-                # Allowlist lint (mirrors tests/test_oracle_types.py):
-                # any final oracle column outside the Arrow-stable set
-                # diverges under the driver's pandas fetch
-                # (HUGEINT/DECIMAL -> float64, TIMESTAMP -> Timestamp)
-                # even when values match.
-                bad = [
-                    (c, str(t))
-                    for c, t in zip(rel.columns, rel.types)
-                    if str(t).upper() not in ALLOWED_ORACLE_TYPES
-                ]
-                if bad:
-                    return "fail", (
-                        f"FAIL {name}: oracle column(s) {bad} outside the "
-                        f"Arrow-stable allowlist — CAST(... AS "
-                        f"DOUBLE/BIGINT/VARCHAR) as the final projection"
-                    )
-                ocols, orows = fetch_oracle(rel)
-            finally:
-                cur.close()
-        except Exception as e:  # noqa: BLE001
-            return "fail", f"FAIL {name}: duckdb error: {e}"
-        sc, sr = norm_rows(scols, srows)
-        oc, orw = norm_rows(ocols, orows)
-        dt = time.time() - t0
-        if sc != oc:
-            return "fail", f"FAIL {name}: schema mismatch spark={sc} duck={oc}"
-        if len(sr) != len(orw):
-            return "fail", f"FAIL {name}: rowcount spark={len(sr)} duck={len(orw)}"
-        if sr != orw:
-            diffs = [(a, b) for a, b in zip(sr, orw) if a != b][:3]
-            return "fail", (
-                f"FAIL {name}: value mismatch "
-                f"({len([1 for a, b in zip(sr, orw) if a != b])} rows) "
-                f"e.g. {diffs}"
-            )
-        return "pass", f"PASS {name}: rows={len(sr)} ({dt:.1f}s)"
+    def check_one(spec):
+        return check_query(spark, con, spec, SF_DIR)
 
-    items = list(specs.items())
+    items = list(specs.values())
     if jobs > 1:
         from concurrent.futures import ThreadPoolExecutor
 
