@@ -17,11 +17,14 @@ Scale notes (100 TB posture, encoded here even though local data is tiny):
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
 
 logger = logging.getLogger(__name__)
 
@@ -51,29 +54,25 @@ def load_warehouse(
     warehouse_dir: str,
     *,
     partition_facts: bool = False,
-    register_views: bool = True,
-    max_parallel_writes: int = 18,
 ) -> dict[str, str]:
-    """Write all tables; returns table → path in dependency order.
+    """Write all tables and register each as a temp view; returns
+    table → path in dependency order.
 
     The reference's Dims→Bridges→Facts ordering exists for MySQL FK
     checks (main_etl_pipeline.py:757-764); parquet tables have no write
-    dependencies, so the writes run CONCURRENTLY on a thread pool —
+    dependencies, so the writes run CONCURRENTLY, one thread per table —
     Spark schedules independent jobs in parallel and each tiny table's
     job-submission overhead overlaps instead of serializing. (An actual
     JDBC mirror with FK checks must keep the sequential order — see
     ``mirror_to_jdbc``.) Returned paths preserve LOAD_ORDER.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     present = [n for n in LOAD_ORDER if n in warehouse]
     for name in LOAD_ORDER:
         if name not in warehouse:
             logger.warning("table %s not found in transformed data, skipping", name)
-            if register_views:
-                # drop any stale view from a previous run in this session —
-                # overwrite ≙ DROP/CREATE applies to absent tables too
-                spark.catalog.dropTempView(name)
+            # drop any stale view from a previous run in this session —
+            # overwrite ≙ DROP/CREATE applies to absent tables too
+            spark.catalog.dropTempView(name)
 
     def write_one(name: str) -> str:
         df = warehouse[name]
@@ -84,45 +83,30 @@ def load_warehouse(
         if partition_facts and name in PARTITIONED_FACTS:
             writer = writer.partitionBy("DateKey")
         writer.parquet(path)
-        if register_views:
-            # register on the writer thread: each registration is a py4j
-            # round trip + parquet footer read (~0.1 s), and a sequential
-            # post-pass of 18 of them was ~1.5 s of driver wall-clock;
-            # the catalog is concurrent and names are distinct
-            spark.read.parquet(path).createOrReplaceTempView(name)
+        # register on the writer thread: each registration is a py4j
+        # round trip + parquet footer read (~0.1 s), and a sequential
+        # post-pass of 18 of them was ~1.5 s of driver wall-clock; the
+        # catalog is concurrent and names are distinct
+        spark.read.parquet(path).createOrReplaceTempView(name)
         return path
 
-    pool = ThreadPoolExecutor(
-        max_workers=max(1, min(max_parallel_writes, len(present) or 1))
-    )
     try:
-        try:
-            results = dict(zip(present, pool.map(write_one, present)))
-        except Exception:
-            # views register on the writer threads, so by the time one
-            # write fails, siblings may already have registered theirs —
-            # a caller that catches and retries must not observe a
-            # partially-populated catalog (ADVICE r12 #3). pool.map
-            # raises as soon as the FAILING future's result is consumed,
-            # while later-submitted siblings may still be RUNNING — a
-            # cleanup that starts now could drop a view a slower sibling
-            # re-registers a moment later (ADVICE r13 #1). Join all
-            # in-flight writers first (cancel the not-yet-started), THEN
-            # sweep the catalog.
-            pool.shutdown(wait=True, cancel_futures=True)
-            if register_views:
-                for name in present:
-                    try:
-                        spark.catalog.dropTempView(name)
-                    except Exception:  # noqa: BLE001
-                        logger.warning(
-                            "cleanup: could not drop temp view %s", name
-                        )
-            raise
-    finally:
-        pool.shutdown(wait=True)
-
-    return {n: results[n] for n in present}
+        return declare_parallel(
+            [(n, functools.partial(write_one, n)) for n in present],
+            max_workers=len(present),
+        )
+    except Exception:
+        # views register on the writer threads, so by the time one write
+        # fails, siblings may already have registered theirs — a caller
+        # that catches and retries must not observe a partially-populated
+        # catalog. declare_parallel joins every writer before the error
+        # leaves it, so no sibling can re-register after this sweep.
+        for name in present:
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:  # noqa: BLE001
+                logger.warning("cleanup: could not drop temp view %s", name)
+        raise
 
 
 def write_bucketed(

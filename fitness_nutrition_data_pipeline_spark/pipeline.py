@@ -18,6 +18,7 @@ five times (main_etl_pipeline.py:366, 475, 487, 518, 639).
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,31 +72,21 @@ class FitnessWarehousePipeline:
         # caching has no cross-job synchronization). But the prime runs
         # EXECUTOR-side while dim/bridge/fact construction below is pure
         # DRIVER-side work (py4j + Catalyst analysis, measured ~4.4 s
-        # cold — as large as the prime itself), so overlap them: kick the
-        # two counts off on background threads, declare the warehouse
-        # DAG meanwhile, and join before returning so load() always sees
-        # warm caches. The one executor action inside declaration
+        # cold — as large as the prime itself), so overlap them: the two
+        # counts run on pool threads while the warehouse DAG is declared,
+        # and are joined before returning so load() always sees warm
+        # caches. The one executor action inside declaration
         # (build_fact_nutrition_log's bounded sample collect) may race
         # the in-flight prime and duplicate resolution work once on idle
-        # cores — bounded, and strictly better than serializing the two
-        # phases (r11 A/B: overlapped cold transform+load beat the
-        # sequential prime; staging itself keeps its prime vs the 18
-        # writers, the r10 finding).
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
-        # 2 slots for the primes + 1 for the bridges declaration below
-        # (a bridges submit must never queue behind a running prime)
-        pool = ThreadPoolExecutor(max_workers=3)
-        primes = [
-            pool.submit(df.count) for df in (self.staging, self.mapping)
-        ]
-        try:
-            if os.environ.get("SPARK_GRAFT_SEQ_PRIME"):
-                # measurement toggle: barrier here reproduces the r10
-                # sequential-prime shape for A/B protocol runs
-                for fut in primes:
-                    fut.result()
+        # cores — bounded, and measured faster than priming first.
+        #
+        # 2 slots for the primes + 1 for the bridges declaration (a
+        # bridges submit must never queue behind a running prime). A
+        # builder exception leaves the block before the primes' results
+        # are read, so a prime error never masks it; the block's exit
+        # still joins the primes.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            primes = [pool.submit(df.count) for df in (self.staging, self.mapping)]
             dims = build_dimensions(
                 self.spark, self.staging, self.sources.get("nutrition"), self.cfg
             )
@@ -108,55 +99,29 @@ class FitnessWarehousePipeline:
             # already-cached staging, so letting load()'s concurrent
             # writes race the cold cache overlaps that work on idle
             # cores, while a priming barrier serializes it. Measured
-            # (r10, 3 interleaved trials each): cache-no-prime median
-            # 8.4 s transform+load vs 10.6 s with a prime barrier and
-            # 10.9 s with no cache at all — the duplicated compute a
-            # race admits is bounded by consumer count and beats both
+            # (3 interleaved trials each): cache-no-prime median 8.4 s
+            # transform+load vs 10.6 s with a prime barrier and 10.9 s
+            # with no cache at all — the duplicated compute a race
+            # admits is bounded by consumer count and beats both
             # alternatives in wall-clock. Dims are cardinality-bounded
             # (largest ~8.8k rows) so memory is nothing; the first
             # completer still publishes the cache for everyone
-            # downstream (r9 verdict ask #4).
+            # downstream.
             for df in dims.values():
                 df.cache()
-
-            # bridges and facts both consume dims but not each other —
-            # declare them concurrently too (SPARK_GRAFT_SEQ_DECL=1
-            # serializes all pooled declarations for A/B runs)
-            if os.environ.get("SPARK_GRAFT_SEQ_DECL"):
-                bridges = build_bridges(self.staging, dims)
-                facts = build_facts(
-                    self.spark, self.sources, self.staging, self.mapping,
-                    dims, self.cfg,
-                )
-            else:
-                bridges_fut = pool.submit(build_bridges, self.staging, dims)
-                facts = build_facts(
-                    self.spark, self.sources, self.staging, self.mapping,
-                    dims, self.cfg,
-                )
-                bridges = bridges_fut.result()
-        finally:
-            import sys
-
-            try:
-                if sys.exc_info()[0] is None:
-                    # surface prime errors — load() needs warm caches —
-                    # but never mask an in-flight builder exception with
-                    # a secondary prime failure
-                    for fut in primes:
-                        fut.result()
-            finally:
-                pool.shutdown(wait=True)
+            # bridges and facts both consume dims but not each other
+            bridges_fut = pool.submit(build_bridges, self.staging, dims)
+            facts = build_facts(
+                self.spark, self.sources, self.staging, self.mapping, dims, self.cfg
+            )
+            bridges = bridges_fut.result()
+            for fut in primes:
+                fut.result()
         self.warehouse = {**dims, **bridges, **facts}
         return self.warehouse
 
-    def load(self, *, partition_facts: bool = False) -> dict[str, str]:
-        return load_warehouse(
-            self.spark,
-            self.warehouse,
-            self.cfg.warehouse_dir,
-            partition_facts=partition_facts,
-        )
+    def load(self) -> dict[str, str]:
+        return load_warehouse(self.spark, self.warehouse, self.cfg.warehouse_dir)
 
     def validate(self):
         return validate_warehouse(self.spark)

@@ -8,21 +8,27 @@ any scale (reference relies on pandas inference: main_etl_pipeline.py:77,
 
 Missing-file tolerance matches the reference (skip + warn,
 main_etl_pipeline.py:74-76): extraction returns only the sources present.
+A source that cannot be read is logged with its traceback and skipped;
+the other sources are unaffected.
 
-Excel ingestion (S3): read natively via the stdlib zip+XML parser
-(sources/xlsx.py — no openpyxl needed; reference parity pinned in
-tests/test_xlsx_source.py), with openpyxl as an import-gated fallback
-for exotic sheets. Pre-converted CSV/parquet siblings still take
-precedence in `read_tabular` (they're faster and splittable).
+Excel ingestion (S3): a parquet or CSV sibling of an xlsx takes
+precedence in ``read_tabular`` (faster and splittable); otherwise the
+sheet is read by the stdlib parser in sources/xlsx.py. ``extract_all``
+parses each such sheet once, on its calling thread, and hands the rows
+to the pooled task that builds the DataFrame.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
+from fitness_nutrition_data_pipeline_spark.sources import xlsx
 
 logger = logging.getLogger(__name__)
 
@@ -114,59 +120,44 @@ def _read_csv(
     return reader.csv(path)
 
 
-def read_excel_via_pandas(spark: SparkSession, path: str) -> DataFrame | None:
-    """xlsx → DataFrame via pandas/openpyxl, if available (driver-side —
-    xlsx is not a splittable format; at scale convert once to parquet)."""
-    try:
-        import pandas as pd  # noqa: F401
-        import openpyxl  # noqa: F401
-    except ImportError:
-        logger.warning("openpyxl not installed; cannot read %s directly", path)
-        return None
-    import pandas as pd
-
-    pdf = pd.read_excel(path)
-    pdf.columns = [str(c) for c in pdf.columns]
-    # all-string for parity with the CSV path; blank → NULL
-    pdf = pdf.astype(object).where(pd.notna(pdf), None).astype(str)
-    pdf = pdf.replace({"None": None, "nan": None})
-    return spark.createDataFrame(pdf)
+def _xlsx_without_sibling(path: str) -> bool:
+    """True when ``read_tabular`` would parse the xlsx itself: it exists
+    and has no parquet or csv sibling."""
+    base, _ = os.path.splitext(path)
+    return (
+        path.endswith(".xlsx")
+        and os.path.exists(path)
+        and not os.path.exists(base + ".parquet")
+        and not os.path.exists(base + ".csv")
+    )
 
 
-def read_tabular(spark: SparkSession, path: str) -> DataFrame | None:
+def read_tabular(
+    spark: SparkSession, path: str, rows: list[list[str]] | None = None
+) -> DataFrame | None:
     """Read a source that may exist as xlsx, csv, or parquet.
 
-    Preference order: parquet sibling, csv sibling, native xlsx (if
-    openpyxl available). Returns None when nothing is present.
-    """
+    Preference order: parquet sibling, csv sibling, native xlsx.
+    ``rows`` are the xlsx's already parsed rows; without them the sheet
+    is parsed here. Returns None when nothing is present or the xlsx
+    cannot be read (logged with its traceback)."""
     base, _ = os.path.splitext(path)
     if os.path.exists(base + ".parquet"):
         return spark.read.parquet(base + ".parquet")
     if os.path.exists(base + ".csv"):
         return _read_csv(spark, base + ".csv")
-    if os.path.exists(path) and path.endswith(".xlsx"):
-        # native stdlib parser first (zipfile+XML — no openpyxl needed);
-        # pandas/openpyxl only as a fallback for exotic sheets
+    if _xlsx_without_sibling(path):
         try:
-            from fitness_nutrition_data_pipeline_spark.sources.xlsx import read_xlsx
-
             # pin the parsed sheet as ONE executor block: the driver-side
             # relation would otherwise be re-serialized into every job
             # that touches this source (the warehouse DAG touches each
             # source many times — measured +6s on transform_load), and a
             # dim-sized sheet doesn't need scan parallelism (it ends up
             # broadcast downstream anyway)
-            return read_xlsx(spark, path).coalesce(1).localCheckpoint()
+            return xlsx.read_xlsx(spark, path, rows).coalesce(1).localCheckpoint()
         except Exception:  # noqa: BLE001 — e.g. formula/serial-date sheets
-            # keep the original traceback visible: in environments without
-            # openpyxl the fallback raises ModuleNotFoundError, which would
-            # otherwise mask a genuine bug in the stdlib parser (ADVICE r6)
-            logger.warning(
-                "stdlib xlsx parse failed for %s; trying openpyxl",
-                path,
-                exc_info=True,
-            )
-            return read_excel_via_pandas(spark, path)
+            logger.warning("xlsx read failed for %s, skipping", path, exc_info=True)
+            return None
     if os.path.exists(path):
         return _read_csv(spark, path)
     logger.warning("source not found: %s, skipping", path)
@@ -192,55 +183,29 @@ def extract_all(spark: SparkSession, cfg) -> dict[str, object]:
 
     The four source groups are independent, so they extract on a thread
     pool: the CSV schema scans and the xlsx localCheckpoint jobs run
-    JVM-side (GIL released). Big xlsx sheets PREWARM on the main thread
-    first — the fork-parallel chunk parse is main-thread-only (forking
-    from a worker thread while sibling threads hold py4j/logging locks
-    is the ADVICE r7 deadlock hazard), so the rows are parsed and
-    cached here and the pooled read_tabular calls hit the cache."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from fitness_nutrition_data_pipeline_spark.sources.xlsx import prewarm_rows_many
-
-    to_warm = []
-    for fname in ("gym_recommendation.xlsx", "nutrition.xlsx"):
-        p = os.path.join(cfg.data_dir, fname)
-        base, _ = os.path.splitext(p)
-        # only when the xlsx itself will be parsed (read_tabular prefers
-        # parquet/csv siblings, which never fork)
-        if (
-            os.path.exists(p)
-            and not os.path.exists(base + ".parquet")
-            and not os.path.exists(base + ".csv")
-        ):
-            to_warm.append(p)
-    if to_warm:
-        try:
-            # one call: the files' fork-parallel parses overlap
-            prewarm_rows_many(to_warm)
-        except Exception:  # noqa: BLE001 — read_tabular handles/logs
-            pass
-
-    tasks = {
-        "fitbit": lambda: extract_fitbit(spark, cfg.fitbit_dir),
-        "gym_members": lambda: read_tabular(
-            spark, os.path.join(cfg.data_dir, "gym_members_exercise_tracking.csv")
-        ),
-        "mendeley_health": lambda: read_tabular(
-            spark, os.path.join(cfg.data_dir, "gym_recommendation.xlsx")
-        ),
-        "nutrition": lambda: read_tabular(
-            spark, os.path.join(cfg.data_dir, "nutrition.xlsx")
-        ),
+    JVM-side (GIL released). Sheets read natively are parsed first, on
+    this thread, because the fork-parallel parse of a big sheet is
+    main-thread-only; each pooled task gets its sheet's rows. A sheet
+    whose parse fails is logged and its source skipped."""
+    xlsx_sources = {
+        "mendeley_health": os.path.join(cfg.data_dir, "gym_recommendation.xlsx"),
+        "nutrition": os.path.join(cfg.data_dir, "nutrition.xlsx"),
     }
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        futures = {name: pool.submit(fn) for name, fn in tasks.items()}
-        results = {name: f.result() for name, f in futures.items()}
-    # the prewarmed rows have been consumed (each xlsx became a pinned
-    # executor block above) — drop the driver-side copies rather than
-    # carrying hundreds of MB of parsed strings for the process lifetime
-    from fitness_nutrition_data_pipeline_spark.sources.xlsx import _ROWS_CACHE
-
-    _ROWS_CACHE.clear()
+    parsed = xlsx.prewarm_rows_many(
+        [p for p in xlsx_sources.values() if _xlsx_without_sibling(p)]
+    )
+    gym_path = os.path.join(cfg.data_dir, "gym_members_exercise_tracking.csv")
+    builders = [
+        ("fitbit", lambda: extract_fitbit(spark, cfg.fitbit_dir)),
+        ("gym_members", lambda: read_tabular(spark, gym_path)),
+    ]
+    for name, path in xlsx_sources.items():
+        rows = parsed.get(path)
+        if isinstance(rows, Exception):
+            logger.warning("xlsx parse failed for %s, skipping", path, exc_info=rows)
+            continue
+        builders.append((name, functools.partial(read_tabular, spark, path, rows)))
+    results = declare_parallel(builders, max_workers=len(builders))
     # fitbit is a dict (empty = every file missing); the rest are
     # DataFrame-or-None
     return {

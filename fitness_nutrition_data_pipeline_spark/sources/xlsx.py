@@ -1,11 +1,21 @@
 """Native xlsx source — stdlib-only (zipfile + ElementTree), no openpyxl.
 
-Closes the reference's S3 surface (main_etl_pipeline.py:104-122 reads
-gym_recommendation.xlsx / nutrition.xlsx via pandas+openpyxl) without
-the openpyxl dependency: xlsx is a zip of XML — shared strings in
-xl/sharedStrings.xml, the first worksheet in xl/worksheets/sheet1.xml.
-Sufficient for the reference's plain tabular sheets (text + numbers;
-no formulas or date serials).
+Covers the reference's S3 surface (main_etl_pipeline.py:104-122 reads
+gym_recommendation.xlsx / nutrition.xlsx via pandas+openpyxl): xlsx is a
+zip of XML — shared strings in xl/sharedStrings.xml, the first worksheet
+resolved through xl/workbook.xml and its rels. Sufficient for the
+reference's plain tabular sheets (text + numbers; no formulas or date
+serials).
+
+Contract:
+- ``prewarm_rows_many(paths)`` parses sheets on the calling thread and
+  returns ``{path: rows}`` (or ``{path: exception}`` for a sheet whose
+  parse raised). Big sheets parse fork-parallel, which is allowed only
+  on the main thread; callers that fan reads out to a thread pool parse
+  first and hand each task its rows.
+- ``read_xlsx_rows(path)`` is the one-path form, raising on failure.
+- ``read_xlsx(spark, path, rows=None)`` builds the all-string DataFrame,
+  parsing the file itself when no rows are given.
 
 Scale posture: xlsx is not a splittable format and only ever carries
 dimension-sized inputs (the reference's sheets are <100k rows), so the
@@ -155,10 +165,11 @@ def _start_parallel_parse(sheet_bytes: bytes, shared: list[str]):
     (pool, async_result) — the caller collects with ``res.get()`` and
     must close the pool — or None when the layout doesn't match
     expectations or fork isn't available (caller falls back to the
-    sequential parse). Non-blocking start is what lets prewarm_rows_many
-    parse SEVERAL files' sheets concurrently, one pool each."""
+    sequential parse). Escaped text cannot contain a literal '<row', so
+    byte-level splits are always element-aligned. Non-blocking start is
+    what lets prewarm_rows_many parse SEVERAL files' sheets
+    concurrently, one pool each."""
     import multiprocessing as mp
-    import os
     import threading
 
     lo = sheet_bytes.find(b"<row")
@@ -168,18 +179,16 @@ def _start_parallel_parse(sheet_bytes: bytes, shared: list[str]):
         return None
     name = open_tag[1:].split(None, 1)[0].rstrip(b">")
     close_tag = b"</" + name + b">"
-    # fork() from a WORKER thread while sibling extract threads hold
-    # py4j/logging locks mid-acquire can deadlock the child (ADVICE
-    # r7; fork-in-threads is deprecated in CPython 3.12+), so the
-    # process pool is main-thread-only: worker-thread callers fall
-    # back to the sequential parse, and extract_all keeps the speedup
-    # by PREWARMING big sheets on the main thread (prewarm_rows_many)
-    # before its thread pool starts. A thread-count guard can't do
-    # this — pyspark always keeps py4j daemon threads alive, and
-    # what matters is who is forking, not who exists.
-    # (forkserver was tried and rejected: its per-worker spawn prep
-    # re-imports the caller's __main__ — re-running pyspark imports
-    # per pool, and crashing outright under stdin/embedded mains.)
+    # fork() from a WORKER thread while sibling threads hold py4j/
+    # logging locks mid-acquire can deadlock the child (fork-in-threads
+    # is deprecated in CPython 3.12+), so the process pool is
+    # main-thread-only: worker-thread callers get None and parse
+    # sequentially. A thread-count guard can't do this — pyspark always
+    # keeps py4j daemon threads alive, and what matters is who is
+    # forking, not who exists. (forkserver is no way out: its per-worker
+    # spawn prep re-imports the caller's __main__ — re-running pyspark
+    # imports per pool, and crashing outright under stdin/embedded
+    # mains.)
     if threading.current_thread() is not threading.main_thread():
         return None
     try:
@@ -204,100 +213,64 @@ def _start_parallel_parse(sheet_bytes: bytes, shared: list[str]):
     return pool, pool.map_async(_mp_parse_chunk, chunks)
 
 
-def _parse_sheet_parallel(
-    sheet_bytes: bytes, shared: list[str]
-) -> list[list[str]] | None:
-    """Blocking wrapper over _start_parallel_parse (escaped text cannot
-    contain a literal '<row', so byte-level splits are always
-    element-aligned)."""
-    started = _start_parallel_parse(sheet_bytes, shared)
-    if started is None:
-        return None
-    pool, res = started
-    with pool:
-        parts = res.get()
-    return [r for part in parts for r in part]
+def prewarm_rows_many(
+    paths: list[str],
+) -> dict[str, list[list[str]] | Exception]:
+    """Parse several xlsx files on the calling thread → ``{path: rows}``.
 
-
-# (path, mtime, size) -> parsed rows, filled by prewarm_rows on the
-# MAIN thread so thread-pooled extract workers read the cache instead
-# of forking (see _parse_sheet_parallel's main-thread-only guard).
-# Tiny by construction: a pipeline has a handful of xlsx sources.
-_ROWS_CACHE: dict[tuple[str, float, int], list[list[str]]] = {}
-_ROWS_CACHE_MAX = 4
-
-
-def _cache_put(key, rows: list[list[str]]) -> None:
-    while len(_ROWS_CACHE) >= _ROWS_CACHE_MAX:
-        _ROWS_CACHE.pop(next(iter(_ROWS_CACHE)))
-    _ROWS_CACHE[key] = rows
-
-
-def prewarm_rows(path: str) -> None:
-    """Parse an xlsx's rows NOW, on the calling thread, and cache them
-    keyed by (path, mtime, size). Call from the main thread before
-    fanning extract work out to a thread pool: the fork-parallel fast
-    path only runs main-thread, so prewarming is what keeps the big-
-    sheet speedup when reads happen under ThreadPoolExecutor."""
-    prewarm_rows_many([path])
-
-
-def prewarm_rows_many(paths: list[str]) -> None:
-    """Prewarm SEVERAL xlsx files with their fork-parallel parses in
-    flight concurrently (one pool per big sheet, started non-blocking),
-    instead of paying each pool.map in turn — with two ~1 s sheets the
-    serial prewarm cost tA+tB, this costs ~max(tA, tB). Small sheets
-    parse inline; any failed parallel start falls back to the
-    sequential parser, same results."""
+    Big sheets' fork-parallel parses are all started before any is
+    collected (one pool per sheet, non-blocking), so two ~1 s sheets
+    cost ~max(tA, tB), not tA+tB; small sheets parse inline. A failed
+    parallel parse falls back to the sequential parser, same results.
+    Failures are per path: a sheet whose parse raises maps to its
+    exception instead of rows, so one bad sheet never costs the others
+    their parse."""
+    out: dict[str, list[list[str]] | Exception] = {}
     pending = []
     for path in paths:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime, st.st_size)
-        if key in _ROWS_CACHE:
-            continue
-        shared, sheet_bytes = _load_shared_and_sheet(path)
-        started = (
-            _start_parallel_parse(sheet_bytes, shared)
-            if len(sheet_bytes) >= _PARALLEL_MIN_BYTES
-            else None
-        )
-        if started is None:
-            _cache_put(
-                key, _pad(_parse_row_elements(ET.fromstring(sheet_bytes), shared))
+        try:
+            shared, sheet_bytes = _load_shared_and_sheet(path)
+            started = (
+                _start_parallel_parse(sheet_bytes, shared)
+                if len(sheet_bytes) >= _PARALLEL_MIN_BYTES
+                else None
             )
-        else:
-            pending.append((key, sheet_bytes, shared, started))
-    for key, sheet_bytes, shared, (pool, res) in pending:
-        rows: list[list[str]] | None = None
+            if started is None:
+                out[path] = _pad(
+                    _parse_row_elements(ET.fromstring(sheet_bytes), shared)
+                )
+            else:
+                pending.append((path, sheet_bytes, shared, started))
+        except Exception as e:  # noqa: BLE001 — reported per path
+            out[path] = e
+    for path, sheet_bytes, shared, (pool, res) in pending:
         with pool:
             try:
                 rows = [r for part in res.get() for r in part]
             except Exception:  # noqa: BLE001 — sequential fallback below
                 rows = None
-        if rows is None:
-            rows = _parse_row_elements(ET.fromstring(sheet_bytes), shared)
-        _cache_put(key, _pad(rows))
+        try:
+            if rows is None:
+                rows = _parse_row_elements(ET.fromstring(sheet_bytes), shared)
+            out[path] = _pad(rows)
+        except Exception as e:  # noqa: BLE001 — reported per path
+            out[path] = e
+    return out
 
 
 def read_xlsx_rows(path: str) -> list[list[str]]:
     """First worksheet of an xlsx as a dense list of string rows
-    (shared-string and inline-string cells resolved, gaps padded).
+    (shared-string and inline-string cells resolved, gaps padded); the
+    one-path form of prewarm_rows_many, raising the parse's error.
 
-    Large sheets parse fork-parallel (the reference's 26 MB nutrition
-    sheet: ~3.2 s sequential → sub-second on 8 cores) when called on
-    the main thread, or serve from the prewarm_rows cache; small
-    sheets, worker threads and non-POSIX platforms take the sequential
-    path with identical results."""
-    try:
-        st = os.stat(path)
-        cached = _ROWS_CACHE.get(
-            (os.path.abspath(path), st.st_mtime, st.st_size)
-        )
-        if cached is not None:
-            return cached
-    except OSError:
-        pass
-    return _read_xlsx_rows_uncached(path)
+    Large sheets parse fork-parallel on the main thread (the reference's
+    26 MB nutrition sheet: ~3.2 s sequential → sub-second on 8 cores);
+    small sheets, worker threads and non-POSIX platforms take the
+    sequential path with identical results."""
+    rows = prewarm_rows_many([path])[path]
+    if isinstance(rows, Exception):
+        raise rows
+    return rows
 
 
 def _load_shared_and_sheet(path: str) -> tuple[list[str], bytes]:
@@ -319,35 +292,25 @@ def _pad(rows: list[list[str]]) -> list[list[str]]:
     return [r + [""] * (width - len(r)) for r in rows]
 
 
-def _read_xlsx_rows_uncached(path: str) -> list[list[str]]:
-    shared, sheet_bytes = _load_shared_and_sheet(path)
-    rows: list[list[str]] | None = None
-    if len(sheet_bytes) >= _PARALLEL_MIN_BYTES:
-        rows = _parse_sheet_parallel(sheet_bytes, shared)
-    if rows is None:
-        rows = _parse_row_elements(ET.fromstring(sheet_bytes), shared)
-    return _pad(rows)
-
-
-def read_xlsx(spark: SparkSession, path: str) -> DataFrame:
+def read_xlsx(
+    spark: SparkSession, path: str, rows: list[list[str]] | None = None
+) -> DataFrame:
     """xlsx → DataFrame: first row is the header, every column string,
-    blank cells NULL (CSV-path parity).
+    blank cells NULL (CSV-path parity). ``rows`` are the sheet's already
+    parsed rows (prewarm_rows_many); without them the file is parsed
+    here.
 
     Ships rows through a pandas frame so the session's Arrow path does
     the Python→JVM conversion in columnar batches (measured ~2× vs the
-    row-list path on the reference's 77-column nutrition sheet); falls
-    back to the row-list path when pandas is unavailable."""
-    rows = read_xlsx_rows(path)
+    row-list path on the reference's 77-column nutrition sheet)."""
+    import pandas as pd
+
+    if rows is None:
+        rows = read_xlsx_rows(path)
     if not rows:
         return spark.createDataFrame([], T.StructType([]))
     header = [str(h) if h != "" else f"_c{i}" for i, h in enumerate(rows[0])]
     schema = T.StructType([T.StructField(h, T.StringType()) for h in header])
-    try:
-        import pandas as pd
-
-        pdf = pd.DataFrame(rows[1:], columns=header, dtype=object)
-        pdf = pdf.where(pdf != "", None)
-        return spark.createDataFrame(pdf, schema=schema)
-    except ImportError:  # pragma: no cover
-        data = [[v if v != "" else None for v in r] for r in rows[1:]]
-        return spark.createDataFrame(data, schema)
+    pdf = pd.DataFrame(rows[1:], columns=header, dtype=object)
+    pdf = pdf.where(pdf != "", None)
+    return spark.createDataFrame(pdf, schema=schema)

@@ -16,8 +16,9 @@ parsed script. Check families and their reference citations:
 
 Scoring matches `_process_validation_row` (main_etl_pipeline.py:902-920):
 start 100; −5 when the failing check name contains PK CHECK / ORPHAN /
-NULL VIOL; −1 for other findings; floored at 0. Failed statements are
-swallowed leniently like the reference (:841-842).
+NULL VIOL; −1 for other findings; floored at 0. A check or statement
+that fails to run counts as attempted and leaves the score unchanged,
+the reference's lenient rule (:841-842).
 """
 
 from __future__ import annotations
@@ -236,7 +237,12 @@ def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = No
         results = _run_checks(spark, queued)
         for check_name, _ in queued:  # queue order keeps the report stable
             val = results.get(check_name)
-            if val is not None:
+            if val is None:
+                # lenient like the reference (:841-842): attempted, but
+                # a check that cannot run does not move the score
+                logger.warning("validation check %s could not run", check_name)
+                res.checks_run += 1
+            else:
                 res.record(check_name, val)
 
     for t, pk in PK_CHECKS.items():
@@ -414,7 +420,7 @@ def storage_layout_inventory(
     index inventory (validation.sql:397-404: information_schema.statistics
     GROUP_CONCAT of index columns per table). Spark has no B-tree
     indexes; the layout features that stand in are date PARTITIONING
-    (scan pruning — load.py:84-85 partitions PARTITIONED_FACTS by
+    (scan pruning — load.py:83-84 partitions PARTITIONED_FACTS by
     DateKey) and BUCKETING (shuffle-free co-located joins —
     load.py:write_bucketed, ≙ the fact-FK indexes of db_schema.sql:
     211-218). One row per table: partition columns read from the

@@ -1,6 +1,7 @@
-"""parallel.declare_parallel contract: builder-list order, env toggle,
-exception propagation (review r12 — the pattern is shared by
-dimensions/facts/resolution, so its semantics are pinned once here)."""
+"""parallel.declare_parallel contract: builder-list order and exception
+propagation (the helper is shared by dimensions/facts/resolution,
+extraction and the warehouse writes, so its semantics are pinned once
+here)."""
 
 from __future__ import annotations
 
@@ -24,17 +25,6 @@ def test_order_is_builder_list_not_completion():
     out = declare_parallel(builders)
     assert list(out) == ["slow", "fast"]
     assert out == {"slow": "a", "fast": "b"}
-
-
-def test_seq_decl_env_runs_sequentially(monkeypatch):
-    import threading
-
-    monkeypatch.setenv("SPARK_GRAFT_SEQ_DECL", "1")
-    tids = []
-    builders = [(f"b{i}", lambda: tids.append(threading.get_ident()))
-                for i in range(3)]
-    declare_parallel(builders)
-    assert set(tids) == {threading.get_ident()}
 
 
 def test_builder_exception_propagates():

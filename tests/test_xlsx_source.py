@@ -188,64 +188,46 @@ def _big_sheet_xml(n_rows: int) -> str:
     )
 
 
-def test_parallel_parse_matches_sequential():
-    """ADVICE r7: _parse_sheet_parallel had zero coverage because every
-    fixture sits under the 4 MB threshold — call it directly and pin
-    byte-chunked parity against the sequential ElementTree parse."""
-    import xml.etree.ElementTree as ET
-
+def _parse_parallel(sheet_bytes: bytes, shared: list[str]):
+    """Run _start_parallel_parse to completion; None when it declines."""
     from fitness_nutrition_data_pipeline_spark.sources.xlsx import (
-        _parse_row_elements,
-        _parse_sheet_parallel,
+        _start_parallel_parse,
     )
 
+    started = _start_parallel_parse(sheet_bytes, shared)
+    if started is None:
+        return None
+    pool, res = started
+    with pool:
+        return [r for part in res.get(timeout=120) for r in part]
+
+
+def test_parallel_parse_matches_sequential():
+    """Every fixture sits under the 4 MB fork threshold, so the chunked
+    parse is driven directly here: byte-chunked parity against the
+    sequential ElementTree parse."""
+    import xml.etree.ElementTree as ET
+
+    from fitness_nutrition_data_pipeline_spark.sources.xlsx import _parse_row_elements
+
     shared = ["name", "kcal", "split run"]
-    xml = _big_sheet_xml(500)
-    sheet_bytes = xml.encode()
+    sheet_bytes = _big_sheet_xml(500).encode()
     seq = _parse_row_elements(ET.fromstring(sheet_bytes), shared)
-    par = _parse_sheet_parallel(sheet_bytes, shared)
+    par = _parse_parallel(sheet_bytes, shared)
     assert par is not None
     assert par == seq
 
 
 def test_parallel_parse_refuses_worker_threads():
-    """ADVICE r7: extract_all calls the xlsx readers from a thread
-    pool; forking from a worker thread while siblings hold py4j/
-    logging locks is a deadlock hazard. The process pool is therefore
-    MAIN-THREAD-ONLY: from a worker thread _parse_sheet_parallel must
-    decline (None → caller's sequential fallback), never fork."""
+    """extract_all runs its source tasks on a thread pool; forking from
+    a worker thread while siblings hold py4j/logging locks is a deadlock
+    hazard. The process pool is therefore MAIN-THREAD-ONLY: from a
+    worker thread _start_parallel_parse must decline (None → caller's
+    sequential fallback), never fork."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from fitness_nutrition_data_pipeline_spark.sources.xlsx import (
-        _parse_sheet_parallel,
-    )
 
     shared = ["name", "kcal", "split run"]
     sheet_bytes = _big_sheet_xml(200).encode()
     with ThreadPoolExecutor(max_workers=2) as pool:
-        par = pool.submit(_parse_sheet_parallel, sheet_bytes, shared).result(
-            timeout=120
-        )
+        par = pool.submit(_parse_parallel, sheet_bytes, shared).result(timeout=120)
     assert par is None
-
-
-def test_prewarm_serves_threaded_reads(tmp_path):
-    """The speedup path under extract_all's thread pool: prewarm_rows
-    on the main thread parses+caches; a worker-thread read_xlsx_rows
-    returns the cached rows, identical to a direct parse."""
-    import zipfile as _zf
-    from concurrent.futures import ThreadPoolExecutor
-
-    from fitness_nutrition_data_pipeline_spark.sources import xlsx as X
-
-    path = str(tmp_path / "big.xlsx")
-    with _zf.ZipFile(path, "w") as z:
-        z.writestr("[Content_Types].xml", _CT)
-        z.writestr("xl/workbook.xml", "<workbook/>")
-        z.writestr("xl/sharedStrings.xml", _SHARED)
-        z.writestr("xl/worksheets/sheet1.xml", _big_sheet_xml(300))
-    direct = X._read_xlsx_rows_uncached(path)
-    X.prewarm_rows(path)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        threaded = pool.submit(X.read_xlsx_rows, path).result(timeout=60)
-    assert threaded == direct
