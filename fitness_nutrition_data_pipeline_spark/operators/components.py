@@ -2,20 +2,11 @@
 of near-dedup: LSH gives pairwise collisions; the dedup *cluster* is the
 component (A~B, B~C ⟹ {A,B,C} keep one survivor).
 
-Algorithm: iterative min-label propagation (each vertex adopts the
-smallest label among itself and its neighbors) until fixpoint. Per
-iteration: one join edges⋈labels + one groupBy min — both shuffled on
-vertex id, so an iteration is linear in |E|. Convergence in O(diameter)
-iterations; near-dup graphs are unions of small cliques, so diameter is
-tiny in practice. ``localCheckpoint`` truncates the lineage each round —
-without it the plan doubles per iteration and the driver OOMs long before
-the data does (the classic iterative-Spark trap).
-
-``connected_components_star`` below is the large-star/small-star
-optimization [Kiveris et al., SoCC'14]: O(log n) rounds on adversarial
-(long-chain) graphs with the same per-round plan shape and the same
-output contract — equivalence and the round-count bound are pinned by
-tests/test_components.py.
+``connected_components`` is large-star/small-star [Kiveris et al.,
+SoCC'14]: O(log n) alternations even on long duplicate chains, each
+linear in |E|, with a single-task union-find finish when the edge state
+fits one task. tests/test_components.py checks both paths against a
+pure-Python union-find.
 """
 
 from __future__ import annotations
@@ -23,60 +14,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Rows of pinned edge state one task handles (~32 MB of id pairs). Round
+# state is cut into partitions of this many rows, and a state below it
+# finishes in one task — the union-find here, the simulated peel in
+# kcore.kcore_peel. Read at call time; 0 forces the distributed loops.
+ONE_TASK_ROWS = 2_000_000
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    max_iterations: int = 20,
-) -> DataFrame:
-    """(vertex, component) for every vertex appearing in ``edges``;
-    component = min vertex id reachable."""
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    )
-    sym = sym.where(F.col("a") != F.col("b")).distinct().localCheckpoint()
 
-    labels = (
-        sym.select(F.col("a").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["vertex"])
-            .groupBy(F.col("a").alias("vertex"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        updated = (
-            labels.join(neighbor_min, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-                (F.coalesce("nbr_component", F.col("component")) < F.col("component")).alias(
-                    "_changed"
-                ),
-            )
-            .localCheckpoint()
-        )
-        n_changed = updated.where(F.col("_changed")).count()
-        labels = updated.drop("_changed")
-        if n_changed == 0:
-            break
-    return labels
+def state_partitions(df: DataFrame, n_rows: int) -> int:
+    """Partition count for ``n_rows`` rows of round state: ONE_TASK_ROWS
+    rows each, never more than ``df`` already has, never fewer than 1."""
+    per_part = max(ONE_TASK_ROWS, 1)
+    return max(1, min(df.rdd.getNumPartitions(), -(-n_rows // per_part)))
 
 
 def near_dup_components(bands: DataFrame, id_col: str) -> DataFrame:
-    """Dedup clusters from LSH band rows: star edges doc↔bucket-minimum
-    (linear in corpus, no pairwise expansion) → connected components.
-    Returns (id, component) where component is the cluster's canonical
-    (minimum) doc id; singleton docs keep component == their own id only
-    if they collided with nothing (absent from the result)."""
+    """Dedup clusters from LSH band rows (band_id, band_key, ``id_col``):
+    star edges doc↔bucket-minimum (linear in corpus, no pairwise
+    expansion) resolved by ``connected_components``. Returns (``id_col``,
+    component) where component is the cluster's minimum id; docs that
+    collided with nothing are absent.
+
+    ``bands`` is pinned first, so the bucket-min aggregate and the
+    join's probe side read one materialized band table instead of
+    re-running the caller's corpus scan and hashing twice."""
+    bands = bands.localCheckpoint()
     mins = bands.groupBy("band_id", "band_key").agg(F.min(id_col).alias("bucket_min"))
     edges = (
         bands.join(mins, ["band_id", "band_key"])
@@ -90,7 +52,7 @@ def near_dup_components(bands: DataFrame, id_col: str) -> DataFrame:
 def _union_find_labels(sym: DataFrame) -> DataFrame:
     """Single-task exact union-find over a (pinned, answer-sized) edge
     state: (vertex, component=min reachable id) for every vertex in
-    ``sym``. The small-state finish of ``connected_components_star`` —
+    ``sym``. The small-state finish of ``connected_components`` —
     executor-side via ``mapInPandas`` (never a driver collect), one
     linear pass, zero shuffles, zero rounds.
 
@@ -155,83 +117,28 @@ def _union_find_labels(sym: DataFrame) -> DataFrame:
     return sym.coalesce(1).mapInPandas(labels, out_schema)
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    max_rounds: int = 30,
-    check_every: int = 1,
-    state_rows_per_partition: int = 2_000_000,
-    local_finish_rows: int = 2_000_000,
+def connected_components(
+    edges: DataFrame, src: str = "src", dst: str = "dst", *, max_rounds: int = 30
 ) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    O(log n)-round variant the plain min-label fixpoint
-    (``connected_components``) documents as its adversarial-graph
-    upgrade. Label propagation moves the minimum ONE HOP per round, so a
-    duplicate CHAIN of length d costs d rounds; the star operations
-    rewire every node toward its neighborhood minimum, halving component
-    diameter per alternation — a 10^6-long chain converges in ~20 rounds
-    instead of 10^6 (tests/test_components.py pins a 120-node path at
-    ≤12 rounds vs 119 hops).
+    """(vertex, component) for every vertex of a non-self-loop edge in
+    ``edges``; component = the minimum vertex id reachable from it.
+    Edges are undirected; self-loops and repeated edges are ignored, so
+    an edge list of self-loops alone gives an empty result.
 
-    Per alternation: two groupBy-mins + two joins, all shuffled on
-    vertex id, linear in |E|; ONE ``localCheckpoint`` per alternation
-    pair truncates lineage (checkpointing each star separately doubled
-    the per-round job count for no correctness gain). Convergence = the
-    edge multiset's symmetric difference empty, checked as one job
-    (anti-joins in both directions unioned, limit 1). Same output
-    contract: (vertex, component=min reachable id) for every vertex in
-    ``edges``.
+    The symmetric edge state is pinned and counted once, at entry. Below
+    ``ONE_TASK_ROWS`` rows one executor task labels it by union-find
+    (``_union_find_labels``); otherwise large-star/small-star pairs run
+    until one leaves the edge set unchanged, at most ``max_rounds``
+    pairs. The union-find exit is checked only at entry: a state that
+    shrinks below the bound during the alternations stays on the
+    distributed loop. Both paths give identical labels.
 
-    r17 optimization (guide §2.4/§2.6 — at bench scale the cost is
-    stage-barrier count, not bytes; every lever below was A/B-measured
-    on the real operator at sf0.1, quiet host, output-equality asserted
-    each time):
-
-    - round state is coalesced before each checkpoint to a partition
-      count derived from the materialized edge count
-      (``state_rows_per_partition``, ~2M edge rows ≈ 32 MB per
-      partition) instead of whatever layout AQE left — measured −20%
-      on dedup_clusters_exact at sf0.1 where the state collapses to one
-      partition, while a 100 TB edge set still gets thousands of
-      partitions (the r15 note that a HARD coalesce(1) would serialize
-      real work at scale is why this is size-derived, not constant);
-    - ONE distinct per alternation pair instead of two: the large-star
-      output feeds small-star un-deduplicated (groupBy-min and the
-      phase filters are multiplicity-insensitive, and the intermediate
-      is bounded by 2(|E|+|V|) — no compounding), the pair's final
-      distinct restores the canonical edge set, so the per-round state
-      sequence is identical. 94 → 83 Spark jobs, ~−8%;
-    - setup distinct runs on the orientation-NORMALIZED half
-      (least/greatest) and the reverse orientation is unioned after —
-      half the rows through the dedup shuffle for the same symmetric
-      edge set (−15%); ``vertices`` is no longer checkpointed (it was
-      materialized eagerly but consumed exactly once, at the end — it
-      now derives lazily from the pinned setup state);
-    - the convergence diff runs every ``check_every`` rounds. Default 1:
-      with 1-partition round state the diff job (~0.2 s) is cheaper
-      than the extra materialization an overshoot costs (~0.7 s), so
-      skipping checks LOST time when measured (8.8 s at check_every=2
-      vs 6.9 s at 1). The knob is kept because the trade reverses when
-      the diff is not answer-sized. Star alternations on a converged
-      edge set are idempotent, so any check_every >= 1 yields identical
-      labels.
-
-    AQE-off inside the loop (fewer jobs: 92 → 29) was measured SLOWER
-    (9.0 s vs 6.9 s even with shuffle.partitions pinned to the state
-    size) — job count is not the cost here, per-stage scheduling with
-    a good layout is; left alone.
-
-    r18 optimization: when the materialized edge state is at most
-    ``local_finish_rows`` (default = the same 2M-row bound that sizes
-    round-state partitions), the alternation loop is skipped entirely in
-    favor of a single-task executor-side union-find
-    (``_union_find_labels``) — identical labels, one job instead of
-    rounds × ~8 stages of scheduling latency. Pass ``local_finish_rows=0``
-    to force the distributed loop (the equivalence tests do).
+    Measured at sf0.1: the single-task finish cut dedup_clusters_exact
+    from 8.06 s to 2.58 s median, because its 22k-row state had spent 5
+    alternations × ~8 stages on scheduling latency alone.
     """
+    # dedup the orientation-normalized half, then add the reverse: half
+    # the rows through the distinct shuffle for the same symmetric set
     half = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -244,29 +151,12 @@ def connected_components_star(
         half.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
     vertices = sym.select(F.col("a").alias("vertex")).distinct()
-    # one cheap count on the pinned state sizes every round's coalesce;
-    # edge mass only shrinks across star alternations (dups collapse),
-    # so sizing once at entry is conservative for every later round
+    # edge mass only shrinks across alternations, so sizing once at
+    # entry is conservative for every later round
     n_edges = sym.count()
-    # small-state finish (r18, guide §1.2 "fix the distributed algorithm"):
-    # when the pinned edge state fits one task (same ~2M-row bound that
-    # sizes the round state), every star alternation is pure stage-
-    # scheduling latency — at sf0.1 the 22k-row state spent 5 rounds ×
-    # ~8 stages ≈ all of dedup_clusters_exact's CC time. A single-task
-    # union-find pass computes the identical labels (property-tested
-    # against the alternation AND the fixpoint in tests/test_components)
-    # in one job. At 100 TB the distributed alternations run unchanged —
-    # this is the standard finish-small step of cluster CC jobs, gated on
-    # measured state size, not a local-mode constant.
-    if n_edges <= local_finish_rows:
+    if n_edges < ONE_TASK_ROWS:
         return _union_find_labels(sym)
-    n_state_parts = max(
-        1,
-        min(
-            sym.rdd.getNumPartitions(),
-            -(-n_edges // state_rows_per_partition),
-        ),
-    )
+    n_state_parts = state_partitions(sym, n_edges)
 
     def star(adj: DataFrame, large: bool, dedup: bool) -> DataFrame:
         # m(u) = min(N(u) ∪ {u}); every u also re-links itself to m(u),
@@ -288,24 +178,23 @@ def connected_components_star(
             out.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).select(F.col("u").alias("a"), F.col("v").alias("b"))
 
-    for rnd in range(max_rounds):
-        # one materialization per ALTERNATION PAIR; the symmetrized
-        # union may carry an edge twice (both orientations emitted) —
-        # harmless to groupBy-min, and the convergence check below is
-        # multiplicity-insensitive (anti-joins, not exceptAll)
+    for _ in range(max_rounds):
+        # one materialization per ALTERNATION PAIR, and one distinct: the
+        # large-star output feeds small-star un-deduplicated (groupBy-min
+        # and the phase filters are multiplicity-insensitive); the
+        # symmetrized union may still carry an edge twice, which the
+        # convergence check tolerates (anti-joins, not exceptAll)
         nxt = (
             star(star(sym, large=True, dedup=False), large=False, dedup=True)
             .coalesce(n_state_parts)
             .localCheckpoint()
         )
-        diff = -1
-        if (rnd + 1) % check_every == 0 or rnd + 1 == max_rounds:
-            diff = (
-                nxt.join(sym, ["a", "b"], "left_anti")
-                .union(sym.join(nxt, ["a", "b"], "left_anti"))
-                .limit(1)
-                .count()
-            )
+        diff = (
+            nxt.join(sym, ["a", "b"], "left_anti")
+            .union(sym.join(nxt, ["a", "b"], "left_anti"))
+            .limit(1)
+            .count()
+        )
         sym = nxt
         if diff == 0:
             break

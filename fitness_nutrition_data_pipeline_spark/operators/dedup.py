@@ -333,10 +333,8 @@ def dedup_clusters(
     radius — a REFINEMENT of the true components (clusters only split,
     never over-merge: the safe direction for dedup, which errs toward
     keeping a document). Duplicate CHAINS longer than ``iterations``
-    hops stay split; production iterates to fixpoint (stop when a round
-    changes zero labels, persist + localCheckpoint each round to
-    truncate lineage) or restructures with large-star/small-star to cut
-    rounds to O(log n). Each round is two shuffles (groupBy bucket,
+    hops stay split; exact components come from
+    ``operators/components.py::connected_components``. Each round is two shuffles (groupBy bucket,
     groupBy id) with map-side partial min — never an edge-pair
     materialization, which is what makes this the 100 TB shape.
 
@@ -344,13 +342,13 @@ def dedup_clusters(
     doc id. Docs absent from ``membership`` are absent from the result
     (they are singletons by construction).
 
-    The general edge-list fixpoint variant (iterate-until-no-change with
-    lineage checkpoints) is ``operators/components.py::
-    connected_components``; this bipartite fixed-round form skips edge
+    The exact edge-list operator is ``operators/components.py::
+    connected_components`` (large-star/small-star with a single-task
+    union-find finish); this bipartite fixed-round form skips edge
     materialization entirely and unrolls to a deterministic plan an SQL
     oracle can replay CTE-for-CTE (queries/llm_ops.py::_clusters_sql).
     tests/test_components.py asserts the refinement invariant against
-    the fixpoint operator on the real LSH graph.
+    the exact components (``near_dup_components``) on the real LSH graph.
 
     Diamond-DAG treatment (tools/audit_scans.py): ``membership`` feeds
     2×iterations+1 plan branches; without pinning, each branch

@@ -35,6 +35,8 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fitness_nutrition_data_pipeline_spark.operators import components
+
 
 def _join(state_dir: str, tag: str) -> str:
     # posixpath so scheme'd URIs (s3a://…, hdfs://…) join correctly on
@@ -94,15 +96,15 @@ def _local_peel(
     tag: str,
     budget: int | None = None,
 ) -> tuple[DataFrame, int]:
-    """Single-task exact peel of a small (≤ ~2M-row) pinned edge state —
-    the r18 finish of ``kcore_peel``: once the surviving edge mass fits
-    one task, every remaining distributed round is pure stage-scheduling
-    latency (degree pin + two-long action + two semi-joins + state pin,
-    ~3 jobs per round). The simulation replays the IDENTICAL round
-    semantics (drop ALL vertices with out-degree < k simultaneously;
-    count only rounds that dropped something; stop at fixpoint or empty
-    keep-set), executor-side via ``mapInPandas`` — never a driver
-    collect. Returns (core_edges, extra_rounds). A marker row (null src)
+    """Single-task exact peel of a pinned edge state under
+    ``components.ONE_TASK_ROWS`` rows — the finish of ``kcore_peel``:
+    once the surviving edge mass fits one task, every remaining
+    distributed round is pure stage-scheduling latency (degree pin +
+    two-long action + two semi-joins + state pin, ~3 jobs per round).
+    The simulation replays the IDENTICAL round semantics (drop ALL
+    vertices with out-degree < k simultaneously; count only rounds that
+    dropped something; stop at fixpoint or empty keep-set),
+    executor-side via ``mapInPandas`` — never a driver collect. Returns (core_edges, extra_rounds). A marker row (null src)
     carries the round count out of the task; it is filtered off the
     returned relation and exists only inside the pinned state."""
     from pyspark.sql import types as T
@@ -161,12 +163,6 @@ def _local_peel(
     return core, int(extra)
 
 
-# edge-state size (rows) below which the remaining peel runs as ONE
-# single-task simulation — the same ~2M-row bound that sizes round-state
-# partitions, so "fits one partition" and "finish locally" coincide
-_LOCAL_PEEL_ROWS = 2_000_000
-
-
 def kcore_peel(
     edges: DataFrame,
     k: int,
@@ -175,7 +171,6 @@ def kcore_peel(
     dst: str = "dst",
     max_rounds: int | None = None,
     state_dir: str | None = None,
-    local_peel_rows: int = _LOCAL_PEEL_ROWS,
 ) -> tuple[DataFrame, int]:
     """Peel ``edges`` to its k-core fixpoint; return (core_edges, rounds).
 
@@ -189,7 +184,9 @@ def kcore_peel(
 
     Per round: one map-side-partial degree aggregate, one two-long
     driver action, two left-semi joins. Nothing vertex- or edge-sized
-    ever reaches the driver.
+    ever reaches the driver. Once the edge state is under
+    ``components.ONE_TASK_ROWS`` rows (checked at entry and after every
+    round), the remaining rounds run as one single-task peel.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -197,7 +194,7 @@ def kcore_peel(
     cur = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     cur = _pin(cur, state_dir, "edges_r0")
     # Size every later round's pin from the materialized round-0 edge
-    # count (one cheap action on pinned state): ~2M edge rows (~32 MB)
+    # count (one cheap action on pinned state): ONE_TASK_ROWS edge rows
     # per partition. Edge mass only shrinks while peeling, so sizing
     # once is conservative. Measured −17% on kcore_fixpoint_audit at
     # sf0.1 (state collapses to 1 partition); a 100 TB edge set still
@@ -206,20 +203,18 @@ def kcore_peel(
     # variant (localCheckpoint(eager=False), fewer jobs) was measured
     # SLOWER (2.7 s vs 2.2 s) and rejected.
     n_edges = cur.count()
-    n_parts = max(
-        1, min(cur.rdd.getNumPartitions(), -(-n_edges // 2_000_000))
-    )
+    n_parts = components.state_partitions(cur, n_edges)
     rounds = 0
     prev_tags: list[str] = []
     while max_rounds is None or rounds < max_rounds:
-        # small-state finish (r18): once the surviving edge mass fits one
+        # small-state finish: once the surviving edge mass fits one
         # task, run the remaining peel as a single simulation instead of
         # ~3 jobs per round — at sf0.1 the whole peel takes this exit on
         # round 0; at 100 TB the long small-tail rounds of a deep
         # degeneracy peel collapse into one task once they shrink under
         # the bound. Entry check uses the pin-sizing count; later rounds
         # use the degree-sum the per-round stat action already computes.
-        if n_edges <= local_peel_rows:
+        if n_edges < components.ONE_TASK_ROWS:
             budget = None if max_rounds is None else max_rounds - rounds
             core, extra = _local_peel(
                 cur, k, state_dir, f"edges_local_r{rounds}", budget

@@ -1,8 +1,7 @@
 """Reusable embedding-similarity operators (north-star ANN surface):
 in-order double-precision cosine, brute-force top-k, centroid (IVF)
-assignment and cluster-probed search. All JVM-side (zip_with folds) —
-no UDFs; at larger dims a vectorized pandas UDF slot-in is the only
-change.
+assignment and cluster-probed search. All JVM-side (zip_with folds),
+no UDFs.
 """
 
 from __future__ import annotations
@@ -128,61 +127,6 @@ def ivf_probe_topk(
     w = W.partitionBy("q_id").orderBy(F.desc("cosine_sim"), "neighbor_id")
     return (
         scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
-    )
-
-
-def brute_force_topk_pandas(
-    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str, *, k: int = 3
-) -> DataFrame:
-    """Arrow-vectorized variant of `brute_force_topk` for high-dim
-    embeddings: per partition, one numpy matmul scores a whole Arrow batch
-    against the (broadcast) query matrix — the documented slot-in when
-    64-dim zip_with folds become 4096-dim and JVM expression trees stop
-    being the fast path. Same result contract (rounded sims, id
-    tie-breaks)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype="int64")
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype="float64")
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, q_norm))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine_sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        ids, qn = bc.value
-        for pdf in batches:
-            mat = np.array([list(v) for v in pdf[vec_col]], dtype="float64")
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = np.round(mat @ qn.T, 6)  # (batch, n_queries)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(ids, n),
-                    "neighbor_id": np.tile(pdf[id_col].to_numpy(), len(ids)),
-                    "cosine_sim": sims.T.reshape(-1),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema).where(
-        F.col("neighbor_id") != F.col("q_id")
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
     )
 
 

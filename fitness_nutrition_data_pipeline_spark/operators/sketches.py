@@ -1,36 +1,17 @@
 """Approximate aggregation (sketch) operators — the 100 TB companions of
-the exact checks: HyperLogLog++ distinct counts and t-digest-style
-quantiles via Spark's built-ins, wrapped with explicit error contracts.
+the exact checks. HyperLogLog++ distinct counts and quantile sketches
+are Spark built-ins (``F.approx_count_distinct``,
+``F.percentile_approx``), which queries/sketch_ops.py calls directly;
+this module holds the frequent-items sketch Spark lacks.
 
 Validation stays EXACT (SURVEY A5 note: `countDistinct`, never approx);
-these are for interactive/exploratory stats where a 2-5% rsd is a fair
-trade for one pass and O(1) memory per group.
+sketches are for interactive/exploratory stats where a few percent of
+error is a fair trade for one pass and O(1) memory per group.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def approx_distinct(df: DataFrame, col: str, *, rsd: float = 0.02) -> DataFrame:
-    """HyperLogLog++ distinct count with the given relative standard
-    deviation (sketch size ~ 1/rsd²; mergeable across partitions)."""
-    return df.agg(F.approx_count_distinct(col, rsd).alias(f"approx_distinct_{col}"))
-
-
-def approx_quantiles(
-    df: DataFrame, col: str, probabilities: list[float], *, accuracy: int = 10000
-) -> list[float]:
-    """One-pass mergeable quantile sketch (Greenwald-Khanna via
-    approxQuantile); accuracy = 1/eps."""
-    return df.approxQuantile(col, probabilities, 1.0 / accuracy)
-
-
-def percentile_approx_col(col: str, p: float, *, accuracy: int = 10000) -> Column:
-    """percentile_approx as a grouped aggregate Column (usable per group,
-    unlike DataFrame.approxQuantile)."""
-    return F.percentile_approx(col, p, accuracy)
+from pyspark.sql import DataFrame
 
 
 def misra_gries_candidates(

@@ -1453,7 +1453,7 @@ def _exact_clusters_oracle() -> str:
     doc="EXACT duplicate clusters (true connected components, not the "
     "bounded-round refinement of lsh_dedup_clusters): the LSH doc↔"
     "bucket-min star edges resolved to components by large-star/"
-    "small-star (operators/components.py::connected_components_star — "
+    "small-star (operators/components.py::connected_components — "
     "O(log n) alternations, linear per round, the Kiveris et al. "
     "MapReduce algorithm), against a DuckDB recursive-CTE transitive "
     "closure computing min-reachable-id exactly. Chains of any length "
@@ -1465,30 +1465,15 @@ def _exact_clusters_oracle() -> str:
 )
 def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.components import (
-        connected_components_star,
+        near_dup_components,
     )
 
     sigs = minhash_signatures(
         load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
     )
-    # pin before the stats-join diamond: mins and the join's probe side
-    # read ONE materialized band table instead of re-running the corpus
-    # scan + shingle explode + md5s twice (r17, guide §5; band rows are
-    # metadata-sized and the pin spills rather than OOMs at scale)
-    bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS).localCheckpoint()
-    mins = bands.groupBy("band_id", "band_key").agg(
-        F.min("doc_id").alias("bucket_min")
-    )
-    edges = (
-        bands.join(mins, ["band_id", "band_key"])
-        .where(F.col("doc_id") != F.col("bucket_min"))
-        .select(
-            F.col("doc_id").alias("src"), F.col("bucket_min").alias("dst")
-        )
-        .distinct()
-    )
-    return connected_components_star(edges).select(
-        F.col("vertex").alias("doc_id"), F.col("component").alias("cluster_id")
+    bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
+    return near_dup_components(bands, "doc_id").select(
+        "doc_id", F.col("component").alias("cluster_id")
     )
 
 

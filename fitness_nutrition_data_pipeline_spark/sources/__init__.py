@@ -1,3 +1,3 @@
-from fitness_nutrition_data_pipeline_spark.sources.testdata import TABLES, load_tables, register_views
+from fitness_nutrition_data_pipeline_spark.sources.testdata import TABLES
 
-__all__ = ["TABLES", "load_tables", "register_views"]
+__all__ = ["TABLES"]

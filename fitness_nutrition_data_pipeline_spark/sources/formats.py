@@ -1,9 +1,9 @@
 """Generic format connectors beyond the reference's CSV/XLSX/MySQL surface
 (main_etl_pipeline.py:95-160 reads CSV + XLSX; db_schema.sql is the MySQL
-sink): JSON-lines and ORC round-trips on Spark's native readers, Avro
-gated behind its optional package.
+sink): JSON-lines and ORC round-trips on Spark's native readers. Avro, whose
+Spark module is optional, is written and read natively by sources/avro.py.
 
-Scale notes: all three are splittable columnar/row formats Spark reads
+Scale notes: both are splittable columnar/row formats Spark reads
 in parallel per file-split. JSONL carries its schema per record —
 `read_jsonl` takes an explicit schema to keep the scan single-pass
 (schema inference reads the data TWICE and samples types unstably;
@@ -47,32 +47,3 @@ def write_orc(df: DataFrame, path: str) -> None:
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
-
-def avro_available(spark: SparkSession) -> bool:
-    """True when the spark-avro package is on the classpath. Avro is an
-    OPTIONAL Spark module (org.apache.spark:spark-avro); this container
-    does not ship it, so the writer below is import-gated the same way
-    openpyxl is for XLSX (SURVEY §2.1 S3)."""
-    try:
-        # the same resolution Spark's writer performs — a bare
-        # Class.forName is NOT honest here (the distribution can carry
-        # the class without registering the data source)
-        ds = spark._jvm.org.apache.spark.sql.execution.datasources.DataSource
-        ds.lookupDataSource("avro", spark._jsparkSession.sessionState().conf())
-        return True
-    except Exception:
-        return False
-
-
-def write_avro_sparkpkg(df: DataFrame, path: str) -> None:
-    """Avro sink through the OPTIONAL spark-avro SQL module; raises a
-    clear error when the package is absent (gated — never a silent
-    fallback). The always-available native-spec writer lives in
-    sources/avro.py::write_avro — distinct name so the two can never be
-    import-confused (ADVICE r10)."""
-    if not avro_available(df.sparkSession):
-        raise ModuleNotFoundError(
-            "spark-avro is not on the classpath; add "
-            "org.apache.spark:spark-avro to use the Avro sink"
-        )
-    df.write.mode("overwrite").format("avro").save(path)

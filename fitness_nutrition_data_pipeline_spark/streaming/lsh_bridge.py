@@ -307,13 +307,14 @@ class IncrementalComponents:
 
     The trick that makes per-batch cost cheap is the STATE SHAPE: labels
     are kept as a star forest (doc → component root, height 1). Folding
-    a delta re-runs large-star/small-star CC (operators/components.py::
-    connected_components_star) over star-edges ∪ new pairs — and on
-    height-1 input the alternation converges in ~2 rounds regardless of
-    how long the duplicate chains were when ORIGINALLY discovered,
-    because the state has already collapsed their diameter. Cost per
-    batch: O(|clustered docs| + |delta pairs|) edges × ~2 rounds, never
-    a recompute over historical pair sets.
+    a delta re-runs CC (operators/components.py::connected_components)
+    over star-edges ∪ new pairs: a state under the operator's one-task
+    bound is labelled by a single union-find task, and a larger one runs
+    large-star/small-star, which on height-1 input converges in ~2
+    rounds regardless of how long the duplicate chains were when
+    ORIGINALLY discovered, because the state has already collapsed their
+    diameter. Cost per batch: O(|clustered docs| + |delta pairs|) edges,
+    never a recompute over historical pair sets.
 
     Root stability: a component's root is its min doc_id, and folding
     new pairs can only LOWER a root (min over a superset) — so labels
@@ -339,7 +340,7 @@ class IncrementalComponents:
         """Fold one batch's (doc_id_a, doc_id_b) pairs in; return the
         updated full labeling (docs that appear in any pair so far)."""
         from fitness_nutrition_data_pipeline_spark.operators.components import (
-            connected_components_star,
+            connected_components,
         )
 
         delta = pairs.select(
@@ -353,7 +354,7 @@ class IncrementalComponents:
         # here — every labeled doc came from a pair — but a root whose
         # members all re-link is only represented as a dst) ride along
         # via the symmetrization inside the star operator.
-        labels = connected_components_star(star.unionByName(delta)).select(
+        labels = connected_components(star.unionByName(delta)).select(
             F.col("vertex").alias("doc_id"), "component"
         )
         self._labels = labels.localCheckpoint()

@@ -5,15 +5,6 @@ custom stateful operator beside the ``applyInPandasWithState`` sessionizer
 State: one admitted-count per key, updated per micro-batch; admission is
 deterministic (event_id order within a batch). Memory is bounded by key
 cardinality, never volume — the 100 TB-stream posture.
-
-API note: Spark 4.x's second-generation ``transformWithStateInPandas``
-(named/TTL'd state primitives + timers over RocksDB) is the natural home
-for quota state, but its Python state-server protocol needs the
-``google.protobuf`` package, which this container does not ship — the
-import is gated and verified by test. The first-generation
-``applyInPandasWithState`` implementation below is the working path and
-carries identical semantics minus TTL expiry (swap in a timer-based
-eviction when protobuf is available).
 """
 
 from __future__ import annotations
@@ -43,17 +34,6 @@ ADMITTED_SCHEMA = T.StructType(
 )
 
 _STATE_SCHEMA = T.StructType([T.StructField("n_admitted", T.LongType())])
-
-
-def second_gen_available() -> bool:
-    """True when transformWithStateInPandas can actually run here (its
-    state-server wire protocol imports google.protobuf)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _limiter(limit: int):

@@ -119,120 +119,6 @@ def run_sessionizer_once(spark: SparkSession, input_dir: str, name: str) -> Data
     return spark.table(name)
 
 
-try:  # Spark 4 API surface; absent on 3.x clusters (backend above still works)
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class _SessionProcessor(StatefulProcessor):
-    """Spark 4 ``StatefulProcessor`` running the SAME 30-minute-gap
-    algorithm as ``_sessionize_group`` — the third sessionizer backend,
-    on the ``transformWithState`` API (typed per-state ValueState in the
-    RocksDB-backed store, state TTL and timers available, initial-state
-    bootstrap supported) instead of the 3.x ``applyInPandasWithState``
-    flat-tuple GroupState. Parity-tested against both the 3.x backend
-    and the batch sessionizer in tests/test_streaming_sessions.py, so
-    either backend can serve the operator depending on the cluster's
-    Spark line."""
-
-    def init(self, handle) -> None:
-        self._open = handle.getValueState("open_session", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        import pandas as pd
-
-        (user_id,) = key
-        prior = self._open.get() if self._open.exists() else None
-        start_us, last_us, n = prior if prior is not None else (None, None, 0)
-
-        closed: list[tuple[int, int, int, int]] = []
-        for pdf in rows:
-            ts_us = (pdf["ts"].astype("int64") // 1000).sort_values()
-            for t in ts_us:
-                t = int(t)
-                if last_us is None:
-                    start_us, last_us, n = t, t, 1
-                elif t - last_us > GAP_US:
-                    closed.append((user_id, start_us, last_us, n))
-                    start_us, last_us, n = t, t, 1
-                else:
-                    last_us = t
-                    n += 1
-
-        if last_us is not None:
-            self._open.update((start_us, last_us, n))
-
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=[
-                    "user_id", "session_start_us", "session_end_us", "n_events",
-                ],
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """True when the transformWithState backend can actually run here:
-    the API needs the RocksDB state store AND ``google.protobuf`` (the
-    state-server wire protocol). This container ships neither pip nor
-    protobuf, so the backend is capability-gated exactly like the Avro
-    sink and the Pillow image decode — the operator code is real and the
-    parity test runs wherever the dependency exists."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_sessionize_tws(spark: SparkSession, input_dir: str) -> DataFrame:
-    """Streaming sessionizer on the Spark 4 ``transformWithStateInPandas``
-    API. Requires the RocksDB state store provider (set by the runner /
-    test fixture) plus protobuf (see ``tws_available``); semantics
-    identical to ``stream_sessionize``."""
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
-    proc = _SessionProcessor()
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=SESSION_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
-def run_sessionizer_tws_once(
-    spark: SparkSession, input_dir: str, name: str
-) -> DataFrame:
-    """Drain available files through the transformWithState sessionizer
-    into a memory table (RocksDB provider pinned for the run)."""
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            stream_sessionize_tws(spark, input_dir)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(name)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def stream_sessionize_native(
     spark: SparkSession,
     input_dir: str,

@@ -1,5 +1,11 @@
-"""Connected components: transitive closure, convergence, LSH integration."""
+"""Connected components: transitive closure, convergence, LSH integration.
 
+Every graph test runs ``connected_components`` on both paths: the
+single-task union-find finish (default at test scale) and the
+distributed star alternation, forced by zeroing
+``components.ONE_TASK_ROWS``."""
+
+from fitness_nutrition_data_pipeline_spark.operators import components
 from fitness_nutrition_data_pipeline_spark.operators.components import (
     connected_components,
     near_dup_components,
@@ -7,21 +13,54 @@ from fitness_nutrition_data_pipeline_spark.operators.components import (
 from fitness_nutrition_data_pipeline_spark.operators.dedup import lsh_bands, minhash_signatures
 
 
-def test_two_components_and_chain(spark):
+def _labels(df):
+    return {r.vertex: r.component for r in df.collect()}
+
+
+def _both_paths(monkeypatch, edges, **kw):
+    """({vertex: component} from the union-find finish, the same from
+    the distributed alternation)."""
+    local = _labels(connected_components(edges, **kw))
+    with monkeypatch.context() as m:
+        m.setattr(components, "ONE_TASK_ROWS", 0)
+        dist = _labels(connected_components(edges, **kw))
+    return local, dist
+
+
+def _union_find_truth(edges):
+    """Driver-side union-find ground truth: {vertex: min reachable id}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_two_components_and_chain(spark, monkeypatch):
     # chain 1-2-3-4 (one component), pair 10-11, transitive via chain
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11)], "src long, dst long"
     )
-    out = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    assert _both_paths(monkeypatch, edges) == (want, want)
 
 
-def test_long_path_converges(spark):
-    # path 0-1-2-...-9: needs multiple propagation rounds
+def test_long_path_converges(spark, monkeypatch):
+    # path 0-1-2-...-9: needs multiple alternations on the distributed path
     edges = spark.createDataFrame([(i, i + 1) for i in range(9)], "src long, dst long")
-    out = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert set(out.values()) == {0}
-    assert len(out) == 10
+    want = {i: 0 for i in range(10)}
+    assert _both_paths(monkeypatch, edges) == (want, want)
 
 
 def test_near_dup_components_from_lsh(spark, sf_dir):
@@ -72,8 +111,8 @@ def test_dedup_clusters_bipartite_chain(spark):
 
 def test_bipartite_clusters_refine_fixpoint_components(spark, sf_dir):
     """Bounded-round bipartite propagation (dedup_clusters, oracle-
-    verifiable) must REFINE the true components (connected_components
-    fixpoint): every bounded cluster sits inside one true component,
+    verifiable) must REFINE the true components (near_dup_components):
+    every bounded cluster sits inside one true component,
     and labels never cross components. The real sf0.001 LSH graph has
     duplicate chains longer than 3 bucket-hops, so equality does NOT
     hold — the bounded form under-merges, never over-merges."""
@@ -130,106 +169,66 @@ def test_cdc_chunks_shift_invariance(spark):
     assert len(shared) >= 0.7 * len(h1), (len(shared), len(h1))
 
 
-def test_star_cc_matches_fixpoint(spark):
-    """Large-star/small-star must produce the identical (vertex,
-    component) labeling as the min-label fixpoint on a mixed graph
-    (cliques + chains + isolated pair)."""
-    from fitness_nutrition_data_pipeline_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
-
+def test_star_cc_matches_fixpoint(spark, monkeypatch):
+    """On a mixed graph (a chain, a clique, a triangle, an isolated
+    pair) the union-find finish and the distributed star alternation
+    both equal the driver-side union-find truth."""
     edges = (
         [(i, i + 1) for i in range(40)]
         + [(100 + i, 100 + j) for i in range(5) for j in range(i + 1, 5)]
         + [(200, 201), (300, 301), (301, 302), (302, 300)]
     )
     df = spark.createDataFrame(edges, "src long, dst long")
-    fix = {
-        (r.vertex, r.component)
-        for r in connected_components(df, max_iterations=50).collect()
-    }
-    # default path: the edge state is tiny, so the r18 single-task
-    # union-find finish is what actually runs here
-    star = {
-        (r.vertex, r.component) for r in connected_components_star(df).collect()
-    }
-    # local_finish_rows=0 forces the distributed star-alternation loop,
-    # keeping it covered now that every test-sized graph takes the finish
-    star_dist = {
-        (r.vertex, r.component)
-        for r in connected_components_star(df, local_finish_rows=0).collect()
-    }
-    assert fix == star
-    assert fix == star_dist
+    truth = _union_find_truth(edges)
+    assert _both_paths(monkeypatch, df) == (truth, truth)
 
 
-def test_star_cc_logarithmic_rounds_on_chain(spark):
-    """The reason the variant exists: a 120-hop duplicate CHAIN needs 119
-    one-hop label-propagation rounds but must converge within 12
-    star alternations (O(log n)) — pinned by capping max_rounds at 12
-    and asserting the labeling is still exactly right."""
-    from fitness_nutrition_data_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-
+def test_star_cc_logarithmic_rounds_on_chain(spark, monkeypatch):
+    """The reason for the star alternation: a 120-hop duplicate CHAIN
+    needs 119 one-hop label-propagation rounds but must converge within
+    12 star alternations (O(log n)) — pinned by capping max_rounds at 12
+    on the distributed path and asserting the labeling is still exactly
+    right. The union-find finish would absorb the chain in one task and
+    prove nothing, so the bound is zeroed."""
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(119)], "src long, dst long"
     )
-    # local_finish_rows=0: the round bound is a property of the
-    # DISTRIBUTED alternation; the small-state union-find finish would
-    # otherwise absorb the chain in one task and prove nothing
-    got = {
-        r.vertex: r.component
-        for r in connected_components_star(
-            df, max_rounds=12, local_finish_rows=0
-        ).collect()
-    }
+    monkeypatch.setattr(components, "ONE_TASK_ROWS", 0)
+    got = _labels(connected_components(df, max_rounds=12))
     assert got == {i: 0 for i in range(120)}
 
 
-def test_star_cc_local_finish_gate_and_equivalence(spark):
-    """The r18 small-state finish: at the default threshold a test-sized
-    graph runs the single-task union-find (plan carries a MapInPandas
-    node, zero star rounds); forcing local_finish_rows=0 runs the
-    distributed loop (no Python node). Labels identical either way, on a
-    graph mixing chains, a clique, string-ordering-sensitive cases not
-    applicable (long ids)."""
-    from fitness_nutrition_data_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-
+def test_star_cc_local_finish_gate_and_equivalence(spark, monkeypatch):
+    """At the default bound a test-sized graph runs the single-task
+    union-find (plan carries a MapInPandas node, zero star rounds);
+    with the bound zeroed the distributed loop runs (no Python node).
+    Labels identical either way."""
     edges = (
         [(i, i + 1) for i in range(30)]
         + [(500 + i, 500 + j) for i in range(4) for j in range(i + 1, 4)]
         + [(900, 901)]
     )
     df = spark.createDataFrame(edges, "src long, dst long")
-    local = connected_components_star(df)
-    dist = connected_components_star(df, local_finish_rows=0)
+    local = connected_components(df)
+    with monkeypatch.context() as m:
+        m.setattr(components, "ONE_TASK_ROWS", 0)
+        dist = connected_components(df)
     assert "mapinpandas" in local._jdf.queryExecution().analyzed().toString().lower()
     assert (
         "mapinpandas"
         not in dist._jdf.queryExecution().analyzed().toString().lower()
     )
-    assert {(r.vertex, r.component) for r in local.collect()} == {
-        (r.vertex, r.component) for r in dist.collect()
-    }
+    assert _labels(local) == _labels(dist)
 
 
-def test_star_cc_random_graphs_property(spark):
-    """Property: on ANY graph, large-star/small-star labels equal the
-    min-label fixpoint's AND equal a driver-side union-find ground truth
-    (three independent implementations, one answer). Hypothesis drives
-    random edge lists; union-find is pure Python, so a disagreement
-    pinpoints which distributed variant broke."""
+def test_star_cc_random_graphs_property(spark, monkeypatch):
+    """Property: on ANY graph, both paths of the operator — the
+    union-find finish and the forced distributed alternation — equal a
+    driver-side union-find ground truth. Hypothesis drives random edge
+    lists; the truth is pure Python, so a disagreement pinpoints which
+    path broke."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from fitness_nutrition_data_pipeline_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
 
     edge = st.tuples(
         st.integers(min_value=0, max_value=25),
@@ -242,46 +241,20 @@ def test_star_cc_random_graphs_property(spark):
     )
     @given(st.lists(edge, min_size=1, max_size=25))
     def check(edges):
-        # driver-side union-find ground truth
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        truth = {v: find(v) for v in parent}
-
+        truth = _union_find_truth(edges)
         df = spark.createDataFrame(edges, "src long, dst long")
-        star = {
-            r.vertex: r.component
-            for r in connected_components_star(df).collect()
-        }
-        fix = {
-            r.vertex: r.component
-            for r in connected_components(df, max_iterations=60).collect()
-        }
-        assert star == truth
-        assert fix == truth
+        local, dist = _both_paths(monkeypatch, df)
+        assert local == truth
+        assert dist == truth
 
     check()
 
 
 def test_star_cc_local_finish_preserves_huge_int64_ids(spark):
-    """Regression (r18 review): vertex ids above 2^53 must survive the
-    single-task finish exactly — a pandas float64 inference anywhere in
-    the Arrow path would silently round them (xxhash64-derived ids live
-    up there). Verified against a driver-side union-find ground truth."""
-    from fitness_nutrition_data_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-
+    """Regression: vertex ids above 2^53 must survive the single-task
+    finish exactly — a pandas float64 inference anywhere in the Arrow
+    path would silently round them (xxhash64-derived ids live up there).
+    Verified against a driver-side union-find ground truth."""
     base = 2**62
     # two components with adjacent huge ids that float64 would collapse
     edges = [
@@ -290,9 +263,7 @@ def test_star_cc_local_finish_preserves_huge_int64_ids(spark):
         (base + 10_001, base + 10_002),
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r.vertex: r.component for r in connected_components_star(df).collect()
-    }
+    got = _labels(connected_components(df))
     assert got == {
         base + 1: base + 1,
         base + 2: base + 1,
@@ -300,3 +271,44 @@ def test_star_cc_local_finish_preserves_huge_int64_ids(spark):
         base + 10_001: base + 10_001,
         base + 10_002: base + 10_001,
     }
+    assert got == _union_find_truth(edges)
+
+
+def test_graph_operators_empty_edge_inputs(spark, monkeypatch):
+    """Edge-input contract of both graph operators on both of their
+    paths: an edge list with no partitions at all (``emptyRDD``), one
+    that AQE finds empty only at run time (a shuffled, filtered-to-
+    nothing distinct), and — for connected components — one made only of
+    self-loops. Each yields an empty result, and ``kcore_peel`` reports
+    0 rounds."""
+    from pyspark.sql import functions as F
+
+    from fitness_nutrition_data_pipeline_spark.operators.kcore import kcore_peel
+
+    schema = "src long, dst long"
+    no_partitions = spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    assert no_partitions.rdd.getNumPartitions() == 0
+    aqe_emptied = (
+        spark.createDataFrame([(1, 2), (2, 1), (2, 3), (3, 2)], schema)
+        .repartition(3)
+        .where(F.col("src") < 0)
+        .distinct()
+    )
+    self_loops = spark.createDataFrame([(1, 1), (2, 2), (7, 7)], schema)
+
+    for bound in (components.ONE_TASK_ROWS, 0):
+        with monkeypatch.context() as m:
+            m.setattr(components, "ONE_TASK_ROWS", bound)
+            for name, edges in (
+                ("no_partitions", no_partitions),
+                ("aqe_emptied", aqe_emptied),
+                ("self_loops", self_loops),
+            ):
+                assert connected_components(edges).collect() == [], (bound, name)
+            for name, edges in (
+                ("no_partitions", no_partitions),
+                ("aqe_emptied", aqe_emptied),
+            ):
+                core, rounds = kcore_peel(edges, 2)
+                assert core.collect() == [], (bound, name)
+                assert rounds == 0, (bound, name)

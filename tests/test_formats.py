@@ -8,10 +8,8 @@ import os
 from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.sources.formats import (
-    avro_available,
     read_jsonl,
     read_orc,
-    write_avro_sparkpkg,
     write_jsonl,
     write_orc,
 )
@@ -60,21 +58,6 @@ def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path_factory):
         q.explain(mode="formatted")
     plan = buf.getvalue()
     assert "PushedFilters:" in plan and "l_quantity" in plan
-
-
-def test_avro_gate_is_honest(spark, sf_dir, tmp_path_factory):
-    """No spark-avro in this container: the gate must say so and the
-    writer must raise the clear gated error, never a cryptic one."""
-    docs = load_table(spark, sf_dir, "documents").limit(1)
-    if avro_available(spark):
-        d = str(tmp_path_factory.mktemp("avro"))
-        write_avro_sparkpkg(docs, os.path.join(d, "docs"))
-        assert spark.read.format("avro").load(os.path.join(d, "docs")).count() == 1
-    else:
-        import pytest
-
-        with pytest.raises(ModuleNotFoundError):
-            write_avro_sparkpkg(docs, str(tmp_path_factory.mktemp("avro")) + "/x")
 
 
 def test_scratch_path_managed(spark, monkeypatch, tmp_path):

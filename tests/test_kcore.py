@@ -8,6 +8,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from fitness_nutrition_data_pipeline_spark.operators import components
 from fitness_nutrition_data_pipeline_spark.operators.kcore import (
     core_numbers,
     kcore_peel,
@@ -74,19 +75,18 @@ def test_peels_to_empty_and_k1(spark):
     assert _vertices(core1) == {1, 2, 3, 4, 5, 6, 7}
 
 
-def test_max_rounds_reproduces_bounded_audit_semantics(spark):
+def test_max_rounds_reproduces_bounded_audit_semantics(spark, monkeypatch):
     # stopping after 1 round must leave the partially-peeled graph —
-    # on BOTH the r18 single-task local finish (default at test scale)
-    # and the distributed loop (local_peel_rows=0 forces it)
-    for lpr in (2_000_000, 0):
-        core, rounds = kcore_peel(
-            _sym(spark, _TRIANGLE_TAIL), 2, max_rounds=1, local_peel_rows=lpr
-        )
-        assert rounds == 1, lpr
-        assert _vertices(core) == {1, 2, 3, 4, 5, 6}, lpr  # only 7 dropped
+    # on BOTH the single-task local finish (default at test scale) and
+    # the distributed loop (a zeroed one-task bound forces it)
+    for bound in (components.ONE_TASK_ROWS, 0):
+        monkeypatch.setattr(components, "ONE_TASK_ROWS", bound)
+        core, rounds = kcore_peel(_sym(spark, _TRIANGLE_TAIL), 2, max_rounds=1)
+        assert rounds == 1, bound
+        assert _vertices(core) == {1, 2, 3, 4, 5, 6}, bound  # only 7 dropped
 
 
-def test_matches_python_reference_on_seeded_graphs(spark):
+def test_matches_python_reference_on_seeded_graphs(spark, monkeypatch):
     rng = random.Random(20260815)
     for trial in range(3):
         n = 40
@@ -101,16 +101,20 @@ def test_matches_python_reference_on_seeded_graphs(spark):
             core, rounds = kcore_peel(_sym(spark, pairs), k)
             assert _vertices(core) == want_vertices, (trial, k)
             assert rounds == want_rounds, (trial, k)
-        # distributed loop (r18 local finish bypassed) must agree too;
-        # once per seeded graph keeps the loop covered without tripling
-        # the suite time
+        # distributed loop (local finish bypassed) must agree too; once
+        # per seeded graph keeps the loop covered without tripling the
+        # suite time
         want_vertices, want_rounds = _py_kcore(pairs, 2)
-        core, rounds = kcore_peel(_sym(spark, pairs), 2, local_peel_rows=0)
-        assert _vertices(core) == want_vertices, trial
+        with monkeypatch.context() as m:
+            m.setattr(components, "ONE_TASK_ROWS", 0)
+            core, rounds = kcore_peel(_sym(spark, pairs), 2)
+            assert _vertices(core) == want_vertices, trial
         assert rounds == want_rounds, trial
 
 
-def test_parquet_round_state_equals_localcheckpoint(spark, tmp_path_factory):
+def test_parquet_round_state_equals_localcheckpoint(
+    spark, tmp_path_factory, monkeypatch
+):
     import os
 
     state = str(tmp_path_factory.mktemp("kcore_state"))
@@ -119,17 +123,18 @@ def test_parquet_round_state_equals_localcheckpoint(spark, tmp_path_factory):
     core_pq, rounds_pq = kcore_peel(edges, 2, state_dir=state)
     assert rounds_pq == rounds_lc == 4
     assert _vertices(core_pq) == _vertices(core_lc) == {1, 2, 3}
-    # default path at test scale is the r18 single-task finish: exactly
+    # default path at test scale is the single-task finish: exactly
     # one durable state (backing the returned DataFrame) remains
     leftover = {d for d in os.listdir(state) if d.startswith("edges_")}
     assert leftover == {"edges_local_r0"}, leftover
     assert core_pq.count() == 6  # 3 undirected edges, both orientations
 
-    # distributed loop (local_peel_rows=0): the original per-round
-    # state contract — readable after cleanup, only the final round's
-    # edge state (at most plus the previous round's) remains
+    # distributed loop (one-task bound zeroed): the per-round state
+    # contract — readable after cleanup, only the final round's edge
+    # state (at most plus the previous round's) remains
     state2 = str(tmp_path_factory.mktemp("kcore_state_dist"))
-    core_d, rounds_d = kcore_peel(edges, 2, state_dir=state2, local_peel_rows=0)
+    monkeypatch.setattr(components, "ONE_TASK_ROWS", 0)
+    core_d, rounds_d = kcore_peel(edges, 2, state_dir=state2)
     assert rounds_d == 4
     assert _vertices(core_d) == {1, 2, 3}
     leftover2 = {d for d in os.listdir(state2) if d.startswith("edges_")}
@@ -146,7 +151,7 @@ def test_core_numbers(spark, tmp_path_factory):
     assert out == {1: 2, 2: 2, 3: 2, 4: 1, 5: 1, 6: 1, 7: 1}
 
 
-def test_round_state_cleanup(spark, tmp_path):
+def test_round_state_cleanup(spark, tmp_path, monkeypatch):
     """ADVICE r10: stale round-state must not accumulate. After a
     converged peel only the final round's edge state remains; after
     core_numbers only the final level's state (both back the returned
@@ -155,17 +160,18 @@ def test_round_state_cleanup(spark, tmp_path):
     import os
 
     sd = str(tmp_path / "peel_state")
-    # distributed loop (local_peel_rows=0): the original cleanup contract
-    core, rounds = kcore_peel(
-        _sym(spark, _TRIANGLE_TAIL), 2, state_dir=sd, local_peel_rows=0
-    )
-    assert rounds == 4
-    assert _vertices(core) == {1, 2, 3}
+    # distributed loop (one-task bound zeroed): the per-round cleanup
+    # contract
+    with monkeypatch.context() as m:
+        m.setattr(components, "ONE_TASK_ROWS", 0)
+        core, rounds = kcore_peel(_sym(spark, _TRIANGLE_TAIL), 2, state_dir=sd)
+        assert rounds == 4
+        assert _vertices(core) == {1, 2, 3}
     leftover = sorted(os.listdir(sd))
     assert leftover == [f"edges_r{rounds}"], leftover
 
     sd_local = str(tmp_path / "peel_state_local")
-    # default path (r18 local finish): the round-0 pin is superseded by
+    # default path (local finish): the round-0 pin is superseded by
     # the local-finish state and must be cleaned up
     core_l, rounds_l = kcore_peel(_sym(spark, _TRIANGLE_TAIL), 2, state_dir=sd_local)
     assert rounds_l == 4 and _vertices(core_l) == {1, 2, 3}

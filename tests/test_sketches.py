@@ -1,46 +1,7 @@
-"""Approx sketches within error bounds of exact; pandas-UDF ANN matches
-the JVM-expression ANN exactly."""
+"""Misra-Gries frequent-items candidates (operators/sketches.py): a
+guaranteed superset of the phi-heavy hitters, on skewed and uniform keys."""
 
 from pyspark.sql import functions as F
-
-from fitness_nutrition_data_pipeline_spark.operators.similarity import (
-    brute_force_topk,
-    brute_force_topk_pandas,
-)
-from fitness_nutrition_data_pipeline_spark.operators.sketches import (
-    approx_distinct,
-    approx_quantiles,
-    percentile_approx_col,
-)
-
-
-def test_approx_distinct_within_rsd(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    exact = li.select("l_orderkey").distinct().count()
-    approx = approx_distinct(li, "l_orderkey", rsd=0.02).first()[0]
-    assert abs(approx - exact) / exact < 0.1
-
-
-def test_approx_quantiles_close(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    med_exact = o.agg(F.percentile("o_totalprice", F.lit(0.5))).first()[0]
-    (med_approx,) = approx_quantiles(o, "o_totalprice", [0.5])
-    assert abs(med_approx - med_exact) / med_exact < 0.05
-    grouped = o.groupBy("o_orderstatus").agg(
-        percentile_approx_col("o_totalprice", 0.5).alias("m")
-    )
-    assert grouped.count() >= 1
-
-
-def test_pandas_ann_matches_jvm_ann(spark, sf_dir):
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = e.where(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    queries = e.where(F.col("vec_id") < 5).select("vec_id", "embedding")
-    jvm = brute_force_topk(corpus, queries, "vec_id", "embedding", k=3)
-    pnd = brute_force_topk_pandas(corpus, queries, "vec_id", "embedding", k=3)
-    jvm_rows = sorted((r.q_id, r.neighbor_id) for r in jvm.collect())
-    pnd_rows = sorted((r.q_id, r.neighbor_id) for r in pnd.collect())
-    assert jvm_rows == pnd_rows
 
 
 def test_misra_gries_superset_guarantee(spark):

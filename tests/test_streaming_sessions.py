@@ -114,106 +114,3 @@ def test_native_session_window_stream_matches_custom(spark, tmp_path_factory):
     }
     assert native == expected
     assert custom == expected
-
-
-def test_tws_backend_matches_3x_backend(spark, session_table, tmp_path_factory):
-    """The Spark 4 transformWithState sessionizer must emit exactly the
-    same closed sessions as the applyInPandasWithState backend on the
-    same feed (and keep the same open tails in state)."""
-    import pytest as _pytest
-
-    from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
-        run_sessionizer_tws_once,
-        tws_available,
-    )
-
-    if not tws_available():
-        _pytest.skip(
-            "transformWithState needs google.protobuf (absent in this "
-            "container; no pip installs) — backend is capability-gated"
-        )
-
-    base = str(tmp_path_factory.mktemp("tws_sess"))
-    rows = [
-        (1, _ts(0), 1, "view", 1.0),
-        (2, _ts(10), 1, "view", 1.0),
-        (3, _ts(20), 1, "click", 1.0),
-        (4, _ts(60), 1, "view", 1.0),
-        (5, _ts(65), 1, "view", 1.0),
-        (6, _ts(5), 2, "view", 1.0),
-        (7, _ts(6), 2, "view", 1.0),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double",
-    )
-    df.write.mode("overwrite").parquet(f"{base}/events")
-    try:
-        tws = run_sessionizer_tws_once(spark, f"{base}/events", "tws_sess_out")
-    except Exception as e:  # noqa: BLE001 — RocksDB provider absent on stripped builds
-        _pytest.skip(f"transformWithState unavailable in this build: {e}")
-    got = {
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in tws.collect()
-    }
-    want = {
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in session_table.collect()
-    }
-    assert got == want and len(got) == 1
-
-
-def test_tws_processor_algorithm_without_engine():
-    """The StatefulProcessor's session algorithm must be correct
-    independent of the engine plumbing (which is capability-gated on
-    protobuf here): drive handleInputRows directly with a fake
-    ValueState and assert closed-session emission + open-tail state."""
-    import pandas as pd
-
-    from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
-        _SessionProcessor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    proc = _SessionProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def ts(minute):
-        return pd.Timestamp(2024, 1, 1, minute // 60, minute % 60)
-
-    # batch 1: one closed session (0-20), open tail at 60
-    pdf = pd.DataFrame({"ts": [ts(0), ts(10), ts(20), ts(60)]})
-    out = list(proc.handleInputRows((1,), iter([pdf]), None))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (row.user_id, row.n_events) == (1, 3)
-    assert row.session_end_us - row.session_start_us == 20 * 60 * 1_000_000
-    start_us, last_us, n = handle.state.get()
-    assert n == 1 and start_us == last_us  # open tail = the t=60 event
-
-    # batch 2 (state carried): t=65 extends the tail, t=300 closes it
-    out2 = list(proc.handleInputRows((1,), iter([pd.DataFrame({"ts": [ts(65), ts(300)]})]), None))
-    assert len(out2) == 1
-    row2 = out2[0].iloc[0]
-    assert row2.n_events == 2  # the 60+65 tail closed by the 300 gap
-    assert handle.state.get()[2] == 1  # new open tail = t=300
