@@ -83,11 +83,10 @@ def load_warehouse(
         if partition_facts and name in PARTITIONED_FACTS:
             writer = writer.partitionBy("DateKey")
         writer.parquet(path)
-        # register on the writer thread: each registration is a py4j
-        # round trip + parquet footer read (~0.1 s), and a sequential
-        # post-pass of 18 of them was ~1.5 s of driver wall-clock; the
-        # catalog is concurrent and names are distinct
-        spark.read.parquet(path).createOrReplaceTempView(name)
+        # register on the writer thread (the catalog is concurrent and
+        # names are distinct) with the schema just written: inferring it
+        # would start one parquet-footer job per table
+        spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(name)
         return path
 
     try:

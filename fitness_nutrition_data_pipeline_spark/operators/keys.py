@@ -65,10 +65,10 @@ def assign_sequential_ids(
     ``order_cols`` is a UNIQUE key of the input (no ties): with ties,
     tie order would be shuffle-arrival order, and two downstream
     consumers could see different key assignments. Every pipeline dim /
-    resolution call site orders by a unique key and passes 1; the
-    warehouse transform stage declares ~12 key assignments without
-    running a single job, and their work overlaps inside the parallel
-    load writes instead.
+    resolution call site orders by a unique key and passes 1. Resolution
+    pins its key assignments (``localCheckpoint``) before the warehouse
+    is declared; the dimension key assignments stay lazy and run inside
+    the parallel load writes.
     """
     spark = df.sparkSession
     order = [F.col(c) for c in order_cols]

@@ -161,6 +161,14 @@ def _first_seen(df: DataFrame) -> DataFrame:
     return df.join(firsts, ["profile_hash", "_row_idx"])
 
 
+def _device_ids(fitbit_ids: DataFrame) -> DataFrame:
+    return fitbit_ids.select(F.col("Id").cast("long").alias("fitbit_id")).distinct()
+
+
+def _pin(prep, df: DataFrame | None, *args) -> DataFrame | None:
+    return None if df is None else prep(df, *args).localCheckpoint()
+
+
 def resolve_users(
     mendeley: DataFrame | None,
     gym: DataFrame | None,
@@ -168,7 +176,15 @@ def resolve_users(
     cfg: PipelineConfig | None = None,
 ) -> ResolutionResult:
     """Unify users across sources; returns staging profiles + the
-    per-source-row user mapping. Any input may be None (missing source)."""
+    per-source-row user mapping. Any input may be None (missing source).
+
+    Materializes as flat ``localCheckpoint`` pins, not session caches:
+    the prepared mendeley rows, gym rows and distinct Fitbit device ids
+    (concurrently), then the mendeley and gym profiles. The returned
+    frames are lazy unions over those pins; the caller pins them too
+    (``pipeline.transform``). A pin is a ``LogicalRDD`` leaf, so its
+    consumers never wait on another thread's cache build: caching a
+    frame over a cache still being built blocked ~6 s in statistics."""
     cfg = cfg or PipelineConfig()
     spark = next(
         df.sparkSession for df in (mendeley, gym, fitbit_ids) if df is not None
@@ -178,10 +194,8 @@ def resolve_users(
     mappings: list[DataFrame] = []
     # Key ranges chain across sources (mendeley 1..Nm, gym Nm+1.., fitbit
     # after both). The offsets ride as broadcast 1-row COUNT aggregates
-    # added to each later source's local 1..N keys — column arithmetic,
-    # not driver-side .count() calls, so declaring the resolution plan
-    # runs ZERO jobs and the whole staging build materializes exactly
-    # once, inside whichever downstream action runs first.
+    # added to each later source's local 1..N keys — column arithmetic
+    # over the pinned profiles, not driver-side .count() calls.
     offset_cols: list[DataFrame] = []
 
     def _offset(df: DataFrame) -> DataFrame:
@@ -192,29 +206,30 @@ def resolve_users(
             ).drop(f"_prior_n{i}")
         return df
 
-    # the two source preps are independent declarations (~0.9 s + 0.4 s
-    # of py4j/Catalyst) — overlap them via declare_parallel; everything
-    # downstream chains (gym's match-or-create needs mendeley's profiles)
+    # The three source pins are independent — materialize them side by
+    # side; everything downstream chains (gym's match-or-create needs
+    # mendeley's profiles). Pinning the device ids scans the Fitbit CSVs
+    # once per run: unpinned, building staging and building mapping each
+    # read all five files (1.37M rows at the reference's sizes).
     from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
 
-    preps = declare_parallel(
+    pins = declare_parallel(
         [
-            ("m", lambda: _prep_mendeley(mendeley, cfg)
-             if mendeley is not None else None),
-            ("g", lambda: _prep_gym(gym, cfg) if gym is not None else None),
+            ("m", lambda: _pin(_prep_mendeley, mendeley, cfg)),
+            ("g", lambda: _pin(_prep_gym, gym, cfg)),
+            ("fb", lambda: _pin(_device_ids, fitbit_ids)),
         ],
-        max_workers=2,
+        max_workers=3,
     )
-    m_rows, _g_prepped = preps["m"], preps["g"]
+    m_rows, g_rows, fb = pins["m"], pins["g"], pins["fb"]
     if m_rows is not None:
-        m_rows = m_rows.cache()
         # reference-scale staging is a handful of single-machine CSVs —
-        # num_partitions=1 takes the fully lazy single-partition path
-        # (no sizing pass, no checkpoint, no offsets collect); a
-        # billion-profile deployment passes a real partition count here
+        # num_partitions=1 takes the single-partition path (no sizing
+        # pass, no offsets collect); a billion-profile deployment passes
+        # a real partition count here
         m_profiles = assign_sequential_ids(
             _first_seen(m_rows), ["_row_idx"], "UserKey", num_partitions=1
-        ).cache()
+        ).localCheckpoint()
         offset_cols.append(
             m_profiles.agg(F.count(F.lit(1)).alias("_prior_n0"))
         )
@@ -228,9 +243,7 @@ def resolve_users(
             )
         )
 
-    g_rows = _g_prepped
     if g_rows is not None:
-        g_rows = g_rows.cache()
         # keys of every profile created so far (mendeley), for match-or-create
         prior_keys = (
             m_profiles.select("profile_hash", "UserKey") if m_rows is not None else None
@@ -250,7 +263,7 @@ def resolve_users(
                 _first_seen(g_unmatched), ["_row_idx"], "UserKey",
                 num_partitions=1,
             )
-        ).cache()
+        ).localCheckpoint()
         offset_cols.append(
             g_profiles.agg(F.count(F.lit(1)).alias(f"_prior_n{len(offset_cols)}"))
         )
@@ -272,11 +285,10 @@ def resolve_users(
         else:
             mappings.append(g_map_new)
 
-    if fitbit_ids is not None:
-        # distinct device ids, deterministic (sorted) key order — the
-        # reference iterates a Python set (:296), which is order-unstable;
-        # we pin sorted order and document the deviation.
-        fb = fitbit_ids.select(F.col("Id").cast("long").alias("fitbit_id")).distinct()
+    if fb is not None:
+        # deterministic (sorted) key order — the reference iterates a
+        # Python set (:296), which is order-unstable; we pin sorted order
+        # and document the deviation.
         fb_profiles = _offset(
             assign_sequential_ids(fb, ["fitbit_id"], "UserKey", num_partitions=1)
         )

@@ -10,21 +10,26 @@ Stage map:
   validate → validation.validate_warehouse         (:968-969)
   report   → report.write_report                   (:970)
 
-The staging profile plan is cached once and consumed by dims, bridges,
-facts and the snapshot — the reference re-reads the same in-memory frame
-five times (main_etl_pipeline.py:366, 475, 487, 518, 639).
+transform() materializes user resolution once, as flat
+``localCheckpoint`` pins of staging and mapping, before it declares any
+dimension, bridge or fact; those are then declared over ``LogicalRDD``
+leaves and run inside load's writes. Only the dimensions are cached.
+Measured at the reference's sizes: with nested ``.cache()``s instead,
+one ``.cache()`` call blocked ~6 s waiting for the staging cache a
+background prime was still building, and the run left ~180 MB more heap
+reachable (perfbench ``etl_reference`` ``live_mem_mb`` 771 vs 587 MB).
 """
 
 from __future__ import annotations
 
 import logging
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
 from fitness_nutrition_data_pipeline_spark.config import PipelineConfig
 from fitness_nutrition_data_pipeline_spark.load import load_warehouse
 from fitness_nutrition_data_pipeline_spark.operators.resolution import resolve_users
+from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
 from fitness_nutrition_data_pipeline_spark.plans.bridges import build_bridges
 from fitness_nutrition_data_pipeline_spark.plans.dimensions import build_dimensions
 from fitness_nutrition_data_pipeline_spark.plans.facts import build_facts
@@ -64,60 +69,30 @@ class FitnessWarehousePipeline:
             fitbit_ids,
             self.cfg,
         )
-        self.staging = staging.cache()
-        self.mapping = mapping.cache()
-        # Populate the two shared caches BEFORE load(): its 18 concurrent
-        # table writes racing a cold cache would each recompute the whole
-        # resolution lineage instead of waiting for it (Spark block
-        # caching has no cross-job synchronization). But the prime runs
-        # EXECUTOR-side while dim/bridge/fact construction below is pure
-        # DRIVER-side work (py4j + Catalyst analysis, measured ~4.4 s
-        # cold — as large as the prime itself), so overlap them: the two
-        # counts run on pool threads while the warehouse DAG is declared,
-        # and are joined before returning so load() always sees warm
-        # caches. The one executor action inside declaration
-        # (build_fact_nutrition_log's bounded sample collect) may race
-        # the in-flight prime and duplicate resolution work once on idle
-        # cores — bounded, and measured faster than priming first.
-        #
-        # 2 slots for the primes + 1 for the bridges declaration (a
-        # bridges submit must never queue behind a running prime). A
-        # builder exception leaves the block before the primes' results
-        # are read, so a prime error never masks it; the block's exit
-        # still joins the primes.
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            primes = [pool.submit(df.count) for df in (self.staging, self.mapping)]
-            dims = build_dimensions(
-                self.spark, self.staging, self.sources.get("nutrition"), self.cfg
-            )
-            # Cache every dimension — each has 2-4 consumers (its own
-            # write, bridges, fact key-resolution joins, the
-            # nutrition-log count) — but do NOT prime them: unlike
-            # staging (whose whole resolution lineage is expensive
-            # enough that racing consumers must wait for one
-            # materialization), a dim is one short job over the
-            # already-cached staging, so letting load()'s concurrent
-            # writes race the cold cache overlaps that work on idle
-            # cores, while a priming barrier serializes it. Measured
-            # (3 interleaved trials each): cache-no-prime median 8.4 s
-            # transform+load vs 10.6 s with a prime barrier and 10.9 s
-            # with no cache at all — the duplicated compute a race
-            # admits is bounded by consumer count and beats both
-            # alternatives in wall-clock. Dims are cardinality-bounded
-            # (largest ~8.8k rows) so memory is nothing; the first
-            # completer still publishes the cache for everyone
-            # downstream.
-            for df in dims.values():
-                df.cache()
-            # bridges and facts both consume dims but not each other
-            bridges_fut = pool.submit(build_bridges, self.staging, dims)
-            facts = build_facts(
-                self.spark, self.sources, self.staging, self.mapping, dims, self.cfg
-            )
-            bridges = bridges_fut.result()
-            for fut in primes:
-                fut.result()
-        self.warehouse = {**dims, **bridges, **facts}
+        pins = declare_parallel(
+            [("staging", staging.localCheckpoint), ("mapping", mapping.localCheckpoint)]
+        )
+        self.staging, self.mapping = pins["staging"], pins["mapping"]
+        dims = build_dimensions(
+            self.spark, self.staging, self.sources.get("nutrition"), self.cfg
+        )
+        # Cache every dimension (each has 2-4 consumers: its own write,
+        # bridges, fact key-resolution joins, the nutrition-log count) but
+        # do not prime them: a dim is one short job over the pinned
+        # staging, so load()'s concurrent writes build it. Over a flat
+        # staging each .cache() call returns in under 0.1 s.
+        for df in dims.values():
+            df.cache()
+        # bridges and facts both consume dims but not each other
+        built = declare_parallel(
+            [
+                ("bridges", lambda: build_bridges(self.staging, dims)),
+                ("facts", lambda: build_facts(
+                    self.spark, self.sources, self.staging, self.mapping, dims, self.cfg
+                )),
+            ]
+        )
+        self.warehouse = {**dims, **built["bridges"], **built["facts"]}
         return self.warehouse
 
     def load(self) -> dict[str, str]:

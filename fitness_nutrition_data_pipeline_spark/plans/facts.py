@@ -268,7 +268,7 @@ def build_facts(
 ) -> dict[str, DataFrame]:
     cfg = cfg or PipelineConfig()
     fitbit = sources.get("fitbit") or {}
-    # Independent declarations over the same cached inputs — pooled for
+    # Independent declarations over the same pinned inputs — pooled for
     # the same reason as build_dimensions (parallel.declare_parallel).
     from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
 

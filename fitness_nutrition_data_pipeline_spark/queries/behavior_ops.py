@@ -782,7 +782,7 @@ def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         def update(self, value):  # noqa: D102 — protocol shim
             self._final = value
 
-    def run(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def run(key, pdf):
         frames = list(detector(key, iter([pdf]), _BatchState()))
         if frames:
             return pd.concat(frames, ignore_index=True)
@@ -843,7 +843,7 @@ def ratelimit_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         def update(self, value):  # noqa: D102 — protocol shim
             self._final = value
 
-    def run(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def run(key, pdf):
         frames = list(admit(key, iter([pdf]), _BatchState()))
         if frames:
             return pd.concat(frames, ignore_index=True)
@@ -962,7 +962,7 @@ def heavy_hitters_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         def update(self, value):  # noqa: D102 — protocol shim
             self._final = value
 
-    def run(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def run(key, pdf):
         frames = list(mg(key, iter([pdf]), _BatchState()))
         if frames:
             return pd.concat(frames, ignore_index=True)

@@ -190,6 +190,23 @@ def test_full_run_report(pipeline, spark, tmp_path_factory):
     assert report["table_counts"]["Dim_Date"] == 3653
 
 
+@pytest.mark.parametrize("partition_facts", [False, True])
+def test_registered_views_keep_inferred_schema(
+    pipeline, spark, tmp_path_factory, partition_facts
+):
+    """load() registers each view with the schema it wrote instead of
+    inferring it back from the files; the two must agree."""
+    from fitness_nutrition_data_pipeline_spark.load import load_warehouse
+
+    base = str(tmp_path_factory.mktemp("viewwh"))
+    paths = load_warehouse(
+        spark, pipeline.warehouse, base, partition_facts=partition_facts
+    )
+    assert len(paths) == 18
+    for name, path in paths.items():
+        assert spark.table(name).schema == spark.read.parquet(path).schema, name
+
+
 def test_partitioned_fact_load(pipeline, spark, tmp_path_factory):
     """Facts written partitionBy(DateKey) read back identically and carry
     the partition column for pruning."""

@@ -6,6 +6,8 @@ regressions fast: every query plans and executes, row counts are sane, and
 operator-specific properties hold.
 """
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,6 +68,17 @@ def test_knn_returns_k_per_query(spark, sf_dir):
     per_q = {r.q_id: r.n for r in df.groupBy("q_id").agg(F.count("*").alias("n")).collect()}
     assert set(per_q) == {0, 1, 2, 3, 4}
     assert all(v == 3 for v in per_q.values())
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["cep_batch_replay", "heavy_hitters_batch_replay", "ratelimit_batch_replay"],
+)
+def test_grouped_map_builds_emit_no_user_warning(spark, sf_dir, name):
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        SPECS[name].builder(spark, sf_dir)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
 
 
 def test_jaccard_bounds(spark, sf_dir):
