@@ -66,9 +66,9 @@ def assign_sequential_ids(
     tie order would be shuffle-arrival order, and two downstream
     consumers could see different key assignments. Every pipeline dim /
     resolution call site orders by a unique key and passes 1. Resolution
-    pins its key assignments (``localCheckpoint``) before the warehouse
-    is declared; the dimension key assignments stay lazy and run inside
-    the parallel load writes.
+    numbers all users in one such call and pins the result
+    (``localCheckpoint``) before the warehouse is declared; the dimension
+    key assignments stay lazy and run inside the parallel load writes.
     """
     spark = df.sparkSession
     order = [F.col(c) for c in order_cols]

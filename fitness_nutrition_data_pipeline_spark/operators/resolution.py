@@ -11,9 +11,10 @@ Reproduces the reference's cross-dataset identity algorithm
   (:253-257); unmatched gym rows create users (:259-282);
 - fitbit device ids are always distinct new users with shell profiles
   (:289-310);
-- dense UserKeys 1..N in priority+row order, assigned WITHOUT a global
-  window via `assign_sequential_ids` (per-partition numbering + offsets) —
-  the loop's ``next_user_id += 1`` rebuilt to scale.
+- dense UserKeys 1..N in priority+row order, assigned by ONE ordered
+  ``assign_sequential_ids`` pass over the priority-tagged union of every
+  source's new profiles (ordered by source rank, then source row or
+  device id) — the loop's single ``next_user_id += 1`` counter.
 
 Rounding uses ``bround`` (HALF_EVEN) to match Python's ``round`` banker's
 rounding bit-for-bit (SURVEY §2.6 F7).
@@ -24,9 +25,10 @@ the reference's per-row try/except (:235-236, 286-287).
 
 from __future__ import annotations
 
+import functools
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.config import DEFAULT_GOAL, PipelineConfig
@@ -169,6 +171,50 @@ def _pin(prep, df: DataFrame | None, *args) -> DataFrame | None:
     return None if df is None else prep(df, *args).localCheckpoint()
 
 
+def _candidates(rows: DataFrame, rank: int) -> DataFrame:
+    """First-seen profiles of one source, tagged with its priority rank
+    and ordered by source row."""
+    return _first_seen(rows).select(
+        "profile_hash",
+        *PROFILE_COLUMNS[1:],
+        F.lit(rank).alias("_rank"),
+        F.col("_row_idx").alias("_ord"),
+    )
+
+
+def _fitbit_shells(fb: DataFrame) -> DataFrame:
+    """One shell profile per device id, ordered by id. The reference
+    iterates a Python set (:296), which is order-unstable; sorted order
+    is the documented deviation."""
+    return fb.select(
+        F.lit(None).cast("string").alias("profile_hash"),
+        F.lit("fitbit").alias("Source"),
+        F.col("fitbit_id").cast("string").alias("OriginalID"),
+        F.lit(None).cast("int").alias("Age"),
+        F.lit(None).cast("string").alias("Gender"),
+        F.lit(None).cast("double").alias("Weight"),
+        F.lit(None).cast("double").alias("Height"),
+        F.lit(None).cast("double").alias("BMI"),
+        F.lit(None).cast("string").alias("HealthConditions"),
+        F.lit(DEFAULT_GOAL).alias("FitnessGoal"),
+        F.lit(None).cast("string").alias("FitnessType"),
+        F.lit(None).cast("string").alias("WorkoutPreference"),
+        F.lit(None).cast("string").alias("DietPreference"),
+        F.lit(None).cast("string").alias("ExperienceLevel"),
+        F.lit(None).cast("string").alias("ActivityLevel"),
+        F.lit(2).alias("_rank"),
+        F.col("fitbit_id").alias("_ord"),
+    )
+
+
+def _mapping(rows: DataFrame, keys: DataFrame, source: str) -> DataFrame:
+    return rows.join(keys, "profile_hash").select(
+        F.lit(source).alias("source"),
+        F.col("_row_idx").cast("string").alias("original_id"),
+        F.col("UserKey").alias("user_key"),
+    )
+
+
 def resolve_users(
     mendeley: DataFrame | None,
     gym: DataFrame | None,
@@ -176,41 +222,20 @@ def resolve_users(
     cfg: PipelineConfig | None = None,
 ) -> ResolutionResult:
     """Unify users across sources; returns staging profiles + the
-    per-source-row user mapping. Any input may be None (missing source).
+    per-source-row user mapping. Any input may be None (missing source);
+    with none present both frames are empty.
 
     Materializes as flat ``localCheckpoint`` pins, not session caches:
     the prepared mendeley rows, gym rows and distinct Fitbit device ids
-    (concurrently), then the mendeley and gym profiles. The returned
-    frames are lazy unions over those pins; the caller pins them too
-    (``pipeline.transform``). A pin is a ``LogicalRDD`` leaf, so its
-    consumers never wait on another thread's cache build: caching a
-    frame over a cache still being built blocked ~6 s in statistics."""
+    (concurrently), then the keyed profiles. The returned frames are lazy
+    over those pins; the caller pins them too (``pipeline.transform``).
+    A pin is a ``LogicalRDD`` leaf, so its consumers never wait on
+    another thread's cache build."""
     cfg = cfg or PipelineConfig()
-    spark = next(
-        df.sparkSession for df in (mendeley, gym, fitbit_ids) if df is not None
-    )
 
-    pieces: list[DataFrame] = []
-    mappings: list[DataFrame] = []
-    # Key ranges chain across sources (mendeley 1..Nm, gym Nm+1.., fitbit
-    # after both). The offsets ride as broadcast 1-row COUNT aggregates
-    # added to each later source's local 1..N keys — column arithmetic
-    # over the pinned profiles, not driver-side .count() calls.
-    offset_cols: list[DataFrame] = []
-
-    def _offset(df: DataFrame) -> DataFrame:
-        """Shift df.UserKey by the total count of all prior sources."""
-        for i, cnt in enumerate(offset_cols):
-            df = df.crossJoin(F.broadcast(cnt)).withColumn(
-                "UserKey", F.col("UserKey") + F.col(f"_prior_n{i}")
-            ).drop(f"_prior_n{i}")
-        return df
-
-    # The three source pins are independent — materialize them side by
-    # side; everything downstream chains (gym's match-or-create needs
-    # mendeley's profiles). Pinning the device ids scans the Fitbit CSVs
-    # once per run: unpinned, building staging and building mapping each
-    # read all five files (1.37M rows at the reference's sizes).
+    # Pinning the device ids scans the Fitbit CSVs once per run:
+    # unpinned, building staging and building mapping each read all five
+    # files (1.37M rows at the reference's sizes).
     from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
 
     pins = declare_parallel(
@@ -222,116 +247,59 @@ def resolve_users(
         max_workers=3,
     )
     m_rows, g_rows, fb = pins["m"], pins["g"], pins["fb"]
-    if m_rows is not None:
-        # reference-scale staging is a handful of single-machine CSVs —
-        # num_partitions=1 takes the single-partition path (no sizing
-        # pass, no offsets collect); a billion-profile deployment passes
-        # a real partition count here
-        m_profiles = assign_sequential_ids(
-            _first_seen(m_rows), ["_row_idx"], "UserKey", num_partitions=1
-        ).localCheckpoint()
-        offset_cols.append(
-            m_profiles.agg(F.count(F.lit(1)).alias("_prior_n0"))
-        )
-        pieces.append(m_profiles.select(*PROFILE_COLUMNS))
-        m_keys = m_profiles.select("profile_hash", "UserKey")
-        mappings.append(
-            m_rows.join(m_keys, "profile_hash").select(
-                F.lit("mendeley").alias("source"),
-                F.col("_row_idx").cast("string").alias("original_id"),
-                F.col("UserKey").alias("user_key"),
-            )
-        )
-
-    if g_rows is not None:
-        # keys of every profile created so far (mendeley), for match-or-create
-        prior_keys = (
-            m_profiles.select("profile_hash", "UserKey") if m_rows is not None else None
-        )
-
-        if prior_keys is not None:
-            g_matched = g_rows.join(F.broadcast(prior_keys), "profile_hash", "inner")
-            g_unmatched = g_rows.join(
-                F.broadcast(prior_keys.select("profile_hash")), "profile_hash", "left_anti"
-            )
-        else:
-            g_matched = None
-            g_unmatched = g_rows
-
-        g_profiles = _offset(
-            assign_sequential_ids(
-                _first_seen(g_unmatched), ["_row_idx"], "UserKey",
-                num_partitions=1,
-            )
-        ).localCheckpoint()
-        offset_cols.append(
-            g_profiles.agg(F.count(F.lit(1)).alias(f"_prior_n{len(offset_cols)}"))
-        )
-        pieces.append(g_profiles.select(*PROFILE_COLUMNS))
-
-        g_keys = g_profiles.select("profile_hash", "UserKey")
-        g_map_new = g_unmatched.join(g_keys, "profile_hash").select(
-            F.lit("gym").alias("source"),
-            F.col("_row_idx").cast("string").alias("original_id"),
-            F.col("UserKey").alias("user_key"),
-        )
-        if g_matched is not None:
-            g_map_matched = g_matched.select(
-                F.lit("gym").alias("source"),
-                F.col("_row_idx").cast("string").alias("original_id"),
-                F.col("UserKey").alias("user_key"),
-            )
-            mappings.append(g_map_matched.unionByName(g_map_new))
-        else:
-            mappings.append(g_map_new)
-
-    if fb is not None:
-        # deterministic (sorted) key order — the reference iterates a
-        # Python set (:296), which is order-unstable; we pin sorted order
-        # and document the deviation.
-        fb_profiles = _offset(
-            assign_sequential_ids(fb, ["fitbit_id"], "UserKey", num_partitions=1)
-        )
-        shell = fb_profiles.select(
-            "UserKey",
-            F.lit("fitbit").alias("Source"),
-            F.col("fitbit_id").cast("string").alias("OriginalID"),
-            F.lit(None).cast("int").alias("Age"),
-            F.lit(None).cast("string").alias("Gender"),
-            F.lit(None).cast("double").alias("Weight"),
-            F.lit(None).cast("double").alias("Height"),
-            F.lit(None).cast("double").alias("BMI"),
-            F.lit(None).cast("string").alias("HealthConditions"),
-            F.lit(DEFAULT_GOAL).alias("FitnessGoal"),
-            F.lit(None).cast("string").alias("FitnessType"),
-            F.lit(None).cast("string").alias("WorkoutPreference"),
-            F.lit(None).cast("string").alias("DietPreference"),
-            F.lit(None).cast("string").alias("ExperienceLevel"),
-            F.lit(None).cast("string").alias("ActivityLevel"),
-        ).select(*PROFILE_COLUMNS)
-        pieces.append(shell)
-        mappings.append(
-            fb_profiles.select(
-                F.lit("fitbit").alias("source"),
-                F.col("fitbit_id").cast("string").alias("original_id"),
-                F.col("UserKey").alias("user_key"),
-            )
-        )
-
-    if not pieces:
-        schema = (
+    if m_rows is None and g_rows is None and fb is None:
+        spark = SparkSession.active()
+        profile_schema = (
             "UserKey long, Source string, OriginalID string, Age int, Gender string,"
             " Weight double, Height double, BMI double, HealthConditions string,"
             " FitnessGoal string, FitnessType string, WorkoutPreference string,"
             " DietPreference string, ExperienceLevel string, ActivityLevel string"
         )
-        empty = spark.createDataFrame([], schema)
-        return ResolutionResult(empty, spark.createDataFrame([], "source string, original_id string, user_key long"))
+        return ResolutionResult(
+            spark.createDataFrame([], profile_schema),
+            spark.createDataFrame([], "source string, original_id string, user_key long"),
+        )
 
-    staging = pieces[0]
-    for p in pieces[1:]:
-        staging = staging.unionByName(p)
-    mapping = mappings[0]
-    for m in mappings[1:]:
-        mapping = mapping.unionByName(m)
-    return ResolutionResult(staging, mapping)
+    candidates: list[DataFrame] = []
+    if m_rows is not None:
+        candidates.append(_candidates(m_rows, 0))
+    if g_rows is not None:
+        # a gym row whose hash matches a mendeley profile links to it;
+        # only the rest create gym profiles
+        g_new = g_rows if m_rows is None else g_rows.join(
+            F.broadcast(m_rows.select("profile_hash")), "profile_hash", "left_anti"
+        )
+        candidates.append(_candidates(g_new, 1))
+    if fb is not None:
+        candidates.append(_fitbit_shells(fb))
+
+    # One ordered pass numbers every user: (_rank, _ord) is unique, so
+    # keys are dense 1..N in priority and row order — the reference's
+    # ``next_user_id += 1``.
+    keyed = assign_sequential_ids(
+        functools.reduce(DataFrame.unionByName, candidates),
+        ["_rank", "_ord"],
+        "UserKey",
+        num_partitions=1,
+    ).localCheckpoint()
+
+    # every mendeley and gym hash matches exactly one keyed profile;
+    # the Fitbit shells carry no hash
+    keys = keyed.select("profile_hash", "UserKey")
+    mappings = [
+        _mapping(rows, keys, source)
+        for rows, source in ((m_rows, "mendeley"), (g_rows, "gym"))
+        if rows is not None
+    ]
+    if fb is not None:
+        mappings.append(
+            keyed.where(F.col("_rank") == 2).select(
+                F.lit("fitbit").alias("source"),
+                F.col("OriginalID").alias("original_id"),
+                F.col("UserKey").alias("user_key"),
+            )
+        )
+    return ResolutionResult(
+        keyed.select(*PROFILE_COLUMNS),
+        functools.reduce(DataFrame.unionByName, mappings),
+    )

@@ -10,14 +10,11 @@ Stage map:
   validate → validation.validate_warehouse         (:968-969)
   report   → report.write_report                   (:970)
 
-transform() materializes user resolution once, as flat
-``localCheckpoint`` pins of staging and mapping, before it declares any
-dimension, bridge or fact; those are then declared over ``LogicalRDD``
-leaves and run inside load's writes. Only the dimensions are cached.
-Measured at the reference's sizes: with nested ``.cache()``s instead,
-one ``.cache()`` call blocked ~6 s waiting for the staging cache a
-background prime was still building, and the run left ~180 MB more heap
-reachable (perfbench ``etl_reference`` ``live_mem_mb`` 771 vs 587 MB).
+transform() pins user resolution (staging and mapping) as flat
+``localCheckpoint`` pins before it declares any dimension, bridge or
+fact, so those are declared over ``LogicalRDD`` leaves, a resolution
+failure raises before any builder runs, and the builders' plans run
+inside load's writes. Only the dimensions are cached.
 """
 
 from __future__ import annotations

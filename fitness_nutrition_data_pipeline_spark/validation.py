@@ -303,12 +303,11 @@ def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = No
 
     # -- remaining corpus families, executed through the S7 script runner
     # with the reference's row classifier (check_name/violations keys →
-    # _process_validation_row semantics, main_etl_pipeline.py:902-920).
-    # SET-var state resolves in the runner's sequential pre-pass; rows
-    # still classify in statement order.
+    # _process_validation_row semantics, main_etl_pipeline.py:902-920);
+    # rows classify in statement order.
     from fitness_nutrition_data_pipeline_spark.sql_script import run_sql_script
 
-    script = _analytical_corpus_sql(present, bounds)
+    script = _analytical_corpus_sql(present)
 
     def classify(row: dict) -> None:
         name = row.get("check_name", row.get("rule", ""))
@@ -325,13 +324,13 @@ def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = No
     return res
 
 
-def _analytical_corpus_sql(present: list[str], bounds: dict[str, float]) -> str:
+def _analytical_corpus_sql(present: list[str]) -> str:
     """Domain inventories (validation.sql:249-256), coverage percentages
     (:295-325), distribution stats (:329-359) and analytical smoke tests
-    (:364-393) as one SET-var SQL script — the reference's remaining
-    check families, MySQL-isms translated (GROUP_CONCAT →
-    concat_ws/collect_set, CURRENT_DATE window → max-date anchor)."""
-    parts = [f"SET @max_workout_hours = {bounds['max_workout_hours']};"]
+    (:364-393) as one SQL script — the reference's remaining check
+    families, MySQL-isms translated (GROUP_CONCAT → concat_ws/collect_set,
+    CURRENT_DATE window → max-date anchor)."""
+    parts: list[str] = []
     if "Dim_User" in present:
         parts.append(
             """

@@ -5,6 +5,10 @@ reference's silent behaviors (SURVEY §1.3) that the engine must reproduce
 in quirks mode.
 """
 
+import glob
+import hashlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,6 +47,51 @@ def pipeline(spark, tmp_path_factory):
             df = df.drop(FACT_SURROGATES[name])
         p.warehouse[name] = df
     return p
+
+
+def _content_digest(df) -> str:
+    """Order-insensitive digest of a table: its column names and the
+    sorted ``repr`` of every row."""
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    text = "\n".join([",".join(df.columns), *rows])
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+# Content of every fixture warehouse table, write-time surrogate keys
+# dropped. A refactor of resolution, the builders or the load must leave
+# this map unchanged; update it only with a deliberate change of output.
+WAREHOUSE_DIGESTS = {
+    "Dim_Date": "54ab24938b1a76a6",
+    "Dim_User": "c09370b8827b7b09",
+    "Dim_FitnessGoal": "d507b5cf67a9a8d9",
+    "Dim_FitnessType": "03fb26938fa33147",
+    "Dim_HealthCondition": "64595aabf542db6a",
+    "Dim_Exercise": "ae47fa6b2a97d970",
+    "Dim_Diet": "dc2f9c9d09f17ff5",
+    "Dim_FoodItem": "d17bad8b90b051dc",
+    "Dim_WorkoutType": "5623ff167ddbdebd",
+    "Dim_MetricType": "7e8b5e34636379e0",
+    "Dim_MealType": "7fdbe44e24a66bfe",
+    "Bridge_User_HealthCondition": "1a555abf48472491",
+    "Bridge_User_WorkoutPreference": "778159fe9e3fc933",
+    "Bridge_User_DietPreference": "16d32ef4857a712e",
+    "Fact_UserSnapshot": "603cda17cb091d7b",
+    "Fact_HealthMetric": "c2d382c5d01ac6d8",
+    "Fact_WorkoutSession": "008d6e2ca39ff0f8",
+    "Fact_NutritionLog": "4f07f2f3cfcc7560",
+}
+
+
+def test_warehouse_content_digests(pipeline):
+    got = {name: _content_digest(df) for name, df in pipeline.warehouse.items()}
+    assert len(got) == 18
+    assert got == WAREHOUSE_DIGESTS
+
+
+@pytest.mark.parametrize("table", ["Dim_User", "Fact_UserSnapshot"])
+def test_user_tables_written_as_one_file(pipeline, table):
+    path = os.path.join(pipeline.cfg.warehouse_dir, table.lower())
+    assert len(glob.glob(os.path.join(path, "part-*.parquet"))) == 1
 
 
 def test_sources_extracted(pipeline):
