@@ -442,8 +442,10 @@ def fact_dim_key_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort=("segment_key",),
     doc="Deterministic surrogate-key assignment: distinct dim values + "
     "row_number over sorted order (main_etl_pipeline.py:373-381, W1). The "
-    "global window is fine for small dims; big dims use zipWithIndex-style "
-    "salting (documented in operators/resolution.py).",
+    "global window is fine for small dims; the warehouse's key assignment "
+    "at scale (operators/keys.py::assign_sequential_ids) range-partitions "
+    "on the order columns and adds broadcast per-partition offsets to a "
+    "per-partition row_number.",
 )
 def surrogate_key_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")

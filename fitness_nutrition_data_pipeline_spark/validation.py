@@ -6,7 +6,7 @@ parsed script. Check families and their reference citations:
 
 - table inventory / missing tables        validation.sql:16-46
 - PK uniqueness (incl. composite concat)  validation.sql:49-121
-- FK orphans (incl. null-tolerant FKs)    validation.sql:126-223
+- FK orphans (non-NULL FKs)               validation.sql:126-223
 - NOT NULL                                validation.sql:227-244
 - domain inventories (GROUP_CONCAT)       validation.sql:249-256
 - range checks (config bounds ≙ SET @var) validation.sql:7-13, 259-291
@@ -14,11 +14,20 @@ parsed script. Check families and their reference citations:
 - distribution stats                      validation.sql:329-359
 - analytical smoke tests                  validation.sql:364-393
 
+The scalar checks (inventory count, PK, orphan, NOT NULL, range) read
+each present table ONCE: one aggregate per table computes its row count
+and every check on it as a column, and the tables' aggregates run side by
+side. `PK_CHECKS`, `FK_CHECKS`, `NOT_NULL_CHECKS` and the range bounds
+are the only check definitions.
+
 Scoring matches `_process_validation_row` (main_etl_pipeline.py:902-920):
 start 100; −5 when the failing check name contains PK CHECK / ORPHAN /
-NULL VIOL; −1 for other findings; floored at 0. A check or statement
-that fails to run counts as attempted and leaves the score unchanged,
-the reference's lenient rule (:841-842).
+NULL VIOL; −1 for other findings; floored at 0. Lenient rule (:841-842):
+a check that does not resolve (e.g. its column is gone) is left out of
+its table's aggregate, logged, counted as attempted and leaves the score
+unchanged; when a table's aggregate fails to run, `COUNT FAILED <table>`
+is scored and each of its checks counts as attempted, unscored. An
+analytical-corpus statement that fails counts the same way.
 """
 
 from __future__ import annotations
@@ -26,10 +35,12 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import SparkSession
 
 from fitness_nutrition_data_pipeline_spark.config import VALIDATION_BOUNDS
+from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
 
 logger = logging.getLogger(__name__)
 
@@ -63,27 +74,27 @@ PK_CHECKS = {
     "Fact_NutritionLog": "LogKey",
 }
 
-# (fact, fk, dim, dim_key, null_tolerant)
+# (fact, fk, dim, dim_key)
 FK_CHECKS = [
-    ("Fact_UserSnapshot", "UserKey", "Dim_User", "UserKey", False),
-    ("Fact_UserSnapshot", "GoalKey", "Dim_FitnessGoal", "GoalKey", True),
-    ("Fact_UserSnapshot", "TypeKey", "Dim_FitnessType", "TypeKey", True),
-    ("Fact_WorkoutSession", "UserKey", "Dim_User", "UserKey", False),
-    ("Fact_WorkoutSession", "DateKey", "Dim_Date", "DateKey", False),
-    ("Fact_WorkoutSession", "WorkoutTypeKey", "Dim_WorkoutType", "WorkoutTypeKey", True),
-    ("Fact_HealthMetric", "UserKey", "Dim_User", "UserKey", False),
-    ("Fact_HealthMetric", "DateKey", "Dim_Date", "DateKey", False),
-    ("Fact_HealthMetric", "MetricTypeKey", "Dim_MetricType", "MetricTypeKey", False),
-    ("Fact_NutritionLog", "UserKey", "Dim_User", "UserKey", False),
-    ("Fact_NutritionLog", "DateKey", "Dim_Date", "DateKey", False),
-    ("Fact_NutritionLog", "MealTypeKey", "Dim_MealType", "MealTypeKey", False),
-    ("Fact_NutritionLog", "FoodKey", "Dim_FoodItem", "FoodKey", False),
-    ("Bridge_User_HealthCondition", "UserKey", "Dim_User", "UserKey", False),
-    ("Bridge_User_HealthCondition", "ConditionKey", "Dim_HealthCondition", "ConditionKey", False),
-    ("Bridge_User_WorkoutPreference", "UserKey", "Dim_User", "UserKey", False),
-    ("Bridge_User_WorkoutPreference", "ExerciseKey", "Dim_Exercise", "ExerciseKey", False),
-    ("Bridge_User_DietPreference", "UserKey", "Dim_User", "UserKey", False),
-    ("Bridge_User_DietPreference", "DietKey", "Dim_Diet", "DietKey", False),
+    ("Fact_UserSnapshot", "UserKey", "Dim_User", "UserKey"),
+    ("Fact_UserSnapshot", "GoalKey", "Dim_FitnessGoal", "GoalKey"),
+    ("Fact_UserSnapshot", "TypeKey", "Dim_FitnessType", "TypeKey"),
+    ("Fact_WorkoutSession", "UserKey", "Dim_User", "UserKey"),
+    ("Fact_WorkoutSession", "DateKey", "Dim_Date", "DateKey"),
+    ("Fact_WorkoutSession", "WorkoutTypeKey", "Dim_WorkoutType", "WorkoutTypeKey"),
+    ("Fact_HealthMetric", "UserKey", "Dim_User", "UserKey"),
+    ("Fact_HealthMetric", "DateKey", "Dim_Date", "DateKey"),
+    ("Fact_HealthMetric", "MetricTypeKey", "Dim_MetricType", "MetricTypeKey"),
+    ("Fact_NutritionLog", "UserKey", "Dim_User", "UserKey"),
+    ("Fact_NutritionLog", "DateKey", "Dim_Date", "DateKey"),
+    ("Fact_NutritionLog", "MealTypeKey", "Dim_MealType", "MealTypeKey"),
+    ("Fact_NutritionLog", "FoodKey", "Dim_FoodItem", "FoodKey"),
+    ("Bridge_User_HealthCondition", "UserKey", "Dim_User", "UserKey"),
+    ("Bridge_User_HealthCondition", "ConditionKey", "Dim_HealthCondition", "ConditionKey"),
+    ("Bridge_User_WorkoutPreference", "UserKey", "Dim_User", "UserKey"),
+    ("Bridge_User_WorkoutPreference", "ExerciseKey", "Dim_Exercise", "ExerciseKey"),
+    ("Bridge_User_DietPreference", "UserKey", "Dim_User", "UserKey"),
+    ("Bridge_User_DietPreference", "DietKey", "Dim_Diet", "DietKey"),
 ]
 
 NOT_NULL_CHECKS = [
@@ -132,70 +143,63 @@ def _existing(spark: SparkSession, tables: list[str]) -> list[str]:
     return [t for t in tables if t.lower() in views]
 
 
-def _scalar(spark: SparkSession, sql: str):
-    return spark.sql(sql).collect()[0][0]
+def _scalar_checks(present: list[str], bounds: dict[str, float]) -> list[tuple[str, str, str]]:
+    """(table, check name, aggregate expression) for every scalar check on a
+    present table, in report order: PK, ORPHAN, NULL, RANGE. An orphan is a
+    non-NULL FK that is not a key of its dim. It is tested with an IN
+    subquery (an existence join), not a LEFT JOIN, so a duplicated dim key
+    cannot multiply the rows the table's other checks count; and not with a
+    correlated NOT EXISTS, which Spark 4.1 fails to execute inside an
+    aggregate over a view that is a self-union."""
+
+    def outside(col: str, lo: str, hi: str) -> str:
+        return f"{col} IS NOT NULL AND ({col} < {bounds[lo]} OR {col} > {bounds[hi]})"
+
+    # range checks (validation.sql:259-291; bounds ≙ SET @vars :7-13)
+    ranges = [
+        ("Fact_UserSnapshot", "Height", outside("Height", "min_height_m", "max_height_m")),
+        ("Fact_UserSnapshot", "Weight", outside("Weight", "min_weight_kg", "max_weight_kg")),
+        ("Fact_UserSnapshot", "BMI", outside("BMI", "min_bmi", "max_bmi")),
+        ("Fact_WorkoutSession", "DurationHours", f"DurationHours > {bounds['max_workout_hours']}"),
+        ("Fact_WorkoutSession", "CaloriesBurned", "CaloriesBurned < 0"),
+        ("Fact_WorkoutSession", "TotalSteps", "TotalSteps < 0"),
+        ("Fact_HealthMetric", "HealthMetric bmi",
+         f"Unit = 'bmi' AND {outside('Value', 'min_bmi', 'max_bmi')}"),
+        ("Fact_NutritionLog", "ServingSize", "ServingSize <= 0"),
+    ]
+    checks = [(t, f"PK CHECK {t}", f"count(*) - count(DISTINCT {pk})") for t, pk in PK_CHECKS.items()]
+    checks += [
+        (fact, f"ORPHAN {fact}.{fk}",
+         f"count_if(f.{fk} IS NOT NULL AND (f.{fk} IN (SELECT d.{dk} FROM {dim} d)) IS NOT TRUE)")
+        for fact, fk, dim, dk in FK_CHECKS
+        if dim in present
+    ]
+    checks += [(t, f"NULL VIOL {t}.{col}", f"count_if({col} IS NULL)") for t, col in NOT_NULL_CHECKS]
+    checks += [(t, f"RANGE {name}", f"count_if({pred})") for t, name, pred in ranges]
+    return [c for c in checks if c[0] in present]
 
 
-def _union_batch(
-    spark: SparkSession, items: list[tuple[str, str]]
-) -> dict[str, int] | None:
-    """Fold named scalar count queries into ONE UNION ALL statement →
-    {name: count}. Returns None when the batch can't run as a unit (a
-    branch fails to resolve) so the caller can fall back to lenient
-    per-statement execution. One Spark job instead of len(items)."""
-    if not items:
-        return {}
-    branches = []
-    for name, sql in items:
-        esc = name.replace("'", "''")
-        branches.append(
-            f"SELECT '{esc}' AS check_name, CAST(cnt AS BIGINT) AS violations "
-            f"FROM ({sql}) AS _chk(cnt)"
-        )
+def _read_table(
+    spark: SparkSession, t: str, checks: list[tuple[str, str]]
+) -> tuple[int | None, dict[str, int]]:
+    """Table ``t``'s row count and every check on it that resolves, as ONE
+    aggregate → (count, {check name: violations}); (None, {}) when the
+    aggregate fails to run. Each check is first analyzed alone (no job
+    starts), so one that does not resolve costs only itself."""
+    runnable = []
+    for name, agg in checks:
+        try:
+            spark.sql(f"SELECT {agg} FROM {t} f")
+            runnable.append((name, agg))
+        except Exception as e:  # noqa: BLE001
+            logger.debug("check %s does not resolve: %s", name, str(e)[:120])
+    cols = ", ".join(["count(*)"] + [agg for _, agg in runnable])
     try:
-        rows = spark.sql("\nUNION ALL\n".join(branches)).collect()
+        row = spark.sql(f"SELECT {cols} FROM {t} f").collect()[0]
     except Exception as e:  # noqa: BLE001
-        logger.debug("batched validation union failed (%s); falling back",
-                     str(e)[:120])
-        return None
-    return {r["check_name"]: int(r["violations"] or 0) for r in rows}
-
-
-_CHUNK = 8  # measured sweet spot: 8-branch unions x 8 concurrent jobs
-# beat both the per-statement pool (2.9 s) and one 59-branch union
-# (4.3 s — whole-stage codegen of the mega-plan is serial) at 1.4 s on
-# the reference warehouse; see SCALE.md r11 validate-batching note.
-
-
-def _run_checks(
-    spark: SparkSession, items: list[tuple[str, str]]
-) -> dict[str, int | None]:
-    """Execute named scalar checks as chunked UNION ALL batches on a
-    thread pool: ceil(n/8) Spark jobs instead of n. A chunk that fails
-    to run as a unit degrades to lenient per-statement execution, so
-    one unresolvable check costs only itself (reference :841-842)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    chunks = [items[i : i + _CHUNK] for i in range(0, len(items), _CHUNK)]
-
-    def one_chunk(ch: list[tuple[str, str]]) -> dict[str, int | None]:
-        got = _union_batch(spark, ch)
-        if got is not None:
-            return dict(got)
-        out: dict[str, int | None] = {}
-        for name, sql in ch:
-            try:
-                out[name] = int(_scalar(spark, sql) or 0)
-            except Exception as e:  # noqa: BLE001
-                logger.debug("check %s failed: %s", name, str(e)[:120])
-                out[name] = None
-        return out
-
-    results: dict[str, int | None] = {}
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for got in pool.map(one_chunk, chunks):
-            results.update(got)
-    return results
+        logger.debug("validation aggregate over %s failed: %s", t, str(e)[:120])
+        return None, {}
+    return int(row[0]), {name: int(row[i + 1]) for i, (name, _) in enumerate(runnable)}
 
 
 def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = None) -> ValidationResults:
@@ -203,103 +207,36 @@ def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = No
     bounds = bounds or VALIDATION_BOUNDS
     res = ValidationResults()
     present = _existing(spark, EXPECTED_TABLES)
-
-    # Scalar checks used to run as ~60 tiny independent Spark jobs; even
-    # thread-pooled, per-job submission overhead dominated the validate
-    # phase (10.6 s observed in a degraded r10 regime). They now run
-    # through _run_checks: 8-branch UNION ALL batches — the
-    # validation.sql:459-462 summary shape — executed concurrently, with
-    # lenient per-statement fallback inside any chunk that fails.
+    checks = _scalar_checks(present, bounds)
+    read = declare_parallel(
+        [
+            (t, partial(_read_table, spark, t, [(n, a) for ct, n, a in checks if ct == t]))
+            for t in present
+        ],
+        max_workers=8,
+    )
 
     # table inventory + missing-table check (validation.sql:16-46)
-    count_tables = [t for t in EXPECTED_TABLES if t in present]
-    counts_by_t = _run_checks(
-        spark, [(t, f"SELECT count(*) FROM {t}") for t in count_tables]
-    )
-    for t in count_tables:
-        val = counts_by_t.get(t)
-        if val is None:
+    for t in present:
+        count = read[t][0]
+        if count is None:
             # a count that cannot even run must never be reported as a
             # healthy-looking 0-row table: leave table_counts without
             # the entry and record a scored warning instead
             res.record(f"COUNT FAILED {t}", 1)
         else:
-            res.table_counts[t] = int(val)
-    missing = [t for t in EXPECTED_TABLES if t not in present]
-    res.record("MISSING TABLES", len(missing))
+            res.table_counts[t] = count
+    res.record("MISSING TABLES", len(EXPECTED_TABLES) - len(present))
 
-    queued: list[tuple[str, str]] = []
-
-    def run(check_name: str, sql: str) -> None:
-        queued.append((check_name, sql))
-
-    def _flush_queued() -> None:
-        results = _run_checks(spark, queued)
-        for check_name, _ in queued:  # queue order keeps the report stable
-            val = results.get(check_name)
-            if val is None:
-                # lenient like the reference (:841-842): attempted, but
-                # a check that cannot run does not move the score
-                logger.warning("validation check %s could not run", check_name)
-                res.checks_run += 1
-            else:
-                res.record(check_name, val)
-
-    for t, pk in PK_CHECKS.items():
-        if t in present:
-            run(
-                f"PK CHECK {t}",
-                f"SELECT count(*) - count(DISTINCT {pk}) FROM {t}",
-            )
-
-    for fact, fk, dim, dk, null_tol in FK_CHECKS:
-        if fact in present and dim in present:
-            null_guard = f"f.{fk} IS NOT NULL AND " if null_tol else ""
-            run(
-                f"ORPHAN {fact}.{fk}",
-                f"SELECT count(*) FROM {fact} f LEFT JOIN {dim} d ON f.{fk} = d.{dk} "
-                f"WHERE {null_guard}d.{dk} IS NULL"
-                + ("" if null_tol else f" AND f.{fk} IS NOT NULL"),
-            )
-
-    for t, col in NOT_NULL_CHECKS:
-        if t in present:
-            run(f"NULL VIOL {t}.{col}", f"SELECT count(*) FROM {t} WHERE {col} IS NULL")
-
-    # range checks (validation.sql:259-291; bounds ≙ SET @vars :7-13)
-    if "Fact_UserSnapshot" in present:
-        run(
-            "RANGE Height",
-            f"SELECT count(*) FROM Fact_UserSnapshot WHERE Height IS NOT NULL AND "
-            f"(Height < {bounds['min_height_m']} OR Height > {bounds['max_height_m']})",
-        )
-        run(
-            "RANGE Weight",
-            f"SELECT count(*) FROM Fact_UserSnapshot WHERE Weight IS NOT NULL AND "
-            f"(Weight < {bounds['min_weight_kg']} OR Weight > {bounds['max_weight_kg']})",
-        )
-        run(
-            "RANGE BMI",
-            f"SELECT count(*) FROM Fact_UserSnapshot WHERE BMI IS NOT NULL AND "
-            f"(BMI < {bounds['min_bmi']} OR BMI > {bounds['max_bmi']})",
-        )
-    if "Fact_WorkoutSession" in present:
-        run(
-            "RANGE DurationHours",
-            f"SELECT count(*) FROM Fact_WorkoutSession WHERE DurationHours > {bounds['max_workout_hours']}",
-        )
-        run("RANGE CaloriesBurned", "SELECT count(*) FROM Fact_WorkoutSession WHERE CaloriesBurned < 0")
-        run("RANGE TotalSteps", "SELECT count(*) FROM Fact_WorkoutSession WHERE TotalSteps < 0")
-    if "Fact_HealthMetric" in present:
-        run(
-            "RANGE HealthMetric bmi",
-            f"SELECT count(*) FROM Fact_HealthMetric WHERE Unit = 'bmi' AND Value IS NOT NULL AND "
-            f"(Value < {bounds['min_bmi']} OR Value > {bounds['max_bmi']})",
-        )
-    if "Fact_NutritionLog" in present:
-        run("RANGE ServingSize", "SELECT count(*) FROM Fact_NutritionLog WHERE ServingSize <= 0")
-
-    _flush_queued()
+    for t, name, _ in checks:
+        val = read[t][1].get(name)
+        if val is None:
+            # lenient like the reference (:841-842): attempted, but
+            # a check that cannot run does not move the score
+            logger.warning("validation check %s could not run", name)
+            res.checks_run += 1
+        else:
+            res.record(name, val)
 
     # -- remaining corpus families, executed through the S7 script runner
     # with the reference's row classifier (check_name/violations keys →
