@@ -1,13 +1,10 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
 metadata (BASELINE.json north star).
 
-The Spark-side plumbing is fully real — schemas, format sniffing,
-Arrow-batched pandas processing via ``mapInPandas``, deterministic
-byte-level feature extraction. The pixel/sample *decode* step needs codec
-libraries (PIL/ffmpeg) that this container doesn't ship, so decoding is
-import-gated: with the library present it decodes, without it the clearly
-marked deterministic fallback keeps every downstream stage executable and
-testable.
+The operators work on the container bytes, never on decoded pixels or
+samples: format sniffing from magic numbers and size metadata are Column
+expressions, and the byte-level feature extraction is Arrow-batched
+pandas processing via ``mapInPandas``.
 
 Scale notes: binary payloads ride in the same parquet row-groups as their
 metadata (no small-file problem); `mapInPandas` streams Arrow batches so
@@ -97,306 +94,3 @@ def byte_histogram_features(df: DataFrame, binary_col: str = "payload") -> DataF
             yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
 
     return df.select("media_id", binary_col).mapInPandas(extract, out_schema)
-
-
-def decode_images(df: DataFrame, binary_col: str = "payload") -> DataFrame:
-    """Decode image blobs to (height, width, channels, mean_luma).
-
-    With PIL present this is a real decode; without it, a clearly-marked
-    deterministic fallback derives plausible values from the payload hash
-    so pipelines remain runnable end-to-end in codec-less environments.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("channels", T.IntegerType(), True),
-            T.StructField("mean_luma", T.FloatType(), True),
-            T.StructField("decoded", T.BooleanType(), False),
-        ]
-    )
-
-    def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import hashlib
-        import io
-
-        import pandas as pd
-
-        try:
-            from PIL import Image  # real decode path
-
-            have_pil = True
-        except ImportError:
-            have_pil = False
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf[binary_col]):
-                if blob is None:
-                    rows.append((mid, None, None, None, None, False))
-                    continue
-                if have_pil:
-                    try:
-                        img = Image.open(io.BytesIO(bytes(blob)))
-                        import numpy as np
-
-                        arr = np.asarray(img.convert("L"), dtype="float32")
-                        rows.append(
-                            (mid, img.height, img.width, len(img.getbands()),
-                             float(arr.mean()), True)
-                        )
-                        continue
-                    except Exception:
-                        pass
-                # STUB DECODE (no codec library): deterministic fake derived
-                # from the payload hash — NOT real pixel data.
-                h = hashlib.md5(bytes(blob)).digest()
-                rows.append(
-                    (mid, 1 + h[0] % 64, 1 + h[1] % 64, 3, float(h[2]), False)
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "height", "width", "channels", "mean_luma", "decoded"]
-            )
-
-    return df.select("media_id", binary_col).mapInPandas(decode, out_schema)
-
-
-def resize_images(
-    df: DataFrame, binary_col: str = "payload", *, max_side: int = 32
-) -> DataFrame:
-    """Thumbnail blobs to ≤ ``max_side`` on the long edge.
-
-    With PIL present this is a real decode→resize→re-encode; without it,
-    the clearly-marked deterministic fallback emits a fake raw-gray
-    thumbnail (md5-keyed bytes at the contracted dimensions) so the
-    batch shape, output schema, and downstream joins stay executable.
-
-    Scale shape: one Arrow batch of blobs in flight per task; output rows
-    are strictly smaller than input rows, so the stage shrinks data —
-    run it before any shuffle that would otherwise move full payloads.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("thumb", T.BinaryType(), True),
-            T.StructField("thumb_h", T.IntegerType(), True),
-            T.StructField("thumb_w", T.IntegerType(), True),
-            T.StructField("resized", T.BooleanType(), False),
-        ]
-    )
-
-    def resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import hashlib
-        import io
-
-        import pandas as pd
-
-        try:
-            from PIL import Image
-
-            have_pil = True
-        except ImportError:
-            have_pil = False
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf[binary_col]):
-                if blob is None:
-                    rows.append((mid, None, None, None, False))
-                    continue
-                if have_pil:
-                    try:
-                        img = Image.open(io.BytesIO(bytes(blob)))
-                        img.thumbnail((max_side, max_side))
-                        buf = io.BytesIO()
-                        img.save(buf, format="PNG")
-                        rows.append((mid, buf.getvalue(), img.height, img.width, True))
-                        continue
-                    except Exception:
-                        pass
-                # STUB RESIZE (no codec library): deterministic fake
-                # raw-gray thumbnail — NOT real pixels. Dimensions follow
-                # the same aspect contract the real path honors.
-                h = hashlib.md5(bytes(blob)).digest()
-                th, tw = 1 + h[0] % max_side, 1 + h[1] % max_side
-                fake = (h * ((th * tw) // len(h) + 1))[: th * tw]
-                rows.append((mid, fake, th, tw, False))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "thumb", "thumb_h", "thumb_w", "resized"]
-            )
-
-    return df.select("media_id", binary_col).mapInPandas(resize, out_schema)
-
-
-def sample_video_frames(
-    df: DataFrame, binary_col: str = "payload", *, every_n_seconds: float = 1.0
-) -> DataFrame:
-    """Sample one frame per ``every_n_seconds`` from video blobs.
-
-    The Spark plumbing is real and the contract is tested: input is
-    repartitioned by media_id (one video decodes in exactly one task —
-    codecs are stateful and frames must stay in order), the UDF streams
-    Arrow batches, and each input row fans out to (media_id, frame_no,
-    ts_s, frame, decoded) rows. The *codec* is gated: with PyAV/ffmpeg
-    bindings present it would decode real frames; this container has no
-    codec, so the clearly-marked fallback emits deterministic fake frames
-    (count derived from payload size at 1 "second" per 4 KiB) — NOT real
-    video data, but byte-for-byte reproducible for pipeline tests.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_no", T.IntegerType(), False),
-            T.StructField("ts_s", T.DoubleType(), False),
-            T.StructField("frame", T.BinaryType(), True),
-            T.StructField("decoded", T.BooleanType(), False),
-        ]
-    )
-
-    def sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import hashlib
-
-        import pandas as pd
-
-        try:
-            import av  # PyAV: real decode path
-
-            have_codec = True
-        except ImportError:
-            have_codec = False
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf[binary_col]):
-                if blob is None:
-                    continue
-                if have_codec:
-                    import io as _io
-
-                    with av.open(_io.BytesIO(bytes(blob))) as container:
-                        stream = container.streams.video[0]
-                        next_ts = 0.0
-                        frame_no = 0
-                        for frame in container.decode(stream):
-                            if frame.time is None or frame.time < next_ts:
-                                continue
-                            rows.append(
-                                (mid, frame_no, float(frame.time),
-                                 frame.to_ndarray(format="gray").tobytes(), True)
-                            )
-                            frame_no += 1
-                            next_ts += every_n_seconds
-                    continue
-                # STUB DECODE (no codec library): deterministic fake frames,
-                # one per 4 KiB of payload — NOT real video frames.
-                duration_s = max(1, len(blob) // 4096)
-                n_frames = int(duration_s / every_n_seconds) or 1
-                seed = hashlib.md5(bytes(blob)).digest()
-                for i in range(n_frames):
-                    fake = hashlib.md5(seed + i.to_bytes(4, "big")).digest()
-                    rows.append((mid, i, i * every_n_seconds, fake, False))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_no", "ts_s", "frame", "decoded"]
-            )
-
-    # one video per task: frames of a blob never split across workers
-    return df.select("media_id", binary_col).repartition("media_id").mapInPandas(
-        sample, out_schema
-    )
-
-
-def audio_waveform_stats(df: DataFrame, binary_col: str = "payload") -> DataFrame:
-    """Decode WAV blobs to (duration_s, sample_rate, n_channels, rms, peak).
-
-    RIFF/WAVE with integer PCM is decoded for REAL via the stdlib ``wave``
-    reader + numpy (no external codec needed); anything else gets the
-    clearly-marked deterministic hash-derived fallback, same contract as
-    decode_images. Arrow-batched mapInPandas: one batch of blobs per
-    task, so peak memory is one payload batch; swap the stats block for
-    a mel-spectrogram or an encoder forward pass without touching the
-    plumbing.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("duration_s", T.FloatType(), True),
-            T.StructField("sample_rate", T.IntegerType(), True),
-            T.StructField("n_channels", T.IntegerType(), True),
-            T.StructField("rms", T.FloatType(), True),
-            T.StructField("peak", T.FloatType(), True),
-            T.StructField("decoded", T.BooleanType(), False),
-        ]
-    )
-
-    def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import hashlib
-        import io
-        import wave
-
-        import numpy as np
-        import pandas as pd
-
-        # 8-bit WAV PCM is UNSIGNED (0..255, midpoint 128) per the RIFF
-        # spec; 16/32-bit are signed two's complement.
-        _widths = {1: "uint8", 2: "int16", 4: "int32"}
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf[binary_col]):
-                if blob is None:
-                    rows.append((mid, None, None, None, None, None, False))
-                    continue
-                raw = bytes(blob)
-                try:
-                    with wave.open(io.BytesIO(raw)) as w:
-                        sr = w.getframerate()
-                        nch = w.getnchannels()
-                        nframes = w.getnframes()
-                        width = w.getsampwidth()
-                        pcm = np.frombuffer(
-                            w.readframes(nframes), dtype=_widths[width]
-                        ).astype("float64")
-                    full_scale = float(2 ** (8 * width - 1))
-                    if width == 1:
-                        # recentre unsigned samples so silence (128) → 0.0
-                        x = (pcm - 128.0) / 128.0
-                    else:
-                        x = pcm / full_scale
-                    rows.append(
-                        (
-                            mid,
-                            float(nframes) / sr if sr else None,
-                            sr,
-                            nch,
-                            float(np.sqrt(np.mean(x * x))) if x.size else 0.0,
-                            float(np.max(np.abs(x))) if x.size else 0.0,
-                            True,
-                        )
-                    )
-                    continue
-                except Exception:
-                    pass
-                # STUB DECODE (not a parseable PCM WAV): deterministic fake
-                # derived from the payload hash — NOT real audio data.
-                h = hashlib.md5(raw).digest()
-                rows.append(
-                    (
-                        mid,
-                        float(1 + h[0] % 30),
-                        8000 * (1 + h[1] % 6),
-                        1 + h[2] % 2,
-                        float(h[3]) / 512.0,
-                        float(h[4]) / 256.0,
-                        False,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "duration_s", "sample_rate", "n_channels",
-                    "rms", "peak", "decoded",
-                ],
-            )
-
-    return df.select("media_id", binary_col).mapInPandas(stats, out_schema)

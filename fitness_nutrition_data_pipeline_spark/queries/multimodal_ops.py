@@ -39,7 +39,7 @@ _MAGIC_BYTES = (
 )
 
 
-def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (media_id, payload) with a deterministic container
     magic prefixed to the utf-8 text bytes. Stands in for a real binary
     column; every byte is a pure function of the source row."""
@@ -100,7 +100,7 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort=("format",),
 )
 def multimodal_format_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = synthesize_media(spark, sf_dir).where(F.col("payload").isNotNull())
+    media = _synthesize_media(spark, sf_dir).where(F.col("payload").isNotNull())
     meta = attach_metadata(media)
     feats = byte_histogram_features(media)
 
@@ -226,7 +226,7 @@ def multimodal_meta_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "property that makes CAS dedup feasible at 100 TB of media).",
 )
 def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = synthesize_media(spark, sf_dir)
+    media = _synthesize_media(spark, sf_dir)
     meta = attach_metadata(media)
     digested = meta.select(
         "format", F.md5(F.hex(F.col("payload"))).alias("digest")
@@ -299,7 +299,7 @@ _TIER_PACKED = 448
     "with the identical plan.",
 )
 def multimodal_storage_tiering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = synthesize_media(spark, sf_dir).where(
+    media = _synthesize_media(spark, sf_dir).where(
         F.col("payload").isNotNull()
     )
     fmt = (

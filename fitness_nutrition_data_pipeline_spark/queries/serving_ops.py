@@ -479,338 +479,3 @@ def ndcg_fused_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ndcg10_ppm"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Staged, not registered: this query is oracle-compared at two SFs by
-# tests/test_rerank_cascade_staged.py.
-# ---------------------------------------------------------------------------
-
-_L1_K = 50  # lexical candidates fed to the bi-encoder stage
-_L2_K = 15  # bi-encoder survivors fed to the cross-encoder stage
-
-# the cross-encoder stand-in: an INTERACTION score no single-tower stage
-# can produce — the 6dp-rounded cosine modulated by the lexical-overlap
-# evidence. round-before-combine keeps the double bit-identical across
-# engines (hard_negative_mining precedent); (1e6 + jacc_ppm) <= 2e6 is
-# exactly representable, so the product is one IEEE multiply on
-# identical inputs in both engines.
-_CROSS_SCORE_SQL = "round(cos, 6) * (1000000 + jacc_ppm)"
-
-
-_RERANK_CASCADE_ORACLE = f"""
-    WITH {_PAIRS_CTES},
-    l1 AS (
-      SELECT q_id, doc_id, is_rel, cos, jacc_ppm,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY jacc_ppm DESC, doc_id) AS lex_rank
-      FROM pairs WHERE overlap >= 1
-      QUALIFY lex_rank <= {_L1_K}
-    ),
-    l2 AS (
-      SELECT q_id, doc_id, is_rel, cos, jacc_ppm,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY round(cos, 6) DESC, doc_id) AS bi_rank
-      FROM l1
-      QUALIFY bi_rank <= {_L2_K}
-    ),
-    l3 AS (
-      SELECT q_id, doc_id, is_rel,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY {_CROSS_SCORE_SQL} DESC, doc_id) AS cross_rank
-      FROM l2
-    ),
-    h1 AS (
-      SELECT q_id, CAST(count(*) AS BIGINT) AS n_bi_scored,
-             sum(CASE WHEN lex_rank <= {_EVAL_K} THEN is_rel ELSE 0 END)
-                 AS hits_lex
-      FROM l1 GROUP BY q_id
-    ),
-    h2 AS (
-      SELECT q_id, CAST(count(*) AS BIGINT) AS n_cross_scored,
-             sum(CASE WHEN bi_rank <= {_EVAL_K} THEN is_rel ELSE 0 END)
-                 AS hits_bi
-      FROM l2 GROUP BY q_id
-    ),
-    h3 AS (
-      SELECT q_id,
-             sum(CASE WHEN cross_rank <= {_EVAL_K} THEN is_rel ELSE 0 END)
-                 AS hits_cross,
-             min(CASE WHEN is_rel = 1 THEN cross_rank END) AS best_rank
-      FROM l3 GROUP BY q_id
-    )
-    SELECT h1.q_id, h1.n_bi_scored, h2.n_cross_scored,
-           CAST(h1.hits_lex * 100000 AS BIGINT) AS prec10_lex_ppm,
-           CAST(h2.hits_bi * 100000 AS BIGINT) AS prec10_bi_ppm,
-           CAST(h3.hits_cross * 100000 AS BIGINT) AS prec10_cross_ppm,
-           CAST((h2.hits_bi - h1.hits_lex) * 100000 AS BIGINT)
-               AS lift_bi_ppm,
-           CAST((h3.hits_cross - h2.hits_bi) * 100000 AS BIGINT)
-               AS lift_cross_ppm,
-           CAST(coalesce(1000000 // h3.best_rank, 0) AS BIGINT)
-               AS mrr_cascade_ppm
-    FROM h1 JOIN h2 USING (q_id) JOIN h3 USING (q_id)
-    ORDER BY q_id
-"""
-
-
-def rerank_cascade_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-stage serving cascade with per-stage cost accounting — the
-    cross-encoder rung above rerank_eval_lift's two stages: the cheap
-    lexical retriever (integer Jaccard ppm) feeds top-50 to a
-    bi-encoder (6dp-rounded exact cosine), whose top-15 survivors reach
-    the cross-encoder stand-in (cosine × lexical-interaction score —
-    a function of BOTH towers, which is what makes stage 3 a different
-    model class, not a re-sort). The readout is the cascade frontier:
-    precision@10 under each stage's ordering, the per-stage lifts, the
-    reranked MRR, and n_bi_scored / n_cross_scored — what each stage
-    COST in scored candidates, so quality-per-scoring is measured, not
-    claimed. 100 TB shape: the corpus-sized pass is stage 1 only; the
-    bi-encoder touches ≤50 × queries rows, the cross-encoder ≤15 ×
-    queries — the funnel that makes expensive scorers affordable.
-    Shares _pairs/_PAIRS_CTES with the other serving evals so the
-    cascade grades the same ground truth."""
-    pairs = _pairs(spark, sf_dir)
-    l1 = (
-        pairs.where(F.col("overlap") >= 1)
-        .select(
-            "q_id",
-            "doc_id",
-            "is_rel",
-            "cos",
-            "jacc_ppm",
-            F.row_number()
-            .over(W.partitionBy("q_id").orderBy(F.desc("jacc_ppm"), "doc_id"))
-            .alias("lex_rank"),
-        )
-        .where(F.col("lex_rank") <= _L1_K)
-    )
-    l2 = (
-        l1.select(
-            "q_id",
-            "doc_id",
-            "is_rel",
-            "cos",
-            "jacc_ppm",
-            "lex_rank",
-            F.row_number()
-            .over(
-                W.partitionBy("q_id").orderBy(
-                    F.desc(F.round(F.col("cos"), 6)), "doc_id"
-                )
-            )
-            .alias("bi_rank"),
-        )
-        .where(F.col("bi_rank") <= _L2_K)
-    )
-    cross_score = F.round(F.col("cos"), 6) * (
-        F.lit(1000000) + F.col("jacc_ppm")
-    )
-    l3 = l2.select(
-        "q_id",
-        "is_rel",
-        "bi_rank",
-        F.row_number()
-        .over(W.partitionBy("q_id").orderBy(cross_score.desc(), "doc_id"))
-        .alias("cross_rank"),
-    )
-    h1 = l1.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bi_scored"),
-        F.sum(
-            F.when(F.col("lex_rank") <= _EVAL_K, F.col("is_rel")).otherwise(0)
-        ).alias("hits_lex"),
-    )
-    h3 = l3.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_cross_scored"),
-        F.sum(
-            F.when(F.col("bi_rank") <= _EVAL_K, F.col("is_rel")).otherwise(0)
-        ).alias("hits_bi"),
-        F.sum(
-            F.when(F.col("cross_rank") <= _EVAL_K, F.col("is_rel")).otherwise(
-                0
-            )
-        ).alias("hits_cross"),
-        F.min(
-            F.when(F.col("is_rel") == 1, F.col("cross_rank"))
-        ).alias("best_rank"),
-    )
-    return (
-        h1.join(h3, "q_id")
-        .select(
-            "q_id",
-            "n_bi_scored",
-            "n_cross_scored",
-            (F.col("hits_lex") * 100000).cast("long").alias("prec10_lex_ppm"),
-            (F.col("hits_bi") * 100000).cast("long").alias("prec10_bi_ppm"),
-            (F.col("hits_cross") * 100000)
-            .cast("long")
-            .alias("prec10_cross_ppm"),
-            ((F.col("hits_bi") - F.col("hits_lex")) * 100000)
-            .cast("long")
-            .alias("lift_bi_ppm"),
-            ((F.col("hits_cross") - F.col("hits_bi")) * 100000)
-            .cast("long")
-            .alias("lift_cross_ppm"),
-            F.coalesce(F.expr("1000000L div best_rank"), F.lit(0))
-            .cast("long")
-            .alias("mrr_cascade_ppm"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("q_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Staged, not registered: this query is oracle-compared at two SFs by
-# tests/test_distill_staged.py.
-#
-# The training-data CONSUMER of the cascade (VERDICT r16 ask #8's
-# "cross-encoder distillation-pair miner"): the standard way a cheap
-# bi-encoder gets better is distillation from the expensive
-# cross-encoder — mine (query, positive, hard-negative) triples where
-# the two stages DISAGREE, weighted by the teacher's score margin.
-# ---------------------------------------------------------------------------
-
-_POS_K = 3  # cross-encoder top-P: the teacher's positives
-_NEG_K = 3  # hardest demoted candidates kept as negatives per query
-
-_DISTILL_ORACLE = f"""
-    WITH {_PAIRS_CTES},
-    l1 AS (
-      SELECT q_id, doc_id, is_rel, cos, jacc_ppm,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY jacc_ppm DESC, doc_id) AS lex_rank
-      FROM pairs WHERE overlap >= 1
-      QUALIFY lex_rank <= {_L1_K}
-    ),
-    l2 AS (
-      SELECT q_id, doc_id, is_rel, cos, jacc_ppm,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY round(cos, 6) DESC, doc_id) AS bi_rank
-      FROM l1
-      QUALIFY bi_rank <= {_L2_K}
-    ),
-    l3 AS (
-      SELECT q_id, doc_id, is_rel, bi_rank,
-             {_CROSS_SCORE_SQL} AS cscore,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY {_CROSS_SCORE_SQL} DESC, doc_id) AS cross_rank
-      FROM l2
-    ),
-    pos AS (SELECT * FROM l3 WHERE cross_rank <= {_POS_K}),
-    neg AS (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                 ORDER BY bi_rank) AS neg_rank
-      FROM l3 WHERE cross_rank > {_POS_K}
-      QUALIFY neg_rank <= {_NEG_K}
-    )
-    SELECT p.q_id, p.doc_id AS pos_doc, n.doc_id AS neg_doc,
-           CAST(round(p.cscore - n.cscore) AS BIGINT) AS margin,
-           p.is_rel AS pos_is_rel, n.is_rel AS neg_is_rel
-    FROM pos p JOIN neg n USING (q_id)
-    ORDER BY q_id, pos_doc, neg_doc
-"""
-
-
-def distillation_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-encoder distillation-pair miner — the training-data
-    consumer of rerank_cascade_eval's frontier: run the identical
-    3-stage cascade (lexical top-50 -> bi-encoder top-15 ->
-    cross-encoder), take the cross-encoder's top-3 per query as TEACHER
-    POSITIVES, and as HARD NEGATIVES the demoted survivors (passed the
-    bi-encoder, rejected by the cross-encoder) that the bi-encoder
-    ranked HIGHEST — exactly the pairs the student is most wrong about,
-    which is what makes them worth a training label. Emit every
-    (positive, negative) pair with the teacher's score margin (the
-    distillation weight) and both docs' ground-truth relevance riding
-    along, so the mined set is itself auditable (a negative with
-    neg_is_rel=1 is a teacher mistake the audit can count). margin is a
-    single IEEE subtract of two exactly-representable cross scores,
-    rounded to integer — bit-stable cross-engine; >= 0 by construction
-    since positives outrank negatives under the cross ordering. 100 TB
-    shape: identical to the cascade (corpus pass is stage 1 only); the
-    mining itself touches <= (3+3) x queries rows and emits <= 9 x
-    queries triples."""
-    pairs = _pairs(spark, sf_dir)
-    l1 = (
-        pairs.where(F.col("overlap") >= 1)
-        .select(
-            "q_id",
-            "doc_id",
-            "is_rel",
-            "cos",
-            "jacc_ppm",
-            F.row_number()
-            .over(W.partitionBy("q_id").orderBy(F.desc("jacc_ppm"), "doc_id"))
-            .alias("lex_rank"),
-        )
-        .where(F.col("lex_rank") <= _L1_K)
-    )
-    l2 = (
-        l1.select(
-            "q_id",
-            "doc_id",
-            "is_rel",
-            "cos",
-            "jacc_ppm",
-            F.row_number()
-            .over(
-                W.partitionBy("q_id").orderBy(
-                    F.desc(F.round(F.col("cos"), 6)), "doc_id"
-                )
-            )
-            .alias("bi_rank"),
-        )
-        .where(F.col("bi_rank") <= _L2_K)
-    )
-    cscore = F.round(F.col("cos"), 6) * (F.lit(1000000) + F.col("jacc_ppm"))
-    l3 = l2.select(
-        "q_id",
-        "doc_id",
-        "is_rel",
-        "bi_rank",
-        cscore.alias("cscore"),
-        F.row_number()
-        .over(W.partitionBy("q_id").orderBy(cscore.desc(), "doc_id"))
-        .alias("cross_rank"),
-    )
-    pos = l3.where(F.col("cross_rank") <= _POS_K).select(
-        "q_id",
-        F.col("doc_id").alias("pos_doc"),
-        F.col("cscore").alias("p_score"),
-        F.col("is_rel").alias("pos_is_rel"),
-    )
-    neg = (
-        l3.where(F.col("cross_rank") > _POS_K)
-        .select(
-            "q_id",
-            "doc_id",
-            "is_rel",
-            "cscore",
-            F.row_number()
-            .over(W.partitionBy("q_id").orderBy("bi_rank"))
-            .alias("neg_rank"),
-        )
-        .where(F.col("neg_rank") <= _NEG_K)
-        .select(
-            "q_id",
-            F.col("doc_id").alias("neg_doc"),
-            F.col("cscore").alias("n_score"),
-            F.col("is_rel").alias("neg_is_rel"),
-        )
-    )
-    return (
-        pos.join(neg, "q_id")
-        .select(
-            "q_id",
-            "pos_doc",
-            "neg_doc",
-            F.round(F.col("p_score") - F.col("n_score"), 0)
-            .cast("long")
-            .alias("margin"),
-            "pos_is_rel",
-            "neg_is_rel",
-        )
-        .repartition(1)
-        .sortWithinPartitions("q_id", "pos_doc", "neg_doc")
-    )

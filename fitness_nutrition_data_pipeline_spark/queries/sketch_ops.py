@@ -767,7 +767,7 @@ def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered; tests/test_sketch_staged.py also runs the verify_queries
+# Registered; tests/test_hll_union_contract.py also runs the verify_queries
 # compare (fetch/norm/hash) on the pair at two SFs.
 # ---------------------------------------------------------------------------
 

@@ -48,8 +48,8 @@ Replay contract (the §2.8 streaming-family discipline): processing a
 corpus in ANY batch split emits the same pair SET as one global batch
 computation, with each pair tagged by the batch where its later doc
 arrived. tests/test_lsh_bridge_property.py pins this against drawn
-splits; queries/llm_ops.py::lsh_dedup_batch_replay (staged for r17)
-runs the REAL engine under the DuckDB value oracle.
+splits; the registered queries/llm_ops.py::lsh_dedup_batch_replay runs
+the REAL engine under the DuckDB value oracle.
 
 State durability mirrors operators/kcore.py::_pin's two-tier rule: in
 memory (localCheckpoint) for bounded/test corpora, a parquet state dir
@@ -296,66 +296,3 @@ def run_lsh_bridge_stream(
         "doc_id_a long, doc_id_b long, n_shared_bands long, batch_id long"
     )
     return spark.createDataFrame(emitted, out_schema)
-
-
-class IncrementalComponents:
-    """Incrementally-maintained duplicate CLUSTERS over the bridge's
-    pair stream — the IVM form of connected components, completing the
-    marriage: LshDedupBridge discovers candidate pairs per micro-batch;
-    this maintainer folds each batch's pairs into a component labeling
-    that always equals the global CC over every pair seen so far.
-
-    The trick that makes per-batch cost cheap is the STATE SHAPE: labels
-    are kept as a star forest (doc → component root, height 1). Folding
-    a delta re-runs CC (operators/components.py::connected_components)
-    over star-edges ∪ new pairs: a state under the operator's one-task
-    bound is labelled by a single union-find task, and a larger one runs
-    large-star/small-star, which on height-1 input converges in ~2
-    rounds regardless of how long the duplicate chains were when
-    ORIGINALLY discovered, because the state has already collapsed their
-    diameter. Cost per batch: O(|clustered docs| + |delta pairs|) edges,
-    never a recompute over historical pair sets.
-
-    Root stability: a component's root is its min doc_id, and folding
-    new pairs can only LOWER a root (min over a superset) — so labels
-    are monotone across batches and the final labeling is split-
-    invariant (tests/test_lsh_bridge_property.py pins this).
-
-    Memory-tier state (localCheckpoint) mirrors the bridge; a durable
-    deployment snapshots the label relation with the same
-    write-new-then-swap protocol — labels, like bands, are append-or-
-    lower (never deleted), so redelivered pairs fold to a no-op.
-    """
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-        self._labels: DataFrame | None = None  # (doc_id, component)
-
-    def read_labels(self) -> DataFrame:
-        if self._labels is not None:
-            return self._labels
-        return self.spark.createDataFrame([], "doc_id long, component long")
-
-    def fold_pairs(self, pairs: DataFrame) -> DataFrame:
-        """Fold one batch's (doc_id_a, doc_id_b) pairs in; return the
-        updated full labeling (docs that appear in any pair so far)."""
-        from fitness_nutrition_data_pipeline_spark.operators.components import (
-            connected_components,
-        )
-
-        delta = pairs.select(
-            F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-        )
-        state = self.read_labels()
-        star = state.where(F.col("doc_id") != F.col("component")).select(
-            F.col("doc_id").alias("src"), F.col("component").alias("dst")
-        )
-        # roots with no non-self edge (singleton components cannot occur
-        # here — every labeled doc came from a pair — but a root whose
-        # members all re-link is only represented as a dst) ride along
-        # via the symmetrization inside the star operator.
-        labels = connected_components(star.unionByName(delta)).select(
-            F.col("vertex").alias("doc_id"), "component"
-        )
-        self._labels = labels.localCheckpoint()
-        return self._labels

@@ -23,8 +23,8 @@ are the only check definitions.
 Scoring matches `_process_validation_row` (main_etl_pipeline.py:902-920):
 start 100; −5 when the failing check name contains PK CHECK / ORPHAN /
 NULL VIOL; −1 for other findings; floored at 0. Lenient rule (:841-842):
-a check that does not resolve (e.g. its column is gone) is left out of
-its table's aggregate, logged, counted as attempted and leaves the score
+a check that reads a column the table's schema lacks is left out of its
+table's aggregate, logged, counted as attempted and leaves the score
 unchanged; when a table's aggregate fails to run, `COUNT FAILED <table>`
 is scored and each of its checks counts as attempted, unscored. An
 analytical-corpus statement that fails counts the same way.
@@ -52,26 +52,27 @@ EXPECTED_TABLES = [
     "Bridge_User_HealthCondition", "Bridge_User_WorkoutPreference", "Bridge_User_DietPreference",
 ]
 
-# table → PK expression (composite keys via concat, validation.sql:111-120)
+# table → PK columns; a composite key is checked as the concat of its
+# columns (validation.sql:111-120)
 PK_CHECKS = {
-    "Dim_Date": "DateKey",
-    "Dim_User": "UserKey",
-    "Dim_FitnessGoal": "GoalKey",
-    "Dim_FitnessType": "TypeKey",
-    "Dim_HealthCondition": "ConditionKey",
-    "Dim_Exercise": "ExerciseKey",
-    "Dim_Diet": "DietKey",
-    "Dim_FoodItem": "FoodKey",
-    "Dim_MetricType": "MetricTypeKey",
-    "Dim_MealType": "MealTypeKey",
-    "Dim_WorkoutType": "WorkoutTypeKey",
-    "Bridge_User_HealthCondition": "concat(UserKey, ':', ConditionKey)",
-    "Bridge_User_WorkoutPreference": "concat(UserKey, ':', ExerciseKey)",
-    "Bridge_User_DietPreference": "concat(UserKey, ':', DietKey)",
-    "Fact_UserSnapshot": "SnapshotKey",
-    "Fact_WorkoutSession": "SessionKey",
-    "Fact_HealthMetric": "MetricKey",
-    "Fact_NutritionLog": "LogKey",
+    "Dim_Date": ("DateKey",),
+    "Dim_User": ("UserKey",),
+    "Dim_FitnessGoal": ("GoalKey",),
+    "Dim_FitnessType": ("TypeKey",),
+    "Dim_HealthCondition": ("ConditionKey",),
+    "Dim_Exercise": ("ExerciseKey",),
+    "Dim_Diet": ("DietKey",),
+    "Dim_FoodItem": ("FoodKey",),
+    "Dim_MetricType": ("MetricTypeKey",),
+    "Dim_MealType": ("MealTypeKey",),
+    "Dim_WorkoutType": ("WorkoutTypeKey",),
+    "Bridge_User_HealthCondition": ("UserKey", "ConditionKey"),
+    "Bridge_User_WorkoutPreference": ("UserKey", "ExerciseKey"),
+    "Bridge_User_DietPreference": ("UserKey", "DietKey"),
+    "Fact_UserSnapshot": ("SnapshotKey",),
+    "Fact_WorkoutSession": ("SessionKey",),
+    "Fact_HealthMetric": ("MetricKey",),
+    "Fact_NutritionLog": ("LogKey",),
 }
 
 # (fact, fk, dim, dim_key)
@@ -143,63 +144,70 @@ def _existing(spark: SparkSession, tables: list[str]) -> list[str]:
     return [t for t in tables if t.lower() in views]
 
 
-def _scalar_checks(present: list[str], bounds: dict[str, float]) -> list[tuple[str, str, str]]:
-    """(table, check name, aggregate expression) for every scalar check on a
-    present table, in report order: PK, ORPHAN, NULL, RANGE. An orphan is a
-    non-NULL FK that is not a key of its dim. It is tested with an IN
-    subquery (an existence join), not a LEFT JOIN, so a duplicated dim key
-    cannot multiply the rows the table's other checks count; and not with a
-    correlated NOT EXISTS, which Spark 4.1 fails to execute inside an
-    aggregate over a view that is a self-union."""
+def _scalar_checks(
+    present: list[str], bounds: dict[str, float]
+) -> list[tuple[str, str, str, list[tuple[str, str]]]]:
+    """(table, check name, aggregate expression, the (table, column) pairs
+    it reads) for every scalar check on a present table, in report order:
+    PK, ORPHAN, NULL, RANGE. An orphan is a non-NULL FK that is not a key
+    of its dim. It is tested with an IN subquery (an existence join), not
+    a LEFT JOIN, so a duplicated dim key cannot multiply the rows the
+    table's other checks count; and not with a correlated NOT EXISTS,
+    which Spark 4.1 fails to execute inside an aggregate over a view that
+    is a self-union."""
 
     def outside(col: str, lo: str, hi: str) -> str:
         return f"{col} IS NOT NULL AND ({col} < {bounds[lo]} OR {col} > {bounds[hi]})"
 
     # range checks (validation.sql:259-291; bounds ≙ SET @vars :7-13)
     ranges = [
-        ("Fact_UserSnapshot", "Height", outside("Height", "min_height_m", "max_height_m")),
-        ("Fact_UserSnapshot", "Weight", outside("Weight", "min_weight_kg", "max_weight_kg")),
-        ("Fact_UserSnapshot", "BMI", outside("BMI", "min_bmi", "max_bmi")),
-        ("Fact_WorkoutSession", "DurationHours", f"DurationHours > {bounds['max_workout_hours']}"),
-        ("Fact_WorkoutSession", "CaloriesBurned", "CaloriesBurned < 0"),
-        ("Fact_WorkoutSession", "TotalSteps", "TotalSteps < 0"),
-        ("Fact_HealthMetric", "HealthMetric bmi",
+        ("Fact_UserSnapshot", "Height", ["Height"], outside("Height", "min_height_m", "max_height_m")),
+        ("Fact_UserSnapshot", "Weight", ["Weight"], outside("Weight", "min_weight_kg", "max_weight_kg")),
+        ("Fact_UserSnapshot", "BMI", ["BMI"], outside("BMI", "min_bmi", "max_bmi")),
+        ("Fact_WorkoutSession", "DurationHours", ["DurationHours"],
+         f"DurationHours > {bounds['max_workout_hours']}"),
+        ("Fact_WorkoutSession", "CaloriesBurned", ["CaloriesBurned"], "CaloriesBurned < 0"),
+        ("Fact_WorkoutSession", "TotalSteps", ["TotalSteps"], "TotalSteps < 0"),
+        ("Fact_HealthMetric", "HealthMetric bmi", ["Unit", "Value"],
          f"Unit = 'bmi' AND {outside('Value', 'min_bmi', 'max_bmi')}"),
-        ("Fact_NutritionLog", "ServingSize", "ServingSize <= 0"),
+        ("Fact_NutritionLog", "ServingSize", ["ServingSize"], "ServingSize <= 0"),
     ]
-    checks = [(t, f"PK CHECK {t}", f"count(*) - count(DISTINCT {pk})") for t, pk in PK_CHECKS.items()]
+
+    def key(cols: tuple[str, ...]) -> str:
+        return cols[0] if len(cols) == 1 else "concat(" + ", ':', ".join(cols) + ")"
+
+    checks = [
+        (t, f"PK CHECK {t}", f"count(*) - count(DISTINCT {key(cols)})", [(t, c) for c in cols])
+        for t, cols in PK_CHECKS.items()
+    ]
     checks += [
         (fact, f"ORPHAN {fact}.{fk}",
-         f"count_if(f.{fk} IS NOT NULL AND (f.{fk} IN (SELECT d.{dk} FROM {dim} d)) IS NOT TRUE)")
+         f"count_if(f.{fk} IS NOT NULL AND (f.{fk} IN (SELECT d.{dk} FROM {dim} d)) IS NOT TRUE)",
+         [(fact, fk), (dim, dk)])
         for fact, fk, dim, dk in FK_CHECKS
         if dim in present
     ]
-    checks += [(t, f"NULL VIOL {t}.{col}", f"count_if({col} IS NULL)") for t, col in NOT_NULL_CHECKS]
-    checks += [(t, f"RANGE {name}", f"count_if({pred})") for t, name, pred in ranges]
+    checks += [(t, f"NULL VIOL {t}.{col}", f"count_if({col} IS NULL)", [(t, col)]) for t, col in NOT_NULL_CHECKS]
+    checks += [
+        (t, f"RANGE {name}", f"count_if({pred})", [(t, c) for c in cols])
+        for t, name, cols, pred in ranges
+    ]
     return [c for c in checks if c[0] in present]
 
 
 def _read_table(
     spark: SparkSession, t: str, checks: list[tuple[str, str]]
 ) -> tuple[int | None, dict[str, int]]:
-    """Table ``t``'s row count and every check on it that resolves, as ONE
+    """Table ``t``'s row count and the given checks on it, as ONE
     aggregate → (count, {check name: violations}); (None, {}) when the
-    aggregate fails to run. Each check is first analyzed alone (no job
-    starts), so one that does not resolve costs only itself."""
-    runnable = []
-    for name, agg in checks:
-        try:
-            spark.sql(f"SELECT {agg} FROM {t} f")
-            runnable.append((name, agg))
-        except Exception as e:  # noqa: BLE001
-            logger.debug("check %s does not resolve: %s", name, str(e)[:120])
-    cols = ", ".join(["count(*)"] + [agg for _, agg in runnable])
+    aggregate fails to run."""
+    cols = ", ".join(["count(*)"] + [agg for _, agg in checks])
     try:
         row = spark.sql(f"SELECT {cols} FROM {t} f").collect()[0]
     except Exception as e:  # noqa: BLE001
         logger.debug("validation aggregate over %s failed: %s", t, str(e)[:120])
         return None, {}
-    return int(row[0]), {name: int(row[i + 1]) for i, (name, _) in enumerate(runnable)}
+    return int(row[0]), {name: int(row[i + 1]) for i, (name, _) in enumerate(checks)}
 
 
 def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = None) -> ValidationResults:
@@ -208,9 +216,17 @@ def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = No
     res = ValidationResults()
     present = _existing(spark, EXPECTED_TABLES)
     checks = _scalar_checks(present, bounds)
+    # a check runs only when every column it reads resolves; the schemas
+    # come from analysis alone (no job), and an unresolved check is left
+    # out up front instead of raising inside Spark
+    columns = {t: {c.lower() for c in spark.table(t).columns} for t in present}
+    runnable = [
+        (ct, n, a) for ct, n, a, reads in checks
+        if all(c.lower() in columns[rt] for rt, c in reads)
+    ]
     read = declare_parallel(
         [
-            (t, partial(_read_table, spark, t, [(n, a) for ct, n, a in checks if ct == t]))
+            (t, partial(_read_table, spark, t, [(n, a) for ct, n, a in runnable if ct == t]))
             for t in present
         ],
         max_workers=8,
@@ -228,7 +244,7 @@ def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = No
             res.table_counts[t] = count
     res.record("MISSING TABLES", len(EXPECTED_TABLES) - len(present))
 
-    for t, name, _ in checks:
+    for t, name, _, _ in checks:
         val = read[t][1].get(name)
         if val is None:
             # lenient like the reference (:841-842): attempted, but

@@ -1,6 +1,5 @@
-"""Staged-for-r16 ANN beam entry (see the STAGED note at the end of
-queries/llm_ops.py): the exact driver-gate compare on the
-ivf_beam_recall_contract pair, plus the ladder property the query
+"""The registered ANN beam query (queries/llm_ops.py): the exact
+driver-gate compare on the ivf_beam_recall_contract pair, plus the ladder property the query
 exists to demonstrate — beam recall (nprobe=3) dominates single-probe
 recall (ann_recall_contract) at a measured candidate cost.
 """

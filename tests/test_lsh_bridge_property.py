@@ -11,7 +11,7 @@ collisions actually occur (docs drawn from few token templates collide
 in all four bands; unrelated docs collide in none), and the expected
 pair set comes from a single global run of the SAME band algebra — the
 batch/incremental equivalence is the property under test, the band
-algebra itself is pinned cross-engine by tests/test_lsh_bridge_staged.py.
+algebra itself is pinned cross-engine by tests/test_lsh_dedup_replay.py.
 """
 
 
@@ -239,54 +239,6 @@ def test_bridge_under_real_stream(spark):
         assert emitted == expected
     finally:
         shutil.rmtree(base, ignore_errors=True)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(corpus_and_split())
-def test_incremental_components_split_invariant(spark, case):
-    """IncrementalComponents folded batch-by-batch must end at the same
-    labeling as one global fold, for ANY batch assignment — and roots
-    must be monotone (a doc's component id never increases as new pairs
-    arrive, since the root is a min over a growing reachable set)."""
-    from fitness_nutrition_data_pipeline_spark.streaming.lsh_bridge import (
-        IncrementalComponents,
-    )
-
-    docs, assign = case
-    batch_of = dict(zip([d for d, _ in docs], assign))
-
-    # global truth: one bridge pass over everything, one fold
-    gb = LshDedupBridge(spark)
-    all_pairs = gb.process_batch(
-        spark.createDataFrame(docs, "doc_id long, text string"), 0
-    )
-    gcc = IncrementalComponents(spark)
-    expected = {
-        r["doc_id"]: r["component"] for r in gcc.fold_pairs(all_pairs).collect()
-    }
-
-    bridge = LshDedupBridge(spark)
-    cc = IncrementalComponents(spark)
-    prev: dict[int, int] = {}
-    labels: dict[int, int] = {}
-    for b in range(3):
-        batch = [(d, t) for (d, t) in docs if batch_of[d] == b]
-        pairs = bridge.process_batch(
-            spark.createDataFrame(batch or [], "doc_id long, text string"), b
-        )
-        labels = {
-            r["doc_id"]: r["component"] for r in cc.fold_pairs(pairs).collect()
-        }
-        for doc, comp in labels.items():
-            assert comp <= prev.get(doc, comp), (
-                f"doc {doc}: component rose {prev[doc]} -> {comp}"
-            )
-        prev = dict(labels)
-    assert labels == expected
 
 
 def test_sink_failure_does_not_advance_state(spark):

@@ -1,5 +1,5 @@
-"""Staged-for-r17 streaming-dedup bridge entry (see the STAGED note at
-the end of queries/llm_ops.py): the exact driver-gate compare — Spark
+"""The registered streaming-dedup bridge replay, lsh_dedup_batch_replay
+(queries/llm_ops.py): the exact driver-gate compare — Spark
 builder vs DuckDB oracle, pandas-lane fetch, column-sorted value
 normalization — on the lsh_dedup_batch_replay pair at two scale
 factors, plus the one structural property the replay exists to
@@ -60,30 +60,3 @@ def test_lsh_dedup_batch_replay_matches_oracle(spark, sf):
             d["doc_id_a"] % 3, d["doc_id_b"] % 3
         )
 
-
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_incremental_dedup_clusters_matches_exact_oracle(spark, sf):
-    """STAGED r17+: the incrementally-maintained labeling (bridge pairs
-    folded per batch into a star-forest CC state) must equal the global
-    exact transitive closure — the same oracle dedup_clusters_exact
-    answers in one shot, proving incremental == batch for the cluster
-    stage of the dedup ladder."""
-    from fitness_nutrition_data_pipeline_spark.queries.llm_ops import (
-        _exact_clusters_oracle,
-        incremental_dedup_clusters,
-    )
-
-    sf_dir = f"/root/testdata/{sf}"
-    if not os.path.isdir(sf_dir):
-        pytest.skip(f"{sf_dir} absent")
-    con = connect_oracle(sf_dir)
-    o_cols, o_rows = fetch_oracle(con.sql(_exact_clusters_oracle()))
-    s_cols, s_rows = fetch_spark(incremental_dedup_clusters(spark, sf_dir))
-    assert len(s_rows) == len(o_rows) > 0
-    s_norm = norm_rows(s_cols, s_rows)
-    o_norm = norm_rows(o_cols, o_rows)
-    assert s_norm[0] == o_norm[0]
-    assert s_norm[1] == o_norm[1], (
-        "incremental labeling diverged from the one-shot transitive "
-        "closure — the IVM contract (incremental == batch) is broken"
-    )

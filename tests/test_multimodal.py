@@ -1,5 +1,5 @@
-"""Multimodal column plumbing: metadata sniffing (JVM-side), Arrow-batched
-feature extraction and the gated decode path."""
+"""Multimodal column plumbing: metadata sniffing (JVM-side) and
+Arrow-batched feature extraction."""
 
 import pytest
 
@@ -8,9 +8,6 @@ from fitness_nutrition_data_pipeline_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     attach_metadata,
     byte_histogram_features,
-    decode_images,
-    resize_images,
-    sample_video_frames,
 )
 
 PNG = b"\x89PNG\r\n\x1a\n" + bytes(range(64))
@@ -51,146 +48,3 @@ def test_byte_histogram_features(media):
     # deterministic across runs
     again = {r.media_id: r.features for r in byte_histogram_features(media).collect()}
     assert again[1] == v
-
-
-def test_decode_images_gated(media):
-    out = {r.media_id: r for r in decode_images(media).collect()}
-    r = out[1]
-    # container has no PIL → deterministic stub; fields populated either way
-    assert r.height >= 1 and r.width >= 1 and r.channels >= 1
-    assert out[5].decoded is False and out[5].height is None
-    # stub is deterministic
-    out2 = {r.media_id: r for r in decode_images(media).collect()}
-    assert (r.height, r.width, r.mean_luma) == (out2[1].height, out2[1].width, out2[1].mean_luma)
-
-
-def test_resize_images_contract(media):
-    """Resize plumbing: every non-null blob yields a thumbnail whose
-    dimensions respect the max_side contract; NULL payloads pass through
-    as NULL thumbs; the stub path is deterministic."""
-    out = {r.media_id: r for r in resize_images(media, max_side=16).collect()}
-    assert set(out) == {1, 2, 3, 4, 5, 6}
-    for mid in (1, 2, 3, 4, 6):
-        r = out[mid]
-        assert r.thumb is not None and len(r.thumb) >= 1
-        assert 1 <= r.thumb_h <= 16 and 1 <= r.thumb_w <= 16
-        # stub thumbnails are raw gray: exactly h*w bytes
-        if not r.resized:
-            assert len(r.thumb) == r.thumb_h * r.thumb_w
-    assert out[5].thumb is None and out[5].resized is False
-    out2 = {r.media_id: r for r in resize_images(media, max_side=16).collect()}
-    assert bytes(out[1].thumb) == bytes(out2[1].thumb)
-
-
-def test_video_frame_sampling_contract(media):
-    """Frame-sampling plumbing: fan-out rows carry (media_id, frame_no,
-    ts_s, frame); frame numbering is dense from 0 with the sampling
-    cadence; NULL payloads produce no rows; deterministic stub."""
-    out = sample_video_frames(media, every_n_seconds=1.0).collect()
-    by_media = {}
-    for r in out:
-        by_media.setdefault(r.media_id, []).append(r)
-    assert set(by_media) == {1, 2, 3, 4, 6}  # media 5 (NULL payload) absent
-    assert len(by_media[6]) >= 2  # big blob fans out to multiple frames
-    for mid, rows in by_media.items():
-        rows.sort(key=lambda r: r.frame_no)
-        assert [r.frame_no for r in rows] == list(range(len(rows)))
-        assert all(abs(r.ts_s - r.frame_no * 1.0) < 1e-9 for r in rows)
-        assert all(r.frame is not None and len(r.frame) > 0 for r in rows)
-        assert all(r.decoded is False for r in rows)  # no codec here
-    # every-2s sampling halves (or keeps at 1) the frame count
-    out2 = sample_video_frames(media, every_n_seconds=2.0).collect()
-    n2 = {}
-    for r in out2:
-        n2[r.media_id] = n2.get(r.media_id, 0) + 1
-    for mid, rows in by_media.items():
-        assert n2[mid] == max(1, len(rows) // 2)
-    # deterministic frames
-    again = sample_video_frames(media, every_n_seconds=1.0).collect()
-    key = lambda rs: sorted((r.media_id, r.frame_no, bytes(r.frame)) for r in rs)
-    assert key(out) == key(again)
-
-
-def test_audio_waveform_stats_real_wav_decode(spark):
-    """A genuine PCM WAV (stdlib-written 440 Hz int16 sine) must decode on
-    the REAL path with exact header values and the analytically-known
-    sine RMS (1/sqrt(2) of the amplitude); a non-WAV payload must take
-    the marked fallback with decoded=False."""
-    import io
-    import math
-    import struct
-    import wave
-
-    from fitness_nutrition_data_pipeline_spark.operators.multimodal import (
-        audio_waveform_stats,
-    )
-
-    sr, secs, amp = 16000, 2, 0.5
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        samples = [
-            int(amp * 32767 * math.sin(2 * math.pi * 440 * i / sr))
-            for i in range(sr * secs)
-        ]
-        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    wav_bytes = buf.getvalue()
-
-    df = spark.createDataFrame(
-        [(1, bytearray(wav_bytes)), (2, bytearray(b"not audio at all"))],
-        "media_id long, payload binary",
-    )
-    rows = {r.media_id: r for r in audio_waveform_stats(df).collect()}
-
-    real = rows[1]
-    assert real.decoded is True
-    assert real.sample_rate == sr
-    assert real.n_channels == 1
-    assert abs(real.duration_s - secs) < 1e-6
-    # sine RMS = amp/sqrt(2); int16 quantization keeps it within 1e-3
-    assert abs(real.rms - amp / math.sqrt(2)) < 1e-3
-    assert abs(real.peak - amp) < 1e-3
-
-    fake = rows[2]
-    assert fake.decoded is False
-    assert fake.sample_rate in {8000, 16000, 24000, 32000, 40000, 48000}
-
-
-def test_audio_waveform_stats_8bit_unsigned(spark):
-    """8-bit WAV PCM stores UNSIGNED samples (0-255, silence = 128) — the
-    ADVICE-r5 finding: decoding them as signed int8 reported rms=1.0 for
-    a silence file. A u8 silence file must decode to rms≈0 peak≈0, and a
-    full-scale u8 square wave to rms≈peak≈1."""
-    import io
-    import wave
-
-    from fitness_nutrition_data_pipeline_spark.operators.multimodal import (
-        audio_waveform_stats,
-    )
-
-    def u8_wav(samples: bytes) -> bytes:
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(1)
-            w.setframerate(8000)
-            w.writeframes(samples)
-        return buf.getvalue()
-
-    silence = u8_wav(bytes([128]) * 8000)
-    square = u8_wav(bytes([0, 255]) * 4000)
-
-    df = spark.createDataFrame(
-        [(1, bytearray(silence)), (2, bytearray(square))],
-        "media_id long, payload binary",
-    )
-    rows = {r.media_id: r for r in audio_waveform_stats(df).collect()}
-
-    assert rows[1].decoded is True
-    assert abs(rows[1].rms) < 1e-6
-    assert abs(rows[1].peak) < 1e-6
-    assert rows[2].decoded is True
-    assert abs(rows[2].rms - 1.0) < 5e-3
-    assert abs(rows[2].peak - 1.0) < 5e-3

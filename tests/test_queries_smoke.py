@@ -6,11 +6,14 @@ regressions fast: every query plans and executes, row counts are sane, and
 operator-specific properties hold.
 """
 
+import ast
 import warnings
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from fitness_nutrition_data_pipeline_spark import queries as queries_pkg
 from fitness_nutrition_data_pipeline_spark.queries import all_specs
 
 SPECS = all_specs()
@@ -41,6 +44,27 @@ def test_oracle_coverage():
     assert sorted(missing) == sorted(_ORACLE_EXEMPT), (
         f"queries without oracle: {missing}"
     )
+
+
+def test_every_public_builder_is_registered():
+    """A public top-level ``(spark, sf_dir, ...)`` function in queries/ is a
+    query builder, so it must be ``@register``ed: an unregistered builder
+    is out of the oracle sweep and the plan-digest map, and runs nowhere
+    but in its own tests. Helpers with that signature stay private."""
+    pkg = Path(queries_pkg.__file__).parent
+    unregistered = []
+    for path in sorted(pkg.glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            params = [a.arg for a in node.args.posonlyargs + node.args.args]
+            registered = any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in node.decorator_list
+            )
+            if params[:2] == ["spark", "sf_dir"] and not registered:
+                unregistered.append(f"{path.stem}.{node.name}")
+    assert unregistered == [], f"unregistered query builders: {unregistered}"
 
 
 def test_date_dimension_shape(spark, sf_dir):

@@ -6,6 +6,7 @@ is pinned; and validation stays within a fixed Spark job budget."""
 import logging
 
 import pytest
+from pyspark.logger import PySparkLogger
 from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.config import PipelineConfig
@@ -33,8 +34,16 @@ def _validate_snapshot_only(spark, columns: str):
 
 def test_range_check_without_column_counts_but_does_not_score(spark, caplog):
     with_height = _validate_snapshot_only(spark, "*, 1.75 AS Height")
-    with caplog.at_level(logging.WARNING):
-        without = _validate_snapshot_only(spark, "*")
+    # PySpark logs every AnalysisException it raises to this logger (which
+    # does not propagate); a check left out by its schema raises none
+    query_context = PySparkLogger.getLogger("SQLQueryContextLogger")
+    query_context.addHandler(caplog.handler)
+    try:
+        with caplog.at_level(logging.WARNING):
+            without = _validate_snapshot_only(spark, "*")
+    finally:
+        query_context.removeHandler(caplog.handler)
+    assert [r for r in caplog.records if r.name == "SQLQueryContextLogger"] == []
 
     assert without.checks_run == with_height.checks_run
     assert without.quality_score == with_height.quality_score
