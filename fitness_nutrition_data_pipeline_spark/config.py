@@ -22,17 +22,6 @@ FITNESS_GOALS: dict[str, tuple[str, ...]] = {
 
 DEFAULT_GOAL = "maintain_health"
 
-# Data-quality bounds (reference config.py:47-55 + validation.sql:7-13).
-QUALITY_THRESHOLDS: dict[str, float] = {
-    "minimum_age": 13,
-    "maximum_age": 100,
-    "minimum_weight": 30.0,  # kg
-    "maximum_weight": 300.0,  # kg
-    "minimum_height": 1.0,  # m
-    "maximum_height": 2.5,  # m
-    "completeness_threshold": 0.7,
-}
-
 # Validation-corpus bounds (validation.sql:7-13 session variables).
 VALIDATION_BOUNDS: dict[str, float] = {
     "min_height_m": 1.20,

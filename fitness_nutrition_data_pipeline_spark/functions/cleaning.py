@@ -106,15 +106,9 @@ def standardize_fitness_goal(
     return F.coalesce(expr.otherwise(F.lit(default)), F.lit(default))
 
 
-def null_out_of_range(
-    col: Column | str, lo: float, hi: float, *, inclusive: bool = False
-) -> Column:
+def null_out_of_range(col: Column | str, lo: float, hi: float) -> Column:
     """Range-validity conditional null-out (P5): value outside (lo, hi) →
-    NULL. Bounds are EXCLUSIVE by default, matching the reference's
-    ``10 < bmi < 60`` (main_etl_pipeline.py:204, 581)."""
+    NULL. Bounds are EXCLUSIVE, matching the reference's ``10 < bmi < 60``
+    (main_etl_pipeline.py:204, 581)."""
     c = F.col(col) if isinstance(col, str) else col
-    if inclusive:
-        cond = (c >= lo) & (c <= hi)
-    else:
-        cond = (c > lo) & (c < hi)
-    return F.when(cond, c).otherwise(F.lit(None))
+    return F.when((c > lo) & (c < hi), c).otherwise(F.lit(None))

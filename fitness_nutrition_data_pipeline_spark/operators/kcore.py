@@ -257,55 +257,3 @@ def kcore_peel(
     # max_rounds exhaustion / empty-core break: the n-1 round is garbage
     _drop_stale(spark, state_dir, prev_tags)
     return cur.select("src", "dst"), rounds
-
-
-def core_numbers(
-    edges: DataFrame,
-    k_max: int,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    state_dir: str | None = None,
-) -> DataFrame:
-    """(vertex, core) for every vertex: the largest k <= k_max whose
-    k-core contains the vertex (0 if below the 1-core, i.e. isolated).
-
-    Computed by nested peeling — the (k+1)-core is a subgraph of the
-    k-core, so each level peels the PREVIOUS level's output, and total
-    work is sum over levels of that level's (shrinking) edge mass, not
-    k_max full passes over the input.
-    """
-    spark = edges.sparkSession
-    sym = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    out = sym.select(F.col("src").alias("vertex")).distinct().withColumn(
-        "core", F.lit(0)
-    )
-    cur = sym
-    last_k = 0
-    for k in range(1, k_max + 1):
-        sub = _join(state_dir, f"k{k}") if state_dir else None
-        cur, _ = kcore_peel(cur, k, state_dir=sub)
-        # kcore_peel's first _pin re-materialized cur under k{k}, so the
-        # previous level's directory is now garbage (ADVICE r10: the
-        # per-level k{j} / core_r{j} state used to accumulate for the
-        # whole run)
-        if k > 1:
-            _drop_stale(spark, state_dir, [f"k{k - 1}"])
-        members = cur.select(F.col("src").alias("vertex")).distinct()
-        out = (
-            out.join(members.withColumn("_in", F.lit(k)), "vertex", "left")
-            .select(
-                "vertex",
-                F.coalesce("_in", F.col("core")).alias("core"),
-            )
-        )
-        out = _pin(out, state_dir, f"core_r{k}")
-        if last_k:
-            _drop_stale(spark, state_dir, [f"core_r{last_k}"])
-        last_k = k
-        if cur.isEmpty():
-            break
-    # only core_r{last_k} (backing the returned DataFrame) and the final
-    # level's k{last_k}/edges_r* remain; both back live DataFrames and
-    # are the caller's to clean once consumed
-    return out

@@ -127,30 +127,3 @@ def assign_sequential_ids(
         .withColumn(key_col, (F.col(_LOCAL) - 1 + F.col("__offset")).cast("long"))
         .drop(_PART, _LOCAL, "__offset")
     )
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    *,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the (large, skewed) left side and
-    replicate the right side across all salt values, so one hot key spreads
-    over ``n_salts`` reducers instead of melting a single task.
-
-    Result is identical to ``left.join(right, key, how)`` — only the
-    shuffle distribution changes. This is the manual form of AQE's
-    skew-join split, for engines/paths where AQE can't see the skew
-    (e.g. a skewed key feeding a window, or non-AQE clusters).
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        # right/full joins would duplicate unmatched replicated right rows
-        raise ValueError(f"salted_join supports inner/left joins, not {how!r}")
-    salted_left = left.withColumn("__salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salts)))
-    salts = left.sparkSession.range(n_salts).select(F.col("id").cast("int").alias("__salt"))
-    replicated_right = right.crossJoin(F.broadcast(salts))
-    out = salted_left.join(replicated_right, [key, "__salt"], how)
-    return out.drop("__salt")

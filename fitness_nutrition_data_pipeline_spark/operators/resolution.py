@@ -31,7 +31,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fitness_nutrition_data_pipeline_spark.config import DEFAULT_GOAL, PipelineConfig
+from fitness_nutrition_data_pipeline_spark.config import BMI_RANGE, DEFAULT_GOAL, PipelineConfig
 from fitness_nutrition_data_pipeline_spark.functions.cleaning import (
     normalize_columns,
     null_out_of_range,
@@ -109,7 +109,7 @@ def _prep_mendeley(mendeley: DataFrame, cfg: PipelineConfig) -> DataFrame:
             gender.alias("Gender"),
             F.bround(weight, 1).alias("Weight"),
             F.bround(height, 2).alias("Height"),
-            null_out_of_range(F.col("bmi").try_cast("double"), 10, 60).alias("BMI"),
+            null_out_of_range(F.col("bmi").try_cast("double"), *BMI_RANGE).alias("BMI"),
             F.when(conditions != "", conditions).alias("HealthConditions"),
             goal.alias("FitnessGoal"),
             F.col("fitness_type").alias("FitnessType"),

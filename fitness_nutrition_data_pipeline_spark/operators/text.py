@@ -189,12 +189,10 @@ def pii_scan(
     df: DataFrame,
     text_col: str,
     patterns: dict[str, str],
-    *,
-    redact: bool = True,
 ) -> DataFrame:
     """PII detection/redaction over a free-text column (training-data
     hygiene pass): per-pattern match counts ``n_<name>``, a ``pii_total``,
-    and (optionally) a ``redacted`` copy with every match replaced by
+    and a ``redacted`` copy with every match replaced by
     ``[<NAME>]``. Pure regexp Column expressions — linear scan, no
     shuffle, no Python. Patterns are applied case-insensitively (``(?i)``)
     against the ORIGINAL text, so the redacted copy preserves the
@@ -207,12 +205,10 @@ def pii_scan(
         out = out.withColumn(f"n_{name}", cnt)
         total = total + cnt
     out = out.withColumn("pii_total", total)
-    if redact:
-        red = F.col(text_col)
-        for name, pat in patterns.items():
-            red = F.regexp_replace(red, f"(?i){pat}", f"[{name.upper()}]")
-        out = out.withColumn("redacted", red)
-    return out
+    red = F.col(text_col)
+    for name, pat in patterns.items():
+        red = F.regexp_replace(red, f"(?i){pat}", f"[{name.upper()}]")
+    return out.withColumn("redacted", red)
 
 
 def benchmark_gram_set(benchmark: DataFrame, text_col: str, *, n: int = 5) -> DataFrame:

@@ -15,7 +15,7 @@ from datetime import date, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fitness_nutrition_data_pipeline_spark.config import PipelineConfig
+from fitness_nutrition_data_pipeline_spark.config import BMI_RANGE, PipelineConfig
 from fitness_nutrition_data_pipeline_spark.functions.cleaning import null_out_of_range
 
 # Metric keys from Dim_MetricType (main_etl_pipeline.py:451-453).
@@ -112,7 +112,7 @@ def build_fact_health_metric(
         keyed = _with_keys(w, mapping, dim_date)
         # wide→long unpivot: each log row fans out to (weight, bmi)
         # (main_etl_pipeline.py:587-593) — stack(2, ...), with the bmi leg
-        # range-nulled (10,60) exclusive.
+        # range-nulled to BMI_RANGE, exclusive.
         parts.append(
             keyed.select(
                 "UserKey",
@@ -121,7 +121,7 @@ def build_fact_health_metric(
                     f"stack(2, {METRIC_KEYS['weight']}L, CAST(WeightKg AS DOUBLE), 'kg',"
                     f" {METRIC_KEYS['bmi']}L, CAST(NULL AS DOUBLE), 'bmi')"
                 ).alias("MetricTypeKey", "_raw", "Unit"),
-                null_out_of_range(F.col("BMI").cast("double"), 10, 60).alias("_bmi"),
+                null_out_of_range(F.col("BMI").cast("double"), *BMI_RANGE).alias("_bmi"),
                 F.col("WeightKg").cast("double").alias("_kg"),
             ).select(
                 "UserKey",

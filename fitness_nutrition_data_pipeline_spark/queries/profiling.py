@@ -170,8 +170,9 @@ def interval_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle), a 1-row global summary (broadcast back onto the top-k "
     "rows), and skew_factor = max/mean key frequency. skew_factor near "
     "1 clears the join for plain hash partitioning; a large value routes "
-    "the named heavy keys to `salted_join` / AQE skew handling. Top-10 "
-    "via TakeOrderedAndProject — no global sort of the key table.",
+    "the named heavy keys to the salting of `skew_salted_join_audit` / AQE "
+    "skew handling. Top-10 via TakeOrderedAndProject — no global sort of "
+    "the key table.",
 )
 def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

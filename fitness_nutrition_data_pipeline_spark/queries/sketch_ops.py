@@ -775,7 +775,6 @@ def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines (the NDCG-weights / _POIS_CASE precedent): p=8 -> m=256 registers,
 # alpha_256 = 0.7213/(1 + 1.079/256); the scaled numerator folds in m^2 and
 # the 2^49 register-sum scale so each engine does ONE float division.
-_HLL_M = 256
 _HLL_ALPHA_NUM = 2.6499581405668102e+19  # alpha_256 * 256^2 * 2^49
 
 _HLL_ORACLE = """

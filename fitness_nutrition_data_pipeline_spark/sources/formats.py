@@ -18,13 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def write_jsonl(df: DataFrame, path: str, *, compression: str | None = None) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """One JSON object per line, split across files by partition — the
     interchange format most external corpora arrive in."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def read_jsonl(

@@ -145,7 +145,7 @@ def _existing(spark: SparkSession, tables: list[str]) -> list[str]:
 
 
 def _scalar_checks(
-    present: list[str], bounds: dict[str, float]
+    present: list[str],
 ) -> list[tuple[str, str, str, list[tuple[str, str]]]]:
     """(table, check name, aggregate expression, the (table, column) pairs
     it reads) for every scalar check on a present table, in report order:
@@ -155,6 +155,7 @@ def _scalar_checks(
     table's other checks count; and not with a correlated NOT EXISTS,
     which Spark 4.1 fails to execute inside an aggregate over a view that
     is a self-union."""
+    bounds = VALIDATION_BOUNDS
 
     def outside(col: str, lo: str, hi: str) -> str:
         return f"{col} IS NOT NULL AND ({col} < {bounds[lo]} OR {col} > {bounds[hi]})"
@@ -210,12 +211,11 @@ def _read_table(
     return int(row[0]), {name: int(row[i + 1]) for i, (name, _) in enumerate(checks)}
 
 
-def validate_warehouse(spark: SparkSession, bounds: dict[str, float] | None = None) -> ValidationResults:
+def validate_warehouse(spark: SparkSession) -> ValidationResults:
     """Run the full corpus over registered warehouse views."""
-    bounds = bounds or VALIDATION_BOUNDS
     res = ValidationResults()
     present = _existing(spark, EXPECTED_TABLES)
-    checks = _scalar_checks(present, bounds)
+    checks = _scalar_checks(present)
     # a check runs only when every column it reads resolves; the schemas
     # come from analysis alone (no job), and an unresolved check is left
     # out up front instead of raising inside Spark
@@ -371,9 +371,9 @@ def storage_layout_inventory(
     """Physical-layout inventory — the Spark analogue of the reference's
     index inventory (validation.sql:397-404: information_schema.statistics
     GROUP_CONCAT of index columns per table). Spark has no B-tree
-    indexes; the layout features that stand in are date PARTITIONING
-    (scan pruning — load.py:83-84 partitions PARTITIONED_FACTS by
-    DateKey) and BUCKETING (shuffle-free co-located joins —
+    indexes; the layout features that stand in are hive-style
+    PARTITIONING (scan pruning — e.g. the day-partitioned event writes
+    of queries/warehouse_ops.py) and BUCKETING (shuffle-free co-located joins —
     load.py:write_bucketed, ≙ the fact-FK indexes of db_schema.sql:
     211-218). One row per table: partition columns read from the
     hive-style directory layout of its parquet path, bucket spec read
@@ -422,21 +422,3 @@ def storage_layout_inventory(
                 }
             )
     return rows
-
-
-def record_layout_checks(
-    res: ValidationResults,
-    inventory: list[dict],
-    *,
-    expect_partitioned: tuple[str, ...] = (),
-) -> None:
-    """Fold the layout inventory into the validation report: violations =
-    tables CONTRACTED to be date-partitioned (load.py:PARTITIONED_FACTS
-    when partition_facts=True) whose physical layout shows no partition
-    columns — the check the reference runs against its expected index
-    set."""
-    laid_out = {
-        r["table"] for r in inventory if r["layout"] != "unpartitioned"
-    }
-    missing = [t for t in expect_partitioned if t not in laid_out]
-    res.record("LAYOUT MISSING PARTITIONING", len(missing))

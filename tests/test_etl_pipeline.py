@@ -239,73 +239,30 @@ def test_full_run_report(pipeline, spark, tmp_path_factory):
     assert report["table_counts"]["Dim_Date"] == 3653
 
 
-@pytest.mark.parametrize("partition_facts", [False, True])
-def test_registered_views_keep_inferred_schema(
-    pipeline, spark, tmp_path_factory, partition_facts
-):
+def test_registered_views_keep_inferred_schema(pipeline, spark, tmp_path_factory):
     """load() registers each view with the schema it wrote instead of
     inferring it back from the files; the two must agree."""
     from fitness_nutrition_data_pipeline_spark.load import load_warehouse
 
     base = str(tmp_path_factory.mktemp("viewwh"))
-    paths = load_warehouse(
-        spark, pipeline.warehouse, base, partition_facts=partition_facts
-    )
+    paths = load_warehouse(spark, pipeline.warehouse, base)
     assert len(paths) == 18
     for name, path in paths.items():
         assert spark.table(name).schema == spark.read.parquet(path).schema, name
 
 
-def test_partitioned_fact_load(pipeline, spark, tmp_path_factory):
-    """Facts written partitionBy(DateKey) read back identically and carry
-    the partition column for pruning."""
-    base = str(tmp_path_factory.mktemp("partwh"))
-    from fitness_nutrition_data_pipeline_spark.load import load_warehouse
-
-    paths = load_warehouse(spark, pipeline.warehouse, base, partition_facts=True)
-    ws = spark.read.parquet(paths["Fact_WorkoutSession"])
-    assert ws.count() == pipeline.warehouse["Fact_WorkoutSession"].count()
-    assert "DateKey" in ws.columns
-
-
 def test_storage_layout_inventory(pipeline, spark, tmp_path_factory):
     """The layout-inventory validation family (≙ validation.sql:397-404's
-    index inventory): a partitioned warehouse write must report its
-    DateKey partition columns, the contract check must pass on it, and a
-    deliberately-unpartitioned write must flag every contracted fact."""
+    index inventory): the warehouse writes every table unpartitioned, and
+    the inventory must report each one that way."""
     base = str(tmp_path_factory.mktemp("layoutwh"))
-    from fitness_nutrition_data_pipeline_spark.load import (
-        PARTITIONED_FACTS,
-        load_warehouse,
-    )
+    from fitness_nutrition_data_pipeline_spark.load import load_warehouse
     from fitness_nutrition_data_pipeline_spark.validation import (
-        ValidationResults,
-        record_layout_checks,
         storage_layout_inventory,
     )
 
-    paths = load_warehouse(spark, pipeline.warehouse, base, partition_facts=True)
+    paths = load_warehouse(spark, pipeline.warehouse, base)
     inv = {r["table"]: r for r in storage_layout_inventory(spark, paths)}
-    for t in PARTITIONED_FACTS:
-        assert inv[t]["layout"] == "partitioned"
-        assert inv[t]["layout_columns"] == "DateKey"
-    assert inv["Dim_User"]["layout"] == "unpartitioned"
-
-    res = ValidationResults()
-    record_layout_checks(
-        res, list(inv.values()), expect_partitioned=PARTITIONED_FACTS
-    )
-    assert res.issues == [] and res.warnings == []
-
-    # unpartitioned write → every contracted fact is a violation
-    base2 = str(tmp_path_factory.mktemp("flatwh"))
-    paths2 = load_warehouse(spark, pipeline.warehouse, base2, partition_facts=False)
-    res2 = ValidationResults()
-    record_layout_checks(
-        res2,
-        storage_layout_inventory(spark, paths2),
-        expect_partitioned=PARTITIONED_FACTS,
-    )
-    # non-PK/ORPHAN/NULL families land in warnings (-1 each), like the
-    # reference's informational index rows
-    assert any("LAYOUT MISSING PARTITIONING: 3" in w for w in res2.warnings)
+    for t in paths:
+        assert inv[t]["layout"] == "unpartitioned", t
+        assert inv[t]["layout_columns"] == "", t

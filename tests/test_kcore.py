@@ -9,10 +9,7 @@ import random
 from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.operators import components
-from fitness_nutrition_data_pipeline_spark.operators.kcore import (
-    core_numbers,
-    kcore_peel,
-)
+from fitness_nutrition_data_pipeline_spark.operators.kcore import kcore_peel
 
 
 def _sym(spark, pairs):
@@ -143,20 +140,11 @@ def test_parquet_round_state_equals_localcheckpoint(
     assert core_d.count() == 6
 
 
-def test_core_numbers(spark, tmp_path_factory):
-    out = {
-        r["vertex"]: r["core"]
-        for r in core_numbers(_sym(spark, _TRIANGLE_TAIL), 3).collect()
-    }
-    assert out == {1: 2, 2: 2, 3: 2, 4: 1, 5: 1, 6: 1, 7: 1}
-
-
 def test_round_state_cleanup(spark, tmp_path, monkeypatch):
     """ADVICE r10: stale round-state must not accumulate. After a
-    converged peel only the final round's edge state remains; after
-    core_numbers only the final level's state (both back the returned
-    DataFrames). Cleanup goes through the Hadoop FS API, the same
-    resolution the writer used."""
+    converged peel only the final round's edge state remains (it backs
+    the returned DataFrame). Cleanup goes through the Hadoop FS API, the
+    same resolution the writer used."""
     import os
 
     sd = str(tmp_path / "peel_state")
@@ -176,15 +164,6 @@ def test_round_state_cleanup(spark, tmp_path, monkeypatch):
     core_l, rounds_l = kcore_peel(_sym(spark, _TRIANGLE_TAIL), 2, state_dir=sd_local)
     assert rounds_l == 4 and _vertices(core_l) == {1, 2, 3}
     assert sorted(os.listdir(sd_local)) == ["edges_local_r0"]
-
-    sd2 = str(tmp_path / "core_state")
-    out = core_numbers(_sym(spark, _TRIANGLE_TAIL), 3, state_dir=sd2)
-    got = {r["vertex"]: r["core"] for r in out.collect()}
-    assert got == {1: 2, 2: 2, 3: 2, 4: 1, 5: 1, 6: 1, 7: 1}
-    # k=3 peels to empty -> loop breaks at level 3; only level-3 state
-    # plus the final core_r3 pin may remain
-    leftover2 = sorted(os.listdir(sd2))
-    assert leftover2 == ["core_r3", "k3"], leftover2
 
 
 def test_local_peel_preserves_huge_int64_ids(spark):
