@@ -35,7 +35,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-document MinHash signature columns sig0..sig{n-1}.
 
-    ``carry_cols`` (r18): additional doc-grain columns of ``df`` carried
+    ``carry_cols``: additional doc-grain columns of ``df`` carried
     through the explode → partial-agg pipeline via ``first()`` — so a
     caller that needs per-doc metadata (precomputed quality flags,
     lengths) BESIDE the signatures gets both from ONE corpus scan
@@ -111,7 +111,7 @@ def lsh_dup_flags(bands: DataFrame, id_col: str) -> DataFrame:
     """Linear dedup decision: per-bucket min id survives; any id above a
     bucket minimum is a near-dup candidate. No pairwise expansion.
 
-    ``bands`` is pinned before the mins-join diamond (r17, guide §5):
+    ``bands`` is pinned before the mins-join diamond:
     both consumers read one materialized metadata-sized band table
     instead of re-running the caller's signature lineage (typically a
     corpus scan + shingle explode + md5s) twice; localCheckpoint spills
@@ -282,11 +282,10 @@ def near_dup_pipeline(
     trade at 100 TB. Partial aggregation + AQE skew handling keep the
     join form safe at any bucket distribution.
 
-    r17 optimization (guide §5 caching-when-reused): ``bands`` is now
-    pinned before the stats-join diamond, so the two consumers (the
-    groupBy stats and the sized join's probe side) read ONE materialized
-    band table instead of each re-running the corpus scan + shingle
-    explode + 8 md5s (3 corpus scans → 2). Band rows are metadata-sized
+    ``bands`` is pinned before the stats-join diamond, so the two consumers
+    (the groupBy stats and the sized join's probe side) read ONE
+    materialized band table instead of each re-running the corpus scan +
+    shingle explode + 8 md5s (3 corpus scans → 2). Band rows are metadata-sized
     (id, band_id, 16-byte band_key — never text), and localCheckpoint
     storage is MEMORY_AND_DISK, so the pin spills rather than OOMs on a
     large corpus; trading that for a full re-shingle pass is the §8

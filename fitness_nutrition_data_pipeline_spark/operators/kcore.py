@@ -50,9 +50,9 @@ def _pin(
     """Truncate lineage: parquet round-state when durable storage is
     given (survives executor loss; the 100 TB path), localCheckpoint
     otherwise (tests / bounded graphs). ``n_parts`` coalesces the state
-    before pinning — size-derived by the caller (r17 optimization,
-    guide §2.6/§6: collapses the materialized layout on small rounds,
-    sizes the round-state parquet files on the durable path)."""
+    before pinning — size-derived by the caller: collapses the
+    materialized layout on small rounds, sizes the round-state parquet
+    files on the durable path."""
     if n_parts:
         df = df.coalesce(n_parts)
     if state_dir is None:
@@ -68,8 +68,8 @@ def _drop_stale(
     """Delete superseded round-state through the Hadoop FileSystem API —
     the SAME resolution the Spark writer used to create it, so scheme'd
     URIs (s3a://, hdfs://) are cleaned for real instead of a driver-local
-    shutil no-op (ADVICE r10: rmtree on a remote state_dir silently
-    leaks every round's parquet)."""
+    shutil no-op (rmtree on a remote state_dir silently leaks every
+    round's parquet)."""
     if state_dir is None:
         return
     jvm = spark._jvm
@@ -77,7 +77,7 @@ def _drop_stale(
     for t in tags:
         # Cleanup is advisory: the returned DataFrame's state must never
         # be cost by a transient delete failure (flaky S3, perms) —
-        # log the leaked path and keep peeling (ADVICE r11).
+        # log the leaked path and keep peeling.
         try:
             p = jvm.org.apache.hadoop.fs.Path(_join(state_dir, t))
             fs = p.getFileSystem(hconf)
@@ -235,8 +235,8 @@ def kcore_peel(
             # no vertex drops — fixpoint (also the empty-graph case).
             # This round's degree table AND the n-1 round's state are
             # both superseded; only edges_r{rounds} (backing the
-            # returned DataFrame) must survive (ADVICE r10: the break
-            # path used to leak prev_tags).
+            # returned DataFrame) must survive, so prev_tags are dropped
+            # here too.
             _drop_stale(spark, state_dir, [f"deg_r{rounds}", *prev_tags])
             prev_tags = []
             break

@@ -90,7 +90,7 @@ def ivf_probe_topk(
     ``query_ids`` may carry ``vec_col``; when it does, the query vectors
     are taken from it directly instead of re-joining the full corpus —
     callers already hold the (pushdown-filtered) query rows, so the
-    corpus-wide fetch join was a pure extra scan (r17, guide §2.4)."""
+    corpus-wide fetch join was a pure extra scan."""
     v = _as_double(vectors, id_col, vec_col)
     q_src = (
         _as_double(query_ids, id_col, vec_col)
@@ -221,8 +221,7 @@ def kmeans_lloyd_step(
     # each re-runs the full corpus-scan + broadcast-score + window lineage
     # (audited 6 embeddings scans for one Lloyd step). The relation is
     # narrow (id, centroid_id, c_sim) metadata — the bands-pin precedent:
-    # localCheckpoint spills to disk rather than OOMs at scale (r17,
-    # guide §5 caching-when-reused).
+    # localCheckpoint spills to disk rather than OOMs at scale.
     assign = assign_centroids(vectors, centroids, id_col, vec_col).localCheckpoint()
     v = _as_double(vectors, id_col, vec_col)
     member_dims = v.join(assign.select(id_col, "centroid_id"), id_col).select(

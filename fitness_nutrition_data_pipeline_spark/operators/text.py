@@ -318,8 +318,8 @@ def tfidf_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     reads the much smaller deduped (doc, term) grain. Both tf consumers
     (the join left side and the df rollup) contain the IDENTICAL
     partial-count -> Exchange(doc, term) subtree, which ReuseExchange
-    collapses to one physical shuffle (r14 reuse-audit fix; scan bound
-    gated in tests/test_plans.py)."""
+    collapses to one physical shuffle (scan bound gated in
+    tests/test_plans.py)."""
     toks = df.select(id_col, F.explode(whitespace_tokens(text_col)).alias("term"))
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -400,7 +400,7 @@ def chunk_documents(
     stride: int = 48,
 ) -> DataFrame:
     """The RAG chunker itself — the executable counterpart of
-    queries/corpus_ops2.py::rag_chunk_plan's closed-form accounting:
+    queries/corpus_ops.py::rag_chunk_plan's closed-form accounting:
     slide a ``size``-token window advancing ``stride`` tokens (overlap
     = size - stride) over each document's whitespace tokens and emit
     one row per chunk: (id, chunk_id, n_tokens, chunk_text).

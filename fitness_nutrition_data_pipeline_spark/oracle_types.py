@@ -7,7 +7,7 @@ hashes stringified values, so a final output column may only use a
 type whose pandas coercion stringifies identically on both lanes.
 Everything else (HUGEINT, DECIMAL, FLOAT, lists, ...) must be
 canonicalized in the final projection — see tests/test_oracle_types.py
-for the full defect-class history (r6 HUGEINT, r7 DECIMAL).
+for the defect classes (HUGEINT, DECIMAL).
 """
 
 from __future__ import annotations
@@ -22,6 +22,6 @@ ALLOWED_ORACLE_TYPES = {
     "DATE",
     "BOOLEAN",
     # Arrow-stable: pandas Timestamp and Spark datetime stringify
-    # identically; driver-green since r5 on three replay queries.
+    # identically (three replay queries emit TIMESTAMP).
     "TIMESTAMP",
 }

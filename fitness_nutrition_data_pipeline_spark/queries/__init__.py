@@ -5,12 +5,12 @@ Each spec's builder takes ``(spark, sf_dir)`` and returns a DataFrame; the
 oracle is ANSI SQL DuckDB can run over the same parquet (views
 pre-registered by the driver). Column names/aliases are kept identical on
 both sides because the correctness compare sorts columns by name before
-hashing. Specs without an oracle (non-SQL-expressible ops) set
-``oracle=None`` and get a rows-only check.
+hashing. Every spec carries an oracle.
 """
 
 from __future__ import annotations
 
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -21,9 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     builder: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     doc: str = ""
-    sort: tuple[str, ...] | None = None
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -31,7 +30,7 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 def register(
     name: str,
-    oracle: str | None,
+    oracle: str,
     doc: str = "",
     sort: tuple[str, ...] | None = None,
 ):
@@ -66,46 +65,16 @@ def register(
                 return fn(spark, sf_dir).repartition(1).sortWithinPartitions(*sort)
 
             builder = sorted_builder
-        _REGISTRY[name] = QuerySpec(
-            name=name, builder=builder, oracle=oracle, doc=doc,
-            sort=tuple(sort) if sort else None,
-        )
+        _REGISTRY[name] = QuerySpec(name=name, builder=builder, oracle=oracle, doc=doc)
         return fn
 
     return wrap
 
 
-_QUERY_MODULES = (
-    "analytics_ops",
-    "analytics_ops2",
-    "analytics_ops3",
-    "behavior_ops",
-    "corpus_ops",
-    "corpus_ops2",
-    "curation",
-    "eval_ops",
-    "graph_ops",
-    "llm_ops",
-    "multimodal_ops",
-    "profiling",
-    "relational",
-    "relational2",
-    "relational3",
-    "retrieval_ops",
-    "sampling",
-    "scale_ops",
-    "serving_ops",
-    "sketch_ops",
-    "stats_ops",
-    "text_ops",
-    "text_ops2",
-    "text_ops3",
-    "tpch_like",
-    "tpch_like2",
-    "tpch_like3",
-    "tpch_like4",
-    "warehouse_ops",
-)
+# Every module of this package is a query module; the directory is the
+# only record of which exist. They are imported in sorted order; a module
+# that another one imports while loading registers at that point.
+_QUERY_MODULES = tuple(sorted(m.name for m in pkgutil.iter_modules(__path__)))
 
 # module name → import error message; populated by all_specs (empty when
 # every module registered cleanly). Inspected by tools/verify_queries.py.

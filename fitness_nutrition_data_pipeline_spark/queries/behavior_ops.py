@@ -509,7 +509,7 @@ def attribution_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _peak_oracle() -> str:
-    from fitness_nutrition_data_pipeline_spark.queries.relational2 import (
+    from fitness_nutrition_data_pipeline_spark.queries.relational import (
         SESSIONIZE_SQL_CTES,
     )
 
@@ -555,7 +555,7 @@ def _peak_oracle() -> str:
     "minute-keyed shuffle (concurrency), one day-partitioned window.",
 )
 def concurrent_sessions_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fitness_nutrition_data_pipeline_spark.queries.relational2 import (
+    from fitness_nutrition_data_pipeline_spark.queries.relational import (
         sessionized,
     )
 
@@ -823,7 +823,7 @@ def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "so the quota admits each user's first 5 events in event_id order. "
     "The oracle states the same admission rule declaratively: "
     "row_number per user ordered by event_id, kept while <= limit. "
-    "Chunk-order robustness (the r4 ADVICE bug: per-chunk sorting made "
+    "Chunk-order robustness (per-chunk sorting would make "
     "admission order batch-layout-dependent) is separately pinned by "
     "tests/test_streaming_ratelimit.py with a forced multi-chunk group.",
 )

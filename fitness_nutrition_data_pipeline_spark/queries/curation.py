@@ -112,7 +112,7 @@ def corpus_curation_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rides the SAME scan as the split/exact-dup flags — the old shape
     # computed it as a separate branch and hash-joined it back to this
     # scan on doc_id: one full extra documents scan plus a join shuffle
-    # for columns that were available in place (r14 reuse-audit fix)
+    # for columns that were available in place
     flags = (
         quality_features(d, "text", _STOPWORDS)
         .select(
@@ -193,7 +193,7 @@ def cluster_survivor_selection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    # ONE corpus scan (r18): the quality flags are computed per doc row
+    # ONE corpus scan: the quality flags are computed per doc row
     # BEFORE the shingle explode and carried through the minhash partial
     # aggregation as narrow first() columns, so the signature pass and
     # the quality pass share a single read of the text. The doc-grain
@@ -239,7 +239,7 @@ def cluster_survivor_selection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rag_pipeline_sql() -> str:
-    from fitness_nutrition_data_pipeline_spark.queries.corpus_ops2 import (
+    from fitness_nutrition_data_pipeline_spark.queries.corpus_ops import (
         _CHUNK,
         _STRIDE,
     )
@@ -313,8 +313,8 @@ def _rag_pipeline_sql() -> str:
     "rag_corpus_pipeline",
     _rag_pipeline_sql(),
     sort=("source",),
-    doc="The RAG ingestion pipeline as ONE composed flow (VERDICT r8 "
-    "ask #6): quality filter + exact dedup (min-id survivor per "
+    doc="The RAG ingestion pipeline as ONE composed flow: "
+    "quality filter + exact dedup (min-id survivor per "
     "content hash) gate the corpus, the EXECUTABLE chunker "
     "(operators/text.py::chunk_documents, 64/48 sliding window) emits "
     "chunks for every kept doc, and chunk-grain exact dedup "
@@ -334,7 +334,7 @@ def rag_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.operators.text import (
         chunk_documents,
     )
-    from fitness_nutrition_data_pipeline_spark.queries.corpus_ops2 import (
+    from fitness_nutrition_data_pipeline_spark.queries.corpus_ops import (
         _CHUNK,
         _STRIDE,
     )
@@ -588,7 +588,7 @@ def capped_waterfill_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caps fans out into FOUR consumers (tot, ranked -> kk / pfx_k /
     # final projection) — unpinned, the executed plan re-scanned
     # documents 9 times for one source-grain aggregate
-    # (tools/audit_reuse.py, r13 queue). The relation is answer-sized
+    # (tools/audit_reuse.py). The relation is answer-sized
     # (|sources| rows), so localCheckpoint is admissible by the repo
     # rule and cuts the plan to ONE documents scan; every downstream
     # step (the unpartitioned-but-bounded rank window, the feasibility

@@ -411,7 +411,7 @@ def _kcore_fixpoint_oracle(k: int, unroll: int) -> str:
     _kcore_fixpoint_oracle(k=2, unroll=7),
     sort=("peel_rounds",),
     doc="The loop-until-converged k-core (operators/kcore.py::kcore_peel"
-    ", VERDICT r9 ask #3) under the hard oracle: the co-purchase graph "
+    ") under the hard oracle: the co-purchase graph "
     "is sparsified by a SYMMETRIC deterministic filter ((src+dst+"
     "src*dst) % 37 — both orientations of an undirected edge live or "
     "die together, keeping out-degree == degree), then peeled to the "
@@ -539,7 +539,7 @@ def _subtree_rollup_loop(part: DataFrame) -> DataFrame:
     ORDER BY node
     """,
     sort=("node",),
-    doc="ENGINE-NATIVE recursion (VERDICT r10 ask #2): the same "
+    doc="ENGINE-NATIVE recursion: the same "
     "variable-depth subtree rollup as tree_subtree_cost_rollup, but the "
     "recursion runs INSIDE Spark SQL via WITH RECURSIVE (SPARK-24497, "
     "shipped in 4.x) instead of a driver loop — recursion as a single "

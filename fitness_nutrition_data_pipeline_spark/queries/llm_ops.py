@@ -92,6 +92,8 @@ def _bands_cte() -> str:
     )"""
 
 
+# DuckDB twin of operators/similarity.cosine — in-order fold over the
+# 64-dim embeddings (same accumulation order as the zip_with fold)
 _COS_SQL = (
     "list_sum(list_transform(range(1, 65), "
     "i -> {a}[i] * {b}[i])) / "
@@ -422,9 +424,9 @@ def embedding_ann_ivf_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned, each re-ran the corpus scan + broadcast-score + window
     # (audited 7 embeddings scans; now 4: centroids/queries are pushdown-
     # filtered scans, assignment + neighbor fetch are the two full passes
-    # the algorithm needs). Narrow metadata pin, the bands precedent
-    # (r17, guide §5). Queries pass their vectors through, so the probe
-    # skips the corpus-wide query-vector fetch join (guide §2.4).
+    # the algorithm needs). Narrow metadata pin, the bands precedent.
+    # Queries pass their vectors through, so the probe skips the
+    # corpus-wide query-vector fetch join.
     assignments = assign_centroids(
         e, centroids, "vec_id", "embedding"
     ).localCheckpoint()
@@ -846,11 +848,10 @@ def _ann_recall_single_pass(
     spark: SparkSession, sf_dir: str, *, nprobe: int, k: int = 3
 ) -> DataFrame:
     """Shared SINGLE-PASS body of ann_recall_contract (nprobe=1) and
-    ivf_beam_recall_contract (nprobe=3) — r18 reformulation. The r17
-    shapes ran the brute-force pass AND a probe branch whose
-    neighbor-vector fetch re-scanned the corpus to recompute cosines the
-    brute pass had already computed, then joined probe-top-k against
-    exact-top-k. Here every (neighbor, query) pair is scored ONCE,
+    ivf_beam_recall_contract (nprobe=3). A brute-force pass beside a
+    probe branch would re-scan the corpus in the probe's neighbor-vector
+    fetch to recompute cosines the brute pass already has, then join
+    probe-top-k against exact-top-k. Here every (neighbor, query) pair is scored ONCE,
     carrying an is_cand flag (neighbor's centroid ∈ the query's
     top-nprobe probes, attached by metadata joins BEFORE the vectors are
     touched; at nprobe=1 the query's own assignment IS its top-1 probe —
@@ -1019,8 +1020,8 @@ def _ann_recall_single_pass(
     "drift after each quantizer retrain.",
 )
 def ann_recall_contract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # every query keeps a row (the r17 shape's exact-side spine covered
-    # all queries); n_candidates is internal here — ann reports recall only
+    # every query keeps a row (as an exact-side spine over all queries
+    # would); n_candidates is internal here — ann reports recall only
     return _ann_recall_single_pass(spark, sf_dir, nprobe=1).select(
         "q_id",
         "n_overlap",
@@ -1625,8 +1626,8 @@ def ivf_beam_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 6 before ranking with id tie-breaks, both engines compute both
     sides). Aggregation runs FROM the beam side so both engines drop a
     (theoretical) zero-candidate query identically."""
-    # shared single-pass body (see _ann_recall_single_pass — VERDICT r17
-    # ask #7: 5 scans → 4, and faster than the r17 shape locally too);
+    # shared single-pass body (see _ann_recall_single_pass: 5 scans → 4,
+    # and faster than two separate passes locally too);
     # the beam reports the candidate-scan cost and drops a (theoretical)
     # zero-candidate query, matching the oracle's beam-side aggregation
     return (

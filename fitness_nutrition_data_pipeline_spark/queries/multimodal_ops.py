@@ -1,15 +1,14 @@
 """Driver-visible multimodal surface.
 
-The binary operators (operators/multimodal.py) were pytest-only through
-round 4 because the testdata has no binary table. These queries make the
-mapInPandas plumbing driver-visible: they synthesize a deterministic
-media table FROM the documents parquet (utf-8 payload bytes behind a real
-container magic number chosen by doc_id), then run the actual production
-path — JVM-side magic-number sniffing at scan time, Arrow-batched
-byte-histogram feature extraction in ``mapInPandas`` — and reduce to
-per-format summaries.
+The testdata has no binary table, so these queries make the mapInPandas
+plumbing of the binary operators (operators/multimodal.py) driver-visible:
+they synthesize a deterministic media table FROM the documents parquet
+(utf-8 payload bytes behind a real container magic number chosen by
+doc_id), then run the actual production path — JVM-side magic-number
+sniffing at scan time, Arrow-batched byte-histogram feature extraction in
+``mapInPandas`` — and reduce to per-format summaries.
 
-Rows-only no more (r10): every payload byte is a pure function of the
+Every payload byte is a pure function of the
 source row, so even the HISTOGRAM stage is oracle-checkable — the
 normalized float32 shares invert to exact integer bin counts
 (round(share × size)), and DuckDB recomputes those counts from the magic
@@ -93,7 +92,7 @@ def _synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SQL — bin0 (bytes 0x00-0x0f) is 3 per png magic and whatever "
     "control chars the text carries; bin6 (0x60-0x6f) is the "
     "backtick..'o' mass of the text plus the 'a' in GIF89a — closing "
-    "the registry's last rows-only gap (r9 verdict ask #6). The real "
+    "what would otherwise be a rows-only check. The real "
     "100 TB shape: blobs stay in their parquet row groups, one Arrow "
     "batch of payloads per task, histogram swaps for a model forward "
     "pass without touching the plumbing.",

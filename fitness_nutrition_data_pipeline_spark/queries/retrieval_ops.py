@@ -1,4 +1,4 @@
-"""Retrieval + curation operators, wave 2: rank fusion, contrastive
+"""Retrieval + curation operators: rank fusion, contrastive
 hard-negative mining, cluster-balanced sampling, DP-noised release, and
 token-budget planning.
 
@@ -19,19 +19,12 @@ from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.operators.similarity import cosine
 from fitness_nutrition_data_pipeline_spark.queries import register
-from fitness_nutrition_data_pipeline_spark.queries.sampling import hash_bucket
-from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
-
-# DuckDB twin of operators/similarity.cosine — in-order fold over the
-# 64-dim embeddings (same accumulation order as the zip_with fold)
-_COS_SQL = (
-    "list_sum(list_transform(range(1, 65), "
-    "i -> {a}[i] * {b}[i])) / "
-    "(sqrt(list_sum(list_transform({a}, x -> x * x))) * "
-    "sqrt(list_sum(list_transform({b}, x -> x * x))))"
+from fitness_nutrition_data_pipeline_spark.queries.llm_ops import _COS_SQL
+from fitness_nutrition_data_pipeline_spark.queries.sampling import (
+    _BUCKET_SQL,
+    hash_bucket,
 )
-
-_BUCKET_SQL = "CAST(('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 6)) AS BIGINT)"
+from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 
 @register(
@@ -335,7 +328,7 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     tot = t.agg(F.sum("n_tokens").cast("long").alias("total_tokens"))
-    # long-only `div` end-to-end (ADVICE r7): floor over a DOUBLE
+    # long-only `div` end-to-end: floor over a DOUBLE
     # division can disagree with exact integer floor once 1/total drops
     # below half-ulp of the quotient; `div` keeps the math in int64 on
     # both engines (operands non-negative, so truncate == floor).

@@ -404,7 +404,7 @@ def weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     u = (hash_bucket(F.col("doc_id"), 16777216) + F.lit(0.5)) / F.lit(16777216.0)
-    # ADVICE r6: ln() is <=1-ulp in each engine but not identically
+    # ln() is <=1-ulp in each engine but not identically
     # rounded, so a near-tie at the rank-50 boundary could order
     # differently per engine under the strict hash. Quantize the key to
     # 9dp on BOTH engines (the repo's transcendental-output convention);

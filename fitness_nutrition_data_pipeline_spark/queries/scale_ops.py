@@ -910,8 +910,8 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # capped feeds FOUR consumers (order total, item counts, both sides
     # of the pairing self-join); unpinned, each re-ran the lineitem scan
     # + distinct + basket window (audited 5 lineitem scans — the biggest
-    # table — now 1). Two-long rows, the narrow-metadata pin class (r17,
-    # guide §5); item_cnt (distinct parts, answer-sized) is read by both
+    # table — now 1). Two-long rows, the narrow-metadata pin class;
+    # item_cnt (distinct parts, answer-sized) is read by both
     # rule directions and pinned for the same reason.
     capped = (
         sized.where(F.col("basket_size") <= 20)
@@ -942,7 +942,7 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a union of two projections re-plans (0 ReusedExchange, measured)
     # the whole distinct -> basket window -> self-join -> count chain
     # once per branch — the same recompute class fixed in
-    # label_propagation_step, caught by the r13 window reuse audit
+    # label_propagation_step, caught by the window reuse audit
     rules = pairs.select(
         F.explode(
             F.array(

@@ -1,4 +1,4 @@
-r"""Serving-side retrieval compositions (r9): the end-to-end
+r"""Serving-side retrieval compositions: the end-to-end
 retrieve -> rerank -> evaluate flows that the standalone pieces
 (text_ops.bm25_query_scores, retrieval_ops.reciprocal_rank_fusion,
 operators/similarity.py, eval_ops) were building toward — each as ONE
@@ -6,7 +6,7 @@ oracle-checked query rather than three independent readouts.
 
 Reference parity note: the reference has no retrieval surface
 (main_etl_pipeline.py is ETL only); this closes the last thin family of
-the declared north-star training/serving pipeline (VERDICT r8 ask #3).
+the declared north-star training/serving pipeline.
 
 Query/corpus framing: the first five embedding rows (vec_id < 5, which
 align 1:1 with documents.doc_id) act as queries; everything else is the
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.operators.similarity import cosine
 from fitness_nutrition_data_pipeline_spark.queries import register
-from fitness_nutrition_data_pipeline_spark.queries.retrieval_ops import _COS_SQL
+from fitness_nutrition_data_pipeline_spark.queries.llm_ops import _COS_SQL
 from fitness_nutrition_data_pipeline_spark.sources.testdata import load_table
 
 _N_QUERIES = 5  # vec_id/doc_id < 5 are the query set
@@ -241,8 +241,8 @@ def _fused(pairs: DataFrame) -> DataFrame:
     "fusion (k=60, union semantics — docs missed by the lexical side "
     "still score on the semantic term); the fused top-10 is judged "
     "against label qrels into per-query precision@10, recall@10 and "
-    "MRR, all integer ppm. Composes the RRF/ANN/eval pieces VERDICT r8 "
-    "flagged as separate. Scale: queries broadcast, one corpus pass "
+    "MRR, all integer ppm. Composes the separate RRF/ANN/eval pieces. "
+    "Scale: queries broadcast, one corpus pass "
     "per retriever (inverted index / ANN probe at 100 TB), and "
     "everything after the rank lists is answer-sized.",
 )

@@ -163,7 +163,7 @@ def ks_binned_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "value")
     )
     ext = ev.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    # degenerate-range guard (ADVICE r5): constant column -> hi==lo makes
+    # degenerate-range guard: constant column -> hi==lo makes
     # the divide NULL in Spark but an error/inf in SQL engines; bin 0 on
     # both sides keeps the engines aligned exactly when values collapse
     bin_expr = F.when(F.col("hi") == F.col("lo"), F.lit(0)).otherwise(

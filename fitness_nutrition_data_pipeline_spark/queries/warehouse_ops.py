@@ -334,7 +334,7 @@ def unigram_lm_crossentropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         # the LM is a trained artifact consumed twice (the (N,V) scalars
         # and the scoring join); unpinned, each consumer re-explodes and
-        # re-aggregates the full token stream (r13 reuse audit). Train
+        # re-aggregates the full token stream. Train
         # once, materialize, score with it — exactly what a KenLM-style
         # pipeline does; the pinned relation is vocab-grain, orders of
         # magnitude below the token stream it summarizes.
@@ -744,17 +744,16 @@ def _write_day_partitioned(ev: DataFrame, path: str) -> None:
     """Dynamic-partition write of ``ev`` (must carry ``day`` and
     ``event_id``) distributed by (day, file-group).
 
-    r17 used ``repartition(day)`` — one writer task per day, which fixed
-    the (tasks × days) small-file blowup but left a serialization
-    ceiling: a HOT day funnels into a single task at 100 TB (VERDICT r17
-    "what's wrong" #4). r18 sizes per-day file groups from a per-day
-    count over the partition column only (guide §8: decide placement on
-    small rows): groups = ceil(day_rows / _ROWS_PER_DAY_FILE), salt =
+    ``repartition(day)`` alone — one writer task per day — fixes the
+    (tasks × days) small-file blowup but leaves a serialization ceiling:
+    a HOT day funnels into a single task at 100 TB. So per-day file
+    groups are sized from a per-day count over the partition column only
+    (guide §8: decide placement on small rows): groups = ceil(day_rows / _ROWS_PER_DAY_FILE), salt =
     pmod(xxhash64(event_id), groups) — deterministic under task retry
     (SPARK-38388). A hot day now engages ceil(its_rows / target) writer
     tasks while a small day keeps exactly one file; at sf0.1 every day
     computes groups=1, so the local layout (and bench behavior) is the
-    r17 one-task-per-day shape plus one tiny counting job.
+    one-task-per-day shape plus one tiny counting job.
 
     ``ev`` is computed twice: once by the per-day count and once by the
     write. That is cheap for a scan plus ``to_date`` (every current
@@ -771,7 +770,7 @@ def _write_day_partitioned(ev: DataFrame, path: str) -> None:
     # LEFT join + coalesce(1): an inner join on `day` would silently DROP
     # rows whose partition value is NULL (SQL null-key semantics — the
     # groupBy above keeps the null group, but null never equi-joins back),
-    # where the pre-r18 repartition(day) writer preserved them under
+    # where a plain repartition(day) writer preserves them under
     # __HIVE_DEFAULT_PARTITION__. Null-day rows get one file group.
     (
         ev.join(F.broadcast(days), "day", "left")
@@ -831,7 +830,7 @@ def partitioned_write_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     ).hexdigest()[:8]
     path = scratch_path(spark, tag, "events_by_day")
     # salted day-distribution before the dynamic-partition write —
-    # see _write_day_partitioned (r17 one-task-per-day + r18 hot-day salt)
+    # see _write_day_partitioned (one task per day, hot days salted)
     _write_day_partitioned(ev, path)
     back = spark.read.parquet(path).where(
         (F.col("day") >= F.lit("2024-01-08").cast("date"))
@@ -877,7 +876,7 @@ def partitioned_write_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     "net-surviving rows. A hash match proves the streaming "
     "maintainer's signed algebra (insert +1/+v, retract -1/-v, merge "
     "= union + re-aggregate over state + delta only) equals full "
-    "recompute — the bridge VERDICT r8 asked for between "
+    "recompute — the bridge between "
     "incremental_agg_maintenance (batch) and the streaming rollups. "
     "Scale: each merge touches group-grain state + one batch's "
     "delta; the history is never re-scanned, which is what turns a "
@@ -1043,7 +1042,7 @@ def dynamic_partition_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     ).hexdigest()[:8]
     path = scratch_path(spark, tag, "events_by_day_dpp")
     # salted day-distribution before the dynamic-partition write —
-    # see _write_day_partitioned (r17 one-task-per-day + r18 hot-day salt)
+    # see _write_day_partitioned (one task per day, hot days salted)
     _write_day_partitioned(ev, path)
     spine = spark.sql(
         "SELECT explode(sequence(DATE'2024-01-01', DATE'2024-03-31')) AS day"
@@ -1259,7 +1258,7 @@ def partition_restatement_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # legitimate affected "day" (the oracle groups NULL day normally);
     # a plain equi-join would drop it from the recompute while the
     # anti-join kept the stale nightly NULL row — a divergence latent
-    # until a fixture gains NULL timestamps (r9 advice).
+    # until a fixture gains NULL timestamps.
     affected = (
         late.select(F.col("day").alias("aday")).distinct().localCheckpoint()
     )

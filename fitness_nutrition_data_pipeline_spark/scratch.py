@@ -1,9 +1,8 @@
 """Managed scratch directories for queries that materialize intermediate
 files (format round-trips, partitioned-write audits, MV snapshots).
 
-ADVICE r10: those queries used to write ad-hoc ``/tmp/spark_graft_*_
-{appid}`` trees that nothing ever deleted — every Spark application
-leaked another directory. All such paths now come from
+Ad-hoc per-query temp trees that nothing deletes leak one directory
+per Spark application, so all such paths come from
 :func:`scratch_path`, which roots them under ONE per-application
 directory and registers a single ``atexit`` cleanup for it, so a
 session's scratch disappears when the interpreter exits (crash-killed

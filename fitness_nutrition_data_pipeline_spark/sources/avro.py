@@ -27,7 +27,7 @@ task owns the blocks that START inside its byte range).
 
 The writer targets a filesystem shared between driver and executors
 (plain ``open()`` executor-side); it REFUSES non-local masters rather
-than silently producing a partial directory (ADVICE r10).
+than silently producing a partial directory.
 """
 
 from __future__ import annotations
@@ -334,7 +334,13 @@ def read_avro(spark: SparkSession, path: str, ddl: str) -> DataFrame:
                     {n: pd.Series(c, dtype=object) for n, c in zip(got, cols)}
                 )
 
-    files = spark.read.format("binaryFile").load(os.path.join(path, "*.avro"))
+    # a glob in the load path makes Spark probe ``*.avro/_spark_metadata``
+    # and log a FileNotFoundException per read; filter the listing instead
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.avro")
+        .load(path)
+    )
     return files.select("content").mapInPandas(decode, expected)
 
 

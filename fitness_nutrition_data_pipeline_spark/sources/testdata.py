@@ -43,12 +43,12 @@ TABLES = (
     "embeddings",
 )
 
-# Scan-parallelism fix (r17 optimization, guide §2.5 "input skew"): each
-# testdata table is ONE parquet file with ONE row group, so every scan
-# stage — and with it ALL pre-shuffle map work (explode, md5, filters,
-# projections) — executes as a single task no matter how many cores the
-# session has. The guide's prescription for unsplittable input is to
-# repartition immediately after the read. Measured at sf0.1/local[32]
+# Scan parallelism: each testdata table is ONE parquet file with ONE row
+# group, so every scan stage — and with it ALL pre-shuffle map work
+# (explode, md5, filters, projections) — executes as a single task no
+# matter how many cores the session has. The guide's prescription for
+# unsplittable input is to repartition immediately after the read.
+# Measured at sf0.1/local[32]
 # (quiet host, bracketing probes): this pays ONLY for the two tables
 # whose per-row map work is genuinely heavy — documents (shingle
 # explode + md5 MinHash, regex tokenization: ngram_jaccard_pairs
@@ -140,8 +140,8 @@ def load_table(
             # pinned to UTC above, so the epoch matches DuckDB's naive view.
             # LTZ is required downstream (unix_micros rejects TIMESTAMP_NTZ).
             df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    # ``parallelize=False`` opts a query out of the gate below (r18, VERDICT
-    # r17 "what's wrong" #1): for aggregate-pushdown shapes whose FIRST
+    # ``parallelize=False`` opts a query out of the gate below: for
+    # aggregate-pushdown shapes whose FIRST
     # operation collapses rows map-side (vocab_inventory's tokenize →
     # partial-agg), the exchange ships the full text payload to buy map
     # parallelism the partial aggregate doesn't need — a measured −34%

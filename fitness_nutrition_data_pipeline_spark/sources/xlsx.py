@@ -49,7 +49,7 @@ def _first_sheet_path(z: zipfile.ZipFile) -> str:
 
     Sheet order lives in xl/workbook.xml (<sheets> children) and the
     r:id → part mapping in xl/_rels/workbook.xml.rels — sheet1.xml is
-    merely a convention and may be absent or not first (ADVICE r6).
+    merely a convention and may be absent or not first.
     Falls back to the conventional path if either part is missing."""
     try:
         wb = ET.fromstring(z.read("xl/workbook.xml"))
@@ -91,7 +91,7 @@ def _parse_row_elements(root: "ET.Element", shared: list[str]) -> list[list[str]
     rows: list[list[str]] = []
     for row in root.iter(ROW):
         cells: dict[int, str] = {}
-        next_idx = 0  # implicit position for cells without r= (ADVICE r6)
+        next_idx = 0  # implicit position for cells without r=
         for c in row:
             if c.tag != C:
                 continue

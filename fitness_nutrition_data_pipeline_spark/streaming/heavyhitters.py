@@ -135,7 +135,7 @@ def run_heavy_hitters_once(
     with no batch discriminator, and count_lb is non-monotone across
     decrements — so when availableNow splits the input into multiple
     batches there is no correct way to recover the current table from
-    the union of emissions (ADVICE r6). Drain via foreachBatch instead,
+    the union of emissions. Drain via foreachBatch instead,
     keeping only the LATEST emission per shard: every batch emits a
     shard's full current table, so last-batch-wins per shard is exactly
     the live state. The result is also registered as temp view ``name``
@@ -144,8 +144,8 @@ def run_heavy_hitters_once(
     # foreachBatch invocations are serialized in batch order, so a plain
     # dict.update is last-batch-wins — and driver memory stays bounded
     # by (n_shards x capacity) instead of growing with batch count
-    # (ADVICE r7: keeping every batch's full emission was linear in the
-    # number of micro-batches for no benefit).
+    # (keeping every batch's full emission was linear in the number of
+    # micro-batches for no benefit).
     latest: dict[int, list] = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:

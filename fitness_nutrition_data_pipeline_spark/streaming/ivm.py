@@ -1,4 +1,4 @@
-"""Incremental view maintenance, streaming <-> batch bridge (r9).
+"""Incremental view maintenance, streaming <-> batch bridge.
 
 queries/warehouse_ops.incremental_agg_maintenance proves the batch
 retraction-join arithmetic equals full recompute; this module lifts the

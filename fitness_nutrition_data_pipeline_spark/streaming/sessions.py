@@ -1,7 +1,7 @@
 """Custom stateful streaming operator: event sessionization with
 ``applyInPandasWithState`` (north-star "custom stateful operators").
 
-Batch twin: queries/relational2.py::sessionize_events (lag + running sum).
+Batch twin: queries/relational.py::sessionize_events (lag + running sum).
 Here the same 30-minute-gap semantics run incrementally: per-user state
 holds the open session (start, last-seen, count); a new event either
 extends it or closes it (emitting the finished session) and starts the
@@ -127,7 +127,7 @@ def stream_sessionize_native(
     late_threshold: str = "1 hour",
 ) -> DataFrame:
     """Sessionization via Spark's NATIVE merging session windows — the
-    streaming twin of queries/relational2.py::sessionize_native_window
+    streaming twin of queries/relational.py::sessionize_native_window
     and the engine-managed alternative to the custom
     ``applyInPandasWithState`` sessionizer above (same 30-minute-gap
     semantics, state merged/evicted by the engine under the watermark

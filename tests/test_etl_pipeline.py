@@ -266,3 +266,77 @@ def test_storage_layout_inventory(pipeline, spark, tmp_path_factory):
     for t in paths:
         assert inv[t]["layout"] == "unpartitioned", t
         assert inv[t]["layout_columns"] == "", t
+
+
+def test_load_failure_drops_registered_views(spark, tmp_path):
+    """ADVICE r12 #3: temp views register on load_warehouse's writer
+    threads, so one failing write must not leave a caller that catches
+    the exception with a partially-populated catalog — the error path
+    drops every view this call could have registered."""
+    import pytest as _pytest
+
+    from fitness_nutrition_data_pipeline_spark.load import load_warehouse
+
+    good = spark.range(3).toDF("DateKey")
+    # fails at ACTION time (after sibling writes may have registered)
+    bad = spark.range(1).select(
+        F.assert_true(F.col("id") > 100).alias("x"), F.col("id")
+    )
+    with _pytest.raises(Exception):
+        load_warehouse(
+            spark,
+            {"Dim_Date": good, "Dim_User": bad},
+            str(tmp_path / "wh"),
+        )
+    assert not spark.catalog.tableExists("Dim_Date")
+    assert not spark.catalog.tableExists("Dim_User")
+
+    # and a clean retry on the same session repopulates normally
+    paths = load_warehouse(
+        spark,
+        {"Dim_Date": good, "Dim_User": spark.range(2).toDF("UserKey")},
+        str(tmp_path / "wh2"),
+    )
+    assert set(paths) == {"Dim_Date", "Dim_User"}
+    assert spark.table("Dim_Date").count() == 3
+
+
+def test_load_failure_cleanup_waits_for_inflight_writers(spark, tmp_path):
+    """ADVICE r13 #1: pool.map raises as soon as the FAILING table's
+    result is consumed, while a slower sibling writer may still be
+    running — the cleanup must join all in-flight writers before
+    sweeping the catalog, or the sibling re-registers its view AFTER
+    the sweep and a catching-and-retrying caller observes the
+    partially-populated catalog anyway. The failing table comes FIRST
+    in LOAD_ORDER here (the r12 regression test had it last, which
+    masked the race)."""
+    import time
+
+    import pytest as _pytest
+
+    from fitness_nutrition_data_pipeline_spark.load import load_warehouse
+
+    # Dim_Date precedes Dim_User in LOAD_ORDER, so pool.map consumes the
+    # failing result first — while the slow sibling is still asleep
+    bad = spark.range(1).select(
+        F.assert_true(F.col("id") > 100).alias("x"), F.col("id")
+    ).toDF("DateKey", "id")
+
+    def _slow(batches):
+        time.sleep(1.5)
+        yield from batches
+
+    slow_good = spark.range(3).toDF("UserKey").mapInPandas(
+        _slow, "UserKey long"
+    )
+    with _pytest.raises(Exception):
+        load_warehouse(
+            spark,
+            {"Dim_Date": bad, "Dim_User": slow_good},
+            str(tmp_path / "wh"),
+        )
+    # the slow writer finished (and registered) BEFORE the sweep — both
+    # views must be gone, with no straggler re-registration to come
+    time.sleep(0.2)
+    assert not spark.catalog.tableExists("Dim_Date")
+    assert not spark.catalog.tableExists("Dim_User")

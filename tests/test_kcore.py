@@ -2,10 +2,14 @@
 of the driver-checked bounded audit (queries/graph_ops.kcore_peel_audit)
 must converge on graphs whose peeling depth exceeds the audit's 2-round
 unroll, agree with a pure-Python reference peel on seeded random graphs,
-and behave identically with parquet round-state vs localCheckpoint."""
+and behave identically with parquet round-state vs localCheckpoint.
+An engine-free property pins the peel invariants the bounded audit
+unrolls."""
 
 import random
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.operators import components
@@ -177,3 +181,42 @@ def test_local_peel_preserves_huge_int64_ids(spark):
     core, rounds = kcore_peel(_sym(spark, tri), 2)
     assert rounds == 1
     assert _vertices(core) == {base + 1, base + 2, base + 3}
+
+
+# ---- kcore_peel_audit: peel invariants
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 15), st.integers(0, 15)),
+        min_size=1,
+        max_size=80,
+    )
+)
+def test_kcore_peel_monotone_and_fixpoint_consistent(raw):
+    """Two peel rounds (k=3) over a symmetrized simple graph: vertex
+    and edge counts shrink monotonically, every surviving round-2
+    vertex had round-1 degree >= k, and a round that removes nothing
+    is a fixpoint (round 2 == round 1)."""
+    k = 3
+    edges = {(a, b) for a, b in raw if a != b}
+    edges |= {(b, a) for a, b in edges}
+
+    def degrees(es):
+        d = {}
+        for a, _ in es:
+            d[a] = d.get(a, 0) + 1
+        return d
+
+    traces = []
+    es = edges
+    for _ in range(3):
+        d = degrees(es)
+        traces.append((len(d), sum(d.values())))
+        keep = {v for v, deg in d.items() if deg >= k}
+        es = {(a, b) for a, b in es if a in keep and b in keep}
+    (v0, e0), (v1, e1), (v2, e2) = traces
+    assert v0 >= v1 >= v2 and e0 >= e1 >= e2
+    if (v1, e1) == (v0, e0):  # nothing removed -> fixpoint
+        assert (v2, e2) == (v1, e1)

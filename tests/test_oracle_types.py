@@ -24,6 +24,11 @@ Instead of chasing types one-by-one, both lints are allowlists:
   exactness, then ``.cast("double")`` (the stats_ops ``ks_stat``
   pattern).
 
+The same file pins the engine arithmetic the oracles rely on: division
+by zero yields NULL on both engines (through ``try_divide`` in Spark),
+and half-boundary averages round identically only through the exact
+integer half-up formula.
+
 Cost honesty: the ORACLE half is binder-only (no execution). The
 SPARK half lints the REAL registered builders rather than a parallel
 registry that could drift; since r13 it reads schemas from the shared
@@ -39,6 +44,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fitness_nutrition_data_pipeline_spark.oracle_types import (
@@ -78,8 +84,6 @@ def con():
 def test_oracle_output_types_allowlisted(con):
     offenders = {}
     for name, spec in all_specs().items():
-        if spec.oracle is None:
-            continue
         rel = con.sql(spec.oracle)  # binder only; no execution
         bad = [
             (c, str(t))
@@ -99,11 +103,8 @@ def test_oracle_output_types_allowlisted(con):
 
 
 def test_spark_output_types_allowlisted(registry_plans):
-    specs = all_specs()
     offenders = {}
     for name, plans in registry_plans.items():
-        if specs[name].oracle is None:
-            continue
         schema = plans["schema"]
         bad = [
             (f.name, f.dataType.simpleString())
@@ -149,3 +150,101 @@ def test_lints_are_not_vacuous(con, spark):
         if not isinstance(f.dataType, ALLOWED_SPARK_TYPES)
     ]
     assert bad_s == ["decimal(18,2)"], bad_s
+
+
+def test_division_by_zero_null_on_both_engines(spark):
+    """Round-5 ADVICE: jaccard 0/0 on an empty-shingle pair. The operator
+    (operators/dedup.py::jaccard_on_adjacent_pairs) emits a NULL for the
+    degenerate pair instead of filtering it (a pushed-down denom>0
+    predicate re-evaluates array_intersect per row — measured 1.6× on
+    ngram_jaccard_pairs). That is only sound if both engines produce the
+    same NULL: Spark 4 runs ANSI mode where plain `/` by zero THROWS, so
+    the operator must use try_divide; DuckDB's plain division already
+    yields NULL. Pin both behaviors."""
+    import duckdb
+
+    spark_row = spark.sql(
+        "SELECT try_divide(CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)) AS a,"
+        "       try_divide(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)) AS b"
+    ).collect()[0]
+    assert spark_row.a is None and spark_row.b is None
+    duck_row = duckdb.sql(
+        "SELECT CAST(0.0 AS DOUBLE)/CAST(0.0 AS DOUBLE) AS a,"
+        "       CAST(1.0 AS DOUBLE)/CAST(0.0 AS DOUBLE) AS b"
+    ).fetchone()
+    assert duck_row == (None, None)
+    # and the ANSI default that motivates try_divide really is on
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
+def test_half_boundary_rounding_diverges_and_integer_formula_agrees(spark):
+    """Round-5 finding (caught by cross-SF verification of tpch_q2): when a
+    mean of exact 2-decimal money lands exactly on a half boundary
+    (e.g. avg(10.01, 10.02) = 10.015), Spark and DuckDB round the DOUBLE
+    in opposite directions — Spark rounds the shortest decimal repr
+    half-up (10.02), DuckDB rounds the binary value (10.0149999… →
+    10.01). Queries must therefore round such averages with exact integer
+    half-up over cent sums (floor((2*cents + n) / (2*n))), the pattern
+    used by tpch_q2_min_cost_supplier and monthly_customer_spend. Pin the
+    divergence (so we notice if an engine changes) and the formula."""
+    import duckdb
+
+    # 583.43/8 = 72.92875 exactly; its nearest double is BELOW the
+    # boundary (72.928749999…), so DuckDB (binary value) rounds down
+    # while Spark (shortest decimal repr "72.92875", HALF_UP) rounds up.
+    # (Which side the binary value falls on varies per literal — 10.015's
+    # double is above its boundary and both engines round it up — which
+    # is exactly why no double-rounding convention can be portable.)
+    s = spark.sql(
+        "SELECT round(CAST(583.43 AS DOUBLE) / 8, 4) AS r"
+    ).collect()[0].r
+    d = duckdb.sql("SELECT round(CAST(583.43 AS DOUBLE) / 8, 4) AS r").fetchone()[0]
+    assert s == 72.9288 and d == 72.9287  # the trap: engines disagree
+
+    # the exact integer formula agrees with decimal HALF_UP on both
+    # engines: sp/sq in cents-scaled units, result in 1e4ths (4dp)
+    sp, sq = 58343, 800  # 583.43 and 8.00, cents-scaled
+    expect = 729288  # 72.9288 in 1e4ths, half-up
+    s2 = spark.sql(
+        f"SELECT (CAST({sp} AS BIGINT) * 20000 + {sq}) DIV (2 * {sq}) AS c"
+    ).collect()[0].c
+    d2 = duckdb.sql(
+        f"SELECT (CAST({sp} AS BIGINT) * 20000 + {sq}) // (2 * {sq}) AS c"
+    ).fetchone()[0]
+    assert s2 == expect and d2 == expect
+
+
+def test_avg_half_boundary_integer_formula(spark):
+    """sf0.001 sweep regression: 307.03/8 = 38.37875 exactly — a 4dp half
+    boundary where Spark's round (BigDecimal HALF_UP on the double's
+    exact value) gives .3788 while DuckDB's scale-multiply can land a ulp
+    below the midpoint and give .3787. incremental_agg_merge's integer
+    half-up formula must produce the same digits as DuckDB's version of
+    the same integer formula, boundary included."""
+    import duckdb
+
+    df = spark.createDataFrame([(307.03, 8)], "total double, n long")
+    got = (
+        df.select(
+            (
+                # the DECIMAL cast before scaling is load-bearing: a raw
+                # double total*100 can land at 30702.999... and truncate
+                F.expr(
+                    "CAST(((CAST(CAST(total AS DECIMAL(18,2)) * 100 AS LONG)"
+                    " * 100 * 2 + n) div (2 * n)) AS DOUBLE)"
+                )
+                / 10000
+            ).alias("avg4")
+        )
+        .first()
+        .avg4
+    )
+    want = (
+        duckdb.connect()
+        .execute(
+            "SELECT CAST((CAST(307.03 * 100 AS BIGINT) * 100 * 2 + 8) "
+            "// (2 * 8) AS DOUBLE) / 10000"
+        )
+        .fetchone()[0]
+    )
+    assert got == want == 38.3788

@@ -31,19 +31,10 @@ def test_every_query_has_doc():
         assert spec.doc, f"{name} missing doc"
 
 
-# Since r10 the registry has ZERO oracle-less entries (the last one,
-# multimodal_format_profile, now inverts its float32 histogram shares to
-# exact integer bin counts DuckDB can recompute). Anything registering
-# without an oracle is a coverage regression.
-_ORACLE_EXEMPT: set[str] = set()
-
-
 def test_oracle_coverage():
-    """Every query should carry a DuckDB oracle unless fundamentally non-SQL."""
-    missing = [n for n, s in SPECS.items() if s.oracle is None]
-    assert sorted(missing) == sorted(_ORACLE_EXEMPT), (
-        f"queries without oracle: {missing}"
-    )
+    """Every query carries a non-empty DuckDB oracle."""
+    missing = [n for n, s in SPECS.items() if not (s.oracle or "").strip()]
+    assert not missing, f"queries without oracle: {missing}"
 
 
 def test_every_public_builder_is_registered():

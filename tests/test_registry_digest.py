@@ -48,3 +48,27 @@ def test_registry_plan_digests_match_committed(registry_plans):
         "`python tools/registry_digest.py --write`, review the diff, and "
         "commit the regenerated map"
     )
+
+
+def test_subset_digest_write_refuses_normalizer_mismatch(monkeypatch):
+    """ADVICE r12 #2: a subset --write into a map written under a
+    different normalizer version must refuse (Spark-free check), while
+    a matching version or an empty/absent map proceeds."""
+    from tools import registry_digest as rd
+
+    monkeypatch.setattr(
+        rd, "load_committed_raw",
+        lambda: {rd._META_KEY: rd.NORMALIZER_VERSION - 1, "q1": "aa"},
+    )
+    assert rd.subset_write_refusal(["q1"]) is not None
+    # full regeneration is always allowed
+    assert rd.subset_write_refusal(None) is None
+
+    monkeypatch.setattr(
+        rd, "load_committed_raw",
+        lambda: {rd._META_KEY: rd.NORMALIZER_VERSION, "q1": "aa"},
+    )
+    assert rd.subset_write_refusal(["q1"]) is None
+
+    monkeypatch.setattr(rd, "load_committed_raw", lambda: {})
+    assert rd.subset_write_refusal(["q1"]) is None

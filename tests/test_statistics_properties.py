@@ -1,95 +1,33 @@
-"""Property tests for the r10 operators' math, engine-free (the
-test_r8/r9_math_properties.py pattern): the cross-engine hash proves
-Spark == DuckDB run the same formula; these prove the SHARED formula
-equals a brute-force simulation, catching a bug both engines would
-implement identically. Pure Python + hypothesis — no SparkSession.
+"""Closed-form statistics of the registered queries, engine-free:
+half-life weights, skyline, EMD, Poisson thresholds, weighted median,
+time-weighted averages, Shapley attribution, interval union, hazard
+curves, autocorrelation, CDF quintiles and quantile-sketch merges.
+
+The oracle gate proves Spark == DuckDB; these prove each shared integer
+formula == its definition or a brute-force simulation, so a bug both
+engines implement identically still gets caught. Pure Python +
+hypothesis — no SparkSession.
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 from fractions import Fraction
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-# ---- passk_estimator: falling-factorial form == binomial definition
 
-
-@settings(max_examples=300, deadline=None)
-@given(st.integers(3, 12), st.integers(0, 12))
-def test_passk_falling_factorial_equals_binomial(n, c_raw):
-    c = min(c_raw, n)
-    m = n - c
-    # registered formula (k=3): (n(n-1)(n-2) - m(m-1)(m-2)) / n(n-1)(n-2)
-    num = n * (n - 1) * (n - 2) - m * (m - 1) * (m - 2)
-    den = n * (n - 1) * (n - 2)
-    got_ppm = 1000000 * num // den
-    want = 1 - Fraction(math.comb(m, 3), math.comb(n, 3))
-    want_ppm = (1000000 * want.numerator) // want.denominator
-    assert got_ppm == want_ppm
-
-
-# ---- majority_vote_accuracy: plurality with smallest-answer tie-break
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.lists(st.integers(0, 4), min_size=1, max_size=15))
-def test_majority_vote_tiebreak(answers):
-    counts: dict[int, int] = {}
-    for a in answers:
-        counts[a] = counts.get(a, 0) + 1
-    # the query's ORDER BY c DESC, ans + rn=1
-    by_rule = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-    best = max(counts.values())
-    assert counts[by_rule] == best
-    assert by_rule == min(a for a, c in counts.items() if c == best)
-
-
-# ---- fleiss_kappa_raters: integer reduction == float definition
+# ---- halflife quantization: integer product floor matches Fraction math
 
 
 @settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 5), st.integers(0, 5), st.integers(0, 5)),
-        min_size=2,
-        max_size=40,
-    )
-)
-def test_fleiss_kappa_integer_reduction(cells_raw):
-    # normalize each item's 3-category counts to sum to n=5
-    items = []
-    for a, b, c in cells_raw:
-        tot = a + b + c
-        if tot == 0:
-            a = 5
-            tot = 5
-        # scale to 5 raters by greedy rounding
-        sa = a * 5 // tot
-        sb = b * 5 // tot
-        sc = 5 - sa - sb
-        if sc < 0:
-            sb += sc
-            sc = 0
-        items.append((sa, sb, sc))
-    n = 5
-    N = len(items)
-    sq = sum(x * x for row in items for x in row)
-    cj = [sum(row[j] for row in items) for j in range(3)]
-    c2 = sum(c * c for c in cj)
-    if 25 * N * N == c2:  # degenerate: all mass in one category
-        return
-    # float definition
-    p_i = [(sum(x * x for x in row) - n) / (n * (n - 1)) for row in items]
-    pbar = sum(p_i) / N
-    pe = sum((c / (N * n)) ** 2 for c in cj)
-    kappa = (pbar - pe) / (1 - pe)
-    # integer reduction from the query: X/(4Y)
-    X = 5 * (sq - 5 * N) * N - 4 * c2
-    Y = 25 * N * N - c2
-    got = Fraction(X, 4 * Y)
-    assert abs(float(got) - kappa) < 1e-9
+@given(st.integers(0, 10**9), st.integers(0, 10**6))
+def test_halflife_weight_floor(v_ppm, decay_ppm):
+    w = v_ppm * decay_ppm // 10**9
+    assert w == math.floor(Fraction(v_ppm * decay_ppm, 10**9))
+    assert 0 <= w <= v_ppm * decay_ppm
 
 
 # ---- pareto frontier: running-max rule == dominance definition
@@ -286,53 +224,148 @@ def test_shapley_lattice_matches_definition(mask_rows):
         assert abs(got[name] - f) <= 1
 
 
-# ---- capped waterfill: closed form == greedy simulation
+# ---- interval_union_coverage: running-max sweep == brute-force union
+
+
+def _sweep_union(intervals: list[tuple[int, int]]) -> int:
+    """The registered formula: sort by (start, idx); covered += max(0,
+    e - max(s, prev_max_e))."""
+    total = 0
+    prev_max_e = None
+    for s, e in sorted(intervals):
+        lo = s if prev_max_e is None else max(s, prev_max_e)
+        total += max(0, e - lo)
+        prev_max_e = e if prev_max_e is None else max(prev_max_e, e)
+    return total
 
 
 @settings(max_examples=300, deadline=None)
-@given(st.lists(st.integers(1, 1000), min_size=1, max_size=25))
-def test_waterfill_closed_form(caps):
-    total = sum(caps)
-    budget = total // 2
-    m = len(caps)
-    order = sorted(range(m), key=lambda i: (caps[i], i))
-    sorted_caps = [caps[i] for i in order]
-    pfx = []
-    s = 0
-    for c in sorted_caps:
-        s += c
-        pfx.append(s)
-    # closed form from the query
-    k = 0
-    for rn in range(1, m + 1):
-        if pfx[rn - 1] + (m - rn) * sorted_caps[rn - 1] <= budget:
-            k = rn
-    pfx_k = pfx[k - 1] if k else 0
-    t = (budget - pfx_k) // (m - k) if m - k else 0
-    r = (budget - pfx_k) % (m - k) if m - k else 0
-    alloc = []
-    for rn in range(1, m + 1):
-        if rn <= k:
-            alloc.append(sorted_caps[rn - 1])
-        elif rn - k <= r:
-            alloc.append(t + 1)
-        else:
-            alloc.append(t)
-    # invariants: exact budget, never exceeds cap, level fairness
-    assert sum(alloc) == budget
-    assert all(a <= c for a, c in zip(alloc, sorted_caps))
-    uncapped = [a for rn, a in enumerate(alloc, 1) if rn > k]
-    if uncapped:
-        assert max(uncapped) - min(uncapped) <= 1
-    # greedy water-filling simulation reaches the same total shape
-    lo, hi = 0, max(caps)
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        if sum(min(c, mid) for c in caps) <= budget:
-            lo = mid
-        else:
-            hi = mid - 1
-    base = sum(min(c, lo) for c in caps)
-    assert base <= budget <= base + sum(1 for c in caps if c > lo)
-    if m - k:
-        assert t == lo or t + 1 == lo or (t == lo and True)
+@given(st.lists(st.integers(0, 400), min_size=1, max_size=40))
+def test_interval_union_sweep_equals_pointwise(starts):
+    width = 25
+    intervals = [(s, s + width) for s in starts]
+    covered_points = set()
+    for s, e in intervals:
+        covered_points.update(range(s, e))
+    assert _sweep_union(intervals) == len(covered_points)
+
+
+# ---- churn_hazard_curve: suffix-sum at-risk == definition
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.integers(0, 30), min_size=1, max_size=60))
+def test_hazard_suffix_sum_equals_definition(tenures):
+    from collections import Counter
+
+    deaths = Counter(tenures)
+    # registered formula: at_risk(t) = suffix sum of deaths over s >= t
+    suffix = {}
+    acc = 0
+    for t in sorted(deaths, reverse=True):
+        acc += deaths[t]
+        suffix[t] = acc
+    for t, d in deaths.items():
+        at_risk_def = sum(1 for x in tenures if x >= t)
+        assert suffix[t] == at_risk_def
+        hazard_ppm = d * 1000000 // suffix[t]
+        assert 0 < hazard_ppm <= 1000000
+
+
+# ---- acf_daily_revenue: integer identity == definitional ACF
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.integers(0, 1000), min_size=9, max_size=40),
+       st.integers(1, 7))
+def test_acf_integer_identity_equals_definition(xs, k):
+    n = len(xs)
+    s = sum(xs)
+    sxx = sum(x * x for x in xs)
+    sxy = sum(xs[t] * xs[t - k] for t in range(k, n))
+    sa = sum(xs[k:])
+    sb = sum(xs[: n - k])
+    den = n * (n * sxx - s * s)
+    if den == 0:  # constant series — both forms undefined
+        return
+    got = Fraction(n * n * sxy - n * s * (sa + sb) + (n - k) * s * s, den)
+    mu = Fraction(s, n)
+    want = Fraction(
+        sum((Fraction(xs[t]) - mu) * (Fraction(xs[t - k]) - mu)
+            for t in range(k, n))
+    ) / sum((Fraction(x) - mu) ** 2 for x in xs)
+    assert got == want
+
+
+# ---- equi-depth CDF quintile (rfm_segmentation_histogram): every
+# quintile label is 1..5, monotone in the value order, and cell sizes
+# stay within one tie-group of n/5
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.integers(0, 50), min_size=1, max_size=200))
+def test_cdf_quintile_labels_monotone_and_bounded(vals):
+    from collections import Counter
+
+    n = len(vals)
+    counts = Counter(vals)
+    cum = 0
+    labels = {}
+    for v in sorted(counts):
+        cum += counts[v]
+        labels[v] = (5 * cum + n - 1) // n
+    ordered = [labels[v] for v in sorted(labels)]
+    assert all(1 <= q <= 5 for q in ordered)
+    assert ordered == sorted(ordered)  # monotone in value order
+    assert ordered[-1] == 5  # the top value always lands in quintile 5
+    # tie-free case: exact equi-depth (each quintile within ceil(n/5))
+    if len(counts) == n:
+        sizes = Counter(labels[v] for v in vals)
+        assert max(sizes.values()) <= -(-n // 5) + 1
+
+
+# ---- quantile_sketch_merge: merge associativity + CDF readoff rank
+
+
+def _bin(v: float, width: int = 1000) -> int:
+    return math.floor(v / width)
+
+
+def _readoff(merged: dict[int, int], q_pct: int) -> int:
+    total = sum(merged.values())
+    cum = 0
+    for b in sorted(merged):
+        cum += merged[b]
+        if cum * 100 >= q_pct * total:
+            return b
+    raise AssertionError("unreachable for q_pct <= 100")
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.sampled_from("abcde"),
+                  st.floats(0, 600000, allow_nan=False)),
+        min_size=1,
+        max_size=300,
+    ),
+    st.sampled_from([50, 90, 99]),
+)
+def test_quantile_merge_equals_direct_and_rank(rows, q_pct):
+    """(1) Summing per-source histograms == histogram of the union (the
+    associative merge the operator's stage 2 relies on); (2) the CDF
+    readoff bin is exactly the bin holding the ceil(q*N/100)-th smallest
+    value (the estimator's accuracy-within-bin-width contract)."""
+    per_source: dict[str, Counter] = {}
+    for src, v in rows:
+        per_source.setdefault(src, Counter())[_bin(v)] += 1
+    merged: Counter = Counter()
+    for c in per_source.values():
+        merged.update(c)
+    direct = Counter(_bin(v) for _, v in rows)
+    assert merged == direct
+
+    values = sorted(v for _, v in rows)
+    n = len(values)
+    k = -((-q_pct * n) // 100)  # ceil(q*N/100), exact integers
+    assert _readoff(dict(merged), q_pct) == _bin(values[k - 1])

@@ -1,5 +1,7 @@
-"""Unit tests for the training-data hygiene operators (wave 2):
-pii_scan, ngram_contamination, repetition_features."""
+"""Unit tests for the training-data hygiene operators (pii_scan,
+ngram_contamination, repetition_features), the shingling and winnowing
+operators on documents shorter than the gram, and the log-odds query on
+a degenerate (monolingual) corpus."""
 
 from pyspark.sql import functions as F
 
@@ -7,6 +9,8 @@ from fitness_nutrition_data_pipeline_spark.operators.text import (
     ngram_contamination,
     pii_scan,
     repetition_features,
+    winnowing_fingerprint_summary,
+    word_shingles,
 )
 
 PATTERNS = {
@@ -162,3 +166,69 @@ def test_contamination_null_text_reports_zero_grams(spark):
     assert out[1].n_grams == 0 and out[1].n_contaminated == 0
     assert out[2].n_grams == 0
     assert out[3].n_contaminated == 1
+
+
+def test_word_shingles_short_docs_no_crash(spark):
+    """Docs with fewer tokens than the shingle width must yield empty
+    shingle arrays (negative slice length crashes Spark)."""
+    df = spark.createDataFrame(
+        [(1, ""), (2, "one"), (3, "one two"), (4, "one two three four")],
+        "id long, text string",
+    )
+    rows = {
+        r.id: r.sh
+        for r in df.select("id", word_shingles("text", 3).alias("sh")).collect()
+    }
+    assert rows[2] == []
+    assert rows[3] == []
+    assert rows[4] == ["one two three", "two three four"]
+
+
+def test_winnowing_short_docs_no_crash(spark):
+    df = spark.createDataFrame(
+        [(1, ""), (2, "one"), (3, "one two"),
+         (4, "a b c d e f g h i j k l")],
+        "id long, text string",
+    )
+    out = winnowing_fingerprint_summary(df, "id", "text", gram=3, window=4)
+    got = {r.id: r.n_fingerprints for r in out.collect()}
+    # short docs simply produce no fingerprints (absent from the groupBy)
+    assert 4 in got and got[4] >= 1
+    assert 1 not in got and 2 not in got and 3 not in got
+
+
+def test_log_odds_oracle_degenerates_like_spark(spark, tmp_path):
+    """ADVICE r13 #4: on a MONOLINGUAL corpus slice the old oracle's
+    per-corpus scalar subqueries produced an empty relation and wiped
+    the result through the comma-join, while the Spark side's global
+    agg emits one row with NULL totals and 20 null-z rows — a strict
+    hash-mismatch waiting on any single-language data slice. Both
+    engines must now degenerate identically."""
+    import duckdb
+    import pandas as pd
+
+    from fitness_nutrition_data_pipeline_spark.queries import all_specs
+
+    docs = pd.DataFrame(
+        {
+            "doc_id": range(30),
+            "text": [f"alpha beta w{i} gamma" for i in range(30)],
+            "lang": ["en"] * 30,  # no 'other' corpus at all
+            "source": ["s"] * 30,
+            "n_chars": [20] * 30,
+        }
+    )
+    docs.to_parquet(str(tmp_path / "documents.parquet"))
+
+    spec = all_specs()["log_odds_ratio_terms"]
+    got = spec.builder(spark, str(tmp_path)).toPandas()
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path}/documents.parquet'"
+    )
+    want = con.execute(spec.oracle).df()
+    assert len(got) == len(want) == 20
+    assert got["z"].isna().all() and want["z"].isna().all()
+    assert sorted(got["tok"]) == sorted(want["tok"])

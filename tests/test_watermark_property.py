@@ -1,6 +1,6 @@
 """Property-style engine parity for watermark replay (VERDICT r11 ask
 #6): tests/test_streaming.py::test_watermark_replay_matches_engine
-proves queries/analytics_ops3.watermark_tags against the REAL
+proves queries/analytics_ops.watermark_tags against the REAL
 withWatermark engine for ONE feed shape; this test lets hypothesis vary
 the things the claim quantifies over — which rows are late and by how
 much, the configured allowed-lateness delay, and the ARRIVAL ORDER
@@ -68,7 +68,7 @@ def feed(draw):
 )
 @given(feed())
 def test_watermark_replay_matches_engine_property(spark, case):
-    from fitness_nutrition_data_pipeline_spark.queries.analytics_ops3 import (
+    from fitness_nutrition_data_pipeline_spark.queries.analytics_ops import (
         watermark_tags,
     )
 

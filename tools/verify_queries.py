@@ -147,7 +147,7 @@ def norm_rows(cols, rows):
 def check_query(spark, con, spec, sf_dir) -> tuple[str, str]:
     """(verdict, message) for one spec: its builder on ``sf_dir`` against
     its oracle SQL over ``con``, whose views must read the same sf dir
-    (``connect_oracle``). verdict is "pass", "fail" or "weak" (no oracle).
+    (``connect_oracle``). verdict is "pass" or "fail".
     Thread-safe: Spark jobs are concurrent by design; the DuckDB side gets
     a per-call cursor (same in-memory catalog, its own connection state)."""
     name = spec.name
@@ -157,8 +157,6 @@ def check_query(spark, con, spec, sf_dir) -> tuple[str, str]:
         scols, srows = fetch_spark(sdf)
     except Exception as e:  # noqa: BLE001
         return "fail", f"FAIL {name}: spark error: {e}"
-    if spec.oracle is None:
-        return "weak", f"WEAK {name}: rows={len(srows)} (no oracle)"
     try:
         cur = con.cursor()
         try:
@@ -254,12 +252,11 @@ def main(names=None):
     else:
         results = [check_one(it) for it in items]
 
-    counts = {"pass": 0, "fail": 0, "weak": 0}
+    counts = {"pass": 0, "fail": 0}
     for verdict, msg in results:
         counts[verdict] += 1
         print(msg)
-    print(f"\n{counts['pass']} pass, {counts['fail']} fail, "
-          f"{counts['weak']} weak (rows-only)")
+    print(f"\n{counts['pass']} pass, {counts['fail']} fail")
     return 1 if (counts["fail"] or IMPORT_FAILURES) else 0
 
 
