@@ -63,6 +63,15 @@ NUMERIC_NUTRIENT_COLUMNS: tuple[str, ...] = (
     "alcohol", "ash", "caffeine", "theobromin", "water",
 )
 
+# The nutrition columns Dim_FoodItem is projected from, by normalized name
+# (main_etl_pipeline.py:436-440; name/category are renamed FoodName/
+# FoodCategory). Extract hands over only these. The projection intersects
+# them with the sheet's columns, so one the sheet lacks stays absent: the
+# reference's sheet has no category/carbs/fats.
+NUTRITION_COLUMNS: tuple[str, ...] = (
+    "name", "category", "calories", "protein", "carbs", "fats", "fiber",
+)
+
 
 @dataclass
 class PipelineConfig:

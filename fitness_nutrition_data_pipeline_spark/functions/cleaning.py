@@ -30,10 +30,14 @@ PYSPACE_CLASS = (
 )
 
 
+def normalize_name(name: str) -> str:
+    """Lower-case + spaces→underscores (main_etl_pipeline.py:177, 241, 392)."""
+    return name.lower().replace(" ", "_")
+
+
 def normalize_columns(df: DataFrame) -> DataFrame:
-    """Lower-case + spaces→underscores on all column names
-    (main_etl_pipeline.py:177, 241, 392)."""
-    return df.toDF(*[c.lower().replace(" ", "_") for c in df.columns])
+    """``normalize_name`` on all column names."""
+    return df.toDF(*[normalize_name(c) for c in df.columns])
 
 
 def clean_text_list(col: Column | str) -> Column:

@@ -38,6 +38,7 @@ from fitness_nutrition_data_pipeline_spark.functions.cleaning import (
     standardize_fitness_goal,
 )
 from fitness_nutrition_data_pipeline_spark.operators.keys import assign_sequential_ids, with_order_index
+from fitness_nutrition_data_pipeline_spark.pins import unpin
 
 # Final staging-profile column set (main_etl_pipeline.py:211-227).
 PROFILE_COLUMNS = [
@@ -227,8 +228,10 @@ def resolve_users(
 
     Materializes as flat ``localCheckpoint`` pins, not session caches:
     the prepared mendeley rows, gym rows and distinct Fitbit device ids
-    (concurrently), then the keyed profiles. The returned frames are lazy
-    over those pins; the caller pins them too (``pipeline.transform``).
+    (concurrently), then the keyed profiles. The device-id pin is
+    released once the keyed profiles are pinned. The returned frames are
+    lazy over the other pins; the caller pins them too
+    (``pipeline.transform``) and then releases the pins under them.
     A pin is a ``LogicalRDD`` leaf, so its consumers never wait on
     another thread's cache build."""
     cfg = cfg or PipelineConfig()
@@ -282,6 +285,9 @@ def resolve_users(
         "UserKey",
         num_partitions=1,
     ).localCheckpoint()
+    # the device ids feed only the keyed profiles, now pinned
+    if fb is not None:
+        unpin([fb])
 
     # every mendeley and gym hash matches exactly one keyed profile;
     # the Fitbit shells carry no hash

@@ -8,6 +8,7 @@ unstable Python set iteration — documented per site).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -15,6 +16,7 @@ from fitness_nutrition_data_pipeline_spark.config import (
     DIM_DATE_END,
     DIM_DATE_START,
     NUMERIC_NUTRIENT_COLUMNS,
+    NUTRITION_COLUMNS,
     PipelineConfig,
 )
 from fitness_nutrition_data_pipeline_spark.functions.cleaning import (
@@ -114,12 +116,13 @@ def build_dim_food_item(nutrition: DataFrame, cfg: PipelineConfig | None = None)
     Faithfully reproduces the §1.3 quirks in quirks mode:
     - rename name→FoodName; the category→FoodCategory rename is a no-op
       (no such column);
-    - unit-strip + coerce only the columns in NUMERIC_NUTRIENT_COLUMNS that
-      actually exist (typo'd irom/zink/lucopene/theobromine handling falls
-      out of the intersection);
-    - final projection keeps the intersection of
-      [FoodName, FoodCategory, calories, protein, carbs, fats, fiber] with
-      reality → FoodName, calories, protein, fiber;
+    - final projection keeps the intersection of NUTRITION_COLUMNS
+      (FoodName, FoodCategory, calories, protein, carbs, fats, fiber)
+      with reality → FoodName, calories, protein, fiber;
+    - of those, the ones in NUMERIC_NUTRIENT_COLUMNS are unit-stripped +
+      coerced (the reference strips every listed column that exists,
+      typo'd irom/zink/lucopene/theobromine handling included, but only
+      these reach the table);
     - dropna(FoodName), first-occurrence dedup on FoodName, FoodKey 1..N in
       row order.
     """
@@ -129,17 +132,13 @@ def build_dim_food_item(nutrition: DataFrame, cfg: PipelineConfig | None = None)
     if "category" in df.columns:  # never true for the real data (quirk)
         df = df.withColumnRenamed("category", "FoodCategory")
 
-    # ONE withColumns call, not 73 chained withColumn: each chained call
-    # adds a Project node whose analysis re-walks the whole 77-column
-    # tower, and the deep plan re-pays that optimizer cost in EVERY
-    # consumer job (this dim has 4). Batched: measured 1.71 s -> ~0.1 s
-    # declaration, same resolved plan shape after collapse.
-    present = [c for c in NUMERIC_NUTRIENT_COLUMNS if c in df.columns]
-    if present:
-        df = df.withColumns({c: strip_units(c) for c in present})
-
-    wanted = ["FoodName", "FoodCategory", "calories", "protein", "carbs", "fats", "fiber"]
+    renamed = {"name": "FoodName", "category": "FoodCategory"}
+    wanted = [renamed.get(c, c) for c in NUTRITION_COLUMNS]
     available = [c for c in wanted if c in df.columns]
+    stripped = [c for c in available if c in NUMERIC_NUTRIENT_COLUMNS]
+    if stripped:
+        df = df.withColumns({c: strip_units(c) for c in stripped})
+
     base = df.select("_row_idx", *available).where(F.col("FoodName").isNotNull())
     firsts = base.groupBy("FoodName").agg(F.min("_row_idx").alias("_row_idx"))
     deduped = base.join(firsts, ["FoodName", "_row_idx"])
@@ -150,13 +149,23 @@ def build_dim_food_item(nutrition: DataFrame, cfg: PipelineConfig | None = None)
 
 
 def build_static_dims(spark: SparkSession) -> dict[str, DataFrame]:
-    """Dim_MetricType / Dim_MealType constants (main_etl_pipeline.py:450-462)."""
+    """Dim_MetricType / Dim_MealType constants (main_etl_pipeline.py:450-462).
+
+    Built from pandas, so the session's Arrow path turns them into local
+    relations (``LocalTableScan``). A Python list would go through
+    ``parallelize``, and the first scan of it forks Python workers."""
     metric = spark.createDataFrame(
-        [(1, "heart_rate"), (2, "sleep"), (3, "weight"), (4, "bmi")],
+        pd.DataFrame({
+            "MetricTypeKey": [1, 2, 3, 4],
+            "MetricName": ["heart_rate", "sleep", "weight", "bmi"],
+        }),
         "MetricTypeKey long, MetricName string",
     )
     meal = spark.createDataFrame(
-        [(1, "breakfast"), (2, "lunch"), (3, "dinner"), (4, "snack")],
+        pd.DataFrame({
+            "MealTypeKey": [1, 2, 3, 4],
+            "MealName": ["breakfast", "lunch", "dinner", "snack"],
+        }),
         "MealTypeKey long, MealName string",
     )
     return {"Dim_MetricType": metric, "Dim_MealType": meal}

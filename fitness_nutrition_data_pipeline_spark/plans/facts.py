@@ -12,6 +12,7 @@ from __future__ import annotations
 import random
 from datetime import date, timedelta
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -231,8 +232,13 @@ def build_fact_nutrition_log(
                         round(rng.uniform(0.5, 3.0), 2),
                     )
                 )
+    # from pandas, so Arrow makes it a local relation: a list would be
+    # parallelized and its first scan would fork Python workers
     spec = spark.createDataFrame(
-        spec_rows,
+        pd.DataFrame(
+            spec_rows,
+            columns=["UserKey", "_day", "MealTypeKey", "FoodKey", "ServingSize"],
+        ),
         "UserKey long, _day date, MealTypeKey long, FoodKey long, ServingSize double",
     )
 

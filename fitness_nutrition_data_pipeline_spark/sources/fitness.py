@@ -16,6 +16,12 @@ precedence in ``read_tabular`` (faster and splittable); otherwise the
 sheet is read by the stdlib parser in sources/xlsx.py. ``extract_all``
 parses each such sheet once, on its calling thread, and hands the rows
 to the pooled task that builds the DataFrame.
+
+The nutrition source is handed over with only ``NUTRITION_COLUMNS``,
+whatever its format: 4 of the reference sheet's 77 columns reach
+Dim_FoodItem. A natively read sheet drops the rest cell by cell in its
+parse; a csv or parquet sibling gets the same projection, so every
+format hands over the same frame.
 """
 
 from __future__ import annotations
@@ -25,8 +31,11 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fitness_nutrition_data_pipeline_spark.config import NUTRITION_COLUMNS
+from fitness_nutrition_data_pipeline_spark.functions.cleaning import normalize_name
 from fitness_nutrition_data_pipeline_spark.parallel import declare_parallel
 from fitness_nutrition_data_pipeline_spark.sources import xlsx
 
@@ -191,8 +200,9 @@ def extract_all(spark: SparkSession, cfg) -> dict[str, object]:
         "mendeley_health": os.path.join(cfg.data_dir, "gym_recommendation.xlsx"),
         "nutrition": os.path.join(cfg.data_dir, "nutrition.xlsx"),
     }
+    columns = {xlsx_sources["nutrition"]: NUTRITION_COLUMNS}
     parsed = xlsx.prewarm_rows_many(
-        [p for p in xlsx_sources.values() if _xlsx_without_sibling(p)]
+        [p for p in xlsx_sources.values() if _xlsx_without_sibling(p)], columns
     )
     gym_path = os.path.join(cfg.data_dir, "gym_members_exercise_tracking.csv")
     builders = [
@@ -206,6 +216,12 @@ def extract_all(spark: SparkSession, cfg) -> dict[str, object]:
             continue
         builders.append((name, functools.partial(read_tabular, spark, path, rows)))
     results = declare_parallel(builders, max_workers=len(builders))
+    if results.get("nutrition") is not None:
+        nutrition = results["nutrition"]
+        results["nutrition"] = nutrition.select(*[
+            F.col(f"`{c}`") for c in nutrition.columns
+            if normalize_name(c) in NUTRITION_COLUMNS
+        ])
     # fitbit is a dict (empty = every file missing); the rest are
     # DataFrame-or-None
     return {

@@ -8,11 +8,16 @@ reference's plain tabular sheets (text + numbers; no formulas or date
 serials).
 
 Contract:
-- ``prewarm_rows_many(paths)`` parses sheets on the calling thread and
-  returns ``{path: rows}`` (or ``{path: exception}`` for a sheet whose
-  parse raised). Big sheets parse fork-parallel, which is allowed only
-  on the main thread; callers that fan reads out to a thread pool parse
-  first and hand each task its rows.
+- ``prewarm_rows_many(paths, columns=None)`` parses sheets on the
+  calling thread and returns ``{path: rows}`` (or ``{path: exception}``
+  for a sheet whose parse raised). Big sheets parse fork-parallel, which
+  is allowed only on the main thread; callers that fan reads out to a
+  thread pool parse first and hand each task its rows.
+- ``columns`` maps a path to the header names (normalized as
+  ``normalize_columns`` does: lower case, spaces → ``_``) that its parse
+  keeps; every other column is dropped cell by cell, so its values never
+  become Python strings. A declared name the header lacks stays absent.
+  Paths it does not name keep every column.
 - ``read_xlsx_rows(path)`` is the one-path form, raising on failure.
 - ``read_xlsx(spark, path, rows=None)`` builds the all-string DataFrame,
   parsing the file itself when no rows are given.
@@ -34,9 +39,12 @@ from __future__ import annotations
 import os
 import xml.etree.ElementTree as ET
 import zipfile
+from collections.abc import Collection, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from fitness_nutrition_data_pipeline_spark.functions.cleaning import normalize_name
 
 NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
 _REL_ATTR = (
@@ -79,15 +87,20 @@ def _col_index(cell_ref: str) -> int:
     return idx - 1
 
 
-def _parse_row_elements(root: "ET.Element", shared: list[str]) -> list[list[str]]:
+def _parse_row_elements(
+    root: "ET.Element", shared: list[str], keep: list[int] | None = None
+) -> list[list[str]]:
     """The per-row cell loop over any element tree containing <row>s.
 
     Iterates element children directly with pre-bound qualified tag
     names instead of per-cell namespaced ``find``/``findall`` — a
     measured ~3× on wide sheets (the reference's nutrition sheet is
-    ~675k cells). Rows come back dense per-row (right-padded later)."""
+    ~675k cells). Without ``keep`` rows come back dense per-row
+    (right-padded later); with it, each row holds exactly the cells at
+    the ``keep`` column indices, in that order ("" where absent)."""
     m = NS["m"]
     ROW, C, V, IS, T_ = (f"{{{m}}}{t}" for t in ("row", "c", "v", "is", "t"))
+    wanted = None if keep is None else set(keep)
     rows: list[list[str]] = []
     for row in root.iter(ROW):
         cells: dict[int, str] = {}
@@ -95,7 +108,11 @@ def _parse_row_elements(root: "ET.Element", shared: list[str]) -> list[list[str]
         for c in row:
             if c.tag != C:
                 continue
-            ctype = c.get("t", "n")
+            ref = c.get("r")
+            idx = _col_index(ref) if ref else next_idx
+            next_idx = idx + 1
+            if wanted is not None and idx not in wanted:
+                continue
             val = ""
             for ch in c:
                 if ch.tag == V:
@@ -104,33 +121,65 @@ def _parse_row_elements(root: "ET.Element", shared: list[str]) -> list[list[str]
                 if ch.tag == IS:
                     val = "".join(t.text or "" for t in ch.iter(T_))
                     break
-            if ctype == "s" and val != "":
+            if c.get("t", "n") == "s" and val != "":
                 val = shared[int(val)]
-            ref = c.get("r")
-            idx = _col_index(ref) if ref else next_idx
-            next_idx = idx + 1
             cells[idx] = val
-        width = max(cells) + 1 if cells else 0
-        rows.append([cells.get(i, "") for i in range(width)])
+        if keep is None:
+            width = max(cells) + 1 if cells else 0
+            rows.append([cells.get(i, "") for i in range(width)])
+        else:
+            rows.append([cells.get(i, "") for i in keep])
     return rows
 
 
-_MP_SHARED: list[str] = []  # worker-process shared-string table (fork init)
+def _kept_columns(root: "ET.Element", shared: list[str], columns: Collection[str]) -> list[int]:
+    """Indices of the first row's (the header's) cells whose normalized
+    text is one of ``columns``, in sheet order."""
+    first = next(root.iter(f"{{{NS['m']}}}row"), None)
+    if first is None:
+        return []
+    header = _parse_row_elements(first, shared)[0]
+    return [i for i, h in enumerate(header) if normalize_name(h) in columns]
+
+
+def _parse_sheet(
+    sheet_bytes: bytes, shared: list[str], columns: Collection[str] | None
+) -> list[list[str]]:
+    """The sequential parse: the whole sheet in one tree."""
+    root = ET.fromstring(sheet_bytes)
+    keep = None if columns is None else _kept_columns(root, shared, columns)
+    return _parse_row_elements(root, shared, keep)
+
+
+# Worker-process state, set by the pool initializer. Fork hands the
+# initializer's arguments to each worker as they are in the parent's
+# memory: the sheet bytes are shared copy-on-write, never pickled.
+_MP_SHEET: bytes = b""
+_MP_SHARED: list[str] = []
 _MP_OPEN: bytes = b""  # worksheet root open tag (carries ALL xmlns decls)
 _MP_CLOSE: bytes = b""
+_MP_KEEP: list[int] | None = None
 
 
-def _mp_init(shared: list[str], open_tag: bytes, close_tag: bytes) -> None:
-    global _MP_SHARED, _MP_OPEN, _MP_CLOSE
-    _MP_SHARED, _MP_OPEN, _MP_CLOSE = shared, open_tag, close_tag
+def _mp_init(
+    sheet: bytes, shared: list[str], open_tag: bytes, close_tag: bytes,
+    keep: list[int] | None,
+) -> None:
+    global _MP_SHEET, _MP_SHARED, _MP_OPEN, _MP_CLOSE, _MP_KEEP
+    _MP_SHEET, _MP_SHARED, _MP_OPEN, _MP_CLOSE, _MP_KEEP = (
+        sheet, shared, open_tag, close_tag, keep
+    )
 
 
-def _mp_parse_chunk(chunk: bytes) -> list[list[str]]:
+def _mp_parse_chunk(bounds: tuple[int, int]) -> list[list[str]]:
     # wrap with the ORIGINAL root open tag so every namespace prefix the
     # document binds (r:, mc:, x14ac:, xr: ... on row/cell attributes)
     # stays bound inside the fragment
+    start, end = bounds
     return _parse_row_elements(
-        ET.fromstring(_MP_OPEN + chunk + _MP_CLOSE), _MP_SHARED
+        ET.fromstring(_MP_OPEN + _MP_SHEET[start:end] + _MP_CLOSE),
+        _MP_SHARED,
+        _MP_KEEP,
     )
 
 
@@ -158,17 +207,22 @@ def _root_open_tag(sheet_bytes: bytes) -> bytes | None:
 _PARALLEL_MIN_BYTES = 4 << 20
 
 
-def _start_parallel_parse(sheet_bytes: bytes, shared: list[str]):
+def _start_parallel_parse(
+    sheet_bytes: bytes, shared: list[str], columns: Collection[str] | None = None
+):
     """Begin a fork-parallel parse of <sheetData>: split the row region
-    at <row boundaries into one chunk per worker and submit the chunks
-    to a fresh process pool WITHOUT blocking (map_async). Returns
-    (pool, async_result) — the caller collects with ``res.get()`` and
-    must close the pool — or None when the layout doesn't match
-    expectations or fork isn't available (caller falls back to the
-    sequential parse). Escaped text cannot contain a literal '<row', so
-    byte-level splits are always element-aligned. Non-blocking start is
-    what lets prewarm_rows_many parse SEVERAL files' sheets
-    concurrently, one pool each."""
+    at <row boundaries into one byte range per worker and submit the
+    ranges to a fresh process pool WITHOUT blocking (map_async). Each
+    worker inherits the sheet bytes through the fork and parses its
+    ``(start, end)`` slice, so only offsets cross the task pipe. With
+    ``columns``, the header row is parsed here first and every worker
+    keeps the same column indices. Returns (pool, async_result) — the
+    caller collects with ``res.get()`` and must close the pool — or None
+    when the layout doesn't match expectations or fork isn't available
+    (caller falls back to the sequential parse). Escaped text cannot
+    contain a literal '<row', so byte-level splits are always
+    element-aligned. Non-blocking start is what lets prewarm_rows_many
+    parse SEVERAL files' sheets concurrently, one pool each."""
     import multiprocessing as mp
     import threading
 
@@ -195,26 +249,33 @@ def _start_parallel_parse(sheet_bytes: bytes, shared: list[str]):
         ctx = mp.get_context("fork")
     except ValueError:  # pragma: no cover — non-POSIX
         return None
-    region = sheet_bytes[lo:hi]
     n = max(2, min(8, os.cpu_count() or 2))
-    target = len(region) // n
-    bounds = [0]
+    target = (hi - lo) // n
+    bounds = [lo]
     for i in range(1, n):
-        pos = region.find(b"<row", i * target)
+        pos = sheet_bytes.find(b"<row", lo + i * target, hi)
         if pos <= bounds[-1]:
             continue
         bounds.append(pos)
-    bounds.append(len(region))
-    chunks = [region[a:b] for a, b in zip(bounds, bounds[1:])]
+    bounds.append(hi)
+    keep = None
+    if columns is not None:
+        second = sheet_bytes.find(b"<row", lo + 1, hi)
+        header = sheet_bytes[lo : second if second >= 0 else hi]
+        keep = _kept_columns(
+            ET.fromstring(open_tag + header + close_tag), shared, columns
+        )
+    ranges = list(zip(bounds, bounds[1:]))
     pool = ctx.Pool(
-        len(chunks), initializer=_mp_init,
-        initargs=(shared, open_tag, close_tag),
+        len(ranges), initializer=_mp_init,
+        initargs=(sheet_bytes, shared, open_tag, close_tag, keep),
     )
-    return pool, pool.map_async(_mp_parse_chunk, chunks)
+    return pool, pool.map_async(_mp_parse_chunk, ranges)
 
 
 def prewarm_rows_many(
     paths: list[str],
+    columns: Mapping[str, Collection[str]] | None = None,
 ) -> dict[str, list[list[str]] | Exception]:
     """Parse several xlsx files on the calling thread → ``{path: rows}``.
 
@@ -222,28 +283,29 @@ def prewarm_rows_many(
     collected (one pool per sheet, non-blocking), so two ~1 s sheets
     cost ~max(tA, tB), not tA+tB; small sheets parse inline. A failed
     parallel parse falls back to the sequential parser, same results.
-    Failures are per path: a sheet whose parse raises maps to its
-    exception instead of rows, so one bad sheet never costs the others
-    their parse."""
+    ``columns`` names, per path, the normalized header names its parse
+    keeps (module docstring). Failures are per path: a sheet whose parse
+    raises maps to its exception instead of rows, so one bad sheet never
+    costs the others their parse."""
+    columns = columns or {}
     out: dict[str, list[list[str]] | Exception] = {}
     pending = []
     for path in paths:
+        cols = columns.get(path)
         try:
             shared, sheet_bytes = _load_shared_and_sheet(path)
             started = (
-                _start_parallel_parse(sheet_bytes, shared)
+                _start_parallel_parse(sheet_bytes, shared, cols)
                 if len(sheet_bytes) >= _PARALLEL_MIN_BYTES
                 else None
             )
             if started is None:
-                out[path] = _pad(
-                    _parse_row_elements(ET.fromstring(sheet_bytes), shared)
-                )
+                out[path] = _pad(_parse_sheet(sheet_bytes, shared, cols))
             else:
-                pending.append((path, sheet_bytes, shared, started))
+                pending.append((path, sheet_bytes, shared, cols, started))
         except Exception as e:  # noqa: BLE001 — reported per path
             out[path] = e
-    for path, sheet_bytes, shared, (pool, res) in pending:
+    for path, sheet_bytes, shared, cols, (pool, res) in pending:
         with pool:
             try:
                 rows = [r for part in res.get() for r in part]
@@ -251,7 +313,7 @@ def prewarm_rows_many(
                 rows = None
         try:
             if rows is None:
-                rows = _parse_row_elements(ET.fromstring(sheet_bytes), shared)
+                rows = _parse_sheet(sheet_bytes, shared, cols)
             out[path] = _pad(rows)
         except Exception as e:  # noqa: BLE001 — reported per path
             out[path] = e

@@ -88,3 +88,24 @@ def _print_probe(tag: str) -> None:
               f"host_probe_mc_sec={host_probe_mc_sec()}")
     except Exception:  # noqa: BLE001
         pass
+
+
+def pytest_terminal_summary(terminalreporter):
+    """List the tests skipped because the reference's own input data is
+    absent under a "not measured" heading: without that data, parity
+    with the reference is unmeasured, which a bare skip count hides.
+    Informational only; the exit status is unchanged."""
+    not_measured = [
+        rep.nodeid
+        for rep in terminalreporter.stats.get("skipped", [])
+        if "reference data" in _skip_reason(rep)
+    ]
+    if not_measured:
+        terminalreporter.section("not measured: reference data absent")
+        for nodeid in not_measured:
+            terminalreporter.line(nodeid)
+
+
+def _skip_reason(rep) -> str:
+    longrepr = rep.longrepr
+    return str(longrepr[2]) if isinstance(longrepr, tuple) else str(longrepr)

@@ -340,3 +340,27 @@ def test_load_failure_cleanup_waits_for_inflight_writers(spark, tmp_path):
     time.sleep(0.2)
     assert not spark.catalog.tableExists("Dim_Date")
     assert not spark.catalog.tableExists("Dim_User")
+
+
+def _leaves(df) -> list[str]:
+    """Node names of the leaves of ``df``'s analyzed plan (before any
+    cache substitution: the fixture pipeline has cached equal plans)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_literal_frames_are_local_relations(pipeline, spark):
+    """The ETL's literal frames (the two static dims, the meal-log spec)
+    are local relations, planned as ``LocalTableScan``. A Python list, or
+    Arrow's silent fallback to the Python path, would be a ``LogicalRDD``
+    (``Scan ExistingRDD``): a parallelized RDD whose first scan forks
+    Python workers."""
+    from fitness_nutrition_data_pipeline_spark.plans.dimensions import build_static_dims
+    from fitness_nutrition_data_pipeline_spark.plans.facts import build_fact_nutrition_log
+
+    for df in build_static_dims(spark).values():
+        assert _leaves(df) == ["LocalRelation"]
+    log = build_fact_nutrition_log(spark, pipeline.staging, pipeline.warehouse, pipeline.cfg)
+    leaves = _leaves(log)
+    assert "LocalRelation" in leaves
+    assert "LogicalRDD" not in leaves

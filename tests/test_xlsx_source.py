@@ -7,7 +7,11 @@ import zipfile
 
 import pytest
 
-from fitness_nutrition_data_pipeline_spark.sources.xlsx import read_xlsx, read_xlsx_rows
+from fitness_nutrition_data_pipeline_spark.sources.xlsx import (
+    prewarm_rows_many,
+    read_xlsx,
+    read_xlsx_rows,
+)
 
 _CT = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">
@@ -188,13 +192,13 @@ def _big_sheet_xml(n_rows: int) -> str:
     )
 
 
-def _parse_parallel(sheet_bytes: bytes, shared: list[str]):
+def _parse_parallel(sheet_bytes: bytes, shared: list[str], columns=None):
     """Run _start_parallel_parse to completion; None when it declines."""
     from fitness_nutrition_data_pipeline_spark.sources.xlsx import (
         _start_parallel_parse,
     )
 
-    started = _start_parallel_parse(sheet_bytes, shared)
+    started = _start_parallel_parse(sheet_bytes, shared, columns)
     if started is None:
         return None
     pool, res = started
@@ -231,3 +235,96 @@ def test_parallel_parse_refuses_worker_threads():
     with ThreadPoolExecutor(max_workers=2) as pool:
         par = pool.submit(_parse_parallel, sheet_bytes, shared).result(timeout=120)
     assert par is None
+
+
+# -- declared columns -----------------------------------------------------
+
+# "Name" and "name" normalize to the same name; category, protein, carbs
+# and fats are declared but absent, and stay absent
+_WIDE_HEADER = ["Name", "Calories", "serving size", "name", "Fiber", "Total Fat"]
+
+
+def _wide_sheet_xml(n_rows: int) -> str:
+    """A header row plus data rows that exercise every cell lane the
+    pruned parse must agree on: shared and inline strings, r=-addressed
+    cells with gaps, address-less cells (running position), rows shorter
+    than the header and cells beyond it."""
+    cell = '<c r="{ref}" t="inlineStr"><is><t>{v}</t></is></c>'
+    rows = [
+        '<row r="1">' + "".join(
+            cell.format(ref=f"{chr(65 + j)}1", v=h) for j, h in enumerate(_WIDE_HEADER)
+        ) + "</row>"
+    ]
+    for i in range(2, n_rows + 2):
+        if i % 3 == 0:
+            # address-less cells fill A.. in order; the row stops at C
+            rows.append(
+                f'<row><c t="s"><v>0</v></c><c><v>{i}</v></c>'
+                f'<c t="inlineStr"><is><t>g{i}</t></is></c></row>'
+            )
+        elif i % 3 == 1:
+            # gaps: B and D missing; G lies beyond the header
+            rows.append(
+                f'<row r="{i}"><c r="A{i}" t="s"><v>2</v></c>'
+                f'<c r="C{i}"><v>{i}</v></c><c r="E{i}"><v>{i * 3}</v></c>'
+                f'<c r="G{i}" t="s"><v>1</v></c></row>'
+            )
+        else:
+            rows.append(
+                f'<row r="{i}"><c r="B{i}"><v>{i * 7}</v></c>'
+                f'<c r="D{i}" t="inlineStr"><is><t>d{i}</t></is></c></row>'
+            )
+    return (
+        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+        '<worksheet xmlns="http://schemas.openxmlformats.org/'
+        'spreadsheetml/2006/main"><sheetData>'
+        + "".join(rows)
+        + "</sheetData></worksheet>"
+    )
+
+
+def _projected(rows: list[list[str]], columns) -> list[list[str]]:
+    """The full parse cut down to the columns whose header cell
+    normalizes to a declared name."""
+    from fitness_nutrition_data_pipeline_spark.functions.cleaning import normalize_name
+
+    keep = [i for i, h in enumerate(rows[0]) if normalize_name(h) in columns]
+    return [[r[i] for i in keep] for r in rows]
+
+
+def test_declared_columns_parse_sequential(tmp_path):
+    from fitness_nutrition_data_pipeline_spark.config import NUTRITION_COLUMNS
+
+    path = str(tmp_path / "wide.xlsx")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("[Content_Types].xml", _CT)
+        z.writestr("xl/workbook.xml", "<workbook/>")
+        z.writestr("xl/sharedStrings.xml", _SHARED)
+        z.writestr("xl/worksheets/sheet1.xml", _wide_sheet_xml(40))
+    full = read_xlsx_rows(path)
+    pruned = prewarm_rows_many([path], {path: NUTRITION_COLUMNS})[path]
+    assert pruned == _projected(full, NUTRITION_COLUMNS)
+    assert pruned[0] == ["Name", "Calories", "name", "Fiber"]
+    # a header without any declared column keeps no cell
+    assert prewarm_rows_many([path], {path: ("protein",)})[path] == [[] for _ in full]
+
+
+def test_declared_columns_parse_parallel():
+    """The fork-parallel path keeps the same cells as the sequential
+    one: the header is read before the fork and every worker parses its
+    byte range of the inherited sheet with the same column indices."""
+    import xml.etree.ElementTree as ET
+
+    from fitness_nutrition_data_pipeline_spark.config import NUTRITION_COLUMNS
+    from fitness_nutrition_data_pipeline_spark.sources.xlsx import (
+        _pad,
+        _parse_row_elements,
+    )
+
+    shared = ["name", "kcal", "split run"]
+    sheet_bytes = _wide_sheet_xml(600).encode()
+    full = _pad(_parse_row_elements(ET.fromstring(sheet_bytes), shared))
+    par = _parse_parallel(sheet_bytes, shared, NUTRITION_COLUMNS)
+    assert par is not None
+    assert par == _projected(full, NUTRITION_COLUMNS)
+    assert _pad(_parse_parallel(sheet_bytes, shared)) == full
