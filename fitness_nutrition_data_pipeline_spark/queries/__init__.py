@@ -72,8 +72,9 @@ def register(
 
 
 # Every module of this package is a query module; the directory is the
-# only record of which exist. They are imported in sorted order; a module
-# that another one imports while loading registers at that point.
+# only record of which exist. They are imported in sorted order, but a
+# module that another one imports while loading registers at that point,
+# so all_specs orders the registry itself.
 _QUERY_MODULES = tuple(sorted(m.name for m in pkgutil.iter_modules(__path__)))
 
 # module name → import error message; populated by all_specs (empty when
@@ -82,7 +83,8 @@ IMPORT_FAILURES: dict[str, str] = {}
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """Registry snapshot in registration order.
+    """Registry snapshot: the query modules in sorted order, and each
+    module's queries in definition order.
 
     Module imports are ISOLATED: one module failing to import (e.g. a
     Spark API that moved between environment versions — it has happened
@@ -107,4 +109,10 @@ def all_specs() -> dict[str, QuerySpec]:
                 "unavailable this run): %s", mod, e
             )
 
-    return dict(_REGISTRY)
+    rank = {f"{__name__}.{m}": i for i, m in enumerate(_QUERY_MODULES)}
+    # registration order within a module is definition order, and the
+    # sort is stable
+    ordered = sorted(
+        _REGISTRY.values(), key=lambda s: rank.get(s.builder.__module__, len(rank))
+    )
+    return {s.name: s for s in ordered}

@@ -4,7 +4,8 @@ Local-mode defaults mirror what we would set fleet-wide on a real cluster:
 AQE on (runtime re-planning, skew-join splitting, partition coalescing),
 shuffle partitions sized to the parallelism actually available, Arrow for
 any pandas interchange, UTC session time zone so timestamp semantics match
-the DuckDB oracle (which is time-zone-naive).
+the DuckDB oracle (which is time-zone-naive). PySpark's per-call DataFrame
+debugging (call-site capture) is off.
 """
 
 from __future__ import annotations
@@ -44,6 +45,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark otherwise wraps every pyspark.sql.functions call in a
+        # call-site capture: a conf read and two calls over py4j, a stack
+        # walk, and an `import IPython` whose first run loads IPython,
+        # jedi and prompt_toolkit into the driver (~26 MB). It feeds only
+        # the call-site line of DataFrame-context error messages.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         # Timestamps in the synthetic data are wall-clock (no zone); read
         # them as NTZ so Spark values match the DuckDB oracle bit-for-bit.

@@ -14,8 +14,10 @@ the other sources are unaffected.
 Excel ingestion (S3): a parquet or CSV sibling of an xlsx takes
 precedence in ``read_tabular`` (faster and splittable); otherwise the
 sheet is read by the stdlib parser in sources/xlsx.py. ``extract_all``
-parses each such sheet once, on its calling thread, and hands the rows
-to the pooled task that builds the DataFrame.
+parses every such sheet once, in one child process forked from its
+calling thread, which writes each sheet's rows to a file in a temp dir;
+the pooled task that builds the DataFrame scans that file with Spark and
+pins it, so no row of a sheet passes through the driver.
 
 The nutrition source is handed over with only ``NUTRITION_COLUMNS``,
 whatever its format: 4 of the reference sheet's 77 columns reach
@@ -29,6 +31,7 @@ from __future__ import annotations
 import functools
 import logging
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -142,14 +145,15 @@ def _xlsx_without_sibling(path: str) -> bool:
 
 
 def read_tabular(
-    spark: SparkSession, path: str, rows: list[list[str]] | None = None
+    spark: SparkSession, path: str, sheet: xlsx.SheetFile | None = None
 ) -> DataFrame | None:
     """Read a source that may exist as xlsx, csv, or parquet.
 
     Preference order: parquet sibling, csv sibling, native xlsx.
-    ``rows`` are the xlsx's already parsed rows; without them the sheet
-    is parsed here. Returns None when nothing is present or the xlsx
-    cannot be read (logged with its traceback)."""
+    ``sheet`` is the xlsx's already parsed sheet; without it the sheet
+    is parsed here. A native xlsx comes back pinned, so its row file may
+    be deleted once this returns. Returns None when nothing is present
+    or the xlsx cannot be read (logged with its traceback)."""
     base, _ = os.path.splitext(path)
     if os.path.exists(base + ".parquet"):
         return spark.read.parquet(base + ".parquet")
@@ -157,13 +161,7 @@ def read_tabular(
         return _read_csv(spark, base + ".csv")
     if _xlsx_without_sibling(path):
         try:
-            # pin the parsed sheet as ONE executor block: the driver-side
-            # relation would otherwise be re-serialized into every job
-            # that touches this source (the warehouse DAG touches each
-            # source many times — measured +6s on transform_load), and a
-            # dim-sized sheet doesn't need scan parallelism (it ends up
-            # broadcast downstream anyway)
-            return xlsx.read_xlsx(spark, path, rows).coalesce(1).localCheckpoint()
+            return xlsx.read_xlsx(spark, path, sheet)
         except Exception:  # noqa: BLE001 — e.g. formula/serial-date sheets
             logger.warning("xlsx read failed for %s, skipping", path, exc_info=True)
             return None
@@ -191,31 +189,36 @@ def extract_all(spark: SparkSession, cfg) -> dict[str, object]:
     mendeley/nutrition tabular. Only present sources appear in the dict.
 
     The four source groups are independent, so they extract on a thread
-    pool: the CSV schema scans and the xlsx localCheckpoint jobs run
-    JVM-side (GIL released). Sheets read natively are parsed first, on
-    this thread, because the fork-parallel parse of a big sheet is
-    main-thread-only; each pooled task gets its sheet's rows. A sheet
-    whose parse fails is logged and its source skipped."""
+    pool: the CSV schema scans and the xlsx scans and pins run JVM-side
+    (GIL released). Sheets read natively are parsed first, from this
+    thread, because only the main thread forks the parse child; the
+    child writes each sheet to a file in a temp dir, and each pooled
+    task scans its sheet's file. The temp dir is removed once every
+    task has finished, when the sheets are pinned, or when one raised.
+    A sheet whose parse fails is logged and its source skipped."""
     xlsx_sources = {
         "mendeley_health": os.path.join(cfg.data_dir, "gym_recommendation.xlsx"),
         "nutrition": os.path.join(cfg.data_dir, "nutrition.xlsx"),
     }
     columns = {xlsx_sources["nutrition"]: NUTRITION_COLUMNS}
-    parsed = xlsx.prewarm_rows_many(
-        [p for p in xlsx_sources.values() if _xlsx_without_sibling(p)], columns
-    )
     gym_path = os.path.join(cfg.data_dir, "gym_members_exercise_tracking.csv")
     builders = [
         ("fitbit", lambda: extract_fitbit(spark, cfg.fitbit_dir)),
         ("gym_members", lambda: read_tabular(spark, gym_path)),
     ]
-    for name, path in xlsx_sources.items():
-        rows = parsed.get(path)
-        if isinstance(rows, Exception):
-            logger.warning("xlsx parse failed for %s, skipping", path, exc_info=rows)
-            continue
-        builders.append((name, functools.partial(read_tabular, spark, path, rows)))
-    results = declare_parallel(builders, max_workers=len(builders))
+    with tempfile.TemporaryDirectory(prefix="xlsx_sheets_") as sheet_dir:
+        parsed = xlsx.prewarm_rows_many(
+            [p for p in xlsx_sources.values() if _xlsx_without_sibling(p)],
+            sheet_dir,
+            columns,
+        )
+        for name, path in xlsx_sources.items():
+            sheet = parsed.get(path)
+            if isinstance(sheet, Exception):
+                logger.warning("xlsx parse failed for %s, skipping", path, exc_info=sheet)
+                continue
+            builders.append((name, functools.partial(read_tabular, spark, path, sheet)))
+        results = declare_parallel(builders, max_workers=len(builders))
     if results.get("nutrition") is not None:
         nutrition = results["nutrition"]
         results["nutrition"] = nutrition.select(*[

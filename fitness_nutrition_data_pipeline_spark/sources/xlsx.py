@@ -8,26 +8,38 @@ reference's plain tabular sheets (text + numbers; no formulas or date
 serials).
 
 Contract:
-- ``prewarm_rows_many(paths, columns=None)`` parses sheets on the
-  calling thread and returns ``{path: rows}`` (or ``{path: exception}``
-  for a sheet whose parse raised). Big sheets parse fork-parallel, which
-  is allowed only on the main thread; callers that fan reads out to a
-  thread pool parse first and hand each task its rows.
+- ``prewarm_rows_many(paths, out_dir, columns=None)`` parses sheets
+  and writes each one's data rows to a file under ``out_dir``,
+  returning ``{path: SheetFile}`` (or ``{path: exception}`` for a sheet
+  whose parse failed). On the main thread the parse runs in one forked
+  child process, so no byte, string or row of a sheet enters the
+  caller's process; big sheets parse fork-parallel inside that child.
+  Only the main thread forks: a caller on a worker thread parses in its
+  own process, with the same files as the result.
 - ``columns`` maps a path to the header names (normalized as
   ``normalize_columns`` does: lower case, spaces → ``_``) that its parse
   keeps; every other column is dropped cell by cell, so its values never
   become Python strings. A declared name the header lacks stays absent.
   Paths it does not name keep every column.
-- ``read_xlsx_rows(path)`` is the one-path form, raising on failure.
-- ``read_xlsx(spark, path, rows=None)`` builds the all-string DataFrame,
-  parsing the file itself when no rows are given.
+- ``read_xlsx(spark, path, sheet=None)`` scans a parsed sheet's file
+  with Spark's JSON reader into the all-string DataFrame and pins it, so
+  that the file may go once it returns; without a sheet it parses the
+  file itself into a temp dir of its own.
+- ``read_xlsx_rows(path)`` parses one sheet in this process and
+  returns its rows, raising on failure (the pre-convert tool and the
+  parity tests read rows through it).
+
+Row files: one JSON object per data row, keyed by column position
+(``c0``…), with a blank cell left out so that it scans as NULL. JSON
+keeps every string byte-exact (CR, LF, quotes, U+2028), where a CSV
+reader normalizes line ends inside quoted values.
 
 Scale posture: xlsx is not a splittable format and only ever carries
-dimension-sized inputs (the reference's sheets are <100k rows), so the
-parse is DRIVER-SIDE into ``spark.createDataFrame`` — the same posture
-as every small-dim source here. Bulk data never arrives as xlsx; if it
-did, the answer is a one-time convert to parquet, not a distributed
-xlsx reader.
+dimension-sized inputs (the reference's sheets are <100k rows), so one
+child process parses a sheet and Spark scans the file it writes: the
+driver plans, and the rows go from the file to the JVM without passing
+through the driver. Bulk data never arrives as xlsx; if it did, the
+answer is a one-time convert to parquet, not a distributed xlsx reader.
 
 All values surface as strings (blank → NULL) for parity with the CSV
 path — every cast stays explicit downstream (the coerce semantics the
@@ -36,10 +48,16 @@ transform layer owns).
 
 from __future__ import annotations
 
+import gc
+import json
 import os
+import tempfile
+import threading
+import traceback
 import xml.etree.ElementTree as ET
 import zipfile
 from collections.abc import Collection, Mapping
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -221,10 +239,9 @@ def _start_parallel_parse(
     when the layout doesn't match expectations or fork isn't available
     (caller falls back to the sequential parse). Escaped text cannot
     contain a literal '<row', so byte-level splits are always
-    element-aligned. Non-blocking start is what lets prewarm_rows_many
+    element-aligned. Non-blocking start is what lets _parse_many
     parse SEVERAL files' sheets concurrently, one pool each."""
     import multiprocessing as mp
-    import threading
 
     lo = sheet_bytes.find(b"<row")
     hi = sheet_bytes.rfind(b"</sheetData>")
@@ -273,21 +290,19 @@ def _start_parallel_parse(
     return pool, pool.map_async(_mp_parse_chunk, ranges)
 
 
-def prewarm_rows_many(
-    paths: list[str],
-    columns: Mapping[str, Collection[str]] | None = None,
+def _parse_many(
+    paths: list[str], columns: Mapping[str, Collection[str]]
 ) -> dict[str, list[list[str]] | Exception]:
-    """Parse several xlsx files on the calling thread → ``{path: rows}``.
+    """Parse several xlsx files in this process → ``{path: rows}``
+    (rows not padded).
 
     Big sheets' fork-parallel parses are all started before any is
     collected (one pool per sheet, non-blocking), so two ~1 s sheets
     cost ~max(tA, tB), not tA+tB; small sheets parse inline. A failed
     parallel parse falls back to the sequential parser, same results.
-    ``columns`` names, per path, the normalized header names its parse
-    keeps (module docstring). Failures are per path: a sheet whose parse
-    raises maps to its exception instead of rows, so one bad sheet never
-    costs the others their parse."""
-    columns = columns or {}
+    Failures are per path: a sheet whose parse raises maps to its
+    exception instead of rows, so one bad sheet never costs the others
+    their parse."""
     out: dict[str, list[list[str]] | Exception] = {}
     pending = []
     for path in paths:
@@ -300,7 +315,7 @@ def prewarm_rows_many(
                 else None
             )
             if started is None:
-                out[path] = _pad(_parse_sheet(sheet_bytes, shared, cols))
+                out[path] = _parse_sheet(sheet_bytes, shared, cols)
             else:
                 pending.append((path, sheet_bytes, shared, cols, started))
         except Exception as e:  # noqa: BLE001 — reported per path
@@ -312,9 +327,7 @@ def prewarm_rows_many(
             except Exception:  # noqa: BLE001 — sequential fallback below
                 rows = None
         try:
-            if rows is None:
-                rows = _parse_sheet(sheet_bytes, shared, cols)
-            out[path] = _pad(rows)
+            out[path] = rows if rows is not None else _parse_sheet(sheet_bytes, shared, cols)
         except Exception as e:  # noqa: BLE001 — reported per path
             out[path] = e
     return out
@@ -322,22 +335,22 @@ def prewarm_rows_many(
 
 def read_xlsx_rows(path: str) -> list[list[str]]:
     """First worksheet of an xlsx as a dense list of string rows
-    (shared-string and inline-string cells resolved, gaps padded); the
-    one-path form of prewarm_rows_many, raising the parse's error.
+    (shared-string and inline-string cells resolved, gaps padded),
+    parsed in this process and raising the parse's error.
 
     Large sheets parse fork-parallel on the main thread (the reference's
     26 MB nutrition sheet: ~3.2 s sequential → sub-second on 8 cores);
     small sheets, worker threads and non-POSIX platforms take the
     sequential path with identical results."""
-    rows = prewarm_rows_many([path])[path]
+    rows = _parse_many([path], {})[path]
     if isinstance(rows, Exception):
         raise rows
-    return rows
+    return _pad(rows)
 
 
 def _load_shared_and_sheet(path: str) -> tuple[list[str], bytes]:
     """Shared-string table + first worksheet bytes (the zip I/O half of
-    a read, split out so prewarm_rows_many can overlap parses)."""
+    a read, split out so _parse_many can overlap parses)."""
     z = zipfile.ZipFile(path)
     m = NS["m"]
     T_ = f"{{{m}}}t"
@@ -354,25 +367,139 @@ def _pad(rows: list[list[str]]) -> list[list[str]]:
     return [r + [""] * (width - len(r)) for r in rows]
 
 
+@dataclass(frozen=True)
+class SheetFile:
+    """A parsed sheet on disk: the frame's column names (the header row;
+    a blank header cell is named ``_c{i}``) and the JSON Lines file of
+    its data rows, in sheet order."""
+
+    columns: tuple[str, ...]
+    path: str
+
+
+class SheetParseError(Exception):
+    """A sheet the parse child could not parse; the message carries the
+    child's traceback, or the child's exit status if it died."""
+
+
+def _write_rows(rows: list[list[str]], path: str) -> tuple[str, ...]:
+    """Write every row after the header as one JSON object keyed by
+    column position (``c0``…), a blank cell left out so that it scans
+    as NULL; return the column names."""
+    width = max((len(r) for r in rows), default=0)
+    header = rows[0] if rows else []
+    names = tuple(
+        header[i] if i < len(header) and header[i] != "" else f"_c{i}"
+        for i in range(width)
+    )
+    keys = [f"c{i}" for i in range(width)]
+    encode = json.JSONEncoder(ensure_ascii=False, separators=(",", ":")).encode
+    with open(path, "w", encoding="utf-8") as f:
+        f.writelines(
+            encode({k: v for k, v in zip(keys, r) if v != ""}) + "\n" for r in rows[1:]
+        )
+    return names
+
+
+def _write_sheets(
+    paths: list[str], out_dir: str, columns: Mapping[str, Collection[str]]
+) -> dict[str, SheetFile | Exception]:
+    """Parse ``paths`` in this process and write each sheet to
+    ``out_dir/sheet{i}.jsonl``, ``i`` its position in ``paths``."""
+    out: dict[str, SheetFile | Exception] = {}
+    for path, rows in _parse_many(paths, columns).items():
+        if isinstance(rows, Exception):
+            out[path] = rows
+            continue
+        target = os.path.join(out_dir, f"sheet{paths.index(path)}.jsonl")
+        try:
+            out[path] = SheetFile(_write_rows(rows, target), target)
+        except Exception as e:  # noqa: BLE001 — reported per path
+            out[path] = e
+    return out
+
+
+def prewarm_rows_many(
+    paths: list[str],
+    out_dir: str,
+    columns: Mapping[str, Collection[str]] | None = None,
+) -> dict[str, SheetFile | Exception]:
+    """Parse several xlsx files into row files under ``out_dir`` →
+    ``{path: SheetFile}``, or ``{path: exception}`` for a sheet whose
+    parse failed.
+
+    On the main thread the parse runs in one forked child, which writes
+    the files and a manifest of their names and columns, then exits;
+    nothing of a sheet enters this process. A child that dies fails
+    every sheet it was given, with its exit status. Off the main thread,
+    or when the fork itself fails, the same parse and write run in this
+    process (module docstring). ``columns`` names, per path, the
+    normalized header names its parse keeps."""
+    columns = columns or {}
+    if not paths:
+        return {}
+    if threading.current_thread() is not threading.main_thread() or not hasattr(os, "fork"):
+        return _write_sheets(paths, out_dir, columns)
+    manifest = os.path.join(out_dir, "sheets.json")
+    try:
+        pid = os.fork()
+    except OSError:  # e.g. EAGAIN/ENOMEM: the sheets still parse, here
+        return _write_sheets(paths, out_dir, columns)
+    if pid == 0:  # the parse child: it never returns
+        # no collection here may finalize an inherited object: a py4j
+        # proxy's finalizer would talk to the JVM on the parent's socket
+        gc.freeze()
+        status = 1
+        try:
+            sheets = _write_sheets(paths, out_dir, columns)
+            with open(manifest, "w", encoding="utf-8") as f:
+                json.dump({
+                    path: {"error": "".join(traceback.format_exception(s))}
+                    if isinstance(s, Exception)
+                    else {"columns": s.columns, "path": s.path}
+                    for path, s in sheets.items()
+                }, f)
+            status = 0
+        finally:
+            os._exit(status)
+    status = os.waitstatus_to_exitcode(os.waitpid(pid, 0)[1])
+    if status != 0:
+        return {
+            path: SheetParseError(f"xlsx parse child exited with status {status}")
+            for path in paths
+        }
+    with open(manifest, encoding="utf-8") as f:
+        sheets = json.load(f)
+    return {
+        path: SheetParseError(s["error"]) if "error" in s
+        else SheetFile(tuple(s["columns"]), s["path"])
+        for path, s in sheets.items()
+    }
+
+
 def read_xlsx(
-    spark: SparkSession, path: str, rows: list[list[str]] | None = None
+    spark: SparkSession, path: str, sheet: SheetFile | None = None
 ) -> DataFrame:
     """xlsx → DataFrame: first row is the header, every column string,
-    blank cells NULL (CSV-path parity). ``rows`` are the sheet's already
-    parsed rows (prewarm_rows_many); without them the file is parsed
-    here.
+    blank cells NULL (CSV-path parity). ``sheet`` is the sheet already
+    parsed (prewarm_rows_many); without it the file is parsed here into
+    a temp dir that is gone when this returns.
 
-    Ships rows through a pandas frame so the session's Arrow path does
-    the Python→JVM conversion in columnar batches (measured ~2× vs the
-    row-list path on the reference's 77-column nutrition sheet)."""
-    import pandas as pd
-
-    if rows is None:
-        rows = read_xlsx_rows(path)
-    if not rows:
-        return spark.createDataFrame([], T.StructType([]))
-    header = [str(h) if h != "" else f"_c{i}" for i, h in enumerate(rows[0])]
-    schema = T.StructType([T.StructField(h, T.StringType()) for h in header])
-    pdf = pd.DataFrame(rows[1:], columns=header, dtype=object)
-    pdf = pdf.where(pdf != "", None)
-    return spark.createDataFrame(pdf, schema=schema)
+    Spark's JSON reader scans the row file under the all-string schema,
+    FAILFAST so that a malformed line raises instead of reading as
+    NULLs, and the frame comes back pinned as ONE executor block: the
+    scan would otherwise re-run in every job that touches the source
+    (the warehouse DAG touches each source many times), and a dim-sized
+    sheet needs no scan parallelism (it is broadcast downstream anyway).
+    The row file may be deleted once this returns."""
+    if sheet is None:
+        with tempfile.TemporaryDirectory(prefix="xlsx_sheet_") as out_dir:
+            sheet = prewarm_rows_many([path], out_dir)[path]
+            if isinstance(sheet, Exception):
+                raise sheet
+            return read_xlsx(spark, path, sheet)
+    schema = T.StructType(
+        [T.StructField(f"c{i}", T.StringType()) for i in range(len(sheet.columns))]
+    )
+    df = spark.read.schema(schema).option("mode", "FAILFAST").json(sheet.path)
+    return df.toDF(*sheet.columns).coalesce(1).localCheckpoint()

@@ -7,6 +7,7 @@ import zipfile
 
 import pytest
 
+from fitness_nutrition_data_pipeline_spark.sources import xlsx
 from fitness_nutrition_data_pipeline_spark.sources.xlsx import (
     prewarm_rows_many,
     read_xlsx,
@@ -112,6 +113,54 @@ def test_read_xlsx_dataframe_contract(spark, synthetic_xlsx):
     got = {tuple(r) for r in df.collect()}
     # blank → NULL (CSV-path parity: casts stay explicit downstream)
     assert got == {("banana", None), ("split run", "105")}
+
+
+def test_worker_thread_parses_in_process(spark, synthetic_xlsx, tmp_path, monkeypatch):
+    """Only the main thread forks the parse child: from a worker thread
+    the sheet parses in this process and still reaches Spark as a file."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    pids = []
+    orig = xlsx._load_shared_and_sheet
+    monkeypatch.setattr(
+        xlsx, "_load_shared_and_sheet", lambda p: pids.append(os.getpid()) or orig(p)
+    )
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        parsed = pool.submit(prewarm_rows_many, [synthetic_xlsx], str(tmp_path)).result()
+    sheet = parsed[synthetic_xlsx]
+    assert pids == [os.getpid()]
+    assert os.path.dirname(sheet.path) == str(tmp_path)
+    df = read_xlsx(spark, synthetic_xlsx, sheet)
+    assert df.columns == ["name", "kcal"]
+    assert {tuple(r) for r in df.collect()} == {("banana", None), ("split run", "105")}
+
+
+def test_row_file_keeps_strings_byte_exact(spark, tmp_path):
+    """Every string reaches Spark through the row file byte-exact, a
+    blank cell as NULL, the rows in sheet order."""
+    from xml.sax.saxutils import escape
+
+    values = ["a\r\nb", "a\rb", "a\nb", "  lead", "trail ", '"q"', ",", "\\",
+              "é", "😀", "null", " ", "\t", "x\u2028y", "{}"]
+    rows = [["v", "k"], *([v, str(i)] for i, v in enumerate(values)), ["", ""], ["", "z"]]
+    cell = '<c t="inlineStr"><is><t xml:space="preserve">{}</t></is></c>'
+    body = "".join(
+        # a literal CR would be normalized away by any XML parser
+        "<row>" + "".join(cell.format(escape(v).replace("\r", "&#13;")) for v in r) + "</row>"
+        for r in rows
+    )
+    path = str(tmp_path / "edge.xlsx")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("[Content_Types].xml", _CT)
+        z.writestr("xl/workbook.xml", "<workbook/>")
+        z.writestr(
+            "xl/worksheets/sheet1.xml",
+            '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
+            f"<sheetData>{body}</sheetData></worksheet>",
+        )
+    assert read_xlsx_rows(path) == rows
+    got = [tuple(r) for r in read_xlsx(spark, path).collect()]
+    assert got == [tuple(v or None for v in r) for r in rows[1:]]
 
 
 @pytest.mark.skipif(
@@ -292,7 +341,9 @@ def _projected(rows: list[list[str]], columns) -> list[list[str]]:
     return [[r[i] for i in keep] for r in rows]
 
 
-def test_declared_columns_parse_sequential(tmp_path):
+def test_declared_columns_parse_sequential(spark, tmp_path):
+    """Pruning as the ETL runs it: the parse child keeps the declared
+    columns, writes them to the row file, and Spark scans that file."""
     from fitness_nutrition_data_pipeline_spark.config import NUTRITION_COLUMNS
 
     path = str(tmp_path / "wide.xlsx")
@@ -302,11 +353,18 @@ def test_declared_columns_parse_sequential(tmp_path):
         z.writestr("xl/sharedStrings.xml", _SHARED)
         z.writestr("xl/worksheets/sheet1.xml", _wide_sheet_xml(40))
     full = read_xlsx_rows(path)
-    pruned = prewarm_rows_many([path], {path: NUTRITION_COLUMNS})[path]
-    assert pruned == _projected(full, NUTRITION_COLUMNS)
-    assert pruned[0] == ["Name", "Calories", "name", "Fiber"]
+    expect = _projected(full, NUTRITION_COLUMNS)
+    sheet = prewarm_rows_many([path], str(tmp_path), {path: NUTRITION_COLUMNS})[path]
+    assert sheet.columns == ("Name", "Calories", "name", "Fiber")
+    df = read_xlsx(spark, path, sheet)
+    assert df.columns == expect[0]
+    assert [list(r) for r in df.collect()] == [[v or None for v in r] for r in expect[1:]]
     # a header without any declared column keeps no cell
-    assert prewarm_rows_many([path], {path: ("protein",)})[path] == [[] for _ in full]
+    (tmp_path / "none").mkdir()
+    sheet = prewarm_rows_many([path], str(tmp_path / "none"), {path: ("protein",)})[path]
+    assert sheet.columns == ()
+    with open(sheet.path) as f:
+        assert f.read().splitlines() == ["{}"] * (len(full) - 1)
 
 
 def test_declared_columns_parse_parallel():
