@@ -23,6 +23,16 @@ from fitness_nutrition_data_pipeline_spark.functions.cleaning import null_out_of
 METRIC_KEYS = {"heart_rate": 1, "sleep": 2, "weight": 3, "bmi": 4}
 MEAL_KEYS = {"breakfast": 1, "lunch": 2, "dinner": 3, "snack": 4}
 
+# The Fitbit feeds that roll up to one Fact_HealthMetric row per user and
+# day (main_etl_pipeline.py:540-569): feed -> (time column, daily
+# aggregate, metric key, unit). The aggregate is built on call because a
+# Column needs an active session. build_fact_health_metric and
+# streaming/rollups.py::stream_fact_health_metric both read this table.
+DAILY_FEEDS = {
+    "sleep_minutes": ("date", lambda: F.sum("value") / 60, METRIC_KEYS["sleep"], "hours"),
+    "heartrate": ("Time", lambda: F.avg("Value"), METRIC_KEYS["heart_rate"], "bpm"),
+}
+
 
 def parse_us_datetime(col) -> F.Column:
     """The sources mix ``3/25/2016`` and ``4/5/2016 11:59:59 PM`` —
@@ -74,37 +84,22 @@ def build_fact_health_metric(
     two EAV rows (kg + range-checked bmi) — main_etl_pipeline.py:540-593."""
     parts: list[DataFrame] = []
 
-    if "sleep_minutes" in fitbit:
-        sleep = (
-            fitbit["sleep_minutes"]
-            .withColumn("_day", parse_us_datetime("date").cast("date"))
+    for feed, (ts_col, daily_agg, metric_key, unit) in DAILY_FEEDS.items():
+        if feed not in fitbit:
+            continue
+        daily = (
+            fitbit[feed]
+            .withColumn("_day", parse_us_datetime(ts_col).cast("date"))
             .groupBy("Id", "_day")
-            .agg(F.sum("value").alias("_total_min"))
+            .agg(daily_agg().cast("double").alias("Value"))
         )
         parts.append(
-            _with_keys(sleep, mapping, dim_date).select(
+            _with_keys(daily, mapping, dim_date).select(
                 "UserKey",
                 "DateKey",
-                F.lit(METRIC_KEYS["sleep"]).cast("long").alias("MetricTypeKey"),
-                (F.col("_total_min") / 60).cast("double").alias("Value"),
-                F.lit("hours").alias("Unit"),
-            )
-        )
-
-    if "heartrate" in fitbit:
-        hr = (
-            fitbit["heartrate"]
-            .withColumn("_day", parse_us_datetime("Time").cast("date"))
-            .groupBy("Id", "_day")
-            .agg(F.avg("Value").alias("_avg_bpm"))
-        )
-        parts.append(
-            _with_keys(hr, mapping, dim_date).select(
-                "UserKey",
-                "DateKey",
-                F.lit(METRIC_KEYS["heart_rate"]).cast("long").alias("MetricTypeKey"),
-                F.col("_avg_bpm").cast("double").alias("Value"),
-                F.lit("bpm").alias("Unit"),
+                F.lit(metric_key).cast("long").alias("MetricTypeKey"),
+                "Value",
+                F.lit(unit).alias("Unit"),
             )
         )
 

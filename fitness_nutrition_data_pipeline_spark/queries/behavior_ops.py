@@ -762,8 +762,7 @@ def hopping_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "itself is pinned by tests/test_streaming.py.",
 )
 def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from fitness_nutrition_data_pipeline_spark.streaming import replay
     from fitness_nutrition_data_pipeline_spark.streaming.cep import (
         MATCH_SCHEMA,
         make_detector,
@@ -772,31 +771,8 @@ def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector = make_detector(
         ("view", "click", "purchase"), step_window_us=86_400_000_000
     )
-
-    class _BatchState:
-        """GroupState stand-in for the one-shot batch pass: no prior
-        state, updates discarded (the whole history is one group)."""
-
-        exists = False
-
-        def update(self, value):  # noqa: D102 — protocol shim
-            self._final = value
-
-    def run(key, pdf):
-        frames = list(detector(key, iter([pdf]), _BatchState()))
-        if frames:
-            return pd.concat(frames, ignore_index=True)
-        return pd.DataFrame(
-            {
-                "user_id": pd.Series(dtype="int64"),
-                "t_view_us": pd.Series(dtype="int64"),
-                "t_cart_us": pd.Series(dtype="int64"),
-                "t_purchase_us": pd.Series(dtype="int64"),
-            }
-        )
-
     ev = _ev(spark, sf_dir).select("event_id", "ts", "user_id", "event_type")
-    matches = ev.groupBy("user_id").applyInPandas(run, MATCH_SCHEMA)
+    matches = replay(ev, ["user_id"], detector, MATCH_SCHEMA)
     return matches.select(
         "user_id",
         "t_view_us",
@@ -825,38 +801,18 @@ def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "row_number per user ordered by event_id, kept while <= limit. "
     "Chunk-order robustness (per-chunk sorting would make "
     "admission order batch-layout-dependent) is separately pinned by "
-    "tests/test_streaming_ratelimit.py with a forced multi-chunk group.",
+    "tests/test_streaming.py::test_stream_rate_limiter with a forced "
+    "multi-chunk group.",
 )
 def ratelimit_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from fitness_nutrition_data_pipeline_spark.streaming import replay
     from fitness_nutrition_data_pipeline_spark.streaming.ratelimit import (
         ADMITTED_SCHEMA,
         _limiter,
     )
 
-    admit = _limiter(5)
-
-    class _BatchState:
-        exists = False
-
-        def update(self, value):  # noqa: D102 — protocol shim
-            self._final = value
-
-    def run(key, pdf):
-        frames = list(admit(key, iter([pdf]), _BatchState()))
-        if frames:
-            return pd.concat(frames, ignore_index=True)
-        return pd.DataFrame(
-            {
-                "user_id": pd.Series(dtype="int64"),
-                "event_id": pd.Series(dtype="int64"),
-                "admitted_no": pd.Series(dtype="int64"),
-            }
-        )
-
     ev = _ev(spark, sf_dir).select("user_id", "event_id")
-    return ev.groupBy("user_id").applyInPandas(run, ADMITTED_SCHEMA)
+    return replay(ev, ["user_id"], _limiter(5), ADMITTED_SCHEMA)
 
 
 @register(
@@ -946,41 +902,19 @@ def ingestion_lag_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "capacity-8 eviction path actually engages.",
 )
 def heavy_hitters_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from fitness_nutrition_data_pipeline_spark.queries.sampling import hash_bucket
+    from fitness_nutrition_data_pipeline_spark.streaming import replay
     from fitness_nutrition_data_pipeline_spark.streaming.heavyhitters import (
         HH_SCHEMA,
         _make_mg,
     )
-
-    mg = _make_mg(8)
-
-    class _BatchState:
-        exists = False
-
-        def update(self, value):  # noqa: D102 — protocol shim
-            self._final = value
-
-    def run(key, pdf):
-        frames = list(mg(key, iter([pdf]), _BatchState()))
-        if frames:
-            return pd.concat(frames, ignore_index=True)
-        return pd.DataFrame(
-            {
-                "shard": pd.Series(dtype="int64"),
-                "key": pd.Series(dtype="object"),
-                "count_lb": pd.Series(dtype="int64"),
-                "err_bound": pd.Series(dtype="int64"),
-            }
-        )
 
     ev = _ev(spark, sf_dir).where(F.col("user_id").isNotNull())
     sharded = ev.select(
         hash_bucket(F.col("user_id"), 4).alias("shard"),
         F.col("user_id").cast("string").alias("key"),
     )
-    return sharded.groupBy("shard").applyInPandas(run, HH_SCHEMA)
+    return replay(sharded, ["shard"], _make_mg(8), HH_SCHEMA)
 
 
 @register(

@@ -674,7 +674,7 @@ _HYG_PATTERNS = {"cust": "customer", "sort": "sort"}
     sort=("doc_id",),
     doc="Batch replay of the STREAMING hygiene module (streaming/"
     "hygiene.py) — the IDENTICAL two functions the live ingest-edge path "
-    "runs, composed: redact_pii_stream (pii_scan projection: per-pattern "
+    "runs, composed: pii_scan (a projection a stream applies as is: per-pattern "
     "counts + redacted copy, hash-pinned here via md5 so the driver "
     "verifies the redacted BYTES, not just counts) feeding "
     "contamination_alerts (distinct-5-gram explode probed against the "
@@ -689,13 +689,12 @@ _HYG_PATTERNS = {"cust": "customer", "sort": "sort"}
 def hygiene_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.streaming.hygiene import (
         contamination_alerts,
-        redact_pii_stream,
     )
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     bench = docs.where(F.col("doc_id") < _BENCH_MAX_DOC)
     corpus = docs.where(F.col("doc_id") >= _BENCH_MAX_DOC).select("doc_id", "text")
-    red = redact_pii_stream(corpus, "text", _HYG_PATTERNS).select(
+    red = pii_scan(corpus, "text", _HYG_PATTERNS).select(
         "doc_id",
         "text",
         "n_cust",

@@ -16,7 +16,7 @@ arriving after the deadline resets the attempt (the event itself may
 start a fresh attempt if it is the first step); completing the pattern
 emits one match row and closes the attempt. State per user is one
 (stage, first_ts, prev_ts) tuple — cardinality-bounded, never
-volume-bounded, the same posture as the sessionizer.
+volume-bounded, as in the sessionizer.
 
 Chunk-order correctness: a user's micro-batch group reaches Python as
 MULTIPLE Arrow chunks in arbitrary order; the NFA is order-sensitive, so
@@ -110,35 +110,15 @@ def make_detector(
     return _detect
 
 
-_detect_group = make_detector()
-
-
-def stream_detect_sequences(
-    spark: SparkSession,
-    input_dir: str,
-    pattern: tuple[str, str, str] = PATTERN,
-) -> DataFrame:
+def stream_detect_sequences(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming view→cart→purchase detector over a parquet event feed;
     emits one row per completed sequence (append mode)."""
     src = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
     return src.groupBy("user_id").applyInPandasWithState(
-        make_detector(pattern),
+        make_detector(),
         outputStructType=MATCH_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def run_detector_once(spark: SparkSession, input_dir: str, name: str) -> DataFrame:
-    """Drain available files through the detector into a memory table."""
-    q = (
-        stream_detect_sequences(spark, input_dir)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

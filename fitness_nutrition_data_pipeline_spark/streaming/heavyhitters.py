@@ -15,9 +15,9 @@ a key hashes to exactly ONE shard, any key whose GLOBAL frequency
 exceeds N/(capacity+1) is in its shard's table whenever shards see
 balanced volume (worst case: its shard's own threshold).
 
-State per shard is three parallel arrays capped at ``capacity`` — fixed
-memory regardless of stream volume, the same posture as every stateful
-operator in this package.
+The summary counts the feed's ``event_type``. State per shard is three
+parallel arrays capped at ``capacity`` — fixed memory regardless of
+stream volume.
 """
 
 from __future__ import annotations
@@ -95,7 +95,6 @@ def stream_heavy_hitters(
     spark: SparkSession,
     input_dir: str,
     *,
-    key_col: str = "event_type",
     n_shards: int = 4,
     capacity: int = 64,
     max_files_per_trigger: int | None = None,
@@ -107,8 +106,8 @@ def stream_heavy_hitters(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     src = reader.parquet(input_dir)
     sharded = src.select(
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).alias("shard"),
-        F.col(key_col).cast("string").alias("key"),
+        F.pmod(F.xxhash64(F.col("event_type")), F.lit(n_shards)).alias("shard"),
+        F.col("event_type").alias("key"),
     )
     return sharded.groupBy("shard").applyInPandasWithState(
         _make_mg(capacity),
@@ -124,7 +123,6 @@ def run_heavy_hitters_once(
     input_dir: str,
     name: str,
     *,
-    key_col: str = "event_type",
     n_shards: int = 4,
     capacity: int = 64,
     max_files_per_trigger: int | None = None,
@@ -138,14 +136,11 @@ def run_heavy_hitters_once(
     the union of emissions. Drain via foreachBatch instead,
     keeping only the LATEST emission per shard: every batch emits a
     shard's full current table, so last-batch-wins per shard is exactly
-    the live state. The result is also registered as temp view ``name``
-    (the old memory-sink read path)."""
+    the live state. The result is also registered as temp view ``name``."""
     # shard -> that shard's table from the NEWEST batch that emitted it.
     # foreachBatch invocations are serialized in batch order, so a plain
     # dict.update is last-batch-wins — and driver memory stays bounded
-    # by (n_shards x capacity) instead of growing with batch count
-    # (keeping every batch's full emission was linear in the number of
-    # micro-batches for no benefit).
+    # by (n_shards x capacity) instead of growing with batch count.
     latest: dict[int, list] = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -156,8 +151,8 @@ def run_heavy_hitters_once(
 
     q = (
         stream_heavy_hitters(
-            spark, input_dir, key_col=key_col, n_shards=n_shards,
-            capacity=capacity, max_files_per_trigger=max_files_per_trigger,
+            spark, input_dir, n_shards=n_shards, capacity=capacity,
+            max_files_per_trigger=max_files_per_trigger,
         )
         .writeStream.foreachBatch(_sink)
         .outputMode("update")
@@ -167,8 +162,6 @@ def run_heavy_hitters_once(
     q.awaitTermination()
 
     rows = [r for shard_rows in latest.values() for r in shard_rows]
-    out = spark.createDataFrame(rows, HH_SCHEMA) if rows else (
-        spark.createDataFrame([], HH_SCHEMA)
-    )
+    out = spark.createDataFrame(rows, HH_SCHEMA)
     out.createOrReplaceTempView(name)
     return out

@@ -1,12 +1,14 @@
-"""Streaming data-hygiene: the ingest-edge twins of the batch
-training-data passes (operators/text.py) — PII redaction and
-benchmark-contamination alerting applied to a live document feed.
+"""Streaming data-hygiene: benchmark-contamination alerting on a live
+document feed, the ingest-edge twin of the batch training-data passes
+(operators/text.py).
 
-Both operators are STATELESS (pure projection / broadcast stream-static
-join), so they run forever with zero state-store growth — the property
-that matters at ingest scale. Stateful follow-ups (windowed dedup of
-alerts, rate rollups) compose downstream via the existing
-streaming/dedup.py and streaming/rollups.py operators.
+PII redaction needs no streaming operator of its own: the batch
+``operators/text.pii_scan`` is a pure per-row projection (regexp count +
+replace), so it applies to a streaming frame as it is.
+
+The alert join is STATELESS (broadcast stream-static join), so it runs
+with zero state-store growth. Windowed dedup of alerts composes
+downstream via streaming/dedup.py.
 """
 
 from __future__ import annotations
@@ -16,19 +18,8 @@ from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.operators.text import (
     benchmark_gram_set,
-    pii_scan,
     word_shingles,
 )
-
-
-def redact_pii_stream(
-    stream: DataFrame, text_col: str, patterns: dict[str, str]
-) -> DataFrame:
-    """PII scan + redaction on a streaming text column. Reuses the batch
-    ``pii_scan`` expression tree verbatim — it is a pure per-row
-    projection (regexp count + replace), so the SAME Column expressions
-    are streaming-safe with no watermark or state."""
-    return pii_scan(stream, text_col, patterns)
 
 
 def contamination_alerts(
@@ -47,7 +38,7 @@ def contamination_alerts(
     append mode with no watermark and no state store; every emitted row
     is a contamination hit the moment the doc arrives. Dedup/rollup of
     alerts (e.g. one alert per doc per hour) composes downstream with
-    ``streaming/dedup.dedup_by_key`` / ``streaming/rollups``.
+    ``streaming/dedup.dedup_by_key``.
 
     The static side is the benchmark (tiny, broadcast); Spark re-plans it
     per micro-batch, so a refreshed benchmark table is picked up without

@@ -8,8 +8,8 @@ effects (inserts +1/+v, retractions -1/-v), and merging effects into the
 stored group-grain state is a union + re-aggregate that touches only
 state + delta — never the history.
 
-At 100 TB the state relation is group-grain (tiny vs the stream), the
-merge shuffles on the same key every batch (AQE coalesces it), and the
+The state relation is group-grain (tiny vs the stream), the merge
+shuffles on the same key every batch (AQE coalesces it), and the
 parquet state dir is the restart token: a maintainer pointed at an
 existing state dir resumes exactly where the previous run stopped
 (pinned by tests/test_streaming_ivm.py::test_restart_resumes).

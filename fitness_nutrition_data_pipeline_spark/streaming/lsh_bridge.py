@@ -54,8 +54,8 @@ the REAL engine under the DuckDB value oracle.
 State durability mirrors operators/kcore.py::_pin's two-tier rule: in
 memory (localCheckpoint) for bounded/test corpora, a parquet state dir
 with write-new-then-swap (ivm.py's ._next/._old protocol, simplified —
-append-only state needs no applied-batch sidecar) for the 100 TB
-ingest path where state must survive executor loss and restarts.
+append-only state needs no applied-batch sidecar) where state must
+survive executor loss and restarts.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ custom stateful operator beside the ``applyInPandasWithState`` sessionizer
 
 State: one admitted-count per key, updated per micro-batch; admission is
 deterministic (event_id order within a batch). Memory is bounded by key
-cardinality, never volume — the 100 TB-stream posture.
+cardinality, never volume.
 """
 
 from __future__ import annotations
@@ -15,15 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
+from fitness_nutrition_data_pipeline_spark.streaming.sessions import EVENT_SCHEMA
 
 ADMITTED_SCHEMA = T.StructType(
     [
@@ -80,18 +72,3 @@ def rate_limit_stream(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def run_rate_limiter_once(
-    spark: SparkSession, input_dir: str, name: str, *, limit: int = 3
-) -> DataFrame:
-    """Drain available files through the limiter into a memory table."""
-    q = (
-        rate_limit_stream(spark, input_dir, limit=limit)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

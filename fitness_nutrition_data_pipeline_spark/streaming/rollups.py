@@ -2,15 +2,14 @@
 
 The reference computes daily sleep/heart-rate rollups as batch group-bys
 over per-second/per-minute files (main_etl_pipeline.py:540-569). Those
-feeds are shaped like streams; here the same semantics as Structured
-Streaming plans: file source → event-time parse → watermark → 1-day
-tumbling window → sum/mean. The aggregation result schema matches the
-batch Fact_HealthMetric inputs, so a stream can feed the same warehouse.
+feeds are shaped like streams; here the same rollups run as a Structured
+Streaming plan: file source → event-time parse → watermark → 1-day
+tumbling window → the daily aggregate of plans/facts.py::DAILY_FEEDS.
+The output is Fact_HealthMetric-shaped, so a stream can feed the same
+warehouse table as the batch build.
 
-At scale: file-source streaming handles late-arriving device uploads via
-the watermark (state eviction after `late_threshold`); the shuffle is the
-same (device, day) key as batch, and state size is bounded by
-devices × open windows.
+The watermark evicts a window's state 1 day after the newest event has
+passed it; state is bounded by devices × open windows.
 """
 
 from __future__ import annotations
@@ -18,78 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fitness_nutrition_data_pipeline_spark.plans.facts import parse_us_datetime
-from fitness_nutrition_data_pipeline_spark.sources.fitness import HEARTRATE_SCHEMA, MINUTE_SLEEP_SCHEMA
-
-
-def _daily_window(df: DataFrame, ts_col: str, id_col: str, late_threshold: str):
-    parsed = df.withColumn("_ts", parse_us_datetime(ts_col)).where(F.col("_ts").isNotNull())
-    return (
-        parsed.withWatermark("_ts", late_threshold)
-        .groupBy(F.window("_ts", "1 day").alias("_w"), F.col(id_col).alias("device_id"))
-    )
-
-
-def stream_daily_heartrate(
-    spark: SparkSession, input_dir: str, *, late_threshold: str = "1 day"
-) -> DataFrame:
-    """Streaming daily heart-rate mean (≙ A2, main_etl_pipeline.py:556-569).
-
-    Returns a streaming DataFrame: (device_id, day, avg_bpm, n_samples).
-    """
-    src = (
-        spark.readStream.schema(HEARTRATE_SCHEMA)
-        .option("header", True)
-        .option("maxFilesPerTrigger", 16)
-        .csv(input_dir)
-    )
-    return (
-        _daily_window(src, "Time", "Id", late_threshold)
-        .agg(F.avg("Value").alias("avg_bpm"), F.count(F.lit(1)).alias("n_samples"))
-        .select(
-            "device_id",
-            F.col("_w.start").cast("date").alias("day"),
-            "avg_bpm",
-            "n_samples",
-        )
-    )
-
-
-def stream_daily_sleep(
-    spark: SparkSession, input_dir: str, *, late_threshold: str = "1 day"
-) -> DataFrame:
-    """Streaming daily sleep hours (≙ A1, main_etl_pipeline.py:540-553):
-    sum of minute flags / 60."""
-    src = (
-        spark.readStream.schema(MINUTE_SLEEP_SCHEMA)
-        .option("header", True)
-        .option("maxFilesPerTrigger", 16)
-        .csv(input_dir)
-    )
-    return (
-        _daily_window(src, "date", "Id", late_threshold)
-        .agg((F.sum("value") / 60).alias("sleep_hours"))
-        .select(
-            "device_id",
-            F.col("_w.start").cast("date").alias("day"),
-            F.col("sleep_hours").cast("double").alias("sleep_hours"),
-        )
-    )
-
-
-def run_stream_to_memory(stream_df: DataFrame, table_name: str) -> DataFrame:
-    """Drain a (finite) file-source stream into an in-memory table with an
-    availableNow trigger — the test/backfill harness. Complete output mode:
-    these are windowed aggregations read back in full."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(table_name)
+from fitness_nutrition_data_pipeline_spark.plans.facts import (
+    DAILY_FEEDS,
+    _fitbit_user_map,
+    parse_us_datetime,
+)
+from fitness_nutrition_data_pipeline_spark.sources.fitness import FITBIT_FILES
 
 
 def stream_fact_health_metric(
@@ -98,33 +31,17 @@ def stream_fact_health_metric(
     kind: str,
     mapping: DataFrame,
     dim_date: DataFrame,
-    *,
-    late_threshold: str = "1 day",
 ) -> DataFrame:
-    """Streaming twin of plans/facts.build_fact_health_metric for the
-    sleep/heartrate feeds: stream-static broadcast joins resolve
-    UserKey/DateKey BEFORE the windowed aggregation (join-after-agg is
-    both restricted in streaming and the worse plan), then the same
-    1-day tumbling rollup emits Fact_HealthMetric-shaped rows.
-
-    kind: 'sleep_minutes' | 'heartrate'. The same fact table can be fed
-    from batch backfill and this stream interchangeably.
+    """Streaming form of plans/facts.build_fact_health_metric for one
+    feed of ``DAILY_FEEDS`` (``kind``: 'sleep_minutes' | 'heartrate'):
+    stream-static broadcast joins resolve UserKey/DateKey BEFORE the
+    windowed aggregation (join-after-agg is both restricted in streaming
+    and the worse plan), then the 1-day tumbling rollup emits
+    Fact_HealthMetric rows.
     """
-    from fitness_nutrition_data_pipeline_spark.plans.facts import METRIC_KEYS
-
-    if kind == "sleep_minutes":
-        schema, ts_col, id_col = MINUTE_SLEEP_SCHEMA, "date", "Id"
-        metric_key, unit = METRIC_KEYS["sleep"], "hours"
-        agg = (F.sum("value") / 60).cast("double").alias("Value")
-    elif kind == "heartrate":
-        schema, ts_col, id_col = HEARTRATE_SCHEMA, "Time", "Id"
-        metric_key, unit = METRIC_KEYS["heart_rate"], "bpm"
-        agg = F.avg("Value").cast("double").alias("Value")
-    else:
-        raise ValueError(f"unknown feed kind: {kind!r}")
-
+    ts_col, daily_agg, metric_key, unit = DAILY_FEEDS[kind]
     src = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(FITBIT_FILES[kind][1])
         .option("header", True)
         .option("maxFilesPerTrigger", 16)
         .csv(input_dir)
@@ -132,20 +49,16 @@ def stream_fact_health_metric(
     # snapshot the static sides: the streaming analyzer rejects plans whose
     # static lineage contains batch-only expressions (the resolution path
     # uses monotonically_increasing_id); localCheckpoint truncates lineage
-    users = (
-        mapping.where(F.col("source") == "fitbit")
-        .select(F.col("original_id").alias("_fitbit_id"), F.col("user_key").alias("UserKey"))
-        .localCheckpoint()
-    )
+    users = _fitbit_user_map(mapping).localCheckpoint()
     dates = dim_date.select("DateKey", "FullDate").localCheckpoint()
     parsed = src.withColumn("_ts", parse_us_datetime(ts_col)).where(F.col("_ts").isNotNull())
     keyed = parsed.join(
-        F.broadcast(users), parsed[id_col].cast("string") == users["_fitbit_id"]
+        F.broadcast(users), parsed["Id"].cast("string") == users["_fitbit_id"]
     ).join(F.broadcast(dates), F.col("_ts").cast("date") == dates["FullDate"])
     return (
-        keyed.withWatermark("_ts", late_threshold)
+        keyed.withWatermark("_ts", "1 day")
         .groupBy(F.window("_ts", "1 day").alias("_w"), "UserKey", "DateKey")
-        .agg(agg)
+        .agg(daily_agg().cast("double").alias("Value"))
         .select(
             "UserKey",
             "DateKey",

@@ -1,5 +1,5 @@
 """Custom stateful streaming operator: event sessionization with
-``applyInPandasWithState`` (north-star "custom stateful operators").
+``applyInPandasWithState``.
 
 Batch twin: queries/relational.py::sessionize_events (lag + running sum).
 Here the same 30-minute-gap semantics run incrementally: per-user state
@@ -10,8 +10,10 @@ micro-batch, not per event.
 
 State size = one small tuple per active user; eviction is the closed
 session emit, so memory is bounded by concurrently-active users, not
-history. That's the 100 TB-stream posture: state proportional to
-cardinality, never to volume.
+history.
+
+``EVENT_SCHEMA`` is the event feed's schema for every operator in this
+package that reads one (cep, ratelimit, heavyhitters).
 """
 
 from __future__ import annotations
@@ -105,38 +107,23 @@ def stream_sessionize(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def run_sessionizer_once(spark: SparkSession, input_dir: str, name: str) -> DataFrame:
-    """Drain available files through the sessionizer into a memory table."""
-    q = (
-        stream_sessionize(spark, input_dir)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def stream_sessionize_native(
-    spark: SparkSession,
-    input_dir: str,
-    *,
-    gap: str = "30 minutes",
-    late_threshold: str = "1 hour",
-) -> DataFrame:
+def stream_sessionize_native(spark: SparkSession, input_dir: str) -> DataFrame:
     """Sessionization via Spark's NATIVE merging session windows — the
     streaming twin of queries/relational.py::sessionize_native_window
     and the engine-managed alternative to the custom
     ``applyInPandasWithState`` sessionizer above (same 30-minute-gap
     semantics, state merged/evicted by the engine under the watermark
     instead of hand-rolled tuples). Append mode: a session row emits
-    once its window can no longer grow (watermark passes end+gap)."""
+    once its window can no longer grow (watermark passes end+gap); the
+    watermark trails the newest event by 1 hour.
+
+    The two sessionizers differ in when a session emits: the custom one
+    closes it on the user's next event, this one when the watermark
+    passes."""
     src = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
     return (
-        src.withWatermark("ts", late_threshold)
-        .groupBy("user_id", F.session_window("ts", gap).alias("sw"))
+        src.withWatermark("ts", "1 hour")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.unix_micros(F.min("ts")).alias("session_start_us"),

@@ -17,7 +17,6 @@ import pytest
 pytestmark = pytest.mark.slow
 
 import datetime
-import glob as _glob
 import os
 import shutil
 import sys
@@ -27,6 +26,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tests import streaming_feed as SF  # noqa: E402
 
 N_EVENTS = 30
 T0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
@@ -85,53 +86,34 @@ def _simulate(rows):
 @given(feed())
 def test_cep_matches_invariant_to_batching(spark, case):
     from fitness_nutrition_data_pipeline_spark.streaming.cep import (
-        EVENT_SCHEMA,
         stream_detect_sequences,
     )
 
     etypes, users, gaps, cuts = case
     work = tempfile.mkdtemp(prefix="cep_prop_")
     try:
-        indir, outdir, ckpt = (
-            os.path.join(work, n) for n in ("in", "out", "ck")
-        )
-        os.makedirs(indir)
         rows, t = [], 0
         for i in range(N_EVENTS):
             t += gaps[i]
             rows.append((i, T0 + datetime.timedelta(seconds=t), users[i],
                          etypes[i], 1.0))
         bounds = [0, *cuts, N_EVENTS]
+        emitted = []
         for b in range(len(bounds) - 1):
-            chunk = rows[bounds[b] : bounds[b + 1]]
-            stage_dir = os.path.join(work, f"stage{b}")
-            spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage_dir)
-            (part,) = _glob.glob(os.path.join(stage_dir, "part-*.parquet"))
-            shutil.move(part, os.path.join(indir, f"f{b}.parquet"))
-            q = (
-                stream_detect_sequences(spark, indir)
-                .writeStream.format("parquet")
-                .option("path", outdir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+            emitted += SF.feed(
+                work,
+                rows[bounds[b] : bounds[b + 1]],
+                lambda indir: stream_detect_sequences(spark, indir),
             )
-            q.awaitTermination()
 
-        try:
-            got = sorted(
-                (r.user_id, r.t_view_us, r.t_cart_us, r.t_purchase_us)
-                for r in spark.read.parquet(outdir).collect()
-            )
-        except Exception:  # no matches -> sink dir may hold no parquet
-            got = []
+        got = sorted(
+            (r.user_id, r.t_view_us, r.t_cart_us, r.t_purchase_us)
+            for r in emitted
+        )
         # build the simulation's epoch-us inputs through the SAME
         # parquet->pandas conversion the detector itself uses, so no
         # naive-datetime/session-timezone offset can skew absolute times
-        pdf = spark.read.parquet(indir).toPandas()
+        pdf = spark.read.parquet(os.path.join(work, "in")).toPandas()
         pdf = pdf.assign(_us=pdf["ts"].astype("int64") // 1000).sort_values(
             "event_id"
         )

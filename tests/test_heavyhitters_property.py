@@ -29,7 +29,6 @@ import pytest
 pytestmark = pytest.mark.slow
 
 import datetime
-import glob as _glob
 import os
 import shutil
 import sys
@@ -41,6 +40,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tests import streaming_feed as SF  # noqa: E402
 
 N_EVENTS = 30
 N_SHARDS = 2
@@ -90,9 +91,6 @@ def test_heavy_hitters_state_matches_simulation(spark, case):
     from fitness_nutrition_data_pipeline_spark.streaming.heavyhitters import (
         stream_heavy_hitters,
     )
-    from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
-        EVENT_SCHEMA,
-    )
 
     keys, perms = case
     names = [f"k{k}" for k in keys]
@@ -111,40 +109,25 @@ def test_heavy_hitters_state_matches_simulation(spark, case):
 
     work = tempfile.mkdtemp(prefix="hh_prop_")
     try:
-        indir, ckpt = os.path.join(work, "in"), os.path.join(work, "ck")
-        os.makedirs(indir)
+        # each feed call is one micro-batch, and every batch emits each
+        # touched shard's full table: last batch wins per shard
         latest: dict[int, list] = {}
-
-        def _sink(batch_df, _bid, _out=latest):
-            by: dict[int, list] = {}
-            for r in batch_df.collect():
-                by.setdefault(r.shard, []).append(
-                    (r.key, r.count_lb, r.err_bound)
-                )
-            _out.update(by)
-
-        for b, perm in enumerate(perms):
+        for perm in perms:
             rows = [
                 (i, T0 + datetime.timedelta(seconds=i), i % 7, names[i], 1.0)
                 for i in perm
             ]
-            stage = os.path.join(work, f"stage{b}")
-            spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-            shutil.move(part, os.path.join(indir, f"f{b}.parquet"))
-            q = (
-                stream_heavy_hitters(
+            by: dict[int, list] = {}
+            for r in SF.feed(
+                work,
+                rows,
+                lambda indir: stream_heavy_hitters(
                     spark, indir, n_shards=N_SHARDS, capacity=CAPACITY
-                )
-                .writeStream.foreachBatch(_sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+                ),
+                mode="update",
+            ):
+                by.setdefault(r.shard, []).append((r.key, r.count_lb, r.err_bound))
+            latest.update(by)
 
         for shard in range(N_SHARDS):
             batches = [

@@ -1,9 +1,9 @@
 """Every top-level function and class in the package must be reachable
 from something that runs: a registered query, module-level code, the
-tools, perfbench, bench.py or the driver entry. The streaming modules'
-top-level defs are roots too (they are the system's streaming entry
-points). Tests are not roots, so a def that only its own test calls
-fails here.
+tools, perfbench, bench.py or the driver entry. A package's declared API
+is module-level code (its ``__all__`` strings and re-exports), so
+``streaming/__init__.py`` roots the streaming operators. Tests are not
+roots, so a def that only its own test calls fails here.
 
 Reachability is by identifier, transitively: a reached def reaches every
 ``Name``, ``Attribute.attr``, import alias and identifier-like string
@@ -54,7 +54,7 @@ def test_every_package_def_is_reachable():
             defs.setdefault(node.name, []).append((module, node))
             for d in node.decorator_list:
                 roots |= _identifiers(d)
-            if _is_registered(node) or module.startswith("streaming."):
+            if _is_registered(node):
                 roots.add(node.name)
     entry_files = [
         *sorted((REPO / "tools").glob("*.py")),
@@ -82,3 +82,11 @@ def test_every_package_def_is_reachable():
         for module, _ in sites
     )
     assert unreachable == [], f"package defs nothing runs: {unreachable}"
+
+
+def test_streaming_star_import_binds_the_declared_api():
+    from fitness_nutrition_data_pipeline_spark import streaming
+
+    ns: dict = {}
+    exec("from fitness_nutrition_data_pipeline_spark.streaming import *", ns)
+    assert streaming.__all__ and all(callable(ns[name]) for name in streaming.__all__)

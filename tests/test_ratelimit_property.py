@@ -21,7 +21,6 @@ import pytest
 pytestmark = pytest.mark.slow
 
 import datetime
-import glob as _glob
 import os
 import shutil
 import sys
@@ -31,6 +30,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tests import streaming_feed as SF  # noqa: E402
 
 N_EVENTS = 36
 T0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
@@ -56,45 +57,26 @@ def feed(draw):
 @given(feed())
 def test_rate_limiter_admission_invariant_to_batching(spark, case):
     from fitness_nutrition_data_pipeline_spark.streaming.ratelimit import (
-        EVENT_SCHEMA,
         rate_limit_stream,
     )
 
     users, limit, cuts = case
     work = tempfile.mkdtemp(prefix="rl_prop_")
     try:
-        indir, outdir, ckpt = (
-            os.path.join(work, n) for n in ("in", "out", "ck")
-        )
-        os.makedirs(indir)
         rows = [
             (i, T0 + datetime.timedelta(seconds=i), users[i], "click", 1.0)
             for i in range(N_EVENTS)
         ]
         bounds = [0, *cuts, N_EVENTS]
+        emitted = []
         for b in range(len(bounds) - 1):
-            chunk = rows[bounds[b] : bounds[b + 1]]
-            stage = os.path.join(work, f"stage{b}")
-            spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-            shutil.move(part, os.path.join(indir, f"f{b}.parquet"))
-            q = (
-                rate_limit_stream(spark, indir, limit=limit)
-                .writeStream.format("parquet")
-                .option("path", outdir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+            emitted += SF.feed(
+                work,
+                rows[bounds[b] : bounds[b + 1]],
+                lambda indir: rate_limit_stream(spark, indir, limit=limit),
             )
-            q.awaitTermination()
 
-        got = sorted(
-            (r.user_id, r.event_id, r.admitted_no)
-            for r in spark.read.parquet(outdir).collect()
-        )
+        got = sorted((r.user_id, r.event_id, r.admitted_no) for r in emitted)
         # closed form == the ratelimit_batch_replay oracle: first `limit`
         # event_ids per user, numbered 1..k in id order
         want = []

@@ -53,6 +53,8 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tests import streaming_feed as SF  # noqa: E402
+
 T0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
 N_EVENTS = 18
 GAP_MIN = 30  # must match streaming/sessions.py GAP_US
@@ -131,67 +133,17 @@ def test_sessionizers_invariant_to_batching(spark, case):
     for backend in (stream_sessionize, stream_sessionize_native):
         work = tempfile.mkdtemp(prefix="sess_prop_")
         try:
-            src = os.path.join(work, "in")
             emitted: list[tuple] = []
 
-            os.makedirs(src, exist_ok=True)
-            batch_no = [0]
-
-            def run_batch(batch_rows, _src=src, _work=work, _out=emitted,
-                          _backend=backend, _no=batch_no):
-                # pyarrow-direct parquet (timestamp[us] == Spark
-                # TimestampType) — a Spark batch write per micro-batch
-                # tripled this test's wall-clock
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-
-                table = pa.table(
-                    {
-                        "event_id": pa.array(
-                            [eid for eid, _, _ in batch_rows], pa.int64()
-                        ),
-                        "ts": pa.array(
-                            [ts for _, ts, _ in batch_rows],
-                            pa.timestamp("us"),
-                        ),
-                        "user_id": pa.array(
-                            [uid for _, _, uid in batch_rows], pa.int64()
-                        ),
-                        "event_type": pa.array(
-                            ["e"] * len(batch_rows), pa.string()
-                        ),
-                        "value": pa.array(
-                            [0.0] * len(batch_rows), pa.float64()
-                        ),
-                    }
-                )
-                pq.write_table(
-                    table, os.path.join(_src, f"b{_no[0]}.parquet")
-                )
-                _no[0] += 1
-
-                def sink(df, _epoch):
-                    _out.extend(
-                        (
-                            r["user_id"],
-                            r["session_start_us"],
-                            r["session_end_us"],
-                            r["n_events"],
-                        )
-                        for r in df.collect()
+            def run_batch(batch_rows, _work=work, _out=emitted, _backend=backend):
+                _out.extend(
+                    (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
+                    for r in SF.feed(
+                        _work,
+                        [(eid, ts, uid, "e", 0.0) for eid, ts, uid in batch_rows],
+                        lambda indir: _backend(spark, indir),
                     )
-
-                q = (
-                    _backend(spark, _src)
-                    .writeStream.foreachBatch(sink)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .option(
-                        "checkpointLocation", os.path.join(_work, "ckpt")
-                    )
-                    .start()
                 )
-                q.awaitTermination()
 
             for perm in perms:
                 run_batch([rows[j] for j in perm])

@@ -1,88 +1,56 @@
-"""Structured Streaming rollups must reproduce the batch daily-rollup
-semantics (SURVEY §2.8): same sums/means as the batch group-bys."""
+"""Structured Streaming operators against the batch semantics they
+mirror (SURVEY §2.8): the health-metric fact stream equals the batch
+fact, and the stateful operators hold their contracts on real streams."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from fitness_nutrition_data_pipeline_spark.streaming.rollups import (
-    run_stream_to_memory,
-    stream_daily_heartrate,
-    stream_daily_sleep,
-)
-
+from fitness_nutrition_data_pipeline_spark.streaming import drain
 from tests import fixtures as FX
+from tests import streaming_feed as SF
 
 
 @pytest.fixture(scope="module")
-def stream_dirs(tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("stream"))
-    data_dir = FX.write_fixtures(base)
-    return {
-        "hr": os.path.join(base, "hr_in"),
-        "sleep": os.path.join(base, "sleep_in"),
-        "src": data_dir,
-    }
-
-
-def _stage(src_file: str, dst_dir: str):
-    os.makedirs(dst_dir, exist_ok=True)
-    import shutil
-
-    shutil.copy(src_file, dst_dir)
-
-
-def test_streaming_heartrate_matches_batch(spark, stream_dirs):
-    _stage(f"{stream_dirs['src']}/fitbit/heartrate_seconds_merged.csv", stream_dirs["hr"])
-    sdf = stream_daily_heartrate(spark, stream_dirs["hr"])
-    assert sdf.isStreaming
-    result = run_stream_to_memory(sdf, "hr_rollup")
-    rows = {(r.device_id, str(r.day)): (r.avg_bpm, r.n_samples) for r in result.collect()}
-    # fixture: 202 → 4/1 avg(90,100)=95 n=2; 4/2 avg(80)=80 n=1
-    assert rows[(202, "2016-04-01")] == (95.0, 2)
-    assert rows[(202, "2016-04-02")] == (80.0, 1)
-
-
-def test_streaming_sleep_matches_batch(spark, stream_dirs):
-    _stage(f"{stream_dirs['src']}/fitbit/minuteSleep_merged.csv", stream_dirs["sleep"])
-    sdf = stream_daily_sleep(spark, stream_dirs["sleep"])
-    result = run_stream_to_memory(sdf, "sleep_rollup")
-    rows = {(r.device_id, str(r.day)): r.sleep_hours for r in result.collect()}
-    assert abs(rows[(101, "2016-03-13")] - 3 / 60) < 1e-9
-    assert abs(rows[(202, "2016-03-14")] - 1 / 60) < 1e-9
-    # late/out-of-range 2015 row still rolls up in streaming (date filter
-    # is a warehouse join concern, not an ingest concern)
-    assert (101, "2015-12-30") in rows
-
-
-def test_stream_fact_health_metric_matches_batch(spark, stream_dirs):
-    """The streaming fact builder must emit exactly the rows the batch
-    builder derives from the same file."""
+def transformed(spark, tmp_path_factory):
+    """The fixture pipeline, extracted and transformed (not loaded)."""
     from fitness_nutrition_data_pipeline_spark.config import PipelineConfig
     from fitness_nutrition_data_pipeline_spark.pipeline import FitnessWarehousePipeline
-    from fitness_nutrition_data_pipeline_spark.streaming.rollups import (
-        run_stream_to_memory,
-        stream_fact_health_metric,
-    )
 
-    base = stream_dirs["src"]
+    base = FX.write_fixtures(str(tmp_path_factory.mktemp("stream")))
     cfg = PipelineConfig(data_dir=base, fitbit_dir=f"{base}/fitbit",
                          warehouse_dir=f"{base}/_wh_stream", output_dir=f"{base}/_out_stream")
     p = FitnessWarehousePipeline(spark, cfg)
     p.extract()
     p.transform()
+    return p
 
-    _stage(f"{base}/fitbit/minuteSleep_merged.csv", stream_dirs["sleep"] + "_fact")
+
+@pytest.mark.parametrize("kind", ["sleep_minutes", "heartrate"])
+def test_stream_fact_health_metric_matches_batch(spark, transformed, tmp_path, kind):
+    """The streaming fact builder must emit exactly the rows the batch
+    builder derives from the same file."""
+    from fitness_nutrition_data_pipeline_spark.plans.facts import DAILY_FEEDS
+    from fitness_nutrition_data_pipeline_spark.sources.fitness import FITBIT_FILES
+    from fitness_nutrition_data_pipeline_spark.streaming import stream_fact_health_metric
+
+    p = transformed
+    indir = str(tmp_path / "in")
+    os.makedirs(indir)
+    shutil.copy(os.path.join(p.cfg.fitbit_dir, FITBIT_FILES[kind][0]), indir)
     sdf = stream_fact_health_metric(
-        spark, stream_dirs["sleep"] + "_fact", "sleep_minutes",
-        p.mapping, p.warehouse["Dim_Date"],
+        spark, indir, kind, p.mapping, p.warehouse["Dim_Date"]
     )
-    streamed = run_stream_to_memory(sdf, "fact_hm_stream")
+    assert sdf.isStreaming
+    streamed = drain(sdf, f"fact_hm_stream_{kind}", "complete")
 
-    batch = p.warehouse["Fact_HealthMetric"].where(F.col("MetricTypeKey") == 2)
+    metric_key = DAILY_FEEDS[kind][2]
+    batch = p.warehouse["Fact_HealthMetric"].where(F.col("MetricTypeKey") == metric_key)
     batch_rows = sorted(map(tuple, batch.collect()))
     stream_rows = sorted(map(tuple, streamed.collect()))
+    assert batch_rows  # the fixture has rows of both feeds
     assert stream_rows == batch_rows
 
 
@@ -119,22 +87,10 @@ def _read_dedup_stream(spark, path):
     )
 
 
-def _drain_append(stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
-
-
 def test_stream_dedup_by_key(spark, dedup_dir):
     from fitness_nutrition_data_pipeline_spark.streaming.dedup import dedup_by_key
 
-    out = _drain_append(
+    out = drain(
         dedup_by_key(_read_dedup_stream(spark, dedup_dir), "ts", ["event_id"]),
         "dedup_by_key_out",
     )
@@ -145,7 +101,7 @@ def test_stream_dedup_by_key(spark, dedup_dir):
 def test_stream_dedup_by_content(spark, dedup_dir):
     from fitness_nutrition_data_pipeline_spark.streaming.dedup import dedup_by_content
 
-    out = _drain_append(
+    out = drain(
         dedup_by_content(
             _read_dedup_stream(spark, dedup_dir),
             "ts",
@@ -195,7 +151,7 @@ def test_stream_stream_attribution(spark, attribution_dirs):
 
     joined = stream_stream_attribution(src("views"), src("purchases"))
     assert joined.isStreaming
-    out = _drain_append(joined, "ss_attribution_out")
+    out = drain(joined, "ss_attribution_out")
     rows = [(r.view_id, r.purchase_id, r.lag_seconds) for r in out.collect()]
     # only view 10 is within 1h before purchase 90; views 11/12 and
     # purchase 91 have no partner
@@ -210,7 +166,7 @@ def test_stream_rate_limiter(spark, tmp_path_factory):
 
     from fitness_nutrition_data_pipeline_spark.streaming.ratelimit import (
         EVENT_SCHEMA,
-        run_rate_limiter_once,
+        rate_limit_stream,
     )
 
     d = str(tmp_path_factory.mktemp("ratelimit"))
@@ -229,7 +185,7 @@ def test_stream_rate_limiter(spark, tmp_path_factory):
     old_cap = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
-        out = run_rate_limiter_once(spark, indir, "rl_out", limit=3)
+        out = drain(rate_limit_stream(spark, indir, limit=3), "rl_out")
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_cap)
     got = {}
@@ -254,61 +210,33 @@ def test_rate_limiter_state_survives_restart_multichunk(spark, tmp_path_factory)
     with REVERSED ids under a 2-row Arrow cap — the restored counter must
     admit exactly the 2 lowest remaining ids, numbered 3..4."""
     import datetime
-    import glob as _glob
-    import shutil
 
     from fitness_nutrition_data_pipeline_spark.streaming.ratelimit import (
-        EVENT_SCHEMA,
         rate_limit_stream,
     )
 
     base = str(tmp_path_factory.mktemp("rl_restart"))
-    indir, outdir, ckpt = (os.path.join(base, n) for n in ("in", "out", "ck"))
-    os.makedirs(indir)
     t0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
 
-    def drain():
-        q = (
-            rate_limit_stream(spark, indir, limit=4)
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def drain_next(rows):
+        return SF.feed(base, rows, lambda indir: rate_limit_stream(spark, indir, limit=4))
 
-    def write_events(fname, rows):
-        stage = os.path.join(base, "stage_" + fname)
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        shutil.move(part, os.path.join(indir, fname))
-
-    write_events("f1.parquet", [(i, t0, 7, "click", 1.0) for i in (10, 20)])
-    drain()
-    first = spark.read.parquet(outdir).collect()
+    first = drain_next([(i, t0, 7, "click", 1.0) for i in (10, 20)])
     assert sorted((r.event_id, r.admitted_no) for r in first) == [
         (10, 1),
         (20, 2),
     ]
 
     # 12 more events, ids reversed, forced into 2-row Arrow chunks
-    write_events(
-        "f2.parquet",
-        [(i, t0, 7, "click", 1.0) for i in reversed(range(30, 42))],
-    )
     old_cap = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
-        drain()
+        second = drain_next(
+            [(i, t0, 7, "click", 1.0) for i in reversed(range(30, 42))]
+        )
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_cap)
-    rows = sorted(
-        (r.event_id, r.admitted_no) for r in spark.read.parquet(outdir).collect()
-    )
+    rows = sorted((r.event_id, r.admitted_no) for r in first + second)
     assert rows == [(10, 1), (20, 2), (30, 3), (31, 4)]
 
 
@@ -325,7 +253,7 @@ def test_stream_sequence_detector(spark, tmp_path_factory):
     import datetime
 
     from fitness_nutrition_data_pipeline_spark.streaming.cep import (
-        run_detector_once,
+        stream_detect_sequences,
     )
     from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
         EVENT_SCHEMA,
@@ -364,7 +292,7 @@ def test_stream_sequence_detector(spark, tmp_path_factory):
     old_cap = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
-        out = run_detector_once(spark, indir, "cep_out")
+        out = drain(stream_detect_sequences(spark, indir), "cep_out")
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_cap)
 
@@ -394,57 +322,26 @@ def test_sequence_detector_state_survives_restart(spark, tmp_path_factory):
     from fitness_nutrition_data_pipeline_spark.streaming.cep import (
         stream_detect_sequences,
     )
-    from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
-        EVENT_SCHEMA,
-    )
 
     base = str(tmp_path_factory.mktemp("cep_restart"))
-    indir, outdir, ckpt = (os.path.join(base, n) for n in ("in", "out", "ck"))
-    os.makedirs(indir)
     t0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
 
-    def drain():
-        q = (
-            stream_detect_sequences(spark, indir)
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def drain_next(rows):
+        return SF.feed(base, rows, lambda indir: stream_detect_sequences(spark, indir))
 
-    def write_events(fname, rows):
-        # the file source lists top-level files: stage the parquet dir,
-        # then move its single part file into place as indir/<fname>
-        import glob as _glob
-        import shutil
-
-        stage = os.path.join(base, "stage_" + fname)
-        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        shutil.move(part, os.path.join(indir, fname))
-
-    write_events(
-        "f1.parquet",
+    first = drain_next(
         [
             (1, t0, 7, "view", 1.0),
             (2, t0 + datetime.timedelta(minutes=10), 7, "cart", 1.0),
-        ],
+        ]
     )
-    drain()
-    # pattern still open: the sink holds zero match rows after drain 1
-    assert spark.read.parquet(outdir).count() == 0
+    # pattern still open: drain 1 emits zero match rows
+    assert len(first) == 0
 
-    write_events(
-        "f2.parquet",
-        [(3, t0 + datetime.timedelta(minutes=20), 7, "purchase", 1.0)],
+    second = drain_next(
+        [(3, t0 + datetime.timedelta(minutes=20), 7, "purchase", 1.0)]
     )
-    drain()
-    got = spark.read.parquet(outdir).collect()
+    got = first + second
     assert len(got) == 1
     us = lambda m: int(  # noqa: E731
         (t0 + datetime.timedelta(minutes=m))
@@ -499,15 +396,7 @@ def test_dedup_then_session_window_compose_in_one_query(spark, tmp_path_factory)
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", "n_events")
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("compose_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r.user_id, r.n_events) for r in spark.table("compose_out").collect()}
+    got = {(r.user_id, r.n_events) for r in drain(sessions, "compose_out").collect()}
     # sealed sessions of the DEDUPED feed: user 1 → 3 events, user 2 → 1
     assert got == {(1, 3), (2, 1)}
 

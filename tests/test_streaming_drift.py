@@ -5,6 +5,7 @@ the in-distribution one."""
 import pytest
 from pyspark.sql import functions as F
 
+from fitness_nutrition_data_pipeline_spark.streaming import drain
 from fitness_nutrition_data_pipeline_spark.streaming.drift import (
     binned_drift_scores,
     windowed_value_histogram,
@@ -25,18 +26,6 @@ def drift_stream_dir(tmp_path_factory):
     return base
 
 
-def _drain_complete(stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
-
-
 def test_windowed_histogram_bins_and_windows(spark, drift_stream_dir):
     src = (
         spark.readStream.schema("event_id LONG, ts TIMESTAMP, value DOUBLE")
@@ -44,8 +33,8 @@ def test_windowed_histogram_bins_and_windows(spark, drift_stream_dir):
         .option("maxFilesPerTrigger", 1)
         .csv(drift_stream_dir)
     )
-    hist = _drain_complete(
-        windowed_value_histogram(src, "ts", "value", bin_width=10.0), "drift_hist"
+    hist = drain(
+        windowed_value_histogram(src, "ts", "value", bin_width=10.0), "drift_hist", "complete"
     )
     rows = {(str(r.window_start), r.bin): r.n for r in hist.collect()}
     assert rows[("2016-04-01 10:00:00", 0)] == 10
@@ -62,8 +51,8 @@ def test_drift_scores_flag_shifted_window(spark, drift_stream_dir):
         .option("maxFilesPerTrigger", 1)
         .csv(drift_stream_dir)
     )
-    hist = _drain_complete(
-        windowed_value_histogram(src, "ts", "value", bin_width=10.0), "drift_hist2"
+    hist = drain(
+        windowed_value_histogram(src, "ts", "value", bin_width=10.0), "drift_hist2", "complete"
     )
     baseline = spark.createDataFrame([(0, 0.5), (1, 0.5)], "bin long, share double")
     scores = {str(r.window_start): r for r in binned_drift_scores(hist, baseline).collect()}
@@ -85,8 +74,8 @@ def test_stream_batch_histogram_parity(spark, drift_stream_dir):
         .option("maxFilesPerTrigger", 1)
         .csv(drift_stream_dir)
     )
-    streamed = _drain_complete(
-        windowed_value_histogram(src, "ts", "value", bin_width=10.0), "parity_hist"
+    streamed = drain(
+        windowed_value_histogram(src, "ts", "value", bin_width=10.0), "parity_hist", "complete"
     )
     batch = windowed_value_histogram(
         spark.read.schema(schema).option("header", True).csv(drift_stream_dir),

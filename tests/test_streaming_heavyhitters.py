@@ -4,24 +4,7 @@ phi-heavy-hitter guarantee, and checkpointed state across restarts."""
 
 import os
 
-import pytest
-
-
-def _write_events(spark, indir, fname, rows):
-    import glob as _glob
-    import shutil
-
-    from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
-        EVENT_SCHEMA,
-    )
-
-    stage = indir + "_stage_" + fname
-    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-    os.makedirs(indir, exist_ok=True)
-    shutil.move(part, os.path.join(indir, fname))
+from tests import streaming_feed as SF
 
 
 def _rows(spec, t0=None):
@@ -44,7 +27,7 @@ def test_heavy_hitters_guarantee_and_bounds(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("hh"))
     indir = os.path.join(base, "in")
     spec = {"hot": 500, **{f"cold{i}": 10 for i in range(20)}}
-    _write_events(spark, indir, "f1.parquet", _rows(spec))
+    SF.write_events(indir, "f1.parquet", _rows(spec))
 
     out = run_heavy_hitters_once(
         spark, indir, "hh_out", n_shards=2, capacity=4
@@ -102,8 +85,8 @@ def test_multi_batch_drain_keeps_final_table_only(spark, tmp_path_factory):
     # {a: 20, b: 10} (cut=10). batch 2: d=40, e=25 → table overflows
     # again; final table must reflect the post-decrement state, and the
     # batch-1 emission rows (b at 10, any evicted key) must be gone.
-    _write_events(spark, indir, "f1.parquet", _rows({"a": 30, "b": 20, "c": 10}))
-    _write_events(spark, indir, "f2.parquet", _rows({"d": 40, "e": 25}))
+    SF.write_events(indir, "f1.parquet", _rows({"a": 30, "b": 20, "c": 10}))
+    SF.write_events(indir, "f2.parquet", _rows({"d": 40, "e": 25}))
 
     out = run_heavy_hitters_once(
         spark, indir, "hh_mb_out", n_shards=1, capacity=2,
@@ -131,32 +114,20 @@ def test_heavy_hitters_state_survives_restart(spark, tmp_path_factory):
     )
 
     base = str(tmp_path_factory.mktemp("hh_restart"))
-    indir, ckpt = os.path.join(base, "in"), os.path.join(base, "ck")
 
-    def drain(name):
-        # memory sink cannot recover from a checkpoint; foreachBatch can
-        got = []
-
-        def sink(batch_df, batch_id):
-            got.extend(batch_df.collect())
-
-        q = (
-            stream_heavy_hitters(spark, indir, n_shards=1, capacity=8)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    def drain_next(rows):
+        got = SF.feed(
+            base,
+            rows,
+            lambda indir: stream_heavy_hitters(spark, indir, n_shards=1, capacity=8),
+            mode="update",
         )
-        q.awaitTermination()
         return {r.key: r for r in got}
 
-    _write_events(spark, indir, "f1.parquet", _rows({"hot": 100, "warm": 30}))
-    first = drain("hh_d1")
+    first = drain_next(_rows({"hot": 100, "warm": 30}))
     assert first["hot"].count_lb == 100 and first["warm"].count_lb == 30
 
-    _write_events(spark, indir, "f2.parquet", _rows({"hot": 50, "new": 5}))
-    second = drain("hh_d2")
+    second = drain_next(_rows({"hot": 50, "new": 5}))
     # restored counter table merged with the delta — not a fresh count
     assert second["hot"].count_lb == 150
     assert second["warm"].count_lb == 30

@@ -1,12 +1,11 @@
-"""Streaming hygiene operators: PII redaction and contamination alerts
-on a file-source stream, drained with availableNow triggers."""
+"""Streaming hygiene: the batch PII redaction (operators/text.pii_scan)
+and the contamination alerts on a file-source stream, drained with
+availableNow triggers."""
 
 import pytest
 
-from fitness_nutrition_data_pipeline_spark.streaming.hygiene import (
-    contamination_alerts,
-    redact_pii_stream,
-)
+from fitness_nutrition_data_pipeline_spark.operators.text import pii_scan
+from fitness_nutrition_data_pipeline_spark.streaming import contamination_alerts, drain
 
 PATTERNS = {"email": r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"}
 
@@ -34,21 +33,9 @@ def _read_stream(spark, path):
     )
 
 
-def _drain(stream_df, name):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
-
-
 def test_redact_pii_stream(spark, doc_stream_dir):
-    out = _drain(
-        redact_pii_stream(_read_stream(spark, doc_stream_dir), "text", PATTERNS),
+    out = drain(
+        pii_scan(_read_stream(spark, doc_stream_dir), "text", PATTERNS),
         "pii_stream_out",
     )
     rows = {r.doc_id: r for r in out.collect()}
@@ -61,7 +48,7 @@ def test_contamination_alerts_stream(spark, doc_stream_dir):
     bench = spark.createDataFrame(
         [(0, "alpha beta gamma delta epsilon")], "doc_id long, text string"
     )
-    out = _drain(
+    out = drain(
         contamination_alerts(
             _read_stream(spark, doc_stream_dir), bench, "doc_id", "text", n=5
         ),

@@ -5,7 +5,8 @@ from datetime import datetime
 
 import pytest
 
-from fitness_nutrition_data_pipeline_spark.streaming.sessions import run_sessionizer_once
+from fitness_nutrition_data_pipeline_spark.streaming import drain
+from fitness_nutrition_data_pipeline_spark.streaming.sessions import stream_sessionize
 
 
 def _ts(minute: int) -> datetime:
@@ -31,7 +32,7 @@ def session_table(spark, tmp_path_factory):
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
     )
     df.write.mode("overwrite").parquet(f"{base}/events")
-    return run_sessionizer_once(spark, f"{base}/events", "sess_out")
+    return drain(stream_sessionize(spark, f"{base}/events"), "sess_out")
 
 
 def test_closed_sessions_emitted(session_table):
@@ -59,7 +60,6 @@ def test_native_session_window_stream_matches_custom(spark, tmp_path_factory):
 
     from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
         EVENT_SCHEMA,
-        run_sessionizer_once,
         stream_sessionize_native,
     )
 
@@ -81,23 +81,14 @@ def test_native_session_window_stream_matches_custom(spark, tmp_path_factory):
         "overwrite"
     ).parquet(indir)
 
-    q = (
-        stream_sessionize_native(spark, indir)
-        .writeStream.format("memory")
-        .queryName("native_sess_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     native = {
         (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in spark.table("native_sess_out").collect()
+        for r in drain(stream_sessionize_native(spark, indir), "native_sess_out").collect()
     }
 
     custom = {
         (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in run_sessionizer_once(spark, indir, "custom_sess_out").collect()
+        for r in drain(stream_sessionize(spark, indir), "custom_sess_out").collect()
     }
     # both emit exactly the sealed sessions A, B, C (flush events' own
     # sessions stay open in both implementations)
