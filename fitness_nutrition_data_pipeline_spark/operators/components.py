@@ -6,7 +6,9 @@ component (A~B, B~C ⟹ {A,B,C} keep one survivor).
 SoCC'14]: O(log n) alternations even on long duplicate chains, each
 linear in |E|, with a single-task union-find finish when the edge state
 fits one task. tests/test_components.py checks both paths against a
-pure-Python union-find.
+pure-Python union-find. ``bucket_clusters`` is the one duplicate-cluster
+operator built on it: every clustering query resolves its id↔bucket
+membership there.
 """
 
 from __future__ import annotations
@@ -28,25 +30,32 @@ def state_partitions(df: DataFrame, n_rows: int) -> int:
     return max(1, min(df.rdd.getNumPartitions(), -(-n_rows // per_part)))
 
 
-def near_dup_components(bands: DataFrame, id_col: str) -> DataFrame:
-    """Dedup clusters from LSH band rows (band_id, band_key, ``id_col``):
-    star edges doc↔bucket-minimum (linear in corpus, no pairwise
-    expansion) resolved by ``connected_components``. Returns (``id_col``,
-    component) where component is the cluster's minimum id; docs that
-    collided with nothing are absent.
+def bucket_clusters(membership: DataFrame, id_col: str, bucket_col: str) -> DataFrame:
+    """Duplicate clusters from (``id_col``, ``bucket_col``) membership
+    rows, e.g. LSH band buckets: two ids sharing a bucket are one
+    cluster, transitively (A~B in one bucket, B~C in another ⇒ {A,B,C}).
 
-    ``bands`` is pinned first, so the bucket-min aggregate and the
-    join's probe side read one materialized band table instead of
-    re-running the caller's corpus scan and hashing twice."""
-    bands = bands.localCheckpoint()
-    mins = bands.groupBy("band_id", "band_key").agg(F.min(id_col).alias("bucket_min"))
-    edges = (
-        bands.join(mins, ["band_id", "band_key"])
-        .where(F.col(id_col) != F.col("bucket_min"))
-        .select(F.col(id_col).alias("src"), F.col("bucket_min").alias("dst"))
-        .distinct()
+    Star edges id↔bucket-minimum (linear in membership, no pairwise
+    expansion) are resolved by ``connected_components``, so chains of
+    any length collapse. Returns (``id_col``, cluster_id) for every id
+    in ``membership``; cluster_id is the cluster's minimum id, and an id
+    that shares no bucket with another labels itself.
+
+    ``membership`` is pinned first: the bucket-min aggregate, the join's
+    probe side and the id list read one materialization instead of each
+    re-running the caller's corpus scan and hashing."""
+    membership = membership.select(id_col, bucket_col).localCheckpoint()
+    mins = membership.groupBy(bucket_col).agg(F.min(id_col).alias("_bucket_min"))
+    edges = membership.join(mins, bucket_col).select(
+        F.col(id_col).alias("src"), F.col("_bucket_min").alias("dst")
     )
-    return connected_components(edges).withColumnRenamed("vertex", id_col)
+    labels = connected_components(edges).withColumnRenamed("vertex", id_col)
+    return (
+        membership.select(id_col)
+        .distinct()
+        .join(labels, id_col, "left")
+        .select(id_col, F.coalesce("component", F.col(id_col)).alias("cluster_id"))
+    )
 
 
 def _union_find_labels(sym: DataFrame) -> DataFrame:

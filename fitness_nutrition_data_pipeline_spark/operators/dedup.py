@@ -312,69 +312,6 @@ def near_dup_pipeline(
         "is_near_dup", F.when(F.col("jaccard") >= threshold, 1).otherwise(0)
     )
 
-def dedup_clusters(
-    membership: DataFrame,
-    id_col: str,
-    bucket_col: str,
-    *,
-    iterations: int = 3,
-) -> DataFrame:
-    """Connected components over the doc↔bucket bipartite graph via
-    alternating min-label propagation: duplicate CLUSTERS, not just
-    pairwise flags — the step that turns LSH candidate buckets into
-    transitive duplicate groups (A~B in one bucket, B~C in another ⇒
-    {A,B,C} is one cluster, keep one survivor).
-
-    Per iteration: (1) each bucket takes the min label of its members,
-    (2) each doc takes the min label over its buckets. Labels are
-    monotone non-increasing; the min label propagates one bucket-hop per
-    round, so ``iterations`` rounds yield the component min within that
-    radius — a REFINEMENT of the true components (clusters only split,
-    never over-merge: the safe direction for dedup, which errs toward
-    keeping a document). Duplicate CHAINS longer than ``iterations``
-    hops stay split; exact components come from
-    ``operators/components.py::connected_components``. Each round is two shuffles (groupBy bucket,
-    groupBy id) with map-side partial min — never an edge-pair
-    materialization, which is what makes this the 100 TB shape.
-
-    Returns (id_col, cluster_id) where cluster_id is the component's min
-    doc id. Docs absent from ``membership`` are absent from the result
-    (they are singletons by construction).
-
-    The exact edge-list operator is ``operators/components.py::
-    connected_components`` (large-star/small-star with a single-task
-    union-find finish); this bipartite fixed-round form skips edge
-    materialization entirely and unrolls to a deterministic plan an SQL
-    oracle can replay CTE-for-CTE (queries/llm_ops.py::_clusters_sql).
-    tests/test_components.py asserts the refinement invariant against
-    the exact components (``near_dup_components``) on the real LSH graph.
-
-    Diamond-DAG treatment (tools/audit_scans.py): ``membership`` feeds
-    2×iterations+1 plan branches; without pinning, each branch
-    re-evaluates the whole upstream lineage (minhash or hyperplane-LSH
-    over the corpus — audited at 7-15 corpus scans per caller). One
-    ``localCheckpoint`` of the narrow (id, bucket) relation makes every
-    round read the same materialization — the standard posture before
-    any iterative algorithm (values unchanged, so SQL-oracle replays
-    are unaffected).
-    """
-    membership = membership.localCheckpoint()
-    labels = (
-        membership.select(id_col).distinct().withColumn("label", F.col(id_col))
-    )
-    for _ in range(iterations):
-        bucket_min = (
-            membership.join(labels, id_col)
-            .groupBy(bucket_col)
-            .agg(F.min("label").alias("bucket_label"))
-        )
-        labels = (
-            membership.join(bucket_min, bucket_col)
-            .groupBy(id_col)
-            .agg(F.min("bucket_label").alias("label"))
-        )
-    return labels.select(id_col, F.col("label").alias("cluster_id"))
-
 
 def prefix_filter_join(
     df: DataFrame,

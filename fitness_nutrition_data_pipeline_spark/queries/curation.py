@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.operators.dedup import (
-    dedup_clusters,
     lsh_bands,
     lsh_dup_flags,
     minhash_signatures,
@@ -27,8 +26,9 @@ from fitness_nutrition_data_pipeline_spark.operators.dedup import (
 from fitness_nutrition_data_pipeline_spark.operators.text import quality_features
 from fitness_nutrition_data_pipeline_spark.queries import register
 from fitness_nutrition_data_pipeline_spark.queries.llm_ops import (
+    _LSH_LABELS_SQL,
     _bands_cte,
-    _label_prop_sql,
+    _lsh_clusters,
 )
 from fitness_nutrition_data_pipeline_spark.queries.sampling import hash_bucket
 from fitness_nutrition_data_pipeline_spark.queries.text_ops import _STOPWORDS
@@ -142,16 +142,11 @@ def corpus_curation_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SURVIVOR_SQL = (
-    _bands_cte()
-    + """
-    , mem AS (
-      SELECT doc_id, CAST(band_id AS VARCHAR) || band_key AS bucket FROM bands
-    )"""
-    + _label_prop_sql("doc_id", 3)
+    _LSH_LABELS_SQL
     + f"""
     , sizes AS (
       SELECT label AS cluster_id, count(*) AS n_docs
-      FROM l3 GROUP BY label HAVING count(*) >= 2
+      FROM labels GROUP BY label HAVING count(*) >= 2
     ),
     scored AS (
       SELECT l.label AS cluster_id, d.doc_id, d.n_chars,
@@ -162,7 +157,7 @@ _SURVIVOR_SQL = (
                        / len(string_split_regex(lower(trim(d.text)), '\\s+'))
                        BETWEEN 0.01 AND 0.6
                   THEN 1 ELSE 0 END AS q
-      FROM l3 l JOIN documents d USING (doc_id) JOIN sizes s ON s.cluster_id = l.label
+      FROM labels l JOIN documents d USING (doc_id) JOIN sizes s ON s.cluster_id = l.label
     )
     SELECT cluster_id, n_docs AS cluster_size,
            CAST(doc_id AS BIGINT) AS survivor_doc_id,
@@ -209,25 +204,17 @@ def cluster_survivor_selection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(
         dq, "doc_id", "text", carry_cols=("n_chars", "passes_quality")
     ).localCheckpoint()
-    bands = lsh_bands(sigs, "doc_id")
-    membership = bands.select(
-        "doc_id",
-        F.concat(F.col("band_id").cast("string"), F.col("band_key")).alias("bucket"),
-    )
-    clusters = dedup_clusters(membership, "doc_id", "bucket", iterations=3)
-    sizes = (
-        clusters.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .where(F.col("cluster_size") >= 2)
-    )
     q = sigs.select("doc_id", "n_chars", "passes_quality")
-    scored = clusters.join(sizes, "cluster_id").join(q, "doc_id")
-    w = W.partitionBy("cluster_id").orderBy(
-        F.desc("passes_quality"), F.desc("n_chars"), "doc_id"
-    )
+    # size and rank are two windows over one cluster partitioning, so the
+    # clusters are computed once (a sizes aggregate joined back would
+    # run the connected-components finish a second time)
+    scored = _lsh_clusters(sigs).join(q, "doc_id")
+    w = W.partitionBy("cluster_id")
+    ranked = w.orderBy(F.desc("passes_quality"), F.desc("n_chars"), "doc_id")
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        scored.withColumn("cluster_size", F.count(F.lit(1)).over(w))
+        .withColumn("rn", F.row_number().over(ranked))
+        .where((F.col("rn") == 1) & (F.col("cluster_size") >= 2))
         .select(
             "cluster_id",
             "cluster_size",

@@ -302,8 +302,8 @@ _EDGE_CTES = """
     "the degree envelope per round — the shrinking-subgraph trace a "
     "true k-core computes to fixpoint. Per round the distributed cost "
     "is ONE degree aggregate plus one semi-join of the edge list "
-    "against surviving vertices (edge list pinned once, the "
-    "lsh_dedup_clusters bounded-iteration precedent); rounds converge "
+    "against surviving vertices (edge list pinned once, as every "
+    "iterative operator's input is); rounds converge "
     "in O(peeling depth). The bounded unroll keeps the oracle "
     "SQL-expressible; the loop-until-converged form (with durable "
     "parquet round-state instead of localCheckpoint — the 100 TB "

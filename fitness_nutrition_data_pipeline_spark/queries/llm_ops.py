@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from fitness_nutrition_data_pipeline_spark.operators.components import bucket_clusters
 from fitness_nutrition_data_pipeline_spark.operators.dedup import (
-    dedup_clusters,
     exact_dedup_summary,
     jaccard_on_adjacent_pairs,
     lsh_bands,
@@ -73,6 +73,11 @@ def _sig_exprs_sql() -> list[str]:
 
 
 def _bands_cte() -> str:
+    """WITH list ending in ``bands(doc_id, band_id, band_key)``. ``bands``
+    is MATERIALIZED: DuckDB 1.0 otherwise inlines the CTE at every
+    reference, re-running the shingle explode and MinHash per reference
+    and per recursion round (dedup_clusters_exact's oracle: 81.4 s
+    inlined, 1.3 s materialized at sf0.01, identical rows)."""
     sig_cols = ",\n             ".join(_sig_exprs_sql())
     band_selects = "\n      UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_id, md5(sig{2 * b} || sig{2 * b + 1}) AS band_key FROM sigs"
@@ -87,7 +92,7 @@ def _bands_cte() -> str:
              {sig_cols}
       FROM sh GROUP BY doc_id
     ),
-    bands AS (
+    bands AS MATERIALIZED (
       {band_selects}
     )"""
 
@@ -542,78 +547,85 @@ def embedding_lsh_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Connected-components duplicate clusters
+# Duplicate clusters (exact connected components of id↔bucket membership)
 # ---------------------------------------------------------------------------
 
-_CC_ITERS = 3
+def _exact_labels_sql(ctes: str, id_col: str) -> str:
+    """Exact cluster labels in DuckDB: ``ctes`` is a WITH list whose last
+    CTE is ``mem({id_col}, bucket)``; the result appends
+    ``labels({id_col}, label)``, label = the minimum id reachable through
+    shared buckets, for every id of ``mem``.
 
-
-def _label_prop_sql(id_col: str, iterations: int) -> str:
-    """Chained-CTE min-label propagation (one b{i}/l{i} pair per
-    iteration) over a preceding CTE ``mem({id_col}, bucket)`` — DuckDB
-    computes bit-identical labels to operators/dedup.py::dedup_clusters.
-    Final labels are in ``l{iterations}``."""
-    sql = f""",
-    l0 AS (SELECT DISTINCT {id_col}, {id_col} AS label FROM mem)"""
-    for i in range(1, iterations + 1):
-        sql += f""",
-    b{i} AS (
-      SELECT bucket, min(label) AS bucket_label
-      FROM mem JOIN l{i - 1} USING ({id_col}) GROUP BY bucket
+    Min-label propagation to a fixpoint, independent of the Spark
+    algorithms: ``lp`` carries one row per id per round, each round
+    lowers every label to the minimum over its buckets, and the loop
+    stops after the first round in which no label fell."""
+    head, body = ctes.split("WITH ", 1)
+    return f"""{head}WITH RECURSIVE {body},
+    lp(it, {id_col}, label, changed) AS (
+      SELECT DISTINCT 0, {id_col}, {id_col}, true FROM mem
+      UNION ALL
+      SELECT l.it + 1, l.{id_col}, min(b.label), min(b.label) < l.label
+      FROM lp l
+      JOIN mem m USING ({id_col})
+      JOIN (
+        SELECT bucket, min(label) AS label
+        FROM mem JOIN lp USING ({id_col}) GROUP BY bucket
+      ) b USING (bucket)
+      WHERE (SELECT bool_or(changed) FROM lp)
+      GROUP BY l.it, l.{id_col}, l.label
     ),
-    l{i} AS (
-      SELECT {id_col}, min(bucket_label) AS label
-      FROM mem JOIN b{i} USING (bucket) GROUP BY {id_col}
-    )"""
-    return sql
+    labels AS (SELECT {id_col}, min(label) AS label FROM lp GROUP BY {id_col})"""
 
 
-def _clusters_sql(iterations: int = _CC_ITERS) -> str:
-    """Oracle for dedup_clusters over LSH band buckets."""
-    return (
-        _bands_cte()
-        + """
-    , mem AS (
+# the head of every LSH cluster oracle: exact labels of the doc↔bucket
+# membership, one bucket per (band, key)
+_LSH_LABELS_SQL = _exact_labels_sql(
+    _bands_cte()
+    + """
+    , mem AS MATERIALIZED (
       SELECT doc_id, CAST(band_id AS VARCHAR) || band_key AS bucket FROM bands
-    )"""
-        + _label_prop_sql("doc_id", iterations)
-        + f"""
-    SELECT CAST(label AS BIGINT) AS cluster_id, count(*) AS n_docs,
-           CAST(max(doc_id) AS BIGINT) AS max_doc_id
-    FROM l{iterations}
-    GROUP BY label HAVING count(*) >= 2
-    ORDER BY cluster_id
-    """
-    )
-
-
-@register(
-    "lsh_dedup_clusters",
-    _clusters_sql(),
-    sort=("cluster_id",),
-    doc="Duplicate clusters: LSH band buckets → bounded-round (3) "
-    "min-label propagation over the doc↔bucket bipartite graph "
-    "(operators/dedup.py::dedup_clusters) — a refinement of the true "
-    "connected components (never over-merges; chains longer than 3 "
-    "bucket-hops stay split, production iterates to fixpoint via "
-    "operators/components.py). Two shuffles per round, map-side "
-    "partial min, no edge-pair materialization — the shape that scales "
-    "to 100 TB. Completes the dedup story: candidate buckets "
-    "(minhash_lsh_buckets) → pairwise verify (ngram_jaccard_pairs) → "
-    "clusters → keep-one survivor.",
+    )""",
+    "doc_id",
 )
-def lsh_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = minhash_signatures(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
-    )
+
+
+def _lsh_clusters(sigs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every doc of ``sigs`` (MinHash signature
+    rows): the exact duplicate clusters of its LSH band buckets."""
     bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
     membership = bands.select(
         "doc_id",
         F.concat(F.col("band_id").cast("string"), F.col("band_key")).alias("bucket"),
     )
-    clusters = dedup_clusters(membership, "doc_id", "bucket", iterations=_CC_ITERS)
+    return bucket_clusters(membership, "doc_id", "bucket")
+
+
+@register(
+    "lsh_dedup_clusters",
+    _LSH_LABELS_SQL
+    + """
+    SELECT CAST(label AS BIGINT) AS cluster_id, count(*) AS n_docs,
+           CAST(max(doc_id) AS BIGINT) AS max_doc_id
+    FROM labels
+    GROUP BY label HAVING count(*) >= 2
+    ORDER BY cluster_id
+    """,
+    sort=("cluster_id",),
+    doc="Duplicate clusters: LSH band buckets → exact connected components "
+    "of the doc↔bucket graph (operators/components.py::bucket_clusters: "
+    "doc↔bucket-min star edges, no pairwise expansion, resolved by "
+    "connected_components), so chains of any length form one cluster. "
+    "Completes the dedup story: candidate buckets (minhash_lsh_buckets) → "
+    "pairwise verify (ngram_jaccard_pairs) → clusters → keep-one survivor.",
+)
+def lsh_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sigs = minhash_signatures(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
+    )
     return (
-        clusters.groupBy("cluster_id")
+        _lsh_clusters(sigs)
+        .groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.max("doc_id").alias("max_doc_id"))
         .where(F.col("n_docs") >= 2)
     )
@@ -790,7 +802,7 @@ def _hp_mem_sql(seeds: tuple[str, ...] = _HP_SEEDS, n_planes: int = 8, dim: int 
         f"SELECT vec_id, bucket FROM hp_b{t}" for t in range(len(seeds))
     )
     parts.append(f""",
-    mem AS (
+    mem AS MATERIALIZED (
       {union}
     )""")
     return "".join(parts)
@@ -798,24 +810,22 @@ def _hp_mem_sql(seeds: tuple[str, ...] = _HP_SEEDS, n_planes: int = 8, dim: int 
 
 @register(
     "embedding_dedup_clusters",
-    _hp_mem_sql()
-    + _label_prop_sql("vec_id", _CC_ITERS)
-    + f"""
+    _exact_labels_sql(_hp_mem_sql(), "vec_id")
+    + """
     SELECT CAST(label AS BIGINT) AS cluster_id, count(*) AS n_vecs,
            CAST(max(vec_id) AS BIGINT) AS max_vec_id
-    FROM l{_CC_ITERS}
+    FROM labels
     GROUP BY label HAVING count(*) >= 2
     ORDER BY cluster_id
     """,
     sort=("cluster_id",),
     doc="Embedding near-dup clusters: TWO independent hyperplane-LSH "
     "tables (seeds amplify recall — a pair missed by one table's 8 sign "
-    "bits is caught by the other) unioned into doc↔bucket membership, "
-    "then bounded-round min-label propagation (dedup_clusters) merges "
-    "buckets that share vectors into transitive clusters. All linear: "
-    "planes broadcast, two posexplode passes, label rounds are "
-    "(vec, bucket) groupBys — the embedding-side mirror of "
-    "lsh_dedup_clusters, never all-pairs.",
+    "bits is caught by the other) unioned into vec↔bucket membership, "
+    "then exact connected components (bucket_clusters) merge buckets "
+    "that share vectors into transitive clusters. Planes broadcast, two "
+    "posexplode passes, star edges to each bucket's minimum — the "
+    "embedding-side mirror of lsh_dedup_clusters, never all-pairs.",
 )
 def embedding_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
@@ -831,7 +841,7 @@ def embedding_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         mem = part if mem is None else mem.unionByName(part)
-    clusters = dedup_clusters(mem, "vec_id", "bucket", iterations=_CC_ITERS)
+    clusters = bucket_clusters(mem, "vec_id", "bucket")
     return (
         clusters.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.max("vec_id").alias("max_vec_id"))
@@ -1233,70 +1243,44 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cluster_size_hist_sql(iterations: int = _CC_ITERS) -> str:
-    """Oracle: same label-prop labels, rolled up to a size histogram."""
-    return (
-        _bands_cte()
-        + """
-    , mem AS (
-      SELECT doc_id, CAST(band_id AS VARCHAR) || band_key AS bucket FROM bands
-    )"""
-        + _label_prop_sql("doc_id", iterations)
-        + f"""
+@register(
+    "dedup_cluster_size_histogram",
+    _LSH_LABELS_SQL
+    + """
     , sizes AS (
-      SELECT label, count(*) AS n FROM l{iterations} GROUP BY label
+      SELECT label, count(*) AS n FROM labels GROUP BY label
     )
     SELECT n AS cluster_size, count(*) AS n_clusters,
            CAST(sum(n) AS BIGINT) AS n_docs
     FROM sizes GROUP BY n ORDER BY cluster_size
-    """
-    )
-
-
-@register(
-    "dedup_cluster_size_histogram",
-    _cluster_size_hist_sql(),
+    """,
     sort=("cluster_size",),
     doc="Corpus-health histogram over duplicate-cluster sizes (singletons "
     "included): how much of the corpus is unique (size 1), how heavy the "
     "duplication tail is, and whether any mega-cluster exists (boilerplate "
     "explosion — the classic web-crawl failure mode that silently eats "
-    "training-token budget). Same bounded label propagation as "
-    "lsh_dedup_clusters, then two more keyed aggregations on cluster "
-    "grain and size grain — both orders of magnitude smaller than the "
-    "corpus, so the rollup cost is nil at any scale.",
+    "training-token budget). The exact clusters of lsh_dedup_clusters, "
+    "then two more keyed aggregations on cluster grain and size grain — "
+    "both orders of magnitude smaller than the corpus.",
 )
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(
         load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
     )
-    bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
-    membership = bands.select(
-        "doc_id",
-        F.concat(F.col("band_id").cast("string"), F.col("band_key")).alias("bucket"),
-    )
-    clusters = dedup_clusters(membership, "doc_id", "bucket", iterations=_CC_ITERS)
-    sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
+    sizes = _lsh_clusters(sigs).groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
     return sizes.groupBy("n").agg(
         F.count(F.lit(1)).alias("n_clusters"),
         F.sum("n").alias("n_docs"),
     ).select(F.col("n").alias("cluster_size"), "n_clusters", "n_docs")
 
 
-def _cross_source_leakage_sql(iterations: int = _CC_ITERS) -> str:
-    """Oracle: label-prop clusters joined back to doc sources; emit
-    clusters whose members span >1 source."""
-    return (
-        _bands_cte()
-        + """
-    , mem AS (
-      SELECT doc_id, CAST(band_id AS VARCHAR) || band_key AS bucket FROM bands
-    )"""
-        + _label_prop_sql("doc_id", iterations)
-        + f"""
+@register(
+    "cross_source_dup_leakage",
+    _LSH_LABELS_SQL
+    + """
     , clustered AS (
       SELECT l.doc_id, CAST(l.label AS BIGINT) AS cluster_id, d.source
-      FROM l{iterations} l JOIN documents d USING (doc_id)
+      FROM labels l JOIN documents d USING (doc_id)
     ),
     spanning AS (
       SELECT cluster_id,
@@ -1309,19 +1293,13 @@ def _cross_source_leakage_sql(iterations: int = _CC_ITERS) -> str:
     )
     SELECT cluster_id, n_docs, n_sources, source_a, source_b
     FROM spanning ORDER BY cluster_id
-    """
-    )
-
-
-@register(
-    "cross_source_dup_leakage",
-    _cross_source_leakage_sql(),
+    """,
     sort=("cluster_id",),
     doc="Split-leakage detector: duplicate clusters whose members span "
     "MORE THAN ONE source — the failure mode where near-identical text "
     "lands on both sides of a train/eval split drawn along source lines. "
-    "Reuses the bounded label propagation, joins labels back to the "
-    "(doc_id, source) projection, and aggregates on cluster grain; "
+    "The exact clusters of lsh_dedup_clusters, joined back to the "
+    "(doc_id, source) projection and aggregated on cluster grain; "
     "source extremes bracket the span without shipping member lists. "
     "The doc↔label join is keyed on doc_id — one shuffle each side, no "
     "pair materialization.",
@@ -1329,13 +1307,7 @@ def _cross_source_leakage_sql(iterations: int = _CC_ITERS) -> str:
 def cross_source_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(docs, "doc_id", "text", n_hashes=N_MINHASH)
-    bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
-    membership = bands.select(
-        "doc_id",
-        F.concat(F.col("band_id").cast("string"), F.col("band_key")).alias("bucket"),
-    )
-    clusters = dedup_clusters(membership, "doc_id", "bucket", iterations=_CC_ITERS)
-    clustered = clusters.join(docs.select("doc_id", "source"), "doc_id")
+    clustered = _lsh_clusters(sigs).join(docs.select("doc_id", "source"), "doc_id")
     return (
         clustered.groupBy("cluster_id")
         .agg(
@@ -1414,67 +1386,34 @@ def near_dup_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _exact_clusters_oracle() -> str:
-    """Transitive closure as a recursive CTE: reach(v, r) grows by one
-    hop per recursion level with UNION dedup (so it terminates), then
-    cluster = min reachable id. Exact fixpoint — the hard-signal
-    counterpart of _clusters_sql()'s fixed-round refinement replay."""
-    return (
-        _bands_cte().replace("WITH sh AS", "WITH RECURSIVE sh AS", 1)
-        + """
-    , mins AS (
-      SELECT band_id, band_key, min(doc_id) AS bucket_min
-      FROM bands GROUP BY band_id, band_key
-    ),
-    edges AS (
-      SELECT DISTINCT b.doc_id AS src, m.bucket_min AS dst
-      FROM bands b JOIN mins m USING (band_id, band_key)
-      WHERE b.doc_id <> m.bucket_min
-    ),
-    sym AS (
-      SELECT src AS a, dst AS b FROM edges
-      UNION SELECT dst, src FROM edges
-    ),
-    reach(v, r) AS (
-      SELECT a, a FROM (SELECT DISTINCT a FROM sym)
-      UNION
-      SELECT s.a, re.r FROM sym s JOIN reach re ON re.v = s.b
-    )
-    SELECT v AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY v
-    ORDER BY doc_id
-    """
-    )
-
-
 @register(
     "dedup_clusters_exact",
-    _exact_clusters_oracle(),
+    _LSH_LABELS_SQL
+    + """
+    SELECT doc_id, CAST(label AS BIGINT) AS cluster_id
+    FROM labels
+    WHERE label IN (SELECT label FROM labels GROUP BY label HAVING count(*) >= 2)
+    ORDER BY doc_id
+    """,
     sort=("doc_id",),
-    doc="EXACT duplicate clusters (true connected components, not the "
-    "bounded-round refinement of lsh_dedup_clusters): the LSH doc↔"
-    "bucket-min star edges resolved to components by large-star/"
-    "small-star (operators/components.py::connected_components — "
-    "O(log n) alternations, linear per round, the Kiveris et al. "
-    "MapReduce algorithm), against a DuckDB recursive-CTE transitive "
-    "closure computing min-reachable-id exactly. Chains of any length "
-    "collapse to one cluster — the guarantee the fixed-round replay "
-    "deliberately trades away. At 100 TB: each alternation is one "
-    "groupBy-min + one join on vertex id, never an edge-pair closure "
-    "materialization (the recursive closure is the ORACLE's luxury, not "
-    "the plan).",
+    doc="Exact duplicate clusters per document: the clustered docs (cluster "
+    "size ≥ 2) of lsh_dedup_clusters with their cluster ids. The LSH "
+    "doc↔bucket-min star edges are resolved by large-star/small-star "
+    "(operators/components.py::connected_components — O(log n) "
+    "alternations, linear per round, the Kiveris et al. MapReduce "
+    "algorithm), against a DuckDB min-label fixpoint. Chains of any "
+    "length collapse to one cluster.",
 )
 def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fitness_nutrition_data_pipeline_spark.operators.components import (
-        near_dup_components,
-    )
-
     sigs = minhash_signatures(
         load_table(spark, sf_dir, "documents"), "doc_id", "text", n_hashes=N_MINHASH
     )
-    bands = lsh_bands(sigs, "doc_id", n_bands=N_BANDS)
-    return near_dup_components(bands, "doc_id").select(
-        "doc_id", F.col("component").alias("cluster_id")
+    n = F.count(F.lit(1)).over(W.partitionBy("cluster_id"))
+    return (
+        _lsh_clusters(sigs)
+        .withColumn("_n", n)
+        .where(F.col("_n") >= 2)
+        .select("doc_id", "cluster_id")
     )
 
 

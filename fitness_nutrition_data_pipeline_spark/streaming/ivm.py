@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +49,51 @@ def _fsync_dir(path: str) -> None:
         pass
     finally:
         os.close(fd)
+
+
+def _recover(state_dir: str, marker: str) -> None:
+    """Repair any crash window of ``_swap_in`` on ``state_dir``.
+    ``marker`` is the file written last into ``._next``, so its presence
+    means the new state is whole. Idempotent; call before every read."""
+    nxt, old = state_dir + "._next", state_dir + "._old"
+    if os.path.isdir(state_dir):
+        # crashes before the rename-aside (leftover ._next was never
+        # committed — its batch will be re-delivered) or after the
+        # swap-in (leftover ._old already superseded): discard both
+        shutil.rmtree(nxt, ignore_errors=True)
+        shutil.rmtree(old, ignore_errors=True)
+        return
+    if os.path.isfile(os.path.join(nxt, marker)):
+        # crash between rename-aside and swap-in: ._next is whole, so
+        # finish the swap
+        os.replace(nxt, state_dir)
+        shutil.rmtree(old, ignore_errors=True)
+    elif os.path.isdir(old):
+        # ._next unusable — roll back; the batch re-delivers
+        os.replace(old, state_dir)
+        shutil.rmtree(nxt, ignore_errors=True)
+
+
+def _swap_in(state_dir: str, write_next: Callable[[str], None]) -> None:
+    """Replace ``state_dir`` by what ``write_next(path)`` writes, every
+    step atomic or repairable by ``_recover``: write ``._next`` fully
+    (completeness marker last) → rename the state aside to ``._old`` →
+    rename ``._next`` in → drop ``._old``. A crash in any window either
+    rolls back (the batch re-delivers) or rolls forward — never an empty
+    state, which a delete-then-rename sequence could leave behind.
+
+    Durability, not just atomicity: ``._next`` and the directory the
+    renames mutate are fsynced, so a promoted state survives power
+    loss, not just process crashes."""
+    nxt, old = state_dir + "._next", state_dir + "._old"
+    write_next(nxt)
+    _fsync_dir(nxt)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(state_dir):
+        os.replace(state_dir, old)
+    os.replace(nxt, state_dir)
+    _fsync_dir(os.path.dirname(os.path.abspath(state_dir)))
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def delta_effects(
@@ -175,9 +221,14 @@ class IncrementalAggMaintainer:
         # checkpoint → ids restart at 0) must NOT be skipped. Without a
         # tag the watermark is disabled and the sink is at-least-once.
         self.query_tag = query_tag
+        # the file written last into ._next: with a query_tag the
+        # watermark sidecar (promoting a watermark-less dir would let the
+        # redelivered batch double-apply on top of the new state);
+        # without one, parquet's own _SUCCESS
+        self._marker = "_applied_batch_id" if query_tag else "_SUCCESS"
 
     def read_state(self) -> DataFrame:
-        self._recover()
+        _recover(self.state_dir, self._marker)
         if os.path.isdir(self.state_dir):
             return self.spark.read.parquet(self.state_dir)
         return empty_state(self.spark, self.keys_ddl)
@@ -191,7 +242,7 @@ class IncrementalAggMaintainer:
         disagree."""
         if self.query_tag is None:
             return -1
-        self._recover()
+        _recover(self.state_dir, self._marker)
         p = os.path.join(self.state_dir, "_applied_batch_id")
         if os.path.isfile(p):
             with open(p) as f:
@@ -217,43 +268,6 @@ class IncrementalAggMaintainer:
                     ) from None
         return -1
 
-    # swap-protocol sidecar dirs
-    def _next_dir(self) -> str:
-        return self.state_dir + "._next"
-
-    def _old_dir(self) -> str:
-        return self.state_dir + "._old"
-
-    def _next_complete(self) -> bool:
-        """A ._next dir is promotable only once EVERYTHING in it is on
-        disk. With a query_tag the watermark sidecar is written last,
-        so it is the completeness marker (promoting a watermark-less
-        dir would let the redelivered batch double-apply on top of the
-        new state); without a tag, parquet's own _SUCCESS marker."""
-        marker = "_applied_batch_id" if self.query_tag else "_SUCCESS"
-        return os.path.isfile(os.path.join(self._next_dir(), marker))
-
-    def _recover(self) -> None:
-        """Repair any crash window of the swap protocol (see
-        process_batch). Idempotent; called before every state read."""
-        nxt, old = self._next_dir(), self._old_dir()
-        if os.path.isdir(self.state_dir):
-            # crashes before the rename-aside (leftover ._next was never
-            # committed — its batch will be re-delivered) or after the
-            # swap-in (leftover ._old already superseded): discard both
-            shutil.rmtree(nxt, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            return
-        if self._next_complete():
-            # crash between rename-aside and swap-in: ._next is whole
-            # (watermark included), so finish the swap
-            os.replace(nxt, self.state_dir)
-            shutil.rmtree(old, ignore_errors=True)
-        elif os.path.isdir(old):
-            # ._next unusable — roll back; the batch re-delivers
-            os.replace(old, self.state_dir)
-            shutil.rmtree(nxt, ignore_errors=True)
-
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # foreachBatch is AT-LEAST-ONCE: after a crash between our state
         # swap and the engine's checkpoint commit, the SAME batch_id is
@@ -261,39 +275,26 @@ class IncrementalAggMaintainer:
         # it again would double-count every effect — the query-scoped
         # watermark makes the sink idempotent, which is what upgrades
         # the end-to-end contract to exactly-once.
-        self._recover()
+        _recover(self.state_dir, self._marker)
         if batch_id <= self.last_applied():
             return
         effects = delta_effects(
             batch, self.keys, self.value_col, op_col=self.op_col
         )
         merged = merge_state(self.read_state(), effects, self.keys)
+
         # merged is localCheckpoint-pinned, so its rows no longer
-        # reference the old state files — safe to swap underneath it.
-        # Swap protocol (every step atomic or repairable by _recover):
-        # write ._next fully (watermark last) → rename state aside to
-        # ._old → rename ._next in → drop ._old. A crash in any window
-        # either rolls back (batch re-delivers) or rolls forward
-        # (watermark skips the redelivery) — never an empty state, which
-        # a delete-then-rename sequence could leave behind.
-        tmp = self._next_dir()
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if self.query_tag is not None:
-            # durability, not just atomicity: fsync the sidecar and the
-            # dirs the renames mutate, so the exactly-once claim holds
-            # across POWER LOSS, not just process crashes. Without the
-            # fsyncs, a machine crash could persist the rename but tear
-            # the watermark — and a torn watermark whose tag still
-            # matched would have silently re-applied the batch.
-            with open(os.path.join(tmp, "_applied_batch_id"), "w") as f:
-                f.write(f"{self.query_tag}\n{batch_id}")
-                f.flush()
-                os.fsync(f.fileno())
-            _fsync_dir(tmp)
-        old = self._old_dir()
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(self.state_dir):
-            os.replace(self.state_dir, old)
-        os.replace(tmp, self.state_dir)
-        _fsync_dir(os.path.dirname(os.path.abspath(self.state_dir)))
-        shutil.rmtree(old, ignore_errors=True)
+        # reference the old state files — safe to swap underneath it
+        def write_next(path: str) -> None:
+            merged.coalesce(1).write.mode("overwrite").parquet(path)
+            if self.query_tag is not None:
+                # fsync the sidecar too: a machine crash could otherwise
+                # persist the rename but tear the watermark — and a torn
+                # watermark whose tag still matched would have silently
+                # re-applied the batch
+                with open(os.path.join(path, "_applied_batch_id"), "w") as f:
+                    f.write(f"{self.query_tag}\n{batch_id}")
+                    f.flush()
+                    os.fsync(f.fileno())
+
+        _swap_in(self.state_dir, write_next)

@@ -53,15 +53,15 @@ the REAL engine under the DuckDB value oracle.
 
 State durability mirrors operators/kcore.py::_pin's two-tier rule: in
 memory (localCheckpoint) for bounded/test corpora, a parquet state dir
-with write-new-then-swap (ivm.py's ._next/._old protocol, simplified —
-append-only state needs no applied-batch sidecar) where state must
-survive executor loss and restarts.
+where state must survive executor loss and restarts. The state dir is
+swapped by ivm.py's write-new-then-swap protocol (``_swap_in``,
+``_recover``); append-only state needs no applied-batch sidecar, so
+parquet's ``_SUCCESS`` is its completeness marker.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +70,7 @@ from fitness_nutrition_data_pipeline_spark.operators.dedup import (
     lsh_bands,
     minhash_signatures,
 )
+from fitness_nutrition_data_pipeline_spark.streaming.ivm import _recover, _swap_in
 
 _BAND_SCHEMA = "doc_id long, band_id int, band_key string"
 
@@ -136,27 +137,10 @@ class LshDedupBridge:
                 if self._mem_state is not None
                 else _empty_bands(self.spark)
             )
-        self._recover()
+        _recover(self.state_dir, "_SUCCESS")
         if os.path.isdir(self.state_dir):
             return self.spark.read.parquet(self.state_dir)
         return _empty_bands(self.spark)
-
-    def _recover(self) -> None:
-        """Repair the one crash window of the simplified swap: a whole
-        ._next left behind by a crash between the aside-rename and the
-        swap-in is rolled forward; anything else is discarded (the
-        batch re-delivers and the append-only algebra absorbs it)."""
-        nxt, old = self.state_dir + "._next", self.state_dir + "._old"
-        if os.path.isdir(self.state_dir):
-            shutil.rmtree(nxt, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-            return
-        if os.path.isfile(os.path.join(nxt, "_SUCCESS")):
-            os.replace(nxt, self.state_dir)
-            shutil.rmtree(old, ignore_errors=True)
-        elif os.path.isdir(old):
-            os.replace(old, self.state_dir)
-            shutil.rmtree(nxt, ignore_errors=True)
 
     def _write_state(self, merged: DataFrame) -> None:
         if self.state_dir is None:
@@ -166,14 +150,7 @@ class LshDedupBridge:
             # bands, and the test/bounded tier by contract)
             self._mem_state = merged.localCheckpoint()
             return
-        nxt, old = self.state_dir + "._next", self.state_dir + "._old"
-        shutil.rmtree(nxt, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(nxt)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(self.state_dir):
-            os.replace(self.state_dir, old)
-        os.replace(nxt, self.state_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        _swap_in(self.state_dir, merged.write.mode("overwrite").parquet)
 
     # ---- the operator ---------------------------------------------------
     def bands_of(self, docs: DataFrame) -> DataFrame:

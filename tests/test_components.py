@@ -7,8 +7,8 @@ distributed star alternation, forced by zeroing
 
 from fitness_nutrition_data_pipeline_spark.operators import components
 from fitness_nutrition_data_pipeline_spark.operators.components import (
+    bucket_clusters,
     connected_components,
-    near_dup_components,
 )
 from fitness_nutrition_data_pipeline_spark.operators.dedup import lsh_bands, minhash_signatures
 
@@ -64,17 +64,22 @@ def test_long_path_converges(spark, monkeypatch):
 
 
 def test_near_dup_components_from_lsh(spark, sf_dir):
+    from pyspark.sql import functions as F
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sigs = minhash_signatures(docs, "doc_id", "text")
-    bands = lsh_bands(sigs, "doc_id")
-    comps = near_dup_components(bands, "doc_id")
-    rows = comps.collect()
-    assert len(rows) > 0
-    # component label is always ≤ every member's id (min-label invariant)
-    assert all(r.component <= r.doc_id for r in rows)
+    bands = lsh_bands(minhash_signatures(docs, "doc_id", "text"), "doc_id")
+    membership = bands.select(
+        "doc_id",
+        F.concat(F.col("band_id").cast("string"), F.col("band_key")).alias("bucket"),
+    )
+    rows = bucket_clusters(membership, "doc_id", "bucket").collect()
+    # every doc with bands is labeled, singletons included
+    assert len(rows) == bands.select("doc_id").distinct().count() > 0
+    # cluster label is always ≤ every member's id (min-label invariant)
+    assert all(r.cluster_id <= r.doc_id for r in rows)
     # canonical members map to themselves
-    canon = {r.component for r in rows}
-    self_mapped = {r.doc_id for r in rows if r.doc_id == r.component}
+    canon = {r.cluster_id for r in rows}
+    self_mapped = {r.doc_id for r in rows if r.doc_id == r.cluster_id}
     assert canon == self_mapped
 
 
@@ -93,61 +98,28 @@ def test_near_dup_pipeline_end_to_end(spark, sf_dir):
     assert all(r.id_a < r.id_b for r in rows)
 
 
-def test_dedup_clusters_bipartite_chain(spark):
-    """Transitivity through shared buckets: 1~2 via x, 2~3 via y ⇒ one
-    cluster labeled 1; isolated doc 10 keeps its own label."""
-    from fitness_nutrition_data_pipeline_spark.operators.dedup import dedup_clusters
-
-    mem = spark.createDataFrame(
-        [(1, "x"), (2, "x"), (2, "y"), (3, "y"), (10, "z")],
-        "doc_id long, bucket string",
-    )
-    out = {
-        r.doc_id: r.cluster_id
-        for r in dedup_clusters(mem, "doc_id", "bucket", iterations=3).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10}
-
-
-def test_bipartite_clusters_refine_fixpoint_components(spark, sf_dir):
-    """Bounded-round bipartite propagation (dedup_clusters, oracle-
-    verifiable) must REFINE the true components (near_dup_components):
-    every bounded cluster sits inside one true component,
-    and labels never cross components. The real sf0.001 LSH graph has
-    duplicate chains longer than 3 bucket-hops, so equality does NOT
-    hold — the bounded form under-merges, never over-merges."""
-    from pyspark.sql import functions as F
-
-    from fitness_nutrition_data_pipeline_spark.operators.dedup import dedup_clusters
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bands = lsh_bands(minhash_signatures(docs, "doc_id", "text"), "doc_id")
-    membership = bands.select(
-        "doc_id",
-        F.concat(F.col("band_id").cast("string"), F.col("band_key")).alias("bucket"),
-    )
-    bip = {
-        r.doc_id: r.cluster_id
-        for r in dedup_clusters(
-            membership, "doc_id", "bucket", iterations=3
-        ).collect()
-    }
-    fixpoint = {
-        r.doc_id: r.component
-        for r in near_dup_components(bands, "doc_id").collect()
-    }
-    # every doc the fixpoint clusters is present in the bipartite result
-    assert set(fixpoint) <= set(bip)
-    for doc, cluster in bip.items():
-        # label is a real doc in the same true component (or self)
-        assert cluster <= doc
-        if doc in fixpoint:
-            assert fixpoint.get(cluster, cluster) == fixpoint[doc]
-        else:
-            assert cluster == doc  # singleton stays itself
-    # refinement is strict here: chains longer than 3 hops exist
-    shared = set(fixpoint)
-    assert len({bip[d] for d in shared}) > len({fixpoint[d] for d in shared})
+def test_dedup_clusters_bipartite_chain(spark, monkeypatch):
+    """Transitivity through shared buckets, on both connected-components
+    paths: 1~2 via x, 2~3 via y ⇒ one cluster labeled 1; a chain of four
+    bucket-hops (1–x–2–y–3–z–4–w–5) is one cluster too; an id that
+    shares no bucket labels itself."""
+    cases = [
+        ([(1, "x"), (2, "x"), (2, "y"), (3, "y"), (10, "z")],
+         {1: 1, 2: 1, 3: 1, 10: 10}),
+        ([(5, "w"), (4, "w"), (4, "z"), (3, "z"), (3, "y"), (2, "y"),
+          (2, "x"), (1, "x"), (20, "v"), (20, "u")],
+         {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 20: 20}),
+    ]
+    for rows, want in cases:
+        mem = spark.createDataFrame(rows, "doc_id long, bucket string")
+        for bound in (components.ONE_TASK_ROWS, 0):
+            with monkeypatch.context() as m:
+                m.setattr(components, "ONE_TASK_ROWS", bound)
+                out = {
+                    r.doc_id: r.cluster_id
+                    for r in bucket_clusters(mem, "doc_id", "bucket").collect()
+                }
+            assert out == want, (bound, rows)
 
 
 def test_cdc_chunks_shift_invariance(spark):

@@ -202,8 +202,9 @@ def test_contamination_corpus_never_shuffles_for_join(spark, sf_dir):
 
 
 def test_cluster_propagation_no_pair_expansion(spark, sf_dir):
-    """Label propagation must stay keyed groupBy/join — no nested-loop or
-    cartesian pair expansion anywhere in the 3-round plan."""
+    """Duplicate clusters are built from id↔bucket-min star edges and
+    keyed groupBy/join — no nested-loop or cartesian pair expansion
+    anywhere in the plan."""
     plan = plan_of(spark, sf_dir, "lsh_dedup_clusters")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -40,7 +40,7 @@ SHOWCASE = [
     ("near_dup_pipeline", "end-to-end near-dedup: minhash sigs → LSH bands → capped in-bucket star pairs → shingle-join Jaccard verify"),
     ("tpch_q15_top_supplier", "argmax: 1-row max broadcast onto revenue, ~1-row survivor set broadcast onto supplier"),
     ("pii_scan_redact", "regexp scan+redact: zero shuffles, pure codegen projection"),
-    ("lsh_dedup_clusters", "bounded-round label propagation: per round two keyed groupBys, no edge-pair materialization"),
+    ("lsh_dedup_clusters", "exact clusters: pinned doc↔bucket membership, bucket-min star edges, connected components in one MapInPandas task (union-find finish), no pair expansion"),
     ("embedding_lsh_buckets", "hyperplane LSH: plane table broadcast, one posexplode, map-side partial dots"),
     ("kmeans_lloyd_update", "Lloyd step: centroids broadcast, (centroid,dim) partial-agg mean recompute"),
     ("corpus_curation_pipeline", "composed curation: all joins keyed on doc_id, LSH decision linear, 6-row result"),
@@ -75,7 +75,6 @@ SHOWCASE = [
     ("cuped_adjusted_lift", "CUPED readout: user-grain shuffle, pinned 2-row arm moments, 1-row theta broadcast back"),
     ("variant_props_profile", "Spark 4 VARIANT: try_parse_json once into binary encoding, typed path extraction, keyed agg"),
     ("shard_manifest_checksums", "order-sensitive manifests: shard-partitioned window + sort_array(struct) inside the per-shard aggregate"),
-    # r8 additions
     ("zorder_write_band_spans", "z-ordered WRITER readback: deterministic top-bits bands, per-band span agg over the files just written"),
     ("rag_chunk_plan", "RAG chunk planning: closed-form integer chunk math per row, one scan, source-grain agg"),
     ("filter_funnel_attribution", "quality funnel: one corpus scan folds to first-fail rule grain; funnel window on 4 rows"),
@@ -92,7 +91,6 @@ SHOWCASE = [
     ("partitioned_write_prune_audit", "partitioned write + readback: week predicate lands in PartitionFilters - 7 of ~31 day dirs scanned"),
     ("multimodal_payload_dedup", "binary CAS dedup: JVM magic sniff + md5-over-hex digests; only 32-char digests cross the shuffle"),
     ("markov_next_event_accuracy", "sequence eval: pinned per-user lead pass, state-count model broadcast into the test join"),
-    # r9 additions
     ("hybrid_retrieval_eval", "serving cascade: pinned pairs pass (queries broadcast), two rank windows fused by RRF, metric joins top-10-sized"),
     ("ndcg_fused_eval", "NDCG@10 on the same fused ranking: integer log2 weights as array literals, IDCG a cumsum lookup — no query-time float"),
     ("skew_salted_join_audit", "hot-key salting: SortMergeJoin on (user_id, salt), dim replicated x8, salt never reaches the output"),
@@ -105,7 +103,6 @@ SHOWCASE = [
     ("late_dim_backfill_audit", "two-phase late-dim resolution: pinned delta-sized pending set, backfill join never touches resolved facts"),
     ("partition_restatement_audit", "day-grain restatement: broadcast affected-day set, anti-join keeps untouched aggregates, recompute reads affected days only"),
     ("kcore_peel_audit", "bounded k-core peel: pinned edge list, per round one degree agg + two left-semi joins against survivors"),
-    # r10 additions
     ("kcore_fixpoint_audit", "converged k-core: loop-until-no-drop with parquet round-state, one two-long action per round; 7-round idempotent oracle unroll"),
     ("mv_rewrite_audit", "MV rewrite: monthly answer scans ONLY the written day-grain MV — no base-table scan in the answering plan"),
     ("pareto_frontier_parts", "distributed skyline: in-band prefix-max window + broadcast band-summary prefix — the quadratic pair space never materializes"),
@@ -120,7 +117,6 @@ SHOWCASE = [
     ("capped_waterfill_allocation", "waterfill: source-grain fold, cap-sorted prefix sums, closed-form level + deterministic remainder bumps"),
     ("kmv_intersection_estimate", "theta-sketch intersection: two 64-row KMV sketches, theta = min of kth minima, set algebra on answer-sized relations"),
     ("fleiss_kappa_raters", "inter-annotator agreement: rating stream folds to (item,label) cells; kappa is integer algebra on two scalar aggregates"),
-    # r11 additions
     ("tree_subtree_cost_rollup_native", "engine-native WITH RECURSIVE: the recursion is ONE declarative UnionLoop plan — no per-level driver round trips"),
     ("rfm_segmentation_histogram", "ntile-free RFM: equi-depth CDF windows over collapsed value grains, quintile maps broadcast back to customer grain"),
     ("funnel_time_to_convert", "rank selection without row_number: sec-grain prefix sums; no window over the converted-user relation"),
@@ -138,10 +134,8 @@ SHOWCASE = [
     ("quantile_sketch_merge", "mergeable quantile sketch: per-source bin histograms (map-side combinable) -> merged bin counts; CDF window on the bounded bin grain; 3-row quantile spine broadcast"),
     ("skipgram_cooccurrence_topk", "skip-gram pairs: non-equi +-2 window turned into an EQUI hash join by exploding the constant offset set; TakeOrderedAndProject top-k"),
     ("quantile_normalization_map", "per-source deciles mapped to global: cumulative windows on the (source, value) DISTINCT-VALUE grain; 9-row decile spine broadcast-crossed"),
-    # r16 additions (the two slack-slot registrations)
     ("hll_union_contract", "HLL p=8: one union'd key scan -> 256-row register relations; the merge is a register-grain MAX — the whole sketch algebra is answer-sized"),
     ("ivf_beam_recall_contract", "IVF beam nprobe=3: centroid relation broadcast twice (assign + probe-rank); exact ranking only inside probed partitions, never the corpus"),
-    # r17 addition (the slack-slot registration)
     ("lsh_dedup_batch_replay", "streaming LSH bridge replay: per batch a band-key hash join of batch bands vs pinned state (Scan ExistingRDD = the bridge's state pins), never history²; union of 3 batch deltas -> pair groupBy"),
 ]
 

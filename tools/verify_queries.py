@@ -9,10 +9,10 @@ registered query at sf0.001 and sf0.01.
 
 Usage: python tools/verify_queries.py [name ...] [--jobs N]
 
-``--jobs N`` is a BEST-EFFORT fast sweep, not the blessing protocol
-(ADVICE r12 #1): all builders share one SparkSession, and the
-round-trip/write-audit queries execute their sinks at builder time in
-the shared per-application scratch namespace — concurrent builders can
+``--jobs N`` is a BEST-EFFORT fast sweep, not the blessing protocol:
+all builders share one SparkSession, and the round-trip/write-audit
+queries execute their sinks at builder time in the shared
+per-application scratch namespace — concurrent builders can
 interleave those writes, and any builder that toggles a session conf
 races the others. A parallel FAIL therefore warrants a jobs=1 re-check
 before acting on it, and the sequential default (jobs=1) is the only
@@ -41,11 +41,10 @@ TABLES = (
 )
 
 
-# SPARK_GRAFT_VERIFY_STRICT=1 hashes floats at FULL precision (repr) —
-# the driver's hash is stricter than 9 significant digits (both r4/r5
-# hash-reds passed the 9-sig-digit normalizer locally yet failed the
-# driver), so ulp-level double residue from round() must be reproduced
-# locally with repr() to trust a fix before the round lands.
+# SPARK_GRAFT_VERIFY_STRICT=1 hashes floats at FULL precision (repr):
+# a value hash stricter than 9 significant digits sees ulp-level double
+# residue from round() that the default normalizer forgives, so a fix
+# for such a mismatch is only trusted once it passes under repr().
 STRICT = bool(os.environ.get("SPARK_GRAFT_VERIFY_STRICT"))
 
 
@@ -106,8 +105,8 @@ def fetch_oracle(rel):
 
     ``fetchall()`` yields native Python objects (int for HUGEINT,
     Decimal for DECIMAL) and so can NEVER reproduce the driver's
-    coercions locally; that masked both the r6 HUGEINT and the r7
-    DECIMAL hash-red classes.  The pandas lane reproduces them:
+    coercions locally; it hid every HUGEINT and DECIMAL output column
+    whose pandas value differs.  The pandas lane reproduces them:
     HUGEINT/DECIMAL -> float64, NULL-bearing int columns -> float64
     (``60`` -> ``60.0``), NULL doubles -> NaN.
     """
