@@ -161,7 +161,7 @@ def winnowing_match_pairs(
     one on the pair key for the shared counts."""
     # the fingerprint relation feeds THREE branches (posting sizes + both
     # self-join sides); without pinning, each branch re-runs the whole
-    # winnowing lineage over the corpus (tools/audit_scans.py: 8 corpus
+    # winnowing lineage over the corpus (tools/audit_reuse.py: 8 corpus
     # scans). Pinned: winnowing runs once — exactly what production does
     # by persisting the fingerprint index as a table.
     fps = winnowing_fingerprint_set(

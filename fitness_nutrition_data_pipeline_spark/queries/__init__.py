@@ -77,37 +77,15 @@ def register(
 # so all_specs orders the registry itself.
 _QUERY_MODULES = tuple(sorted(m.name for m in pkgutil.iter_modules(__path__)))
 
-# module name → import error message; populated by all_specs (empty when
-# every module registered cleanly). Inspected by tools/verify_queries.py.
-IMPORT_FAILURES: dict[str, str] = {}
-
 
 def all_specs() -> dict[str, QuerySpec]:
     """Registry snapshot: the query modules in sorted order, and each
-    module's queries in definition order.
-
-    Module imports are ISOLATED: one module failing to import (e.g. a
-    Spark API that moved between environment versions — it has happened
-    between rounds) must cost its own queries only, never the other 100+.
-    Failures are recorded in IMPORT_FAILURES, not swallowed silently;
-    set SPARK_GRAFT_STRICT_IMPORTS=1 to re-raise (local dev / CI).
-    """
+    module's queries in definition order. A module that fails to import
+    raises."""
     import importlib
-    import logging
-    import os
 
-    strict = bool(os.environ.get("SPARK_GRAFT_STRICT_IMPORTS"))
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(f"fitness_nutrition_data_pipeline_spark.queries.{mod}")
-        except Exception as e:  # noqa: BLE001
-            if strict:
-                raise
-            IMPORT_FAILURES[mod] = f"{type(e).__name__}: {e}"
-            logging.getLogger(__name__).warning(
-                "query module %s failed to import (its queries are "
-                "unavailable this run): %s", mod, e
-            )
+        importlib.import_module(f"{__name__}.{mod}")
 
     rank = {f"{__name__}.{m}": i for i, m in enumerate(_QUERY_MODULES)}
     # registration order within a module is definition order, and the

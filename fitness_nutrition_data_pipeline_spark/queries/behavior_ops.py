@@ -359,7 +359,7 @@ def strict_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # user-grain anchor tables feed 2 branches each (next step's join +
     # the final assembly) — pinned so the event scan runs once per STEP,
-    # not once per branch (tools/audit_scans.py: 6 scans -> 3; the three
+    # not once per branch (tools/audit_reuse.py: 6 scans -> 3; the three
     # remaining are the semantically-chained per-step passes)
     per_user = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("t"))).alias("t_view"),
@@ -431,7 +431,7 @@ def event_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _ev(spark, sf_dir)
     # the distinct (user, type) relation feeds FOUR branches (marginals,
     # both self-join sides, the user count) — pinned so events scan once
-    # (tools/audit_scans.py: 5 scans -> 1); n_users derives from ut
+    # (tools/audit_reuse.py: 5 scans -> 1); n_users derives from ut
     # (every user in events appears in ut)
     ut = ev.select("user_id", "event_type").distinct().localCheckpoint()
     n_users = ut.agg(F.countDistinct("user_id").alias("n"))

@@ -305,9 +305,8 @@ _EDGE_CTES = """
     "against surviving vertices (edge list pinned once, as every "
     "iterative operator's input is); rounds converge "
     "in O(peeling depth). The bounded unroll keeps the oracle "
-    "SQL-expressible; the loop-until-converged form (with durable "
-    "parquet round-state instead of localCheckpoint — the 100 TB "
-    "path) is operators/kcore.py::kcore_peel, convergence pinned by "
+    "SQL-expressible; the loop-until-converged form is "
+    "operators/kcore.py::kcore_peel, convergence pinned by "
     "tests/test_kcore.py on graphs whose peeling depth exceeds this "
     "audit's unroll.",
 )
@@ -415,7 +414,8 @@ def _kcore_fixpoint_oracle(k: int, unroll: int) -> str:
     "is sparsified by a SYMMETRIC deterministic filter ((src+dst+"
     "src*dst) % 37 — both orientations of an undirected edge live or "
     "die together, keeping out-degree == degree), then peeled to the "
-    "2-core FIXPOINT with durable round-state semantics. The oracle "
+    "2-core FIXPOINT, each round's state pinned with localCheckpoint. "
+    "The oracle "
     "unrolls 7 rounds — past the measured 4-5 round peeling depth at "
     "every SF — and extra rounds are idempotent, so the hash match "
     "proves BOTH the core (vertex/edge counts, degree envelope) and "

@@ -2542,8 +2542,9 @@ def variant_props_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "HARD oracle, completing the CSV/JSONL/ORC/Avro round-trip "
     "quartet: documents are encoded executor-side one container file "
     "per partition (zigzag varints over plain Row objects — nullable "
-    "longs never pass through a float-coercing frame), re-read via "
-    "binaryFile + Arrow-batched mapInPandas block decode with a "
+    "longs never pass through a float-coercing frame), re-read by "
+    "sources/avro.py::read_avro (one byte-range split per small file, "
+    "blocks decoded in an Arrow-batched mapInPandas) with a "
     "DECLARED schema, and aggregated; the oracle aggregates the "
     "original parquet. The md5 text checksum proves utf-8 string "
     "encoding round-trips byte-exactly through the binary format.",
@@ -2590,13 +2591,13 @@ def avro_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     sort=("lang",),
     doc="The BLOCK-SPLITTING Avro reader (sources/avro.py::"
-    "read_avro_splits) under the hard oracle: "
+    "read_avro) under the hard oracle: "
     "documents are encoded into ONE multi-block container file "
     "(256-row blocks), which the reader splits into 64 KiB byte-range "
     "tasks via the 16-byte sync marker — the Hadoop input-split "
     "ownership rule (a task owns blocks that START in its range), so "
-    "one large file reads with many tasks where avro_roundtrip_scan's "
-    "per-file path would use one. The aggregate over the re-read rows "
+    "one large file reads with many tasks where the default 32 MiB "
+    "split would use one. The aggregate over the re-read rows "
     "hash-matches the original parquet, proving every block is decoded "
     "exactly once across split boundaries.",
 )
@@ -2604,7 +2605,7 @@ def avro_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from fitness_nutrition_data_pipeline_spark.sources.avro import (
-        read_avro_splits,
+        read_avro,
         write_avro,
     )
 
@@ -2616,7 +2617,7 @@ def avro_split_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     ).coalesce(1)
     write_avro(docs, path, rows_per_block=256)
-    back = read_avro_splits(
+    back = read_avro(
         spark, path, "doc_id long, lang string, n_chars long",
         split_bytes=64 << 10,
     )

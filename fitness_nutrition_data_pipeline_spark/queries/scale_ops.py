@@ -241,7 +241,7 @@ def oov_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("tok") != "")
     # term-frequency relation feeds BOTH the rank window and the total —
     # pin it (vocab-sized) so the corpus explode+count runs once, not
-    # twice (tools/audit_scans.py diamond policy)
+    # twice (tools/audit_reuse.py diamond policy)
     tc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint()
     r = tc.withColumn(
         "rnk", F.row_number().over(W.orderBy(F.desc("cnt"), F.asc("tok")))
@@ -511,7 +511,7 @@ def triangle_count_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pin the two shared relations: ue feeds both sides of the pairing
     # join plus the node count, e feeds three joins plus the edge count —
     # without the pins the plan re-derives each use from a fresh events
-    # scan (audited by tools/audit_scans.py). After the pins the corpus
+    # scan (audited by tools/audit_reuse.py). After the pins the corpus
     # is scanned exactly once; both pinned relations are DISTINCT
     # projections bounded by (users × type-alphabet) and (alphabet²).
     ue = ev.select("user_id", "event_type").distinct().localCheckpoint()

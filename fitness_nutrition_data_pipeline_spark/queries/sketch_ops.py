@@ -209,7 +209,7 @@ def countmin_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pinned: ex feeds both the probe build (kb) and the final error
     # join — unpinned, the plan re-derives it from a third corpus scan
-    # (tools/audit_scans.py); key-cardinality-sized
+    # (tools/audit_reuse.py); key-cardinality-sized
     ex = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))

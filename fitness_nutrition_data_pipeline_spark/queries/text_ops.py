@@ -1095,7 +1095,7 @@ def lang_id_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     # function of the CLASS-GRAIN confusion matrix, so aggregate once to
     # the ≤|L|² cell table (answer-sized, pinned) and derive n / po /
     # marginals from it — the lang-id scoring lineage runs ONE pass over
-    # the corpus instead of four (tools/audit_scans.py: 6 scans -> 1).
+    # the corpus instead of four (tools/audit_reuse.py: 6 scans -> 1).
     cm = (
         pred.groupBy("labeled", "predicted")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))

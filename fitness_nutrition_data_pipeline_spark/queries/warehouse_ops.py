@@ -700,7 +700,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the retraction join is DELTA-sized (a real IVM system materializes
     # its change feed anyway) and feeds BOTH the retract and insert
     # branches — pin it so orders scans 3x (prior agg, base join side,
-    # delta), not 5x (audit_scans caught the unpinned diamond)
+    # delta), not 5x (audit_reuse caught the unpinned diamond)
     joined = d.join(
         b, F.col("d.o_orderkey") == F.col("b.o_orderkey"), "left"
     ).localCheckpoint()

@@ -6,33 +6,28 @@ Spark ships avro-core jars but NOT the spark-avro SQL module, so
 the format away, this module implements the container format directly —
 the sources/xlsx.py posture applied to a binary format:
 
-- a distributed WRITER: one Avro file per input partition, encoded
-  executor-side from the partition's rows (binary varint/zigzag
-  encoding is pure Python over plain row objects, so longs round-trip
-  exactly — never through a float-coercing pandas frame);
-- a distributed READER: Spark's ``binaryFile`` source lists and ships
-  the files, an Arrow-batched ``mapInPandas`` stage decodes blocks.
+- a distributed WRITER (``write_avro``): one Avro file per input
+  partition, encoded executor-side from the partition's rows (binary
+  varint/zigzag encoding is pure Python over plain row objects, so longs
+  round-trip exactly — never through a float-coercing pandas frame);
+- one distributed READER (``read_avro``): the driver reads each file's
+  header and plans byte-range splits of ``split_bytes``; each task
+  mmap-scans its range for Avro's 16-byte sync marker and decodes the
+  blocks that START inside it (the Hadoop input-split ownership rule).
+  A file smaller than ``split_bytes`` is one split, so a writer-emitted
+  directory reads one task per file; one large file reads with many.
 
 Supported surface: ``null`` codec; record schemas over long / double /
 string / boolean / bytes and nullable unions ``["null", T]`` (ints
 widen to long, floats to double — Spark types them that way anyway).
 
-Scale: ``read_avro`` parallelizes per FILE and the writer emits one
-file per partition, so read parallelism mirrors write parallelism.
-``read_avro_splits`` is the 100 TB ingest path for files we did NOT
-write: it splits one large container file into per-block-range tasks
-using Avro's 16-byte sync marker (which exists precisely so a reader
-can start at any block boundary — the Hadoop input-split contract: a
-task owns the blocks that START inside its byte range).
-
-The writer targets a filesystem shared between driver and executors
-(plain ``open()`` executor-side); it REFUSES non-local masters rather
-than silently producing a partial directory.
+The writer and the reader's tasks use plain ``open()``, so both target a
+filesystem shared between driver and executors; the writer REFUSES
+non-local masters rather than silently producing a partial directory.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import struct
@@ -223,8 +218,7 @@ def _field_types_from_schema(schema: dict) -> list[tuple[str, str]]:
 
 def _read_header_bytes(head: bytes) -> tuple[dict, int, bytes]:
     """(metadata map, data-start offset, sync marker) from the leading
-    bytes of a container file — the single header-parsing contract,
-    shared by the whole-file and block-splitting readers."""
+    bytes of a container file."""
     view = memoryview(head)
     if bytes(view[:4]) != _MAGIC:
         raise ValueError("not an Avro object container file")
@@ -236,36 +230,6 @@ def _read_header_bytes(head: bytes) -> tuple[dict, int, bytes]:
     if len(sync) != 16:
         raise ValueError("truncated Avro header")
     return meta, pos + 16, sync
-
-
-def decode_file(data: bytes) -> tuple[list[str], list[list]]:
-    """(column names, column-major values) of one Avro container file."""
-    meta, pos, sync = _read_header_bytes(data)
-    view = memoryview(data)
-    schema = json.loads(meta["avro.schema"])
-    fts = _field_types_from_schema(schema)
-    names = [n for n, _, _ in fts]
-    cols: list[list] = [[] for _ in fts]
-    total = len(data)
-    while pos < total:
-        count, pos = read_long(view, pos)
-        size, pos = read_long(view, pos)
-        end = pos + size
-        for _ in range(count):
-            for i, (_, t, nullable) in enumerate(fts):
-                if nullable:
-                    branch, pos = read_long(view, pos)
-                    if branch == 0:
-                        cols[i].append(None)
-                        continue
-                v, pos = _decode_value(view, pos, t)
-                cols[i].append(v)
-        if pos != end:
-            raise ValueError(f"block size mismatch: {pos} != {end}")
-        if bytes(view[pos : pos + 16]) != sync:
-            raise ValueError("sync marker mismatch (corrupt block)")
-        pos += 16
-    return names, cols
 
 
 # ------------------------------------------------------------- Spark-level
@@ -311,43 +275,8 @@ def write_avro(df: DataFrame, path: str, rows_per_block: int = 4096) -> int:
     return len(manifest)
 
 
-def read_avro(spark: SparkSession, path: str, ddl: str) -> DataFrame:
-    """Distributed Avro read: binaryFile listing → Arrow-batched
-    mapInPandas block decode. ``ddl`` declares the expected schema
-    (never inference — the CSV/JSONL house rule); field names are
-    validated against each file's embedded schema at decode time."""
-    expected = T._parse_datatype_string(ddl)
-    names = [f.name for f in expected.fields]
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                got, cols = decode_file(bytes(content))
-                if got != names:
-                    raise ValueError(
-                        f"avro schema mismatch: file has {got}, "
-                        f"reader declared {names}"
-                    )
-                yield pd.DataFrame(
-                    {n: pd.Series(c, dtype=object) for n, c in zip(got, cols)}
-                )
-
-    # a glob in the load path makes Spark probe ``*.avro/_spark_metadata``
-    # and log a FileNotFoundException per read; filter the listing instead
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(path)
-    )
-    return files.select("content").mapInPandas(decode, expected)
-
-
-# ------------------------------------------------- block-splitting reader
-
 def plan_avro_splits(
-    path: str, split_bytes: int = 32 << 20
+    path: str, split_bytes: int
 ) -> tuple[list[tuple[str, int, int, bytes]], list[tuple[str, str, bool]]]:
     """Driver-side split plan for one file or a directory of ``*.avro``:
     returns (splits, field_types) where each split is
@@ -414,69 +343,69 @@ def _decode_split(fname: str, start: int, end: int, sync: bytes,
     pattern fails block validation and scanning resumes one byte on."""
     import mmap
 
-    cols: list[list] = [[] for _ in fts]
     with open(fname, "rb") as fh:
         with mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-            n = len(mm)
             view = memoryview(mm)
             try:
-                return _scan_blocks(mm, view, n, start, end, sync, fts, cols)
+                return _scan_blocks(mm, view, start, end, sync, fts)
             finally:
                 # an exported view blocks mmap.close()
                 view.release()
 
 
-def _scan_blocks(mm, view, n, start, end, sync, fts, cols):
-            search = max(0, start - 16)
-            while True:
-                idx = mm.find(sync, search, min(n, end))
-                if idx < 0 or idx + 16 >= end:
-                    return cols  # no block starts inside this range
-                pos = idx + 16
-                if pos < start:
-                    search = idx + 1
-                    continue
-                # try to decode consecutive blocks from this candidate
-                try:
-                    got: list[list] = [[] for _ in fts]
-                    first = True
-                    while pos < end and pos < n:
-                        count, p2 = read_long(view, pos)
-                        size, p2 = read_long(view, p2)
-                        blk_end = p2 + size
-                        if count <= 0 or size < 0 or blk_end + 16 > n:
-                            raise ValueError("implausible block header")
-                        for _ in range(count):
-                            for i, (_, t, nullable) in enumerate(fts):
-                                if nullable:
-                                    branch, p2 = read_long(view, p2)
-                                    if branch == 0:
-                                        got[i].append(None)
-                                        continue
-                                v, p2 = _decode_value(view, p2, t)
-                                got[i].append(v)
-                        if p2 != blk_end:
-                            raise ValueError("block size mismatch")
-                        if bytes(view[blk_end : blk_end + 16]) != sync:
-                            raise ValueError("sync mismatch after block")
-                        first = False
-                        pos = blk_end + 16
-                    return got
-                except (ValueError, IndexError, struct.error):
-                    if not first:
-                        raise  # real corruption past a verified block
-                    search = idx + 1  # false-positive sync in data
+def _scan_blocks(mm, view, start, end, sync, fts) -> list[list]:
+    n = len(mm)
+    search = max(0, start - 16)
+    while True:
+        idx = mm.find(sync, search, min(n, end))
+        if idx < 0 or idx + 16 >= end:
+            return [[] for _ in fts]  # no block starts inside this range
+        pos = idx + 16
+        if pos < start:
+            search = idx + 1
+            continue
+        # try to decode consecutive blocks from this candidate
+        try:
+            got: list[list] = [[] for _ in fts]
+            first = True
+            while pos < end and pos < n:
+                count, p2 = read_long(view, pos)
+                size, p2 = read_long(view, p2)
+                blk_end = p2 + size
+                if count <= 0 or size < 0 or blk_end + 16 > n:
+                    raise ValueError("implausible block header")
+                for _ in range(count):
+                    for i, (_, t, nullable) in enumerate(fts):
+                        if nullable:
+                            branch, p2 = read_long(view, p2)
+                            if branch == 0:
+                                got[i].append(None)
+                                continue
+                        v, p2 = _decode_value(view, p2, t)
+                        got[i].append(v)
+                if p2 != blk_end:
+                    raise ValueError("block size mismatch")
+                if bytes(view[blk_end : blk_end + 16]) != sync:
+                    raise ValueError("sync mismatch after block")
+                first = False
+                pos = blk_end + 16
+            return got
+        except (ValueError, IndexError, struct.error):
+            if not first:
+                raise  # real corruption past a verified block
+            search = idx + 1  # false-positive sync in data
 
 
-def read_avro_splits(
+def read_avro(
     spark: SparkSession, path: str, ddl: str, *, split_bytes: int = 32 << 20
 ) -> DataFrame:
-    """Block-splitting Avro read: the 100 TB path for LARGE container
-    files (``read_avro`` is one task per file). The driver reads only
+    """Distributed Avro read of one container file or a directory of
+    ``*.avro``. ``ddl`` declares the expected schema (never inference —
+    the CSV/JSONL house rule); its field names are checked against the
+    files' embedded schema here, at planning. The driver reads only
     headers and plans byte-range splits; each task mmap-scans its range
-    for the sync marker and decodes the blocks that start inside it.
-    Parallelism is ``ceil(file_bytes / split_bytes)`` per file instead
-    of 1."""
+    for the sync marker and decodes the blocks that start inside it, so
+    a file reads with ``ceil(file_bytes / split_bytes)`` tasks."""
     expected = T._parse_datatype_string(ddl)
     names = [f.name for f in expected.fields]
     splits, fts = plan_avro_splits(path, split_bytes)

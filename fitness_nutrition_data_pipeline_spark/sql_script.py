@@ -61,27 +61,11 @@ def run_sql_script(
     spark: SparkSession,
     sql_script: str,
     process_row: Callable[[dict], None] | None = None,
-    max_workers: int = 1,
 ) -> dict:
-    """Execute a script; returns {'executed': n, 'failed': n, 'rows': n}.
-
-    ``max_workers > 1`` executes statements CONCURRENTLY while keeping
-    every observable identical to the sequential form: SET variables are
-    resolved in a sequential pre-pass (a SET governs only later
-    statements, exactly as before), failures stay lenient and
-    per-statement, and ``process_row`` is invoked in STATEMENT ORDER
-    from collected results — concurrency changes wall-clock, never the
-    report. That equivalence only holds for scripts with no
-    inter-statement dependencies, so concurrency is GATED: if any
-    statement is not a SELECT (DDL/DML can create state a later
-    statement reads), the script silently runs sequentially. The
-    default stays 1: replay semantics (``sql_script_replay``) are
-    specified sequential."""
+    """Execute a script statement by statement; returns {'executed': n,
+    'failed': n, 'rows': n}. A SET governs the statements after it."""
     variables: dict[str, str] = {}
     stats = {"executed": 0, "failed": 0, "rows": 0}
-
-    # sequential pre-pass: capture SETs, substitute into later statements
-    resolved: list[tuple[str, str]] = []  # (original, substituted)
     for statement in parse_sql_statements(sql_script):
         m = _SET_RE.match(statement)
         if m:
@@ -90,36 +74,12 @@ def run_sql_script(
         stmt = statement
         for name, value in variables.items():
             stmt = stmt.replace(name, value)
-        resolved.append((statement, stmt))
-
-    def execute(item: tuple[str, str]):
-        original, stmt = item
         try:
             df = spark.sql(stmt)
-            rows = (
-                df.collect()
-                if original.strip().upper().startswith("SELECT")
-                else []
-            )
-            return rows, None
+            rows = df.collect() if statement.strip().upper().startswith("SELECT") else []
         except Exception as e:  # lenient: log + continue (:841-842)
-            return None, e
-
-    all_selects = all(
-        orig.strip().upper().startswith("SELECT") for orig, _ in resolved
-    )
-    if max_workers > 1 and all_selects:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            outcomes = list(pool.map(execute, resolved))
-    else:
-        outcomes = [execute(item) for item in resolved]
-
-    for rows, err in outcomes:  # statement order — deterministic report
-        if err is not None:
             stats["failed"] += 1
-            logger.debug("statement failed: %s", str(err)[:120])
+            logger.debug("statement failed: %s", str(e)[:120])
             continue
         stats["executed"] += 1
         for row in rows:

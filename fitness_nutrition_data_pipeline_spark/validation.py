@@ -224,11 +224,15 @@ def validate_warehouse(spark: SparkSession) -> ValidationResults:
         (ct, n, a) for ct, n, a, reads in checks
         if all(c.lower() in columns[rt] for rt, c in reads)
     ]
+    # the remaining corpus families run side by side with the tables'
+    # aggregates; their rows are recorded after the scalar checks
+    corpus = _analytical_corpus_sql(present)
     read = declare_parallel(
         [
             (t, partial(_read_table, spark, t, [(n, a) for ct, n, a in runnable if ct == t]))
             for t in present
-        ],
+        ]
+        + [(f"#{i}", partial(_run_statement, spark, sql)) for i, sql in enumerate(corpus)],
         max_workers=8,
     )
 
@@ -254,49 +258,49 @@ def validate_warehouse(spark: SparkSession) -> ValidationResults:
         else:
             res.record(name, val)
 
-    # -- remaining corpus families, executed through the S7 script runner
-    # with the reference's row classifier (check_name/violations keys →
-    # _process_validation_row semantics, main_etl_pipeline.py:902-920);
-    # rows classify in statement order.
-    from fitness_nutrition_data_pipeline_spark.sql_script import run_sql_script
-
-    script = _analytical_corpus_sql(present)
-
-    def classify(row: dict) -> None:
-        name = row.get("check_name", row.get("rule", ""))
-        count = row.get(
-            "violations",
-            row.get("violation_count", row.get("orphan_count", row.get("duplicate_pk", 0))),
-        )
-        res.record(str(name), int(count or 0))
-
-    # concurrent statements, statement-order row processing: the report
-    # is byte-identical to sequential replay, only wall-clock changes
-    stats = run_sql_script(spark, script, process_row=classify, max_workers=8)
-    res.checks_run += stats["failed"]  # lenient failures still count as attempted
+    # reference row classifier (check_name/violations →
+    # _process_validation_row, main_etl_pipeline.py:902-920), in
+    # statement order
+    for i in range(len(corpus)):
+        rows = read[f"#{i}"]
+        if rows is None:
+            res.checks_run += 1  # lenient: a failed statement was attempted
+            continue
+        for row in rows:
+            res.record(str(row["check_name"]), int(row["violations"] or 0))
     return res
 
 
-def _analytical_corpus_sql(present: list[str]) -> str:
+def _run_statement(spark: SparkSession, sql: str) -> list | None:
+    """One corpus statement's collected rows; None when it fails to run."""
+    try:
+        return spark.sql(sql).collect()
+    except Exception as e:  # noqa: BLE001
+        logger.debug("validation statement failed: %s", str(e)[:120])
+        return None
+
+
+def _analytical_corpus_sql(present: list[str]) -> list[str]:
     """Domain inventories (validation.sql:249-256), coverage percentages
     (:295-325), distribution stats (:329-359) and analytical smoke tests
-    (:364-393) as one SQL script — the reference's remaining check
-    families, MySQL-isms translated (GROUP_CONCAT → concat_ws/collect_set,
-    CURRENT_DATE window → max-date anchor)."""
+    (:364-393) as a list of SQL statements — the reference's remaining
+    check families, MySQL-isms translated (GROUP_CONCAT →
+    concat_ws/collect_set, CURRENT_DATE window → max-date anchor). Every
+    statement emits ``check_name`` and ``violations``."""
     parts: list[str] = []
     if "Dim_User" in present:
         parts.append(
             """
             SELECT 'DOMAIN Gender' AS check_name, 0 AS violations,
                    concat_ws(',', sort_array(collect_set(Gender))) AS domain_values
-            FROM Dim_User;
+            FROM Dim_User
             """
         )
         parts.append(
             """
             SELECT 'DOMAIN Source' AS check_name, 0 AS violations,
                    concat_ws(',', sort_array(collect_set(Source))) AS domain_values
-            FROM Dim_User;
+            FROM Dim_User
             """
         )
     if "Fact_WorkoutSession" in present:
@@ -305,7 +309,7 @@ def _analytical_corpus_sql(present: list[str]) -> str:
             SELECT 'COVERAGE workout->user' AS check_name,
                    CAST(sum(CASE WHEN u.UserKey IS NULL THEN 1 ELSE 0 END) AS INT) AS violations,
                    round(avg(CASE WHEN u.UserKey IS NOT NULL THEN 1.0 ELSE 0.0 END), 4) AS coverage
-            FROM Fact_WorkoutSession f LEFT JOIN Dim_User u ON f.UserKey = u.UserKey;
+            FROM Fact_WorkoutSession f LEFT JOIN Dim_User u ON f.UserKey = u.UserKey
             """
         )
         parts.append(
@@ -314,7 +318,7 @@ def _analytical_corpus_sql(present: list[str]) -> str:
                    round(min(DurationHours), 2) AS min_h,
                    round(avg(DurationHours), 2) AS avg_h,
                    round(max(DurationHours), 2) AS max_h
-            FROM Fact_WorkoutSession;
+            FROM Fact_WorkoutSession
             """
         )
         # smoke test: top-5 users by calories in the last 30 days of data
@@ -329,7 +333,7 @@ def _analytical_corpus_sql(present: list[str]) -> str:
             WHERE d.FullDate >= date_sub((SELECT max(d2.FullDate)
                                           FROM Fact_WorkoutSession f2
                                           JOIN Dim_Date d2 ON f2.DateKey = d2.DateKey), 30)
-            GROUP BY f.UserKey ORDER BY calories_30d DESC LIMIT 5;
+            GROUP BY f.UserKey ORDER BY calories_30d DESC LIMIT 5
             """
         )
     if "Fact_UserSnapshot" in present:
@@ -338,7 +342,7 @@ def _analytical_corpus_sql(present: list[str]) -> str:
             SELECT 'STATS BMI distribution' AS check_name, 0 AS violations,
                    round(min(BMI), 2) AS min_bmi, round(avg(BMI), 2) AS avg_bmi,
                    round(max(BMI), 2) AS max_bmi
-            FROM Fact_UserSnapshot WHERE BMI IS NOT NULL;
+            FROM Fact_UserSnapshot WHERE BMI IS NOT NULL
             """
         )
     if "Fact_NutritionLog" in present:
@@ -350,7 +354,7 @@ def _analytical_corpus_sql(present: list[str]) -> str:
                    round(avg(f.TotalProtein), 2) AS avg_protein
             FROM Fact_NutritionLog f JOIN Dim_Date d ON f.DateKey = d.DateKey
             GROUP BY f.UserKey, d.Year, d.Month
-            ORDER BY f.UserKey, d.Year, d.Month LIMIT 10;
+            ORDER BY f.UserKey, d.Year, d.Month LIMIT 10
             """
         )
     if "Dim_FitnessGoal" in present and "Fact_UserSnapshot" in present:
@@ -359,10 +363,10 @@ def _analytical_corpus_sql(present: list[str]) -> str:
             SELECT 'SMOKE goal distribution' AS check_name, 0 AS violations,
                    g.GoalName, count(*) AS user_count
             FROM Fact_UserSnapshot f JOIN Dim_FitnessGoal g ON f.GoalKey = g.GoalKey
-            GROUP BY g.GoalName ORDER BY user_count DESC;
+            GROUP BY g.GoalName ORDER BY user_count DESC
             """
         )
-    return "\n".join(parts)
+    return parts
 
 
 def storage_layout_inventory(

@@ -1,16 +1,15 @@
 """Fixpoint k-core (operators/kcore.py): the loop-until-converged form
 of the driver-checked bounded audit (queries/graph_ops.kcore_peel_audit)
 must converge on graphs whose peeling depth exceeds the audit's 2-round
-unroll, agree with a pure-Python reference peel on seeded random graphs,
-and behave identically with parquet round-state vs localCheckpoint.
-An engine-free property pins the peel invariants the bounded audit
+unroll and agree with a pure-Python reference peel on seeded random
+graphs, on both the single-task finish and the distributed loop. An
+engine-free property pins the peel invariants the bounded audit
 unrolls."""
 
 import random
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from fitness_nutrition_data_pipeline_spark.operators import components
 from fitness_nutrition_data_pipeline_spark.operators.kcore import kcore_peel
@@ -76,17 +75,6 @@ def test_peels_to_empty_and_k1(spark):
     assert _vertices(core1) == {1, 2, 3, 4, 5, 6, 7}
 
 
-def test_max_rounds_reproduces_bounded_audit_semantics(spark, monkeypatch):
-    # stopping after 1 round must leave the partially-peeled graph —
-    # on BOTH the single-task local finish (default at test scale) and
-    # the distributed loop (a zeroed one-task bound forces it)
-    for bound in (components.ONE_TASK_ROWS, 0):
-        monkeypatch.setattr(components, "ONE_TASK_ROWS", bound)
-        core, rounds = kcore_peel(_sym(spark, _TRIANGLE_TAIL), 2, max_rounds=1)
-        assert rounds == 1, bound
-        assert _vertices(core) == {1, 2, 3, 4, 5, 6}, bound  # only 7 dropped
-
-
 def test_matches_python_reference_on_seeded_graphs(spark, monkeypatch):
     rng = random.Random(20260815)
     for trial in range(3):
@@ -113,68 +101,11 @@ def test_matches_python_reference_on_seeded_graphs(spark, monkeypatch):
         assert rounds == want_rounds, trial
 
 
-def test_parquet_round_state_equals_localcheckpoint(
-    spark, tmp_path_factory, monkeypatch
-):
-    import os
-
-    state = str(tmp_path_factory.mktemp("kcore_state"))
-    edges = _sym(spark, _TRIANGLE_TAIL)
-    core_lc, rounds_lc = kcore_peel(edges, 2)
-    core_pq, rounds_pq = kcore_peel(edges, 2, state_dir=state)
-    assert rounds_pq == rounds_lc == 4
-    assert _vertices(core_pq) == _vertices(core_lc) == {1, 2, 3}
-    # default path at test scale is the single-task finish: exactly
-    # one durable state (backing the returned DataFrame) remains
-    leftover = {d for d in os.listdir(state) if d.startswith("edges_")}
-    assert leftover == {"edges_local_r0"}, leftover
-    assert core_pq.count() == 6  # 3 undirected edges, both orientations
-
-    # distributed loop (one-task bound zeroed): the per-round state
-    # contract — readable after cleanup, only the final round's edge
-    # state (at most plus the previous round's) remains
-    state2 = str(tmp_path_factory.mktemp("kcore_state_dist"))
-    monkeypatch.setattr(components, "ONE_TASK_ROWS", 0)
-    core_d, rounds_d = kcore_peel(edges, 2, state_dir=state2)
-    assert rounds_d == 4
-    assert _vertices(core_d) == {1, 2, 3}
-    leftover2 = {d for d in os.listdir(state2) if d.startswith("edges_")}
-    assert "edges_r4" in leftover2
-    assert len(leftover2) <= 2
-    assert core_d.count() == 6
-
-
-def test_round_state_cleanup(spark, tmp_path, monkeypatch):
-    """ADVICE r10: stale round-state must not accumulate. After a
-    converged peel only the final round's edge state remains (it backs
-    the returned DataFrame). Cleanup goes through the Hadoop FS API, the
-    same resolution the writer used."""
-    import os
-
-    sd = str(tmp_path / "peel_state")
-    # distributed loop (one-task bound zeroed): the per-round cleanup
-    # contract
-    with monkeypatch.context() as m:
-        m.setattr(components, "ONE_TASK_ROWS", 0)
-        core, rounds = kcore_peel(_sym(spark, _TRIANGLE_TAIL), 2, state_dir=sd)
-        assert rounds == 4
-        assert _vertices(core) == {1, 2, 3}
-    leftover = sorted(os.listdir(sd))
-    assert leftover == [f"edges_r{rounds}"], leftover
-
-    sd_local = str(tmp_path / "peel_state_local")
-    # default path (local finish): the round-0 pin is superseded by
-    # the local-finish state and must be cleaned up
-    core_l, rounds_l = kcore_peel(_sym(spark, _TRIANGLE_TAIL), 2, state_dir=sd_local)
-    assert rounds_l == 4 and _vertices(core_l) == {1, 2, 3}
-    assert sorted(os.listdir(sd_local)) == ["edges_local_r0"]
-
-
 def test_local_peel_preserves_huge_int64_ids(spark):
-    """Regression (r18 review): the single-task peel must not route ids
-    above 2^53 through float64 (the old None-marker-in-int-column frame
-    made pandas infer float64 and corrupted them); the marker now rides
-    a separate all-null frame and edges keep their exact dtype."""
+    """The single-task peel must not route ids above 2^53 through
+    float64: a None marker in an int column would make pandas infer
+    float64 and round them, so the marker rides a separate all-null
+    frame and the edges keep their exact dtype."""
     base = 2**62
     tri = [(base + 1, base + 2), (base + 2, base + 3), (base + 1, base + 3),
            (base + 1, base + 4)]

@@ -151,33 +151,12 @@ def test_dsir_weights_favor_target_lang(spark, sf_dir):
     assert means[True] > means[False]
 
 
-def test_no_query_module_import_failures():
-    """all_specs isolates module imports; in THIS environment every module
-    must have registered (a populated IMPORT_FAILURES means real breakage
-    that the isolation would otherwise soften into silence)."""
-    from fitness_nutrition_data_pipeline_spark.queries import IMPORT_FAILURES
-
-    assert IMPORT_FAILURES == {}
-
-
-def test_strict_import_mode_reraises(monkeypatch):
-    """SPARK_GRAFT_STRICT_IMPORTS must re-raise instead of recording —
-    exercised by injecting a module name that cannot import."""
-    import fitness_nutrition_data_pipeline_spark.queries as Q
-
-    monkeypatch.setenv("SPARK_GRAFT_STRICT_IMPORTS", "1")
-    monkeypatch.setattr(Q, "_QUERY_MODULES", ("definitely_not_a_module",))
-    import pytest as _pytest
-
-    with _pytest.raises(ModuleNotFoundError):
-        Q.all_specs()
-    monkeypatch.delenv("SPARK_GRAFT_STRICT_IMPORTS")
-    monkeypatch.undo()
-    # lenient mode records instead
-    monkeypatch.setattr(Q, "_QUERY_MODULES", ("definitely_not_a_module",))
-    Q.all_specs()
-    assert "definitely_not_a_module" in Q.IMPORT_FAILURES
-    Q.IMPORT_FAILURES.clear()
+def test_unimportable_query_module_raises(monkeypatch):
+    """all_specs imports every query module strictly: a module that
+    cannot import makes the registry snapshot raise."""
+    monkeypatch.setattr(queries_pkg, "_QUERY_MODULES", ("definitely_not_a_module",))
+    with pytest.raises(ModuleNotFoundError):
+        queries_pkg.all_specs()
 
 
 def test_inverted_index_postings_sample_bounded(spark, sf_dir):

@@ -1,6 +1,7 @@
-"""Plan-recompute audit: per registered query, how many parquet scans
-does the physical plan contain versus how many DISTINCT tables it
-reads? A surplus means some subtree is planned (and, with Spark's
+"""Plan-scan audit: per registered query, how many parquet scans does the
+physical plan contain versus how many DISTINCT tables it reads, and which
+table is scanned more often than an allowance (SCALE.md diamond policy)?
+A surplus means some subtree is planned (and, with Spark's
 ReuseExchange rarely firing across differing projections, re-COMPUTED)
 more than once — this audit caught three such sites:
 
@@ -15,10 +16,17 @@ more than once — this audit caught three such sites:
 A surplus is NOT automatically waste: self-joins scan twice by nature,
 contract queries (ann_recall, bloom_membership) intentionally compute
 two methods to compare them, and iterative steps (kmeans_lloyd,
-pca_power) re-read per unrolled iteration. Read the query's doc before
-"fixing" anything.
+pca_power) re-read per unrolled iteration. Allowed repeats must be
+deliberate and documented (incremental snapshot+delta, genuinely
+different text representations); everything else is a bug per the fix
+ladder (restructure → localCheckpoint answer-sized → accept+document).
+Read the query's doc before "fixing" anything.
 
-Usage: python tools/audit_reuse.py [--top N]
+Usage: python tools/audit_reuse.py [--top N] [--max N]
+Prints the N queries with the largest scan surplus (default 25), then one
+FLAG line per (query, table) scanned more than ``--max`` times (default
+2). Plans are built at SPARK_GRAFT_VERIFY_SF_DIR (default sf0.01). Exit 0
+always — this is an audit report, not a gate.
 """
 
 from __future__ import annotations
@@ -28,17 +36,19 @@ import io
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_AUDIT_SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
+_LOCATION_RE = re.compile(r"Location:.*?/(\w+)\.parquet")
 
 
 def main() -> int:
     args = sys.argv[1:]
     top = int(args[args.index("--top") + 1]) if "--top" in args else 25
+    threshold = int(args[args.index("--max") + 1]) if "--max" in args else 2
 
-    os.environ.setdefault("SPARK_GRAFT_STRICT_IMPORTS", "1")
     from fitness_nutrition_data_pipeline_spark.queries import all_specs
     from fitness_nutrition_data_pipeline_spark.session import get_spark
 
@@ -48,6 +58,7 @@ def main() -> int:
     spark.conf.set(key, "32")
     specs = all_specs()
     rows = []
+    flags = []
     try:
         for name in specs:
             try:
@@ -60,9 +71,14 @@ def main() -> int:
                 # details header) — halve for the true node count
                 scans = t.count("Scan parquet") // 2
                 reused = t.count("ReusedExchange")
-                tables = set(re.findall(r"Location:.*?/(\w+)\.parquet", t))
-                rows.append((scans - max(len(tables), 1), scans,
-                             max(len(tables), 1), reused, name))
+                per_table = Counter(_LOCATION_RE.findall(t))
+                ntab = max(len(per_table), 1)
+                rows.append((scans - ntab, scans, ntab, reused, name))
+                flags += [
+                    (name, tbl, n)
+                    for tbl, n in sorted(per_table.items())
+                    if n > threshold
+                ]
             except Exception as e:  # noqa: BLE001
                 print(f"ERR {name}: {str(e)[:100]}")
     finally:
@@ -72,6 +88,10 @@ def main() -> int:
           f"(full registry, {SF_DIR})")
     for extra, scans, ntab, reused, name in rows[:top]:
         print(f"{extra:>+5} {scans:>5} {ntab:>6} {reused:>6}  {name}")
+    print()
+    for name, tbl, n in flags:
+        print(f"FLAG {name}: {tbl} scanned {n}x")
+    print(f"{len(flags)} flags at threshold >{threshold}")
     return 0
 
 

@@ -103,12 +103,12 @@ SHOWCASE = [
     ("late_dim_backfill_audit", "two-phase late-dim resolution: pinned delta-sized pending set, backfill join never touches resolved facts"),
     ("partition_restatement_audit", "day-grain restatement: broadcast affected-day set, anti-join keeps untouched aggregates, recompute reads affected days only"),
     ("kcore_peel_audit", "bounded k-core peel: pinned edge list, per round one degree agg + two left-semi joins against survivors"),
-    ("kcore_fixpoint_audit", "converged k-core: loop-until-no-drop with parquet round-state, one two-long action per round; 7-round idempotent oracle unroll"),
+    ("kcore_fixpoint_audit", "converged k-core: loop-until-no-drop with localCheckpoint-pinned rounds, one two-long action per round; 7-round idempotent oracle unroll"),
     ("mv_rewrite_audit", "MV rewrite: monthly answer scans ONLY the written day-grain MV — no base-table scan in the answering plan"),
     ("pareto_frontier_parts", "distributed skyline: in-band prefix-max window + broadcast band-summary prefix — the quadratic pair space never materializes"),
     ("majority_vote_accuracy", "self-consistency vote: one (task,ans) agg, per-task argmax window, everything keyed on task"),
     ("poisson_bootstrap_ci", "one-pass bootstrap: 32-way explode, Poisson inverse-CDF as a codegen CASE chain, replica means by integer division"),
-    ("avro_roundtrip_scan", "native Avro: binaryFile listing + ONE Arrow-batched MapInPandas block decode; writer emits one container file per partition"),
+    ("avro_roundtrip_scan", "native Avro: one byte-range split per written file -> ONE Arrow-batched MapInPandas block decode; writer emits one container file per partition"),
     ("time_in_state_twa", "TSDB time-in-state: lead window partitioned by user, duration-weighted integer mean at type grain"),
     ("weighted_median_price", "exact weighted median: window runs over the COLLAPSED (group, price) grain, threshold test avoids division"),
     ("t_closeness_audit", "privacy EMD: (segment x band) grid with broadcast global distribution, cumulative gaps in exact integers"),

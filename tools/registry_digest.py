@@ -40,7 +40,7 @@ DIGEST_FILE = os.path.join(REPO, "tools", "registry_digests.json")
 # HARD-pinned (not SPARK_GRAFT_VERIFY_SF_DIR): pre-AQE plans can differ
 # across scale factors (file-size-driven broadcast planning), so the
 # committed map is only meaningful at ONE sf — a verify-env override
-# leaking in would turn the suite gate red for everyone (review r12).
+# leaking in would turn the suite gate red for everyone.
 # SPARK_GRAFT_DIGEST_SF_DIR exists for deliberate experiments only.
 CANONICAL_SF_DIR = os.environ.get(
     "SPARK_GRAFT_DIGEST_SF_DIR", "/root/testdata/sf0.01"
@@ -125,22 +125,9 @@ def query_digest(spark, spec, sf_dir: str) -> str:
 
 def compute_digests(spark, names=None, sf_dir: str = CANONICAL_SF_DIR) -> dict:
     """name -> digest for ``names`` (default: every registered query)."""
-    # strict imports ONLY for the all_specs() call — a permanent
-    # os.environ.setdefault here leaked into the pytest process and
-    # broke the lenient-mode import test when ordered after this
-    # (review r12); save/restore instead.
-    key = "SPARK_GRAFT_STRICT_IMPORTS"
-    prev = os.environ.get(key)
-    os.environ[key] = prev or "1"
-    try:
-        from fitness_nutrition_data_pipeline_spark.queries import all_specs
+    from fitness_nutrition_data_pipeline_spark.queries import all_specs
 
-        specs = all_specs()
-    finally:
-        if prev is None:
-            os.environ.pop(key, None)
-        else:
-            os.environ[key] = prev
+    specs = all_specs()
     wanted = list(names) if names else sorted(specs)
     # Exchange nodes print the shuffle partition count, so the digest is
     # only canonical under one config — pin it for the computation and
@@ -171,7 +158,7 @@ def subset_write_refusal(names) -> str | None:
     """A subset --write MERGES into the committed map, so the two must
     share normalizer rules — after a normalizer bump, a partial --write
     would silently stamp the current version over stale v(N-1) digests,
-    producing false drift/unchanged verdicts (ADVICE r12 #2). Returns
+    producing false drift/unchanged verdicts. Returns
     the refusal message, or None when the write may proceed. Checked
     BEFORE any digest computation (no Spark needed to refuse)."""
     if names is None:
