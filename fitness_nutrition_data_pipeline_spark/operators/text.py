@@ -213,8 +213,8 @@ def pii_scan(
 
 def benchmark_gram_set(benchmark: DataFrame, text_col: str, *, n: int = 5) -> DataFrame:
     """The benchmark side's distinct word n-grams — the ONE definition of
-    "what counts as a contamination hit", shared by the batch pass
-    (``ngram_contamination``) and its streaming twin
+    "what counts as a contamination hit", shared by the per-doc pass
+    (``ngram_contamination``) and the per-hit alerts
     (streaming/hygiene.py::contamination_alerts) so the two can never
     silently diverge on tokenization or distinctness."""
     return benchmark.select(

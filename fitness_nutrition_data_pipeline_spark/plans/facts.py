@@ -26,8 +26,7 @@ MEAL_KEYS = {"breakfast": 1, "lunch": 2, "dinner": 3, "snack": 4}
 # The Fitbit feeds that roll up to one Fact_HealthMetric row per user and
 # day (main_etl_pipeline.py:540-569): feed -> (time column, daily
 # aggregate, metric key, unit). The aggregate is built on call because a
-# Column needs an active session. build_fact_health_metric and
-# streaming/rollups.py::stream_fact_health_metric both read this table.
+# Column needs an active session. build_fact_health_metric reads it.
 DAILY_FEEDS = {
     "sleep_minutes": ("date", lambda: F.sum("value") / 60, METRIC_KEYS["sleep"], "hours"),
     "heartrate": ("Time", lambda: F.avg("Value"), METRIC_KEYS["heart_rate"], "bpm"),

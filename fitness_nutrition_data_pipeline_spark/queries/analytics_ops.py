@@ -1665,7 +1665,7 @@ def watermark_tags(arr: DataFrame, delay_us: int = _WM_DELAY_US) -> DataFrame:
     "hourly event-time windows. The arrival prefix-max runs on the "
     "BATCH-grain relation (|events|/1000, bounded), which then "
     "broadcast-joins back — no global per-row window. Companion "
-    "evidence for the streaming/ extension's late-data handling "
+    "evidence for Structured Streaming's late-data handling "
     "(SURVEY §2.8), under the exact integer oracle.",
 )
 def watermark_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -489,13 +489,11 @@ def event_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY view_id, purchase_id
     """,
     sort=("view_id", "purchase_id"),
-    doc="Batch replay of the STREAMING attribution join "
-    "(streaming/joins.py::stream_stream_attribution): the identical "
-    "function runs on batch inputs (withWatermark no-ops; the equi+range "
-    "join is a plain range join) under the DuckDB oracle — so the "
-    "stream-stream join's pairing logic is driver-checked even though "
-    "the harness has no streaming surface. In the live form the same "
-    "two bounds that define attribution also bound the join state.",
+    doc="Batch replay of the attribution join "
+    "(streaming/joins.py::stream_stream_attribution) over the events "
+    "table's view and purchase feeds: an equi-join on user plus an "
+    "event-time range condition, which Spark plans as a co-keyed range "
+    "join, under the DuckDB oracle.",
 )
 def attribution_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.streaming.joins import (
@@ -669,10 +667,10 @@ def ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     sort=("window_start", "event_type"),
     doc="Hopping-window rollup (24 h windows sliding every 6 h) — the "
-    "batch twin of a Structured Streaming sliding aggregation, computed "
-    "with the SAME F.window(ts, '1 day', '6 hours') expression the "
-    "streaming rollups use, so batch backfill and live stream produce "
-    "identical window keys. Each event lands in exactly window/hop = 4 "
+    "batch form of a Structured Streaming sliding aggregation, computed "
+    "with the F.window(ts, '1 day', '6 hours') expression a stream "
+    "would use, so a batch backfill and a stream produce identical "
+    "window keys. Each event lands in exactly window/hop = 4 "
     "windows — a fixed 4x expansion Spark generates inside the scan "
     "stage, then one (window, type)-keyed shuffle with map-side "
     "partials; the oracle derives the same epoch-aligned hop starts "
@@ -746,23 +744,19 @@ def hopping_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, t_view_us
     """,
     sort=("user_id", "t_view_us"),
-    doc="Batch replay of the STREAMING sequence detector (streaming/"
-    "cep.py): the IDENTICAL per-group NFA callback the live "
-    "applyInPandasWithState path runs — make_detector() instantiated "
-    "with view→click→purchase and a 1-day step deadline (the testdata "
-    "has no cart events and its per-user event spacing is hours — the "
-    "default 30-min deadline matches zero sequences, an empty signal) — "
-    "executed via batch applyInPandas with empty initial state, exactly "
-    "one whole-history 'micro-batch'. The DuckDB oracle re-derives the "
+    doc="Batch replay of the sequence detector (streaming/cep.py): the "
+    "per-user NFA of make_detector, instantiated with "
+    "view→click→purchase and a 1-day step deadline (the testdata has no "
+    "cart events and its per-user event spacing is hours, so a 30-min "
+    "deadline would match zero sequences), run over each user's whole "
+    "history through applyInPandas. The DuckDB oracle re-derives the "
     "same single-attempt skip-till-next-match semantics (step deadline, "
     "(ts,event_id) order, deadline break may restart on a view) as a "
     "recursive-CTE automaton over per-user event sequences — "
-    "a real cross-paradigm check: imperative Arrow-batch NFA vs pure-SQL "
-    "recursion must emit the identical match set. Streaming parity "
-    "itself is pinned by tests/test_streaming.py.",
+    "a real cross-paradigm check: imperative pandas NFA vs pure-SQL "
+    "recursion must emit the identical match set.",
 )
 def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fitness_nutrition_data_pipeline_spark.streaming import replay
     from fitness_nutrition_data_pipeline_spark.streaming.cep import (
         MATCH_SCHEMA,
         make_detector,
@@ -772,7 +766,7 @@ def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("view", "click", "purchase"), step_window_us=86_400_000_000
     )
     ev = _ev(spark, sf_dir).select("event_id", "ts", "user_id", "event_type")
-    matches = replay(ev, ["user_id"], detector, MATCH_SCHEMA)
+    matches = ev.groupBy("user_id").applyInPandas(detector, MATCH_SCHEMA)
     return matches.select(
         "user_id",
         "t_view_us",
@@ -792,27 +786,21 @@ def cep_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, event_id
     """,
     sort=("user_id", "event_id"),
-    doc="Batch replay of the STREAMING rate limiter (streaming/"
-    "ratelimit.py): the IDENTICAL _limiter(5) callback the live "
-    "applyInPandasWithState path runs, executed via batch applyInPandas "
-    "with empty initial state — the whole history as one 'micro-batch', "
-    "so the quota admits each user's first 5 events in event_id order. "
-    "The oracle states the same admission rule declaratively: "
-    "row_number per user ordered by event_id, kept while <= limit. "
-    "Chunk-order robustness (per-chunk sorting would make "
-    "admission order batch-layout-dependent) is separately pinned by "
-    "tests/test_streaming.py::test_stream_rate_limiter with a forced "
-    "multi-chunk group.",
+    doc="Batch replay of the rate limiter (streaming/ratelimit.py): "
+    "_limiter(5) run over each user's whole history through "
+    "applyInPandas, so the quota admits each user's first 5 events in "
+    "event_id order. The oracle states the same admission rule "
+    "declaratively: row_number per user ordered by event_id, kept "
+    "while <= limit.",
 )
 def ratelimit_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fitness_nutrition_data_pipeline_spark.streaming import replay
     from fitness_nutrition_data_pipeline_spark.streaming.ratelimit import (
         ADMITTED_SCHEMA,
         _limiter,
     )
 
     ev = _ev(spark, sf_dir).select("user_id", "event_id")
-    return replay(ev, ["user_id"], _limiter(5), ADMITTED_SCHEMA)
+    return ev.groupBy("user_id").applyInPandas(_limiter(5), ADMITTED_SCHEMA)
 
 
 @register(
@@ -888,22 +876,19 @@ def ingestion_lag_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY shard, key
     """,
     sort=("shard", "key"),
-    doc="Batch replay of the STREAMING Misra-Gries heavy hitters "
-    "(streaming/heavyhitters.py): the IDENTICAL per-shard callback run "
-    "through batch applyInPandas — the whole history arrives as one "
-    "group, so the summary is a single bulk merge + one decrement, "
-    "which is fully deterministic and therefore SQL-restatable: per "
-    "shard, cut = the (capacity+1)-th largest key count (0 when the "
-    "shard fits), survivors emit count-cut with err_bound = cut. The "
-    "replay shards by the md5 hash_bucket (oracle-reproducible); the "
-    "live stream uses xxhash64 for the same role (cheaper, but DuckDB "
-    "cannot replay it — sharding is a routing choice, not a semantic "
-    "one). user_id as the key (~37 keys/shard at sf0.01) so the "
-    "capacity-8 eviction path actually engages.",
+    doc="Batch replay of the Misra-Gries heavy hitters "
+    "(streaming/heavyhitters.py): the per-shard summary run through "
+    "applyInPandas — each shard's whole history arrives as one group, "
+    "so the summary is a single bulk merge + one decrement, which is "
+    "fully deterministic and therefore SQL-restatable: per shard, cut "
+    "= the (capacity+1)-th largest key count (0 when the shard fits), "
+    "survivors emit count-cut with err_bound = cut. Shards come from "
+    "the md5 hash_bucket, which the oracle reproduces. user_id as the "
+    "key (~37 keys/shard at sf0.01) so the capacity-8 eviction path "
+    "actually engages.",
 )
 def heavy_hitters_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.queries.sampling import hash_bucket
-    from fitness_nutrition_data_pipeline_spark.streaming import replay
     from fitness_nutrition_data_pipeline_spark.streaming.heavyhitters import (
         HH_SCHEMA,
         _make_mg,
@@ -914,7 +899,7 @@ def heavy_hitters_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_bucket(F.col("user_id"), 4).alias("shard"),
         F.col("user_id").cast("string").alias("key"),
     )
-    return replay(sharded, ["shard"], _make_mg(8), HH_SCHEMA)
+    return sharded.groupBy("shard").applyInPandas(_make_mg(8), HH_SCHEMA)
 
 
 @register(
@@ -957,7 +942,7 @@ def heavy_hitters_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort=("event_type",),
     doc="Linear multi-touch attribution: every view/click in the 7 days "
     "before a purchase shares that conversion's credit equally (the "
-    "multi-touch counterpart of the stream-stream LAST-touch join in "
+    "multi-touch counterpart of the LAST-touch attribution join in "
     "streaming/joins.py). Credit is quantized to integer ppm per touch "
     "BEFORE summing, so the cross-engine aggregate is exact integer "
     "math — float credit summed in shuffle order would drift at the "

@@ -1612,13 +1612,13 @@ _LSH_REPLAY_ORACLE = (
 @register(
     "lsh_dedup_batch_replay",
     _LSH_REPLAY_ORACLE,
-    doc="streaming LSH dedup bridge 3-batch replay == single-batch closed form",
+    doc="incremental LSH dedup bridge 3-batch replay == single-batch closed form",
 )
 def lsh_dedup_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-ingest near-dup bridge under the value oracle: the REAL
-    incremental engine (streaming/lsh_bridge.py::LshDedupBridge — LSH
-    band buckets maintained as foreachBatch state, pairs emitted when a
-    doc's later half arrives) replays the documents table in three
+    """Incremental near-dup bridge under the value oracle: the engine
+    (streaming/lsh_bridge.py::LshDedupBridge — LSH band buckets
+    maintained as pinned state across batches, each pair emitted when
+    its later doc arrives) replays the documents table in three
     deterministic batches (doc_id % 3, processed 0→1→2), and the
     emitted (pair, discovered_batch, n_shared_bands) set must equal the
     closed form a single global batch computes: every band-colliding
@@ -1638,7 +1638,7 @@ def lsh_dedup_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for b in range(3):
         pairs = bridge.process_batch(
-            docs.where(F.col("doc_id") % 3 == b), b
+            docs.where(F.col("doc_id") % 3 == b)
         ).withColumn("discovered_batch", F.lit(b).cast("int"))
         out = pairs if out is None else out.unionByName(pairs)
     return (

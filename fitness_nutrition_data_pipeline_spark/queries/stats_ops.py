@@ -703,16 +703,11 @@ _DRIFT_BASELINE = ((0, 0.33), (1, 0.22), (2, 0.15), (3, 0.10), (4, 0.07), (5, 0.
     FROM cdf GROUP BY window_start, n_rows
     ORDER BY window_start
     """,
-    doc="Batch replay of the STREAMING drift monitor (streaming/drift.py) "
-    "— the same two functions the live path runs: "
-    "windowed_value_histogram (withWatermark is a no-op on a batch "
-    "DataFrame, F.window buckets identically) then binned_drift_scores "
-    "against a fixed reference distribution. Registering the replay puts "
-    "the streaming operators' LOGIC under the driver's DuckDB oracle even "
-    "though the harness has no streaming surface; the stream/batch parity "
-    "itself is pinned by tests/test_streaming_drift.py. Day-window KS "
-    "series over a month of events: state grain (windows x bins) and one "
-    "windowed groupBy, exactly as the stream runs it.",
+    doc="Batch replay of the drift monitor (streaming/drift.py): "
+    "windowed_value_histogram then binned_drift_scores against a fixed "
+    "reference distribution, under the DuckDB oracle. Day-window KS "
+    "series over a month of events: windows x bins grain and one "
+    "windowed groupBy.",
 )
 def drift_monitor_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.streaming.drift import (
@@ -721,20 +716,18 @@ def drift_monitor_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
-    hist = windowed_value_histogram(
-        ev, "ts", "value", window_len="1 day", bin_width=20.0, late_threshold="1 day"
-    )
+    hist = windowed_value_histogram(ev, "ts", "value", window_len="1 day", bin_width=20.0)
     baseline = spark.createDataFrame(
         [(b, s) for b, s in _DRIFT_BASELINE], "bin long, share double"
     )
     scores = binned_drift_scores(hist, baseline)
     # Canonicalize the rounded KS stat through DECIMAL and back to DOUBLE
-    # in the REPLAY WRAPPER (not in streaming/drift.py — the stream/batch
-    # parity tests pin the live operator untouched): each engine's
-    # round(x, 6) can emit a different nearest-double for the same
-    # 6-decimal value (float-summed CDF → ulp residue); decimal→double is
-    # exact on both engines, so the driver's strict hash sees identical
-    # bits. Same treatment that fixed decimal_money_totals.
+    # here, for the oracle compare only (binned_drift_scores keeps its
+    # plain rounded double): each engine's round(x, 6) can emit a
+    # different nearest-double for the same 6-decimal value (float-summed
+    # CDF → ulp residue); decimal→double is exact on both engines, so the
+    # oracle compare's strict hash sees identical bits. Same treatment that fixed
+    # decimal_money_totals.
     return scores.withColumn(
         "ks_stat", F.col("ks_stat").cast("decimal(18,6)").cast("double")
     )

@@ -672,19 +672,15 @@ _HYG_PATTERNS = {"cust": "customer", "sort": "sort"}
     ORDER BY doc_id
     """,
     sort=("doc_id",),
-    doc="Batch replay of the STREAMING hygiene module (streaming/"
-    "hygiene.py) — the IDENTICAL two functions the live ingest-edge path "
-    "runs, composed: pii_scan (a projection a stream applies as is: per-pattern "
-    "counts + redacted copy, hash-pinned here via md5 so the driver "
-    "verifies the redacted BYTES, not just counts) feeding "
-    "contamination_alerts (distinct-5-gram explode probed against the "
-    "broadcast benchmark gram set; one row per matched gram, here "
-    "re-aggregated per doc). Both operators are stateless projections/"
-    "broadcast joins, so the streaming expressions run bit-identically "
-    "on a batch frame — this puts the streaming module's own code path "
-    "under the hard oracle signal (the cep/ratelimit replay pattern). "
-    "The oracle re-derives tokenization, gram distinctness, alert join, "
-    "regexp counts and the redacted md5 in pure SQL.",
+    doc="Batch replay of the hygiene module (streaming/hygiene.py), two "
+    "functions composed: pii_scan (per-pattern counts + redacted copy, "
+    "hash-pinned here via md5 so the oracle checks the redacted BYTES, "
+    "not just counts) feeding contamination_alerts (distinct-5-gram "
+    "explode probed against the broadcast benchmark gram set; one row "
+    "per matched gram, here re-aggregated per doc). Both are row-local "
+    "projections/broadcast joins. The oracle re-derives tokenization, "
+    "gram distinctness, alert join, regexp counts and the redacted md5 "
+    "in pure SQL.",
 )
 def hygiene_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.streaming.hygiene import (

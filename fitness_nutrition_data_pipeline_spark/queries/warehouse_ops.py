@@ -866,21 +866,16 @@ def partitioned_write_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY event_type
     """,
     sort=("event_type",),
-    doc="Batch replay of the STREAMING incremental-view maintainer "
-    "(streaming/ivm.py): three deterministic micro-batch waves of "
-    "events — two insert waves, then a wave that both inserts and "
-    "RETRACTS every wave-1 row with event_id % 7 = 0 — fold through "
-    "the identical delta_effects + merge_state functions the "
-    "foreachBatch sink runs, while the oracle recomputes the final "
-    "per-type (count, value_ppm) aggregate from scratch over the "
-    "net-surviving rows. A hash match proves the streaming "
-    "maintainer's signed algebra (insert +1/+v, retract -1/-v, merge "
-    "= union + re-aggregate over state + delta only) equals full "
-    "recompute — the bridge between "
-    "incremental_agg_maintenance (batch) and the streaming rollups. "
-    "Scale: each merge touches group-grain state + one batch's "
-    "delta; the history is never re-scanned, which is what turns a "
-    "100 TB continuous aggregate into per-batch work.",
+    doc="Batch replay of incremental view maintenance "
+    "(streaming/ivm.py): three deterministic waves of events — two "
+    "insert waves, then a wave that both inserts and RETRACTS every "
+    "wave-1 row with event_id % 7 = 0 — fold through delta_effects + "
+    "merge_state, while the oracle recomputes the final per-type "
+    "(count, value_ppm) aggregate from scratch over the net-surviving "
+    "rows. A hash match shows the signed algebra (insert +1/+v, "
+    "retract -1/-v, merge = union + re-aggregate over state + delta "
+    "only) equals full recompute. Each merge touches group-grain state "
+    "+ one wave's delta; the history is never re-scanned.",
 )
 def ivm_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fitness_nutrition_data_pipeline_spark.streaming.ivm import (

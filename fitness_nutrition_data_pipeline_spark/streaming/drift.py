@@ -1,20 +1,17 @@
-"""Streaming distribution-drift monitor: the live twin of the batch
+"""Windowed distribution-drift monitor, the per-window form of the batch
 ``source_length_drift`` query (queries/stats_ops.py).
 
-Stage 1 (streaming): a watermarked tumbling-window histogram of a numeric
-column — state is open_windows × bins, never rows; bins are fixed-width so
-the shuffle key space is bounded by construction.
+Stage 1: a tumbling-window histogram of a numeric column — windows ×
+bins grain, never rows; bins are fixed-width so the shuffle key space is
+bounded by construction.
 
-Stage 2 (batch, per micro-batch or on the drained table): binned
-two-sample KS of each window's observed distribution against a static
-reference distribution — windows × bins grain, broadcast baseline, one
-window-partitioned cumulative pass. Alerting = filter ks_stat above a
-threshold.
+Stage 2: binned two-sample KS of each window's observed distribution
+against a static reference distribution — windows × bins grain,
+broadcast baseline, one window-partitioned cumulative pass. Alerting =
+filter ks_stat above a threshold.
 
-This split is deliberate: the unbounded, per-row work (binning, counting)
-runs incrementally with bounded state; the cross-bin comparison runs on
-the already-tiny aggregate. At ingest scale the monitor's cost is the
-windowed groupBy — identical to any metrics rollup.
+The per-row work (binning, counting) is one map-side-combined groupBy;
+the cross-bin comparison runs on the already-tiny aggregate.
 """
 
 from __future__ import annotations
@@ -25,22 +22,20 @@ from pyspark.sql import Window as W
 
 
 def windowed_value_histogram(
-    stream: DataFrame,
+    events: DataFrame,
     ts_col: str,
     value_col: str,
     *,
     window_len: str = "10 minutes",
     bin_width: float = 10.0,
-    late_threshold: str = "10 minutes",
 ) -> DataFrame:
-    """Streaming (window_start, bin, n) histogram with fixed-width bins.
+    """(window_start, bin, n) histogram with fixed-width bins.
 
-    Watermark bounds state: windows older than ``late_threshold`` close
-    and evict. Bin is a row-local floor-divide, so the only shuffle is
-    the (window, bin) aggregation — map-side combined, key space =
-    open_windows × bins.
+    Bin is a row-local floor-divide, so the only shuffle is the
+    (window, bin) aggregation — map-side combined, key space =
+    windows × bins.
     """
-    binned = stream.withWatermark(ts_col, late_threshold).select(
+    binned = events.select(
         F.col(ts_col).alias("_ts"),
         F.floor(F.col(value_col) / bin_width).cast("long").alias("bin"),
     )
@@ -54,7 +49,7 @@ def windowed_value_histogram(
 def binned_drift_scores(hist: DataFrame, baseline: DataFrame) -> DataFrame:
     """Per-window binned KS statistic vs a static reference distribution.
 
-    ``hist``: (window_start, bin, n) — the drained/foreachBatch output of
+    ``hist``: (window_start, bin, n) — the output of
     ``windowed_value_histogram``. ``baseline``: (bin, share) with shares
     summing to 1. Returns (window_start, n_rows, ks_stat).
 
@@ -65,10 +60,8 @@ def binned_drift_scores(hist: DataFrame, baseline: DataFrame) -> DataFrame:
 
     ``hist`` is referenced three times in the plan (windows, bin domain,
     observed counts), so it is pinned with ``localCheckpoint`` first:
-    answer-sized by construction, this costs one tiny materialization,
-    guarantees all three reads agree, and sidesteps the self-join
-    attribute conflict a streaming memory-sink view hits when its
-    lineage appears twice in one plan.
+    answer-sized by construction, this costs one tiny materialization
+    and guarantees all three reads agree.
     """
     hist = hist.localCheckpoint()
     windows = hist.groupBy("window_start").agg(F.sum("n").alias("n_rows"))

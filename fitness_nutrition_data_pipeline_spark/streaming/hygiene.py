@@ -1,14 +1,6 @@
-"""Streaming data-hygiene: benchmark-contamination alerting on a live
-document feed, the ingest-edge twin of the batch training-data passes
-(operators/text.py).
-
-PII redaction needs no streaming operator of its own: the batch
-``operators/text.pii_scan`` is a pure per-row projection (regexp count +
-replace), so it applies to a streaming frame as it is.
-
-The alert join is STATELESS (broadcast stream-static join), so it runs
-with zero state-store growth. Windowed dedup of alerts composes
-downstream via streaming/dedup.py.
+"""Benchmark-contamination alerts on a document feed: one row per
+(doc, matched benchmark gram), the per-hit form of the batch
+training-data passes (operators/text.py).
 """
 
 from __future__ import annotations
@@ -23,29 +15,20 @@ from fitness_nutrition_data_pipeline_spark.operators.text import (
 
 
 def contamination_alerts(
-    stream: DataFrame,
+    docs: DataFrame,
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
     *,
     n: int = 5,
 ) -> DataFrame:
-    """Stream of (doc, matched benchmark gram) hits: each incoming doc's
-    distinct n-grams are probed against a STATIC benchmark gram set via a
-    broadcast stream-static inner join.
-
-    Explode + broadcast join are both stateless, so the query runs in
-    append mode with no watermark and no state store; every emitted row
-    is a contamination hit the moment the doc arrives. Dedup/rollup of
-    alerts (e.g. one alert per doc per hour) composes downstream with
-    ``streaming/dedup.dedup_by_key``.
-
-    The static side is the benchmark (tiny, broadcast); Spark re-plans it
-    per micro-batch, so a refreshed benchmark table is picked up without
-    restarting the query.
+    """(doc, matched benchmark gram) hits: each doc's n-grams are probed
+    against the benchmark's distinct gram set via a broadcast inner join.
+    Explode + broadcast join are both row-local, so the only shuffle is
+    the benchmark side's distinct.
     """
     bench_grams = benchmark_gram_set(benchmark, text_col, n=n)
-    hits = stream.select(
+    hits = docs.select(
         "*", F.explode(word_shingles(text_col, n)).alias("gram")
     ).drop(text_col)
     return hits.join(F.broadcast(bench_grams), "gram")

@@ -1,13 +1,9 @@
-"""Stream-stream join: time-bounded attribution between two live feeds.
+"""Time-bounded attribution join between a view feed and a purchase feed.
 
 The batch funnel query (queries: funnel_view_purchase) answers "which
-views converted" after the fact; this is the same semantics computed
-online. Spark buffers both sides in state, and the two bounds make that
-state finite: the watermark discards rows older than `late_threshold`,
-and the range condition lets the engine evict a buffered view as soon as
-the purchase-side watermark passes its attribution window. State ≈
-(arrival rate × window), independent of stream history — the property
-that keeps the join runnable forever.
+views converted" as a count; this join pairs each purchase with the
+views that led to it: an equi-join on user plus an event-time range
+condition, which Spark plans as a co-keyed range join.
 """
 
 from __future__ import annotations
@@ -23,11 +19,10 @@ def stream_stream_attribution(
     user_col: str = "user_id",
     ts_col: str = "ts",
     attribution_window: str = "1 hour",
-    late_threshold: str = "2 hours",
 ) -> DataFrame:
     """Join each purchase to the views by the same user in the preceding
     `attribution_window`. Inner equi-join on user + event-time range
-    condition — both required for bounded-state stream-stream joins.
+    condition.
 
     Returns (user_id, view_ts, purchase_ts, view_id, purchase_id,
     lag_seconds).
@@ -36,12 +31,12 @@ def stream_stream_attribution(
         F.col(user_col).alias("user_id"),
         F.col(ts_col).alias("view_ts"),
         F.col("event_id").alias("view_id"),
-    ).withWatermark("view_ts", late_threshold)
+    )
     p = purchases.select(
         F.col(user_col).alias("p_user_id"),
         F.col(ts_col).alias("purchase_ts"),
         F.col("event_id").alias("purchase_id"),
-    ).withWatermark("purchase_ts", late_threshold)
+    )
     return v.join(
         p,
         F.expr(

@@ -1,38 +1,26 @@
-"""Property-style engine parity for the streaming Misra-Gries heavy
-hitters (VERDICT r12 ask #6, fifth §2.8 family under the hypothesis
-pattern): the checkpointed applyInPandasWithState engine, driven one
-REAL availableNow micro-batch at a time, must agree EXACTLY with a
-pure-Python Misra-Gries simulation given the same batch splits — and
-must satisfy the MG guarantees for EVERY split:
+"""Property-style parity for the Misra-Gries heavy hitters
+(streaming/heavyhitters.py): the per-shard summary run through
+``applyInPandas`` must agree EXACTLY with a pure-Python Misra-Gries
+simulation, and must satisfy the MG guarantees for every drawn feed:
 
-  - in-batch arrival order never changes the outcome (the summary folds
-    per-batch counts, so hypothesis permutes rows within each batch);
+  - arrival order never changes the outcome (hypothesis permutes rows);
   - sandwich: count_lb <= true shard count <= count_lb + err_bound for
     every emitted key;
   - coverage: any key ABSENT from its shard's table has true shard
     count <= err_bound (nothing frequent can hide).
-
-Unlike the histogram/ratelimit invariants, MG's final table legitimately
-DEPENDS on where the batch cuts fall (decrements happen at batch grain),
-which is why the oracle here is a split-parameterized simulation rather
-than a single-batch run — the same adjudication the CEP property test
-uses for its NFA state.
 """
 
 
 from __future__ import annotations
 
-# slow tier (r18): heavy replay/property suite, excluded from the
-# default pytest run (see pytest.ini) -- run with -m slow
+# slow tier: excluded from the default pytest run (see pytest.ini);
+# run with -m slow
 import pytest
 
 pytestmark = pytest.mark.slow
 
-import datetime
 import os
-import shutil
 import sys
-import tempfile
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -41,12 +29,9 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests import streaming_feed as SF  # noqa: E402
-
 N_EVENTS = 30
 N_SHARDS = 2
 CAPACITY = 3
-T0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
 
 
 @st.composite
@@ -54,30 +39,18 @@ def feed(draw):
     keys = draw(
         st.lists(st.integers(0, 5), min_size=N_EVENTS, max_size=N_EVENTS)
     )
-    cuts = sorted(
-        draw(st.lists(st.integers(1, N_EVENTS - 1), max_size=3, unique=True))
-    )
-    bounds = [0, *cuts, N_EVENTS]
-    perms = [
-        draw(st.permutations(range(bounds[b], bounds[b + 1])))
-        for b in range(len(bounds) - 1)
-    ]
-    return keys, perms
+    order = draw(st.permutations(range(N_EVENTS)))
+    return keys, order
 
 
-def _simulate_mg(batches: list[Counter]) -> tuple[dict[str, int], int]:
+def _simulate_mg(counts: Counter) -> tuple[dict[str, int], int]:
     """Pure-Python twin of streaming/heavyhitters._make_mg for ONE shard:
-    fold each batch's counts, then prune to CAPACITY by cutting the
+    take the shard's counts, then prune to CAPACITY by cutting the
     (capacity+1)-th largest weight from everyone (strict survivors)."""
-    table: dict[str, int] = {}
-    dec = 0
-    for counts in batches:
-        for k, c in counts.items():
-            table[k] = table.get(k, 0) + c
-        if len(table) > CAPACITY:
-            cut = sorted(table.values(), reverse=True)[CAPACITY]
-            table = {k: v - cut for k, v in table.items() if v > cut}
-            dec += cut
+    table, dec = dict(counts), 0
+    if len(table) > CAPACITY:
+        dec = sorted(table.values(), reverse=True)[CAPACITY]
+        table = {k: v - dec for k, v in table.items() if v > dec}
     return table, dec
 
 
@@ -87,75 +60,43 @@ def _simulate_mg(batches: list[Counter]) -> tuple[dict[str, int], int]:
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(feed())
-def test_heavy_hitters_state_matches_simulation(spark, case):
+def test_heavy_hitters_match_simulation(spark, case):
     from fitness_nutrition_data_pipeline_spark.streaming.heavyhitters import (
-        stream_heavy_hitters,
+        HH_SCHEMA,
+        _make_mg,
     )
 
-    keys, perms = case
+    keys, order = case
     names = [f"k{k}" for k in keys]
-    # shard assignment must match the engine's pmod(xxhash64(key), n)
-    shard_of = {
-        r["key"]: r["shard"]
-        for r in spark.createDataFrame(
-            [(n,) for n in set(names)], "key string"
-        )
-        .select(
-            "key",
-            F.pmod(F.xxhash64(F.col("key")), F.lit(N_SHARDS)).alias("shard"),
-        )
-        .collect()
-    }
+    sharded = spark.createDataFrame(
+        [(names[i],) for i in order], "key string"
+    ).select(
+        F.pmod(F.xxhash64(F.col("key")), F.lit(N_SHARDS)).alias("shard"), "key"
+    )
+    shard_of = {r["key"]: r["shard"] for r in sharded.distinct().collect()}
+    got_by_shard: dict[int, list] = {}
+    for r in (
+        sharded.groupBy("shard").applyInPandas(_make_mg(CAPACITY), HH_SCHEMA).collect()
+    ):
+        got_by_shard.setdefault(r.shard, []).append((r.key, r.count_lb, r.err_bound))
 
-    work = tempfile.mkdtemp(prefix="hh_prop_")
-    try:
-        # each feed call is one micro-batch, and every batch emits each
-        # touched shard's full table: last batch wins per shard
-        latest: dict[int, list] = {}
-        for perm in perms:
-            rows = [
-                (i, T0 + datetime.timedelta(seconds=i), i % 7, names[i], 1.0)
-                for i in perm
-            ]
-            by: dict[int, list] = {}
-            for r in SF.feed(
-                work,
-                rows,
-                lambda indir: stream_heavy_hitters(
-                    spark, indir, n_shards=N_SHARDS, capacity=CAPACITY
-                ),
-                mode="update",
-            ):
-                by.setdefault(r.shard, []).append((r.key, r.count_lb, r.err_bound))
-            latest.update(by)
+    for shard in range(N_SHARDS):
+        true = Counter(n for n in names if shard_of[n] == shard)
+        want_table, want_dec = _simulate_mg(true)
+        got = got_by_shard.get(shard, [])
+        got_table = {k: c for k, c, _ in got}
+        assert got_table == want_table, (
+            f"shard {shard}: engine {got_table} != sim {want_table}"
+        )
+        if got:
+            assert {d for _, _, d in got} == {want_dec}
 
-        for shard in range(N_SHARDS):
-            batches = [
-                Counter(
-                    names[i] for i in perm if shard_of[names[i]] == shard
+        # MG guarantees vs exact truth, independent of the simulation
+        for k, c, err in got:
+            assert c <= true[k] <= c + err, (shard, k, c, err, true[k])
+        for k, t in true.items():
+            if k not in got_table:
+                assert t <= want_dec, (
+                    f"frequent key {k} (true {t}) missing from shard "
+                    f"{shard} with err_bound {want_dec}"
                 )
-                for perm in perms
-            ]
-            want_table, want_dec = _simulate_mg(batches)
-            got = latest.get(shard, [])
-            got_table = {k: c for k, c, _ in got}
-            got_decs = {d for _, _, d in got}
-            assert got_table == want_table, (
-                f"shard {shard}: engine {got_table} != sim {want_table} "
-                f"(splits {[len(p) for p in perms]})"
-            )
-            if got:
-                assert got_decs == {want_dec}
-
-            # MG guarantees vs exact truth, independent of the simulation
-            true = Counter(n for n in names if shard_of[n] == shard)
-            for k, c, err in got:
-                assert c <= true[k] <= c + err, (shard, k, c, err, true[k])
-            for k, t in true.items():
-                if k not in got_table:
-                    assert t <= want_dec, (
-                        f"frequent key {k} (true {t}) missing from shard "
-                        f"{shard} with err_bound {want_dec}"
-                    )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

@@ -1,4 +1,4 @@
-"""The registered streaming-dedup bridge replay, lsh_dedup_batch_replay
+"""The registered incremental-dedup bridge replay, lsh_dedup_batch_replay
 (queries/llm_ops.py): the exact driver-gate compare — Spark
 builder vs DuckDB oracle, pandas-lane fetch, column-sorted value
 normalization — on the lsh_dedup_batch_replay pair at two scale

@@ -1,404 +1,5 @@
-"""Structured Streaming operators against the batch semantics they
-mirror (SURVEY §2.8): the health-metric fact stream equals the batch
-fact, and the stateful operators hold their contracts on real streams."""
-
-import os
-import shutil
-
-import pytest
-from pyspark.sql import functions as F
-
-from fitness_nutrition_data_pipeline_spark.streaming import drain
-from tests import fixtures as FX
-from tests import streaming_feed as SF
-
-
-@pytest.fixture(scope="module")
-def transformed(spark, tmp_path_factory):
-    """The fixture pipeline, extracted and transformed (not loaded)."""
-    from fitness_nutrition_data_pipeline_spark.config import PipelineConfig
-    from fitness_nutrition_data_pipeline_spark.pipeline import FitnessWarehousePipeline
-
-    base = FX.write_fixtures(str(tmp_path_factory.mktemp("stream")))
-    cfg = PipelineConfig(data_dir=base, fitbit_dir=f"{base}/fitbit",
-                         warehouse_dir=f"{base}/_wh_stream", output_dir=f"{base}/_out_stream")
-    p = FitnessWarehousePipeline(spark, cfg)
-    p.extract()
-    p.transform()
-    return p
-
-
-@pytest.mark.parametrize("kind", ["sleep_minutes", "heartrate"])
-def test_stream_fact_health_metric_matches_batch(spark, transformed, tmp_path, kind):
-    """The streaming fact builder must emit exactly the rows the batch
-    builder derives from the same file."""
-    from fitness_nutrition_data_pipeline_spark.plans.facts import DAILY_FEEDS
-    from fitness_nutrition_data_pipeline_spark.sources.fitness import FITBIT_FILES
-    from fitness_nutrition_data_pipeline_spark.streaming import stream_fact_health_metric
-
-    p = transformed
-    indir = str(tmp_path / "in")
-    os.makedirs(indir)
-    shutil.copy(os.path.join(p.cfg.fitbit_dir, FITBIT_FILES[kind][0]), indir)
-    sdf = stream_fact_health_metric(
-        spark, indir, kind, p.mapping, p.warehouse["Dim_Date"]
-    )
-    assert sdf.isStreaming
-    streamed = drain(sdf, f"fact_hm_stream_{kind}", "complete")
-
-    metric_key = DAILY_FEEDS[kind][2]
-    batch = p.warehouse["Fact_HealthMetric"].where(F.col("MetricTypeKey") == metric_key)
-    batch_rows = sorted(map(tuple, batch.collect()))
-    stream_rows = sorted(map(tuple, streamed.collect()))
-    assert batch_rows  # the fixture has rows of both feeds
-    assert stream_rows == batch_rows
-
-
-# --- watermarked streaming dedup ------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def dedup_dir(tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("dedup_stream"))
-    os.makedirs(f"{base}/in", exist_ok=True)
-    # two files: transport redelivery (same event_id) across files, plus a
-    # content re-upload (new id, identical payload) in the second file
-    with open(f"{base}/in/batch1.csv", "w") as f:
-        f.write("event_id,ts,device,reading\n")
-        f.write("1,2016-04-01 10:00:00,dev1,70\n")
-        f.write("2,2016-04-01 10:01:00,dev1,72\n")
-        f.write("3,2016-04-01 10:02:00,dev2,65\n")
-    with open(f"{base}/in/batch2.csv", "w") as f:
-        f.write("event_id,ts,device,reading\n")
-        f.write("2,2016-04-01 10:01:00,dev1,72\n")  # redelivered id
-        f.write("4,2016-04-01 10:03:00,dev2,66\n")
-        f.write("5,2016-04-01 10:02:00,dev2,65\n")  # re-upload, new id
-    return f"{base}/in"
-
-
-def _read_dedup_stream(spark, path):
-    return (
-        spark.readStream.schema(
-            "event_id LONG, ts TIMESTAMP, device STRING, reading DOUBLE"
-        )
-        .option("header", True)
-        .option("maxFilesPerTrigger", 1)
-        .csv(path)
-    )
-
-
-def test_stream_dedup_by_key(spark, dedup_dir):
-    from fitness_nutrition_data_pipeline_spark.streaming.dedup import dedup_by_key
-
-    out = drain(
-        dedup_by_key(_read_dedup_stream(spark, dedup_dir), "ts", ["event_id"]),
-        "dedup_by_key_out",
-    )
-    ids = sorted(r.event_id for r in out.collect())
-    assert ids == [1, 2, 3, 4, 5]  # id 2 redelivery dropped, id 5 kept
-
-
-def test_stream_dedup_by_content(spark, dedup_dir):
-    from fitness_nutrition_data_pipeline_spark.streaming.dedup import dedup_by_content
-
-    out = drain(
-        dedup_by_content(
-            _read_dedup_stream(spark, dedup_dir),
-            "ts",
-            ["ts", "device", "reading"],
-        ),
-        "dedup_by_content_out",
-    )
-    rows = out.collect()
-    # id-2 redelivery AND the id-5 content re-upload both collapse
-    assert len(rows) == 4
-    assert sorted(r.event_id for r in rows) == [1, 2, 3, 4]
-
-
-# --- stream-stream attribution join ---------------------------------------
-
-
-@pytest.fixture(scope="module")
-def attribution_dirs(tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("ss_join"))
-    os.makedirs(f"{base}/views", exist_ok=True)
-    os.makedirs(f"{base}/purchases", exist_ok=True)
-    with open(f"{base}/views/v.csv", "w") as f:
-        f.write("event_id,ts,user_id\n")
-        f.write("10,2016-04-01 10:00:00,1\n")   # converts (10:30 purchase)
-        f.write("11,2016-04-01 08:00:00,1\n")   # too early for 10:30
-        f.write("12,2016-04-01 10:10:00,2\n")   # no purchase by user 2
-    with open(f"{base}/purchases/p.csv", "w") as f:
-        f.write("event_id,ts,user_id\n")
-        f.write("90,2016-04-01 10:30:00,1\n")
-        f.write("91,2016-04-01 12:00:00,3\n")   # user 3 never viewed
-    return base
-
-
-def test_stream_stream_attribution(spark, attribution_dirs):
-    from fitness_nutrition_data_pipeline_spark.streaming.joins import (
-        stream_stream_attribution,
-    )
-
-    schema = "event_id LONG, ts TIMESTAMP, user_id LONG"
-
-    def src(sub):
-        return (
-            spark.readStream.schema(schema)
-            .option("header", True)
-            .csv(f"{attribution_dirs}/{sub}")
-        )
-
-    joined = stream_stream_attribution(src("views"), src("purchases"))
-    assert joined.isStreaming
-    out = drain(joined, "ss_attribution_out")
-    rows = [(r.view_id, r.purchase_id, r.lag_seconds) for r in out.collect()]
-    # only view 10 is within 1h before purchase 90; views 11/12 and
-    # purchase 91 have no partner
-    assert rows == [(10, 90, 1800)]
-
-
-# --- per-key rate limiting ------------------------------------------------
-
-
-def test_stream_rate_limiter(spark, tmp_path_factory):
-    import datetime
-
-    from fitness_nutrition_data_pipeline_spark.streaming.ratelimit import (
-        EVENT_SCHEMA,
-        rate_limit_stream,
-    )
-
-    d = str(tmp_path_factory.mktemp("ratelimit"))
-    indir = os.path.join(d, "in")
-    os.makedirs(indir)
-    rows = [
-        (i, datetime.datetime(2016, 4, 1, 10, 0, i % 60), i % 3, "click", 1.0)
-        for i in range(20)
-    ]
-    # REVERSED ids across 4 unsorted files + a 2-row Arrow batch cap: each
-    # user's group reaches the limiter as many chunks with ids out of order,
-    # so this fails if admission sorts per-chunk instead of per-group
-    spark.createDataFrame(list(reversed(rows)), EVENT_SCHEMA).repartition(
-        4
-    ).write.mode("overwrite").parquet(indir)
-    old_cap = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        out = drain(rate_limit_stream(spark, indir, limit=3), "rl_out")
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_cap)
-    got = {}
-    for r in out.collect():
-        got.setdefault(r.user_id, []).append((r.event_id, r.admitted_no))
-    # every user admits exactly 3 events, in event_id order, numbered 1..3
-    assert set(got) == {0, 1, 2}
-    for uid, pairs in got.items():
-        pairs.sort()
-        assert [no for _, no in pairs] == [1, 2, 3]
-        # first three event_ids of that user in id order
-        expect = sorted(i for i in range(20) if i % 3 == uid)[:3]
-        assert [eid for eid, _ in pairs] == expect
-
-
-def test_rate_limiter_state_survives_restart_multichunk(spark, tmp_path_factory):
-    """Quota state must live in the checkpoint across restarts AND stay
-    correct when the post-restart group arrives as MANY Arrow chunks in
-    arbitrary order (r5 ADVICE follow-up: the chunk-order fix must hold
-    for a >1-chunk group in a restarted query, not just a fresh one).
-    Drain 1 admits 2 of one user's events; drain 2 feeds 12 more events
-    with REVERSED ids under a 2-row Arrow cap — the restored counter must
-    admit exactly the 2 lowest remaining ids, numbered 3..4."""
-    import datetime
-
-    from fitness_nutrition_data_pipeline_spark.streaming.ratelimit import (
-        rate_limit_stream,
-    )
-
-    base = str(tmp_path_factory.mktemp("rl_restart"))
-    t0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
-
-    def drain_next(rows):
-        return SF.feed(base, rows, lambda indir: rate_limit_stream(spark, indir, limit=4))
-
-    first = drain_next([(i, t0, 7, "click", 1.0) for i in (10, 20)])
-    assert sorted((r.event_id, r.admitted_no) for r in first) == [
-        (10, 1),
-        (20, 2),
-    ]
-
-    # 12 more events, ids reversed, forced into 2-row Arrow chunks
-    old_cap = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        second = drain_next(
-            [(i, t0, 7, "click", 1.0) for i in reversed(range(30, 42))]
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_cap)
-    rows = sorted((r.event_id, r.admitted_no) for r in first + second)
-    assert rows == [(10, 1), (20, 2), (30, 3), (31, 4)]
-
-
-# --- CEP sequence detection ------------------------------------------------
-
-
-def test_stream_sequence_detector(spark, tmp_path_factory):
-    """view→cart→purchase with a 30-min step deadline, single-attempt
-    skip-till-next-match policy. The fixture covers: a clean match, noise
-    events mid-pattern, a deadline break that restarts the attempt, two
-    matches for one user, and a user who never completes. Events arrive
-    reversed across 4 files with a 2-row Arrow cap, so the detector fails
-    if the NFA runs in chunk order instead of (ts, event_id) order."""
-    import datetime
-
-    from fitness_nutrition_data_pipeline_spark.streaming.cep import (
-        stream_detect_sequences,
-    )
-    from fitness_nutrition_data_pipeline_spark.streaming.sessions import (
-        EVENT_SCHEMA,
-    )
-
-    t0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
-
-    def ev(eid, minutes, uid, etype):
-        return (eid, t0 + datetime.timedelta(minutes=minutes), uid, etype, 1.0)
-
-    rows = [
-        # user 1: clean match with a noise event inside
-        ev(1, 0, 1, "view"),
-        ev(2, 5, 1, "click"),
-        ev(3, 10, 1, "cart"),
-        ev(4, 20, 1, "purchase"),
-        # user 1 again: second match later
-        ev(5, 60, 1, "view"),
-        ev(6, 70, 1, "cart"),
-        ev(7, 90, 1, "purchase"),
-        # user 2: deadline break (cart 40 min after view), then restart
-        ev(8, 0, 2, "view"),
-        ev(9, 40, 2, "cart"),       # expired: no attempt running afterwards
-        ev(10, 45, 2, "view"),
-        ev(11, 50, 2, "cart"),
-        ev(12, 55, 2, "purchase"),  # match from the restarted attempt
-        # user 3: never completes
-        ev(13, 0, 3, "view"),
-        ev(14, 10, 3, "cart"),
-    ]
-    d = str(tmp_path_factory.mktemp("cep"))
-    indir = os.path.join(d, "in")
-    spark.createDataFrame(list(reversed(rows)), EVENT_SCHEMA).repartition(
-        4
-    ).write.mode("overwrite").parquet(indir)
-    old_cap = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        out = drain(stream_detect_sequences(spark, indir), "cep_out")
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_cap)
-
-    us = lambda minutes: int(  # noqa: E731
-        (t0 + datetime.timedelta(minutes=minutes)).replace(
-            tzinfo=datetime.timezone.utc
-        ).timestamp() * 1_000_000
-    )
-    got = sorted(
-        (r.user_id, r.t_view_us, r.t_cart_us, r.t_purchase_us)
-        for r in out.collect()
-    )
-    assert got == [
-        (1, us(0), us(10), us(20)),
-        (1, us(60), us(70), us(90)),
-        (2, us(45), us(50), us(55)),
-    ]
-
-
-def test_sequence_detector_state_survives_restart(spark, tmp_path_factory):
-    """A pattern split across two checkpointed drains completes: view+cart
-    land in drain 1 (no output), the purchase arrives before drain 2, and
-    the restarted query emits the match from restored state — per-key NFA
-    state must live in the checkpoint, not the process."""
-    import datetime
-
-    from fitness_nutrition_data_pipeline_spark.streaming.cep import (
-        stream_detect_sequences,
-    )
-
-    base = str(tmp_path_factory.mktemp("cep_restart"))
-    t0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
-
-    def drain_next(rows):
-        return SF.feed(base, rows, lambda indir: stream_detect_sequences(spark, indir))
-
-    first = drain_next(
-        [
-            (1, t0, 7, "view", 1.0),
-            (2, t0 + datetime.timedelta(minutes=10), 7, "cart", 1.0),
-        ]
-    )
-    # pattern still open: drain 1 emits zero match rows
-    assert len(first) == 0
-
-    second = drain_next(
-        [(3, t0 + datetime.timedelta(minutes=20), 7, "purchase", 1.0)]
-    )
-    got = first + second
-    assert len(got) == 1
-    us = lambda m: int(  # noqa: E731
-        (t0 + datetime.timedelta(minutes=m))
-        .replace(tzinfo=datetime.timezone.utc)
-        .timestamp()
-        * 1_000_000
-    )
-    r = got[0]
-    assert (r.user_id, r.t_view_us, r.t_cart_us, r.t_purchase_us) == (
-        7, us(0), us(10), us(20),
-    )
-
-
-def test_dedup_then_session_window_compose_in_one_query(spark, tmp_path_factory):
-    """Chained STATEFUL operators in one streaming query: watermarked
-    dedup (dropDuplicatesWithinWatermark) feeding native session windows.
-    Redelivered events must not inflate session event counts, and the
-    sealed sessions must match the batch sessionization of the deduped
-    feed — the operators-compose guarantee, not just per-operator
-    correctness."""
-    import datetime
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fitness_nutrition_data_pipeline_spark.streaming.dedup import dedup_by_key
-    from fitness_nutrition_data_pipeline_spark.streaming.sessions import EVENT_SCHEMA
-
-    t0 = datetime.datetime(2016, 4, 1, 10, 0, 0)
-
-    def ev(eid, minutes, uid):
-        return (eid, t0 + datetime.timedelta(minutes=minutes), uid, "click", 1.0)
-
-    rows = [
-        ev(1, 0, 1), ev(2, 10, 1),
-        ev(1, 0, 1), ev(2, 10, 1),   # transport redelivery (same ids)
-        ev(3, 20, 1),
-        ev(4, 5, 2), ev(4, 5, 2),    # redelivered singleton
-        # far-future flush so the watermark seals the real sessions
-        ev(9, 10000, 1), ev(10, 10000, 2),
-    ]
-    base = str(tmp_path_factory.mktemp("compose"))
-    indir = os.path.join(base, "in")
-    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(indir)
-
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(indir)
-    deduped = dedup_by_key(src, "ts", ["event_id"], late_threshold="1 hour")
-    sessions = (
-        deduped.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", "n_events")
-    )
-    got = {(r.user_id, r.n_events) for r in drain(sessions, "compose_out").collect()}
-    # sealed sessions of the DEDUPED feed: user 1 → 3 events, user 2 → 1
-    assert got == {(1, 3), (2, 1)}
+"""The batch watermark replay (queries/analytics_ops.py::watermark_tags)
+against Spark's own streaming engine."""
 
 
 def test_watermark_replay_matches_engine(spark, tmp_path):
@@ -481,34 +82,3 @@ def test_watermark_replay_matches_engine(spark, tmp_path):
     # the 5-minute-late rows are inside allowed lateness -> never dropped
     late_ok = {r["event_id"] for r in tagged.where("late_ok = 1").collect()}
     assert late_ok and late_ok <= survived_replay
-
-
-def test_streaming_content_fp_no_adjacent_field_collision(spark):
-    """("ab","c") and ("a","bc") concatenate identically without a field
-    delimiter; both records must survive content dedup. Exercises the same
-    fingerprint expression dedup_by_content keys on, in batch (the
-    expression is identical; streaming state semantics are covered in
-    test_streaming.py)."""
-    from fitness_nutrition_data_pipeline_spark.streaming import dedup as sdp
-
-    df = spark.createDataFrame(
-        [("ab", "c"), ("a", "bc"), (None, "x"), ("", "x"), ("\x1f", "x")],
-        "f1 string, f2 string",
-    )
-    # reuse the module's fingerprint by running dedup on a batch frame via
-    # the same expression: build it exactly as dedup_by_content does
-    import inspect
-
-    src = inspect.getsource(sdp.dedup_by_content)
-    assert 'concat_ws(\n            "\x01"' in src or '"\x01"' in src
-    fp = F.md5(
-        F.concat_ws(
-            "\x01",
-            *[
-                F.coalesce(F.col(c).cast("string"), F.lit("\x00<NULL>\x00"))
-                for c in ("f1", "f2")
-            ],
-        )
-    )
-    fps = [r.fp for r in df.select(fp.alias("fp")).collect()]
-    assert len(set(fps)) == 5, "all five distinct payloads must fingerprint apart"

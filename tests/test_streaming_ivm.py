@@ -1,38 +1,11 @@
-"""Streaming incremental-view maintenance (streaming/ivm.py): the
-foreachBatch maintainer must equal a full batch recompute after draining
-a file-source stream, survive a RESTART from its parquet state dir, and
-apply retractions with the same signed algebra the driver-checked
-ivm_batch_replay query proves against the oracle."""
+"""Incremental view maintenance (streaming/ivm.py): the signed fold
+the oracle-checked ivm_batch_replay query runs."""
 
 from fitness_nutrition_data_pipeline_spark.streaming.ivm import (
-    IncrementalAggMaintainer,
     delta_effects,
     empty_state,
     merge_state,
 )
-
-
-def _write_csv(path, name, rows):
-    with open(f"{path}/{name}", "w") as f:
-        f.write("k,v,op\n")
-        for r in rows:
-            f.write(f"{r[0]},{r[1]},{r[2]}\n")
-
-
-def _drain(spark, src_dir, maintainer, ckpt_dir):
-    stream = (
-        spark.readStream.schema("k STRING, v LONG, op STRING")
-        .option("header", True)
-        .option("maxFilesPerTrigger", 1)
-        .csv(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(maintainer.process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def _state_dict(df):
@@ -41,66 +14,9 @@ def _state_dict(df):
     }
 
 
-def test_foreach_batch_maintainer_equals_recompute(spark, tmp_path_factory):
-    src = str(tmp_path_factory.mktemp("ivm_src"))
-    state = str(tmp_path_factory.mktemp("ivm_state")) + "/agg"
-    ckpt = str(tmp_path_factory.mktemp("ivm_ckpt"))
-
-    _write_csv(src, "b1.csv", [("a", 10, "I"), ("a", 5, "I"), ("b", 7, "I")])
-    _write_csv(src, "b2.csv", [("b", 3, "I"), ("c", 1, "I")])
-    m = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v", op_col="op"
-    )
-    _drain(spark, src, m, ckpt)
-    assert _state_dict(m.read_state()) == {
-        "a": (2, 15),
-        "b": (2, 10),
-        "c": (1, 1),
-    }
-
-
-def test_restart_resumes_from_state_dir(spark, tmp_path_factory):
-    src1 = str(tmp_path_factory.mktemp("ivm_r_src1"))
-    src2 = str(tmp_path_factory.mktemp("ivm_r_src2"))
-    state = str(tmp_path_factory.mktemp("ivm_r_state")) + "/agg"
-
-    _write_csv(src1, "b1.csv", [("a", 10, "I"), ("b", 7, "I")])
-    m1 = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v", op_col="op"
-    )
-    _drain(spark, src1, m1, str(tmp_path_factory.mktemp("ivm_r_ck1")))
-
-    # a NEW maintainer (fresh process in real life) pointed at the same
-    # state dir resumes — no reprocessing of src1, no state loss
-    m2 = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v", op_col="op"
-    )
-    _write_csv(src2, "b2.csv", [("a", 1, "I"), ("c", 2, "I")])
-    _drain(spark, src2, m2, str(tmp_path_factory.mktemp("ivm_r_ck2")))
-    assert _state_dict(m2.read_state()) == {
-        "a": (2, 11),
-        "b": (1, 7),
-        "c": (1, 2),
-    }
-
-
-def test_retraction_drops_fully_retracted_key(spark, tmp_path_factory):
-    src = str(tmp_path_factory.mktemp("ivm_t_src"))
-    state = str(tmp_path_factory.mktemp("ivm_t_state")) + "/agg"
-
-    _write_csv(src, "b1.csv", [("a", 10, "I"), ("b", 7, "I")])
-    _write_csv(src, "b2.csv", [("a", 10, "R"), ("b", 1, "I")])
-    m = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v", op_col="op"
-    )
-    _drain(spark, src, m, str(tmp_path_factory.mktemp("ivm_t_ck")))
-    # 'a' fully retracted -> dropped from state; 'b' keeps both inserts
-    assert _state_dict(m.read_state()) == {"b": (2, 8)}
-
-
 def test_merge_is_order_insensitive_fold(spark):
     """Folding waves A,B then C must equal folding A then B,C — the
-    associativity that lets micro-batch boundaries fall anywhere."""
+    associativity that lets batch boundaries fall anywhere."""
     rows = [("a", 3, "I"), ("b", 2, "I"), ("a", 4, "I"), ("a", 3, "R"),
             ("c", 9, "I"), ("b", 1, "I")]
     splits = [
@@ -123,144 +39,10 @@ def test_merge_is_order_insensitive_fold(spark):
     assert outs[0] == {"a": (1, 4), "b": (2, 3), "c": (1, 9)}
 
 
-def test_redelivered_batch_is_idempotent(spark, tmp_path_factory):
-    """foreachBatch is at-least-once: a crash between the state swap
-    and the engine's checkpoint commit re-delivers the SAME batch_id.
-    With a query_tag the maintainer must apply it exactly once."""
-    state = str(tmp_path_factory.mktemp("ivm_i_state")) + "/agg"
-    m = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v",
-        op_col="op", query_tag="ckpt-A",
-    )
-    b0 = spark.createDataFrame(
-        [("a", 10, "I"), ("b", 7, "I")], "k string, v long, op string"
-    )
-    m.process_batch(b0, 0)
-    m.process_batch(b0, 0)  # redelivery after simulated crash
-    assert _state_dict(m.read_state()) == {"a": (1, 10), "b": (1, 7)}
-    # the next id still applies
-    b1 = spark.createDataFrame([("a", 1, "I")], "k string, v long, op string")
-    m.process_batch(b1, 1)
-    assert _state_dict(m.read_state()) == {"a": (2, 11), "b": (1, 7)}
-
-
-def test_new_query_lineage_is_not_skipped(spark, tmp_path_factory):
-    """batch_ids restart at 0 for a NEW checkpoint lineage over the
-    same state — a different query_tag must not be deduped against the
-    previous lineage's watermark (ids are incomparable across tags)."""
-    state = str(tmp_path_factory.mktemp("ivm_n_state")) + "/agg"
-    m1 = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v",
-        op_col="op", query_tag="ckpt-A",
-    )
-    m1.process_batch(
-        spark.createDataFrame([("a", 5, "I")], "k string, v long, op string"),
-        0,
-    )
-    m2 = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v",
-        op_col="op", query_tag="ckpt-B",
-    )
-    m2.process_batch(
-        spark.createDataFrame([("a", 2, "I")], "k string, v long, op string"),
-        0,  # same id, different lineage — must apply
-    )
-    assert _state_dict(m2.read_state()) == {"a": (2, 7)}
-
-
-def test_crash_between_renames_rolls_forward(spark, tmp_path_factory):
-    """Simulated crash AFTER the state was renamed aside and the
-    complete ._next (watermark included) was left un-promoted: recovery
-    must finish the swap, and the redelivered batch must be skipped."""
-    import os
-    import shutil
-
-    state = str(tmp_path_factory.mktemp("ivm_c_state")) + "/agg"
-    m = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v",
-        op_col="op", query_tag="ckpt-A",
-    )
-    b0 = spark.createDataFrame([("a", 5, "I")], "k string, v long, op string")
-    b1 = spark.createDataFrame([("a", 2, "I")], "k string, v long, op string")
-    m.process_batch(b0, 0)
-    m.process_batch(b1, 1)
-    # reconstruct the mid-swap crash: current state (after batch 1)
-    # becomes the un-promoted ._next; prior state (after batch 0 only)
-    # becomes ._old; state_dir is gone
-    prior = IncrementalAggMaintainer(
-        spark, state + "_prior", keys=["k"], keys_ddl="k string",
-        value_col="v", op_col="op", query_tag="ckpt-A",
-    )
-    prior.process_batch(b0, 0)
-    shutil.move(state, state + "._next")
-    shutil.move(state + "_prior", state + "._old")
-    m.process_batch(b1, 1)  # redelivery against the crashed layout
-    assert not os.path.isdir(state + "._next")
-    assert not os.path.isdir(state + "._old")
-    assert _state_dict(m.read_state()) == {"a": (2, 7)}  # applied ONCE
-
-
-def test_crash_with_incomplete_next_rolls_back(spark, tmp_path_factory):
-    """Simulated crash mid-write of ._next (no watermark sidecar):
-    recovery must restore ._old and the redelivered batch must apply —
-    never an empty state, never a double-apply."""
-    import os
-    import shutil
-
-    state = str(tmp_path_factory.mktemp("ivm_rb_state")) + "/agg"
-    m = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v",
-        op_col="op", query_tag="ckpt-A",
-    )
-    b0 = spark.createDataFrame([("a", 5, "I")], "k string, v long, op string")
-    b1 = spark.createDataFrame([("b", 3, "I")], "k string, v long, op string")
-    m.process_batch(b0, 0)
-    # crash layout: state renamed aside, ._next exists but is junk
-    # (parquet write died before the watermark landed)
-    shutil.move(state, state + "._old")
-    os.makedirs(state + "._next")
-    with open(state + "._next/part-junk", "w") as f:
-        f.write("torn write")
-    m.process_batch(b1, 1)  # redelivery
-    assert _state_dict(m.read_state()) == {"a": (1, 5), "b": (1, 3)}
-
-
-def test_remote_state_dir_rejected(spark):
-    """The swap protocol is POSIX-rename based; a scheme'd URI would make
-    os.path checks silently see 'no state' and resume from empty (wrong
-    aggregates). The constructor must refuse it loudly."""
-    import pytest
-
-    for uri in ("hdfs://nn/state/agg", "s3a://bucket/state/agg"):
-        with pytest.raises(ValueError, match="local filesystem"):
-            IncrementalAggMaintainer(
-                spark, uri, keys=["k"], keys_ddl="k string", value_col="v"
-            )
-
-
-def test_corrupt_watermark_raises_not_reapplies(spark, tmp_path_factory):
-    """A watermark whose tag matches this query but whose batch id is
-    unparsable means out-of-protocol corruption (the protocol fsyncs the
-    sidecar before promotion). Guessing -1 would double-apply a batch the
-    lineage provably folded in — the maintainer must raise instead."""
-    import os
-    import pytest
-
-    state = str(tmp_path_factory.mktemp("ivm_corrupt")) + "/agg"
-    m = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v",
-        op_col="op", query_tag="ckpt-A",
-    )
-    b0 = spark.createDataFrame([("a", 5, "I")], "k string, v long, op string")
-    m.process_batch(b0, 0)
-    # corrupt the batch id in place, tag intact
-    with open(os.path.join(state, "_applied_batch_id"), "w") as f:
-        f.write("ckpt-A\nnot-a-number")
-    with pytest.raises(RuntimeError, match="corrupt _applied_batch_id"):
-        m.last_applied()
-    # a DIFFERENT query's tag stays incomparable -> -1, no raise
-    m2 = IncrementalAggMaintainer(
-        spark, state, keys=["k"], keys_ddl="k string", value_col="v",
-        op_col="op", query_tag="ckpt-B",
-    )
-    assert m2.last_applied() == -1
+def test_retraction_drops_fully_retracted_key(spark):
+    state = empty_state(spark, "k string")
+    for wave in ([("a", 10, "I"), ("b", 7, "I")], [("a", 10, "R"), ("b", 1, "I")]):
+        batch = spark.createDataFrame(wave, "k string, v long, op string")
+        state = merge_state(state, delta_effects(batch, ["k"], "v", op_col="op"), ["k"])
+    # 'a' fully retracted -> dropped from state; 'b' keeps both inserts
+    assert _state_dict(state) == {"b": (2, 8)}

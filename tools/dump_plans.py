@@ -12,7 +12,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from fitness_nutrition_data_pipeline_spark.queries import all_specs  # noqa: E402
 from fitness_nutrition_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -69,7 +70,7 @@ SHOWCASE = [
     ("copurchase_pairs_topk", "market-basket pairs: per-order cap window bounds the quadratic stage, co-keyed self-join, TakeOrdered top-k"),
     ("length_filter_survivorship", "threshold curve: corpus folds to a length histogram FIRST, 5-row grid joins the aggregate — one scan for five thresholds"),
     ("triangle_count_cooccurrence", "triangle motif: pinned distinct projection + oriented edges (src<dst), 3-way join on the alphabet-bounded edge set"),
-    ("hygiene_batch_replay", "streaming hygiene replay: PII regexp projection (pure codegen) + contamination explode vs broadcast benchmark grams"),
+    ("hygiene_batch_replay", "hygiene replay: PII regexp projection (pure codegen) + contamination explode vs broadcast benchmark grams"),
     ("hard_negative_mining", "contrastive negatives: broadcast anchors, label-mismatch predicate inside the join, k rows per anchor survive"),
     ("cluster_balanced_sample", "balanced curation sampling: one scan, cluster-PARTITIONED quota window, answer-sized output"),
     ("cuped_adjusted_lift", "CUPED readout: user-grain shuffle, pinned 2-row arm moments, 1-row theta broadcast back"),
@@ -136,7 +137,7 @@ SHOWCASE = [
     ("quantile_normalization_map", "per-source deciles mapped to global: cumulative windows on the (source, value) DISTINCT-VALUE grain; 9-row decile spine broadcast-crossed"),
     ("hll_union_contract", "HLL p=8: one union'd key scan -> 256-row register relations; the merge is a register-grain MAX — the whole sketch algebra is answer-sized"),
     ("ivf_beam_recall_contract", "IVF beam nprobe=3: centroid relation broadcast twice (assign + probe-rank); exact ranking only inside probed partitions, never the corpus"),
-    ("lsh_dedup_batch_replay", "streaming LSH bridge replay: per batch a band-key hash join of batch bands vs pinned state (Scan ExistingRDD = the bridge's state pins), never history²; union of 3 batch deltas -> pair groupBy"),
+    ("lsh_dedup_batch_replay", "incremental LSH bridge replay: per batch a band-key hash join of batch bands vs pinned state (Scan ExistingRDD = the bridge's state pins), never history²; union of 3 batch deltas -> pair groupBy"),
 ]
 
 
@@ -158,7 +159,7 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain(mode="formatted")
         out += [f"## {name}", "", f"*{note}*", "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(SHOWCASE)} plans")
 

@@ -2,10 +2,8 @@
 
 Round totals proved uninformative for the suite bar: r14 measured
 16m22s with partly-contended endpoints and 22m53s with quiet endpoints
-— endpoint probes do not witness a ~20-minute middle, and the five
-stateful streaming property tests amplify contention 3-4x while
-everything else amplifies ~1.2x, so the total is dominated by WHEN the
-regime swings hit, not by code. The honest instrument is the per-test
+— endpoint probes do not witness a ~20-minute middle, so the total is
+dominated by WHEN the regime swings hit, not by code. The honest instrument is the per-test
 durations table (SUITE_DURATIONS_r*.txt, `pytest --durations=60`):
 compare the same test across two snapshots and regressions separate
 from regime.
